@@ -25,6 +25,8 @@ object Bench {
   val benchOnly: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
     Map(
       "q_pipeline_full13" -> (graft.queries.QueriesEtd.q_pipeline_full13 _),
+      "q_pipeline_full13_calculated" ->
+        (graft.queries.QueriesEtd.q_pipeline_full13_calculated _),
       "q_image_neardup_e2e" -> (graft.queries.QueriesLLM.q_image_neardup_e2e _),
       "q_bm25_indexed" -> (searchPreparedBm25 _))
 
@@ -475,25 +477,17 @@ object Bench {
   )
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // the driver contract is local[32] (32 executor threads); the env var
-    // exists only for local iteration on smaller boxes
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // a serving query batch's term set is routinely > the default 10.
-      // On THIS Spark (4.1.2) the reader pushes large In predicates
-      // natively — the r19 retrievalscale10 A/B measured byte-identical
-      // reads with and without this conf — so it is belt-and-braces for
-      // older readers, not load-bearing (PERFNOTES r19)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir(None)
+    // the driver contract is local[32] (32 executor threads), Harness's
+    // default; SPARK_GRAFT_CPUS exists only for local iteration on
+    // smaller boxes
+    val spark = Harness.session()
+    // a serving query batch's term set is routinely > the default 10.
+    // On THIS Spark (4.1.2) the reader pushes large In predicates
+    // natively — the r19 retrievalscale10 A/B measured byte-identical
+    // reads with and without this conf — so it is belt-and-braces for
+    // older readers, not load-bearing (PERFNOTES r19)
+    spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
     SchemaCanary.warn(spark, sfDir)
 
     // ---- pre-flight gate (VERDICT r16 #1): two consecutive driver
@@ -519,8 +513,9 @@ object Bench {
 
     // Untimed warmup: absorb session/JIT/scan-cache startup so the first
     // timed query measures the operator, not initialization.
-    try materialize(SparkEntry.table(spark, sfDir, "events").limit(1000))
-    catch { case _: Throwable => () }
+    Harness.untimed("bench warm-up events") {
+      materialize(SparkEntry.table(spark, sfDir, "events").limit(1000))
+    }
     // Cascade JIT warm-up (VERDICT r15 #2, attributed r16): the impute
     // cascade triggers ~47 CPU-seconds of C2/janino compilation on a
     // cold JVM, decaying over ~3 executions (measured: cold-JVM
@@ -531,7 +526,7 @@ object Bench {
     // shape here on a 2-house slice (untimed, trivial data) compiles
     // the shared window/cascade paths so the timed reading is
     // position-independent.
-    try {
+    Harness.untimed("bench warm-up impute") {
       import org.apache.spark.sql.functions.col
       // the batched single-column engine — the path the q_i* entries
       // actually run since r21 (warming the sequential imputeColumn
@@ -547,7 +542,7 @@ object Bench {
       // in isolation — through the gap-stats + householdSummary aggs
       materialize(graft.etd.ImputeSummaries.householdSummary(
         graft.etd.ImputeSummaries.gapStats(tiny, "Meter"), tiny))
-    } catch { case _: Throwable => () }
+    }
     // Fuzzy-join warm-up (r19): the fifth JIT family — q_fuzzy_join's
     // FIRST 3-run block read ~2× its pin in two of three clean r19
     // sessions (first medians ~1.0 s vs pin 0.50, cpu/wall collapsed by
@@ -555,7 +550,7 @@ object Bench {
     // (0.52 s) every time; the edit-distance gram join is its own
     // codegen class no earlier warmup compiles. Same code shape on a
     // ~200-word slice, untimed — the established playbook.
-    try {
+    Harness.untimed("bench warm-up fuzzy join") {
       import org.apache.spark.sql.functions._
       val words = graft.llm.BpeTrain.wordCounts(
           SparkEntry.table(spark, sfDir, "documents")
@@ -563,7 +558,7 @@ object Bench {
         .select(col("word")).limit(200)
       materialize(graft.ops.FuzzyJoin.editDistancePairs(
         words, "word", maxDist = 1))
-    } catch { case _: Throwable => () }
+    }
     // KN-LM warm-up (VERDICT r16 #5, attributed r17): the KN scorer is
     // the third JIT-warm-up family — measured cold-JVM decay in
     // isolation 4.97 → 2.39 → 2.03 → 1.94 s at cpu/wall 5.9 → 3.6, gc
@@ -571,7 +566,7 @@ object Bench {
     // lands 1.5-1.6x the pin whenever the preceding queries left the
     // train/score paths uncompiled (the judge's 2.97 vs 1.89 residual).
     // Same code shape on a 20-document slice, untimed.
-    try {
+    Harness.untimed("bench warm-up kn-lm") {
       import org.apache.spark.sql.functions.col
       val slice = SparkEntry.table(spark, sfDir, "documents")
         .filter(col("doc_id") < 20)
@@ -579,7 +574,7 @@ object Bench {
         graft.llm.NgramLm.trainFromCounts(
           graft.llm.NgramLm.trigramCounts(
             slice.filter(col("doc_id") % 2 === 0), "doc_id", "text"))))
-    } catch { case _: Throwable => () }
+    }
     // Training-data-flagship warm-up (VERDICT r17 #2): the fourth JIT
     // family — q_training_data_e2e's first 3-run block read a 13.66 s
     // median cold (r17) vs 6.18 s once the within-run detector reran
@@ -587,7 +582,7 @@ object Bench {
     // their own codegen classes no earlier warmup compiles. Same code
     // shape on a ~30-document slice (codegen classes are
     // data-independent), untimed — the r15/r16/r17 playbook.
-    try {
+    Harness.untimed("bench warm-up training data") {
       import org.apache.spark.sql.functions._
       import graft.llm.{Curation, Mixing, Packing, TextFunctions}
       val slice = SparkEntry.table(spark, sfDir, "documents")
@@ -629,7 +624,7 @@ object Bench {
       materialize(packedRaw)
       materialize(Packing.manifestFromPacked(packedRaw, "n_tok", 2048L))
       graft.Checkpoints.sweep(spark)
-    } catch { case _: Throwable => () }
+    }
 
     // Each query runs `runs` times and reports the MEDIAN: single runs on
     // this box drift +/-30% between rounds on identical binaries (VERDICT
@@ -894,12 +889,11 @@ object Bench {
         " chars — may overflow the driver's 2000-char tail window")
     // the full payload next to the repo: the lossless copy a later
     // reader can re-parse (ADVICE r14; BENCH_r14/r16 truncation)
-    try {
+    Harness.untimed("bench bench_last.json") {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_last.json"),
         (fullLine + "\n").getBytes("UTF-8"))
-      ()
-    } catch { case _: Throwable => () }
+    }
     spark.stop()
   }
 }

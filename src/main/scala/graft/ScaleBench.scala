@@ -41,18 +41,9 @@ object ScaleBench {
     "q_image_neardup_e2e") // image decode -> features -> semantic dedup
 
   def main(args: Array[String]): Unit = {
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val srcDir = Harness.sfDir(None)
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/sfscale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     SchemaCanary.warn(spark, srcDir)
 
     // every verb that READS outDir (run/crossover/no-args) generates it
@@ -72,10 +63,10 @@ object ScaleBench {
     spark.sparkContext.addSparkListener(listener)
 
     if (doRun) {
-      // warmup
-      try SparkEntry.table(spark, srcDir, "events").limit(1000)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      Harness.untimed("scalebench warm-up") {
+        SparkEntry.table(spark, srcDir, "events").limit(1000)
+          .write.format("noop").mode("overwrite").save()
+      }
       val registry = SparkEntry.queries ++ Bench.benchOnly
       for (dir <- Seq(srcDir, outDir); name <- scaleQueries) {
         registry.get(name).foreach { fn =>

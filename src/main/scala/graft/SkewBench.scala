@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Skew
@@ -22,22 +22,15 @@ import graft.ops.Skew
 object SkewBench {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // force the sort-merge path: a 2k-row dim would otherwise broadcast
-      // and no skew would exist to mitigate
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      // make the AQE split fire at this bench's volume (the default
-      // 256 MB threshold targets cluster-sized partitions)
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    // force the sort-merge path: a 2k-row dim would otherwise broadcast
+    // and no skew would exist to mitigate
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    // make the AQE split fire at this bench's volume (the default
+    // 256 MB threshold targets cluster-sized partitions)
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
     val probe = new TaskMetricsProbe
     spark.sparkContext.addSparkListener(probe)
 

@@ -1,25 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // default to the box's full width (the driver contract is local[32]);
+    // the driver contract is local[32], Harness's default;
     // SPARK_GRAFT_CPUS exists for local iteration on smaller boxes
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // nanosAsLong covers the int64 TIMESTAMP(NANOS) testdata vintage;
-      // timestamp[us] vintages pass through as TIMESTAMP/TIMESTAMP_NTZ
-      // and SparkEntry.eventsWithMicros adapts per-type.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     SchemaCanary.warn(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // No coalesce(1): the driver's checker reads whole result directories,

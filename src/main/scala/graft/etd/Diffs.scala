@@ -103,18 +103,8 @@ object Diffs {
     * falls back to a shuffle join otherwise. An unconditional broadcast
     * hint here (the old default) overrides Spark's size checks and ships
     * the full averages table to every executor even when it has millions
-    * of rows — a straight scale-killer at 100 TB. Pass
-    * `broadcastAverages = Some(true)` only when the grid is known-coarse;
-    * `Some(false)` to pin the shuffle join (co-partition on ProjectId,
-    * SURVEY §4 physical decision 2).
+    * of rows — a straight scale-killer at 100 TB.
     */
-  def joinAverages(df: DataFrame, avgDiffs: DataFrame,
-                   broadcastAverages: Option[Boolean] = None): DataFrame = {
-    val right = broadcastAverages match {
-      case Some(true)  => broadcast(avgDiffs)
-      case Some(false) => avgDiffs.hint("shuffle_merge")
-      case None        => avgDiffs
-    }
-    df.join(right, Seq(ProjectId, ReadingDate), "left")
-  }
+  def joinAverages(df: DataFrame, avgDiffs: DataFrame): DataFrame =
+    df.join(avgDiffs, Seq(ProjectId, ReadingDate), "left")
 }

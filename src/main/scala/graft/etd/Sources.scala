@@ -12,13 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object Sources {
 
-  /** S1/S2 — parquet scan. Plain `spark.read.parquet`: Catalyst does the
-    * column pruning and predicate pushdown the reference delegates to its
-    * Ibis backend (load_data.py:50). Pass a schema to validate on read.
-    */
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** S3 — multi-file combine with lineage columns
     * (aggregate.py:84-121). The reference loops per household file,
     * stamping ProjectIdBSV/HuisIdBSV literals and concatenating — a
@@ -38,12 +31,6 @@ object Sources {
       .select(col(Model.HouseId), col(Model.ProjectId))
     raw.join(broadcast(keep), Seq(Model.HouseId), "inner")
   }
-
-  /** S8 — household index source with the Meenemen update hook
-    * (etdmap.read_index/update_meenemen, aggregate.py:74-78,95).
-    */
-  def readIndex(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Model.indexSchema).parquet(path)
 
   /** The Meenemen update hook — parity with the `update_meenemen()` call
     * the reference makes right before filtering the index
@@ -161,13 +148,6 @@ object Sources {
       .withColumn("Weerstation", upper(col("Weerstation")))
       .withColumn("STN", col("Nummer"))
 
-  /** S6 — in-memory table (ibis.memtable, load_data.py:143). */
-  def memTable(spark: SparkSession, rows: Seq[(Long, String)],
-               colNames: Seq[String]): DataFrame = {
-    import spark.implicits._
-    rows.toDF(colNames: _*)
-  }
-
   /** S7 — staged parquet sink (aggregate.py:118-121 etc.): one directory
     * per stage, `{name}_{interval}` naming, partition-parallel writes (the
     * reference writes single files; at 100 TB the sink partitions by
@@ -185,14 +165,8 @@ object Sources {
     name.toLowerCase(java.util.Locale.ROOT).replaceAll("(?U)\\W+", "_")
 
   def writeStage(df: DataFrame, dir: String, name: String,
-                 partitionByProject: Boolean = false,
-                 maxRecordsPerFile: Option[Long] = None): Unit = {
-    // maxRecordsPerFile keeps output files in the splittable 100MB-1GB
-    // band at fleet scale (a partitionBy with few projects would
-    // otherwise write one giant file per project per task)
-    val w0 = df.write.mode("overwrite")
-    val w = maxRecordsPerFile.fold(w0)(n =>
-      w0.option("maxRecordsPerFile", n.toString))
+                 partitionByProject: Boolean = false): Unit = {
+    val w = df.write.mode("overwrite")
     val path = s"$dir/${safeName(name)}.parquet"
     if (partitionByProject) w.partitionBy(Model.ProjectId).parquet(path)
     else w.parquet(path)

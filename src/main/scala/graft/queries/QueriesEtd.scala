@@ -740,9 +740,10 @@ object QueriesEtd {
     * production intervals (aggregate.py:830-841) — 13-column impute ->
     * 5 resamples -> 5 project aggregates + the household checksum leg.
     */
-  /** The full-width shim input q_pipeline_full13, WriteBench and Phases
-    * share: fabricated diffs for all 13 production cumulative columns on
-    * the 5-minute grid, cumulative meters rebuilt per house.
+  /** The full-width shim input q_pipeline_full13 and
+    * q_pipeline_full13_calculated share: fabricated diffs for all 13
+    * production cumulative columns on the 5-minute grid, cumulative
+    * meters rebuilt per house.
     */
   def full13Input(spark: SparkSession, dir: String): DataFrame = {
     val cums = Model.cumulativeColumns
@@ -814,6 +815,13 @@ object QueriesEtd {
           col("n"))
     } :+ hhLeg).reduce(_ unionByName _)
   }
+
+  /** The calculated stage of q_pipeline_full13 (13-column impute cascade
+    * + energy balance, no lineage cut): the frame the flagship's
+    * per-operator views (`graft.Inspect --plan|--ops|--phases`) read.
+    */
+  def q_pipeline_full13_calculated(spark: SparkSession, dir: String): DataFrame =
+    graft.etd.Pipeline.run(full13Input(spark, dir), Model.cumulativeColumns).calculated
 
   def q_pipeline_e2e(spark: SparkSession, dir: String): DataFrame = {
     val cums = Seq("ElektriciteitNetgebruikLaag", "ElektriciteitTerugleveringLaag")

@@ -59,26 +59,4 @@ object StreamingResample {
       .withColumn(Model.ReadingDate, col("bucket.start"))
       .drop("bucket")
   }
-
-  /** Streaming ingest of a directory of reading parquet files (the
-    * micro-batch file source — each new stage file becomes a batch).
-    */
-  def readReadingStream(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(path)
-
-  /** Wire a resampled stream to a parquet sink with checkpointing; returns
-    * the started query (append mode — rows emit once the watermark closes
-    * their bucket, so gates see the complete bucket).
-    */
-  def writeToParquet(resampled: DataFrame, outPath: String,
-                     checkpointPath: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    resampled.writeStream
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpointPath)
-      .outputMode("append")
-      .start()
 }

@@ -2,17 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One SparkSession for the whole test JVM (Test / fork := true). */
+/** One SparkSession for the whole test JVM (Test / fork := true), built
+  * with the mains' conf policy at a fixed 4 cores.
+  */
 object SharedSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4)
 }

@@ -152,7 +152,8 @@ class ImputeSpec extends AnyFunSuite {
     val withAvgs = Diffs.joinAverages(sorted, avgDiffs)
 
     val sequential = cums.foldLeft(withAvgs)((acc, c) => Impute.imputeColumn(acc, c))
-    val batched = Impute.imputeColumnsBatched(withAvgs, cums)
+    // keepGapCols = true: the form Pipeline.run consumes
+    val batched = Impute.imputeColumnsBatched(withAvgs, cums, keepGapCols = true)
 
     val outCols = (Seq(HouseId, "t_us") ++ cums.flatMap(c => Seq(
       Model.diffCol(c), Model.isImputedCol(c), Model.imputeTypeCol(c)))).map(col)
@@ -160,6 +161,24 @@ class ImputeSpec extends AnyFunSuite {
     val b = batched.select(outCols: _*).collect().toSet
     assert(a == b, s"batched impute diverges: ${(a -- b).take(3)} vs ${(b -- a).take(3)}")
     assert(a.nonEmpty)
+
+    // the per-column gap metadata gapStats reads: __cvg_<c> and
+    // __gap_length_<c> == the sequential path's cumulative_value_group
+    // and gap_length, row by row
+    val gapRows = cums.map { c =>
+      val seqGaps = Impute.imputeColumn(withAvgs, c, keepGapCols = true)
+        .select(col(HouseId), col("t_us"), col("cumulative_value_group"),
+          col("gap_length"))
+        .collect().toSet
+      val batGaps = batched
+        .select(col(HouseId), col("t_us"), col(s"__cvg_$c"),
+          col(s"__gap_length_$c"))
+        .collect().toSet
+      assert(seqGaps == batGaps, s"$c gap columns diverge: " +
+        s"${(seqGaps -- batGaps).take(3)} vs ${(batGaps -- seqGaps).take(3)}")
+      seqGaps.count(!_.isNullAt(2))
+    }
+    assert(gapRows.sum > 0, "no gap rows exercised")
   }
 
   test("readingDateStats: counts partition into imputed/na/original (impute.py:330-412)") {
