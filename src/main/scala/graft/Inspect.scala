@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ListenerBus
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One inspection tool over the query registry
@@ -96,7 +97,7 @@ object Inspect {
         val t0 = System.nanoTime()
         materialize(query(spark, sfDir))
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // the listener bus posts asynchronously
+        ListenerBus.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(listener)
         val ms = stages.toSeq.map(s => s -> s.taskMetrics)
         println(f"[stages] $name wall=$sec%.2fs stages=${ms.size} " +
@@ -124,9 +125,10 @@ object Inspect {
         val t0 = System.nanoTime()
         noop(df)
         println(f"[ops] $name exec=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        Thread.sleep(1000) // the listener bus posts asynchronously
+        ListenerBus.drain(spark.sparkContext)
         spark.listenerManager.unregister(listener)
-        ran.map(_.executedPlan).foreach(walk(_, 0))
+        walk(ran.getOrElse(throw new IllegalStateException(
+          s"[ops] $name: no successful execution reached the listener")).executedPlan, 0)
       case other =>
         throw new IllegalArgumentException(s"unknown mode $other; $usage")
     }

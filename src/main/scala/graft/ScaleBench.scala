@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * household axis — the axis that grows at 100 TB — multiplies), then
   * times the scale-critical queries at BOTH sf0.1 and the scaled dir in
   * the same session, reporting wall time plus per-task maxima (shuffle
-  * read/write bytes, peak execution memory) from a task-metrics listener
-  * — the numbers that decide whether a partition strategy survives a
-  * 100x scale-up, as opposed to plan-shape argument alone.
+  * read/write bytes, peak execution memory) from [[Probe]] — the
+  * numbers that decide whether a partition strategy survives a 100x
+  * scale-up, as opposed to plan-shape argument alone. Every timed line
+  * is one [[Probe.timed]] reading.
   *
   * Usage:
   *   runMain graft.ScaleBench [gen] [run] [crossover]
@@ -55,109 +56,133 @@ object ScaleBench {
     // benches; `crossover` alone only runs the crossover; no args = all
     val doRun = args.contains("run") || args.isEmpty
 
-    if (doGen) generate(spark, srcDir, outDir)
-
-    // one probe for both measurement blocks — registered once per
-    // session per its contract; reset() isolates per-query readings
-    val listener = new TaskMetricsProbe
-    spark.sparkContext.addSparkListener(listener)
+    // one probe for every measurement block of the session
+    val probe = Probe(spark)
+    if (doGen) generate(spark, srcDir, outDir, probe)
 
     if (doRun) {
       Harness.untimed("scalebench warm-up") {
-        SparkEntry.table(spark, srcDir, "events").limit(1000)
-          .write.format("noop").mode("overwrite").save()
+        noop(SparkEntry.table(spark, srcDir, "events").limit(1000))
       }
       val registry = SparkEntry.queries ++ Bench.benchOnly
       for (dir <- Seq(srcDir, outDir); name <- scaleQueries) {
         registry.get(name).foreach { fn =>
-          listener.reset()
-          val t0 = System.nanoTime()
           var planSec = -1.0
-          val outcome =
-            try {
-              val df = fn(spark, dir)
-              df.queryExecution.executedPlan // force analysis+optimization
-              planSec = (System.nanoTime() - t0) / 1e9
-              df.write.format("noop").mode("overwrite").save()
-              "ok"
-            } catch { case e: Throwable => s"failed: ${e.getMessage}" }
-          val sec = (System.nanoTime() - t0) / 1e9
-          // listener events post asynchronously (the bus drain API is
-          // private[spark]); a short pause suffices in local mode
-          Thread.sleep(300)
-          println(f"""{"query":"$name","dir":"$dir","sec":$sec%.2f,""" +
-            f""""plan_sec":$planSec%.2f,""" +
-            s""""rows_read":${listener.totRecords},""" +
-            s""""input_bytes":${listener.totInput},""" +
-            s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-            s""""max_task_shuffle_read":${listener.maxShuffleRead},""" +
-            s""""max_task_shuffle_write":${listener.maxShuffleWrite},""" +
-            s""""max_task_peak_mem":${listener.maxPeakMem},"status":"$outcome"}""")
+          probe.timedWith("query" -> name, "dir" -> dir) {
+            try { planSec = plannedNoop(fn(spark, dir)); "ok" }
+            catch { case e: Throwable => s"failed: ${e.getMessage}" }
+          }(status => Seq("plan_sec" -> planSec, "status" -> status))
         }
       }
     }
     if (args.contains("crossover") || args.isEmpty)
-      annCrossover(spark, srcDir, outDir, listener)
+      annCrossover(spark, srcDir, outDir, probe)
     if (args.contains("bm25") || args.isEmpty)
-      bm25Split(spark, outDir, listener)
+      bm25Split(spark, outDir, probe)
     if (args.contains("dense") || args.isEmpty)
-      denseSplit(spark, outDir, listener)
+      denseSplit(spark, outDir, probe)
     if (args.contains("semdedup") || args.isEmpty)
-      semDedupNlist(spark, outDir, listener)
+      semDedupNlist(spark, outDir, probe)
     if (args.contains("bpe") || args.isEmpty)
-      bpeScale(spark, outDir, listener)
+      bpeScale(spark, outDir, probe)
     if (args.contains("incdedup") || args.isEmpty)
-      incDedup(spark, srcDir, outDir, listener)
+      incDedup(spark, srcDir, outDir, probe)
     if (args.contains("topk") || args.isEmpty)
-      topkFinisher(spark, outDir, listener)
+      topkFinisher(spark, outDir, probe)
     if (args.contains("bloom") || args.isEmpty)
-      bloomScreen(spark, outDir, listener)
+      bloomScreen(spark, outDir, probe)
     if (args.contains("pca") || args.isEmpty)
-      pcaScale(spark, srcDir, outDir, listener)
+      pcaScale(spark, srcDir, outDir, probe)
     if (args.contains("zorder") || args.isEmpty)
-      zorderSkip(spark, outDir, listener)
+      zorderSkip(spark, outDir, probe)
     if (args.contains("jacjoin") || args.isEmpty)
-      jacJoinScale(spark, outDir, listener)
+      jacJoinScale(spark, outDir, probe)
     if (args.contains("kmv") || args.isEmpty)
-      kmvOverlap(spark, outDir, listener)
+      kmvOverlap(spark, outDir, probe)
     if (args.contains("knlm") || args.isEmpty)
-      knLm(spark, srcDir, outDir, listener)
+      knLm(spark, srcDir, outDir, probe)
     if (args.contains("tokenize") || args.isEmpty)
-      tokenizeThroughput(spark, outDir, listener)
+      tokenizeThroughput(spark, outDir, probe)
     if (args.contains("warc") || args.isEmpty)
-      warcThroughput(spark, outDir, listener)
+      warcThroughput(spark, outDir, probe)
     if (args.contains("eventops") || args.isEmpty)
-      eventOps(spark, srcDir, outDir, listener)
+      eventOps(spark, srcDir, outDir, probe)
     if (args.contains("fuzzy") || args.isEmpty)
-      fuzzyScale(spark, listener)
+      fuzzyScale(spark, probe)
     if (args.contains("prskew") || args.isEmpty)
-      pageRankSkew(spark, listener)
+      pageRankSkew(spark, probe)
     if (args.contains("qsketch") || args.isEmpty)
-      quantileSketchScale(spark, outDir, listener)
+      quantileSketchScale(spark, outDir, probe)
     if (args.contains("crawlstream") || args.isEmpty)
-      crawlStream(spark, outDir, listener)
+      crawlStream(spark, outDir, probe)
     if (args.contains("servelog") || args.isEmpty)
-      serveLog(spark, outDir, listener)
+      serveLog(spark, outDir, probe)
     if (args.contains("flagships") || args.isEmpty)
-      flagshipSoak(spark, srcDir, outDir, listener)
+      flagshipSoak(spark, srcDir, outDir, probe)
     if (args.contains("gates") || args.isEmpty)
-      gateScale(spark, outDir, listener)
+      gateScale(spark, outDir, probe)
     if (args.contains("serving") || args.isEmpty)
-      servingScale(spark, outDir, listener)
+      servingScale(spark, outDir, probe)
     if (args.contains("graphscale") || args.isEmpty)
-      graphScale(spark, srcDir, listener)
+      graphScale(spark, srcDir, probe)
     if (args.contains("graphscale100")) // opt-in: ~50M-edge decade, minutes
-      graphScale100(spark, srcDir, listener)
+      graphScale100(spark, srcDir, probe)
     if (args.contains("dedupscale10")) // opt-in: ~1M-doc dedup/ANN decade
-      dedupScale10(spark, outDir, listener)
+      dedupScale10(spark, outDir, probe)
     if (args.contains("retrievalscale10")) // opt-in: ~1M-doc BM25 decade
-      retrievalScale10(spark, outDir, listener)
+      retrievalScale10(spark, outDir, probe)
     if (args.contains("streamscale10")) // opt-in: streaming state-law decade
-      streamScale10(spark)
+      streamScale10(spark, probe)
     if (args.contains("ccscale10")) // opt-in: pointer-doubling CC decade
-      ccScale10(spark, listener)
+      ccScale10(spark, probe)
     spark.stop()
   }
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Plans `df` (analysis + optimization + physical planning), then runs
+    * it into the noop sink; returns the planning seconds.
+    */
+  private def plannedNoop(df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    val d = df
+    d.queryExecution.executedPlan
+    val planSec = (System.nanoTime() - t0) / 1e9
+    noop(d)
+    planSec
+  }
+
+  /** A row count as a line field. */
+  private val rows: Long => Seq[(String, Any)] = n => Seq("rows" -> n)
+
+  /** Parquet files under `dir`, recursively. */
+  private def parquetFiles(dir: String): Int = {
+    def walk(f: java.io.File): Int =
+      if (f.isDirectory) Option(f.listFiles()).fold(0)(_.map(walk).sum)
+      else if (f.getName.endsWith(".parquet")) 1 else 0
+    walk(new java.io.File(dir))
+  }
+
+  /** The customer→supplier order graph of `srcDir`, weighted by quantity. */
+  private def orderEdges(spark: SparkSession, srcDir: String): DataFrame = {
+    val li = SparkEntry.table(spark, srcDir, "lineitem")
+      .select("l_orderkey", "l_suppkey", "l_quantity")
+    val ord = SparkEntry.table(spark, srcDir, "orders")
+      .select("o_orderkey", "o_custkey")
+    li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+      .select(col("o_custkey").cast("long").as("src"),
+        (col("l_suppkey").cast("long") + 1000000L).as("dst"),
+        col("l_quantity").as("weight"))
+  }
+
+  /** PageRank, weighted PageRank and HITS, 3 rounds each, per edge tier. */
+  private def graphRounds(probe: Probe, tiers: Seq[(String, DataFrame)]): Unit =
+    for ((tier, e) <- tiers; (label, run) <- Seq[(String, DataFrame => DataFrame)](
+        "pagerank_3r" -> (graft.ops.PageRank.pageRank(_, 3)),
+        "pagerank_weighted_3r" -> (graft.ops.PageRank.pageRankWeighted(_, 3)),
+        "hits_3r" -> (graft.ops.Hits.hits(_, 3))))
+      probe.timedWith("graph" -> label, "tier" -> tier)(run(e).count())(rows)
 
   /** Graph-signal iteration cost at 1× vs a 10× edge set (r17 s3):
     * PageRank, weighted PageRank, and HITS over the customer→supplier
@@ -172,43 +197,15 @@ object ScaleBench {
     * per-round lineage cuts.
     */
   private def graphScale(spark: SparkSession, srcDir: String,
-                         listener: TaskMetricsProbe): Unit = {
-    def time(label: String, tier: String)(body: => Long): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val rows = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"graph":"$label","tier":"$tier","sec":$sec%.2f,"rows":$rows,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-    }
-    val li = SparkEntry.table(spark, srcDir, "lineitem")
-      .select("l_orderkey", "l_suppkey", "l_quantity")
-    val ord = SparkEntry.table(spark, srcDir, "orders")
-      .select("o_orderkey", "o_custkey")
-    val base = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-      .select(col("o_custkey").cast("long").as("src"),
-        (col("l_suppkey").cast("long") + 1000000L).as("dst"),
-        col("l_quantity").as("weight"))
-      .localCheckpoint()
+                         probe: Probe): Unit = {
+    val base = orderEdges(spark, srcDir).localCheckpoint()
     try {
       val tenX = (0 until 10).map(i =>
           base.select((col("src") + lit(i.toLong * 10000000L)).as("src"),
             (col("dst") + lit(i.toLong * 10000000L)).as("dst"),
             col("weight")))
         .reduce(_ unionByName _)
-      for ((tier, e) <- Seq(("1x", base), ("10x", tenX))) {
-        time("pagerank_3r", tier) {
-          graft.ops.PageRank.pageRank(e, 3).count()
-        }
-        time("pagerank_weighted_3r", tier) {
-          graft.ops.PageRank.pageRankWeighted(e, 3).count()
-        }
-        time("hits_3r", tier) {
-          graft.ops.Hits.hits(e, 3).count()
-        }
-      }
+      graphRounds(probe, Seq(("1x", base), ("10x", tenX)))
     } finally graft.Checkpoints.free(base)
   }
 
@@ -228,26 +225,8 @@ object ScaleBench {
     * dominates).
     */
   private def graphScale100(spark: SparkSession, srcDir: String,
-                            listener: TaskMetricsProbe): Unit = {
-    def time(label: String, tier: String)(body: => Long): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val rows = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"graph":"$label","tier":"$tier","sec":$sec%.2f,"rows":$rows,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-    }
-    val li = SparkEntry.table(spark, srcDir, "lineitem")
-      .select("l_orderkey", "l_suppkey", "l_quantity")
-    val ord = SparkEntry.table(spark, srcDir, "orders")
-      .select("o_orderkey", "o_custkey")
-    val base = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-      .select(col("o_custkey").cast("long").as("src"),
-        (col("l_suppkey").cast("long") + 1000000L).as("dst"),
-        col("l_quantity").as("weight"))
-      .localCheckpoint()
+                            probe: Probe): Unit = {
+    val base = orderEdges(spark, srcDir).localCheckpoint()
     try {
       // the copy stride is DERIVED from the measured max node id, not
       // assumed (ADVICE r18: o_custkey crosses the old hardcoded 10M
@@ -277,18 +256,7 @@ object ScaleBench {
       // MEASURES that path: the 100× tier runs on whatever conf the
       // session launched with, and the default 8 GB heap must survive
       // where r18's unsized run died with UNABLE_TO_ACQUIRE_MEMORY.
-      val tiers = Seq(("10x", copies(10)), ("100x", copies(100)))
-      for ((tier, e) <- tiers) {
-        time("pagerank_3r", tier) {
-          graft.ops.PageRank.pageRank(e, 3).count()
-        }
-        time("pagerank_weighted_3r", tier) {
-          graft.ops.PageRank.pageRankWeighted(e, 3).count()
-        }
-        time("hits_3r", tier) {
-          graft.ops.Hits.hits(e, 3).count()
-        }
-      }
+      graphRounds(probe, Seq(("10x", copies(10)), ("100x", copies(100))))
     } finally graft.Checkpoints.free(base)
   }
 
@@ -307,17 +275,7 @@ object ScaleBench {
     * exact block structure (rows = one cluster per 64-node chain).
     */
   private def ccScale10(spark: SparkSession,
-                        listener: TaskMetricsProbe): Unit = {
-    def time(label: String, tier: String)(body: => Long): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val rows = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"ccscale":"$label","tier":"$tier","sec":$sec%.2f,"rows":$rows,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-    }
+                        probe: Probe): Unit = {
     // chains of 64 consecutive ids: every id links its successor except
     // the last of each block — n input rows minus the block boundaries
     def pairs(n: Long) = spark.range(n)
@@ -329,12 +287,12 @@ object ScaleBench {
     graft.Checkpoints.free(warm)
     for ((tier, n) <- Seq(("1x", 500000L), ("10x", 5000000L))) {
       val before = spark.conf.get("spark.sql.shuffle.partitions")
-      time("cc_pointer_doubling", tier) {
+      probe.timedWith("ccscale" -> "cc_pointer_doubling", "tier" -> tier) {
         val c = graft.llm.Dedup.clusterPairs(pairs(n))
         val k = c.select("cluster_id").distinct().count()
         graft.Checkpoints.free(c)
         k
-      }
+      }(rows)
       require(spark.conf.get("spark.sql.shuffle.partitions") == before,
         "ccscale10: the sizing levers must not outlive the CC call")
     }
@@ -357,21 +315,8 @@ object ScaleBench {
     *    graphscale100 memory column).
     */
   private def dedupScale10(spark: SparkSession, outDir: String,
-                           listener: TaskMetricsProbe): Unit = {
+                           probe: Probe): Unit = {
     import graft.llm.{Dedup, Similarity}
-    def time(label: String, tier: String, extra: String = "")
-            (body: => Long): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val rows = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"dedupscale":"$label","tier":"$tier","sec":$sec%.2f,""" +
-        s""""rows":$rows,$extra""" +
-        s""""input_bytes":${listener.totInput},""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-    }
     // ---- near-dedup-complete decade (threshold 0.8 — the compliance
     // screen regime; candidates counted per tier for the attribution).
     // The tier cipher uses an alphabet DISJOINT from generate()'s
@@ -408,11 +353,11 @@ object ScaleBench {
         val nCand = Dedup.candidatePairsPositional(pa, pb, 0.8,
           col("id_a") < col("id_b")).count()
         graft.Checkpoints.free(sets)
-        time("near_dedup_complete", tier,
-          s""""n_docs":$nDocs,"cand_pairs":$nCand,""") {
+        probe.timedWith("dedupscale" -> "near_dedup_complete", "tier" -> tier,
+            "n_docs" -> nDocs, "cand_pairs" -> nCand) {
           Dedup.nearDedupComplete(dd, "doc_id", "text", threshold = 0.8)
             .count()
-        }
+        }(rows)
       } finally graft.Checkpoints.free(dd)
     }
     // ---- coded IVF-PQ search decade (the denseSplit serving shape at
@@ -451,15 +396,14 @@ object ScaleBench {
           bucketCols = Seq("cell"), sortCols = Seq("cell"))
         val idx = spark.table(table)
         // warm once (codegen), measure the second search
-        Similarity.ivfPqTopKCoded(idx, "id", "codes", "cell",
-            q => ranking(q).take(2), pqCb, qVecs, k = 5)
-          .write.format("noop").mode("overwrite").save()
-        time("ivfpq_coded_search", tier,
-          s""""n_vecs":$nVecs,"nlist":$nlist,"n_queries":${qVecs.size},""") {
+        noop(Similarity.ivfPqTopKCoded(idx, "id", "codes", "cell",
+          q => ranking(q).take(2), pqCb, qVecs, k = 5))
+        probe.timedWith("dedupscale" -> "ivfpq_coded_search", "tier" -> tier,
+            "n_vecs" -> nVecs, "nlist" -> nlist, "n_queries" -> qVecs.size) {
           Similarity.ivfPqTopKCoded(idx, "id", "codes", "cell",
               q => ranking(q).take(2), pqCb, qVecs, k = 5)
             .count()
-        }
+        }(rows)
         // NARROW batch: 200 queries sharing one vector → the whole
         // batch probes 2 of nlist cells, so the r19 scan-level prune
         // must cut input_bytes to ~2/nlist of the wide batch's (a wide
@@ -467,12 +411,13 @@ object ScaleBench {
         // probed cells is only OBSERVABLE on a narrow one)
         val qNarrow = qVecs.take(1).flatMap { case (_, v) =>
           (0 until 200).map(i => (900000L + i, v)) }
-        time("ivfpq_coded_search_narrow", tier,
-          s""""n_vecs":$nVecs,"nlist":$nlist,"n_queries":${qNarrow.size},""") {
+        probe.timedWith("dedupscale" -> "ivfpq_coded_search_narrow",
+            "tier" -> tier, "n_vecs" -> nVecs, "nlist" -> nlist,
+            "n_queries" -> qNarrow.size) {
           Similarity.ivfPqTopKCoded(idx, "id", "codes", "cell",
               q => ranking(q).take(2), pqCb, qNarrow, k = 5)
             .count()
-        }
+        }(rows)
         spark.sql(s"DROP TABLE IF EXISTS $table")
       } finally graft.Checkpoints.free(e)
     }
@@ -498,21 +443,8 @@ object ScaleBench {
     * stays partition-bounded.
     */
   private def retrievalScale10(spark: SparkSession, outDir: String,
-                               listener: TaskMetricsProbe): Unit = {
+                               probe: Probe): Unit = {
     import graft.llm.Retrieval
-    def time(label: String, tier: String, extra: String = "")
-            (body: => Long): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val rows = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"retrievalscale":"$label","tier":"$tier","sec":$sec%.2f,""" +
-        s""""rows":$rows,$extra""" +
-        s""""input_bytes":${listener.totInput},""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-    }
     val docs1 = SparkEntry.table(spark, outDir, "documents")
       .select(col("doc_id"), col("text"))
     // FULL-alphabet Caesar rotation: every letter of every term moves,
@@ -544,12 +476,13 @@ object ScaleBench {
         // untimed so the build row measures the postings pass alone
         val (post, stats) = Retrieval.buildPostings(d, "doc_id", "text")
         statsC = stats.localCheckpoint()
-        time("bm25_build_persist", tier, s""""n_docs":$nDocs,""") {
+        probe.timedWith("retrievalscale" -> "bm25_build_persist",
+            "tier" -> tier, "n_docs" -> nDocs) {
           graft.etd.Sources.writeBucketed(post, table,
             s"$outDir/__bm2510_$tier", buckets = 32,
             bucketCols = Seq("term"), sortCols = Seq("term"))
           spark.table(table).count()
-        }
+        }(rows)
         val idx = spark.table(table)
         // the 3-doc query frame is materialized TINY before timing —
         // left lazy it re-scans the whole checkpointed corpus per
@@ -557,12 +490,13 @@ object ScaleBench {
         // the row exists to measure
         q = d.filter(col("doc_id") < 3).localCheckpoint()
         // warm once (codegen + driver term collect), measure the second
-        Retrieval.searchPostingsPruned(idx, statsC, q, "doc_id", "text",
-          k = 5).write.format("noop").mode("overwrite").save()
-        time("bm25_pruned_search", tier, s""""n_docs":$nDocs,""") {
+        noop(Retrieval.searchPostingsPruned(idx, statsC, q, "doc_id", "text",
+          k = 5))
+        probe.timedWith("retrievalscale" -> "bm25_pruned_search",
+            "tier" -> tier, "n_docs" -> nDocs) {
           Retrieval.searchPostingsPruned(idx, statsC, q, "doc_id", "text",
             k = 5).count()
-        }
+        }(rows)
       } finally {
         spark.sql(s"DROP TABLE IF EXISTS $table")
         graft.Checkpoints.free(d)
@@ -587,7 +521,7 @@ object ScaleBench {
     * `final_state_rows` additionally pins that eviction really runs
     * (the end-of-stream store holds the tail horizon, not history).
     */
-  private def streamScale10(spark: SparkSession): Unit = {
+  private def streamScale10(spark: SparkSession, probe: Probe): Unit = {
     // a 10× arm runs ~100 micro-batches; keep every progress event so
     // max-over-progress sees the whole run — applied once for the verb
     // and RESTORED after (a leaked session conf would follow every
@@ -595,56 +529,54 @@ object ScaleBench {
     val progKey = "spark.sql.streaming.numRecentProgressUpdates"
     val progPrev = spark.conf.getOption(progKey)
     spark.conf.set(progKey, "256")
-    try streamScale10Arms(spark)
+    try streamScale10Arms(spark, probe)
     finally progPrev.fold(spark.conf.unset(progKey))(spark.conf.set(progKey, _))
   }
 
-  private def streamScale10Arms(spark: SparkSession): Unit = {
-    def runArm(label: String, arm: String, nRows: Long, rowsPerSec: Long)
-              (mk: DataFrame => DataFrame): Unit = {
+  private def streamScale10Arms(spark: SparkSession, probe: Probe): Unit = {
+    // `n` rows of `slice(range)` as time-ordered slices, one file each ->
+    // one micro-batch each (the watermark advances between batches, so
+    // eviction is LIVE during the run, not a post-hoc property), streamed
+    // through `mk` into the noop sink. The INGEST CHUNK is constant (10k
+    // rows/micro-batch) across arms — sliced by row count alone, a
+    // 10×-longer stream rode in 10×-bigger batches and max_state measured
+    // the chunk, not the store law (first run: 112k "max state" that was
+    // 100k of batch + 12k of horizon)
+    def arm(fields: (String, Any)*)(n: Long, slice: DataFrame => DataFrame)
+           (mk: DataFrame => DataFrame): Unit = {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_streamscale_").toString
       try {
         val src = s"$tmp/in"
-        // constant INGEST CHUNK (10k rows/micro-batch) across arms —
-        // sliced by row count alone, a 10×-longer stream rode in
-        // 10×-bigger batches and max_state measured the chunk, not the
-        // store law (first run: 112k "max state" that was 100k of
-        // batch + 12k of horizon)
-        val slices = math.max(10L, nRows / 10000L).toInt
-        val per = nRows / slices
-        // time-ordered slices, one file each -> one micro-batch each
-        // (watermark advances between batches, so eviction is LIVE
-        // during the run, not a post-hoc property)
+        val slices = math.max(10L, n / 10000L).toInt
+        val per = n / slices
         (0 until slices).foreach { s =>
-          spark.range(s * per, (s + 1) * per)
-            .select(col("id"),
-              // exact integer µs: rowsPerSec divides 1e6 by contract
-              timestamp_micros(col("id") * lit(1000000L / rowsPerSec))
-                .as("ts"))
+          slice(spark.range(s * per, (s + 1) * per).toDF())
             .coalesce(1).write.mode("append").parquet(src)
         }
         val stream = spark.readStream
           .schema(spark.read.parquet(src).schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
-        val t0 = System.nanoTime()
-        val q = mk(stream).writeStream.format("noop")
-          .option("checkpointLocation", s"$tmp/ck").start()
-        try q.processAllAvailable() finally q.stop()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val progs = q.recentProgress.toSeq
-        val states = progs.flatMap(_.stateOperators.toSeq)
-        val maxState = states.map(_.numRowsTotal).maxOption.getOrElse(0L)
-        val maxMem = states.map(_.memoryUsedBytes).maxOption.getOrElse(0L)
-        val lastState = progs.reverse
-          .find(_.stateOperators.nonEmpty)
-          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
-        println(f"""{"streamscale":"$label","tier":"$arm","sec":$sec%.2f,""" +
-          s""""rows":$nRows,"rows_per_sec":$rowsPerSec,""" +
-          s""""max_state_rows":$maxState,"max_state_mem":$maxMem,""" +
-          s""""final_state_rows":$lastState}""")
+        probe.timedWith(fields: _*) {
+          val q = mk(stream).writeStream.format("noop")
+            .option("checkpointLocation", s"$tmp/ck").start()
+          try q.processAllAvailable() finally q.stop()
+          q.recentProgress.toSeq
+        } { progs =>
+          val states = progs.flatMap(_.stateOperators.toSeq)
+          Seq("max_state_rows" -> states.map(_.numRowsTotal).maxOption.getOrElse(0L),
+            "max_state_mem" -> states.map(_.memoryUsedBytes).maxOption.getOrElse(0L),
+            "final_state_rows" -> progs.reverse.find(_.stateOperators.nonEmpty)
+              .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L))
+        }
       } finally graft.queries.StreamHarness.deleteTempDir(tmp)
     }
+    def runArm(label: String, tier: String, nRows: Long, rowsPerSec: Long)
+              (mk: DataFrame => DataFrame): Unit =
+      arm("streamscale" -> label, "tier" -> tier, "rows" -> nRows,
+          "rows_per_sec" -> rowsPerSec)(nRows, _.select(col("id"),
+        // exact integer µs: rowsPerSec divides 1e6 by contract
+        timestamp_micros(col("id") * lit(1000000L / rowsPerSec)).as("ts")))(mk)
     // exact dedup: every text distinct, 60 s horizon -> plateau at
     // ~horizon x rate however long the stream runs
     def dedupQ(df: DataFrame): DataFrame =
@@ -673,46 +605,24 @@ object ScaleBench {
     // stronger law than the dedup/session horizon×rate plateau: 10×
     // more slots per house must leave max_state_rows flat at ~houses,
     // and 10× more houses must grow it exactly 10×.
-    def stateArm(label: String, arm: String, houses: Long,
-                 slotsPerHouse: Long)(mk: DataFrame => DataFrame): Unit = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_streamscale_").toString
-      try {
-        val n = houses * slotsPerHouse
-        val src = s"$tmp/in"
-        val slices = math.max(10L, n / 10000L).toInt
-        val per = n / slices
-        // time-ordered slices: row id → (house = id % houses, slot =
-        // id / houses), so every batch advances ALL houses one-ish slot
-        // — the fleet shape. Every 7th slot is dark (null cum), keeping
-        // open-gap state live across batches, and closing next slot.
-        (0 until slices).foreach { s =>
-          spark.range(s * per, (s + 1) * per)
-            .select((col("id") % houses).as("huis"),
-              ((col("id") / houses) * 300L).as("tsSec"),
-              when((col("id") / houses) % 7 === 3, lit(null))
-                .otherwise((col("id") / houses).cast("double") * 1.5)
-                .as("cum"),
-              lit(null).cast("double").as("avg"),
-              col("id").cast("double").as("value"))
-            .coalesce(1).write.mode("append").parquet(src)
-        }
-        val stream = spark.readStream
-          .schema(spark.read.parquet(src).schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-        val t0 = System.nanoTime()
-        val q = mk(stream).writeStream.format("noop")
-          .option("checkpointLocation", s"$tmp/ck").start()
-        try q.processAllAvailable() finally q.stop()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val states = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
-        val maxState = states.map(_.numRowsTotal).maxOption.getOrElse(0L)
-        val maxMem = states.map(_.memoryUsedBytes).maxOption.getOrElse(0L)
-        println(f"""{"streamscale":"$label","tier":"$arm","sec":$sec%.2f,""" +
-          s""""rows":$n,"houses":$houses,"slots_per_house":$slotsPerHouse,""" +
-          s""""max_state_rows":$maxState,"max_state_mem":$maxMem}""")
-      } finally graft.queries.StreamHarness.deleteTempDir(tmp)
-    }
+    def stateArm(label: String, tier: String, houses: Long,
+                 slotsPerHouse: Long)(mk: DataFrame => DataFrame): Unit =
+      arm("streamscale" -> label, "tier" -> tier,
+          "rows" -> houses * slotsPerHouse, "houses" -> houses,
+          "slots_per_house" -> slotsPerHouse)(houses * slotsPerHouse,
+        // row id → (house = id % houses, slot = id / houses), so every
+        // batch advances ALL houses one-ish slot — the fleet shape. Every
+        // 7th slot is dark (null cum), keeping open-gap state live across
+        // batches, and closing next slot. The slot is cast to long: column
+        // `/` divides in double, and a double tsSec cannot up-cast to the
+        // readings' Long field
+        _.withColumn("slot", (col("id") / houses).cast("long"))
+          .select((col("id") % houses).as("huis"),
+            (col("slot") * 300L).as("tsSec"),
+            when(col("slot") % 7 === 3, lit(null))
+              .otherwise(col("slot").cast("double") * 1.5).as("cum"),
+            lit(null).cast("double").as("avg"),
+            col("id").cast("double").as("value")))(mk)
     import spark.implicits._
     def imputeQ(df: DataFrame): DataFrame =
       graft.streaming.StreamingImpute.imputeStreamScaled(
@@ -746,52 +656,33 @@ object ScaleBench {
     *     corpus).
     */
   private def servingScale(spark: SparkSession, outDir: String,
-                           listener: TaskMetricsProbe): Unit = {
+                           probe: Probe): Unit = {
     import graft.llm.{Dedup, Retrieval}
     val docs = SparkEntry.table(spark, outDir, "documents")
       .select(col("doc_id"), col("text"))
     val nDocs = docs.count()
-    def time(label: String, extra: String = "")(body: => Long): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val rows = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"serving":"$label","sec":$sec%.2f,"rows":$rows,""" +
-        f""""docs":$nDocs,$extra""" +
-        s""""input_bytes":${listener.totInput},""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-    }
     val phrase = Seq("table", "value")
     val idxPath = s"$outDir/__posidx"
-    time("positional_index_build") {
-      val post = Retrieval.positionalPostings(docs, "doc_id", "text")
-      graft.etd.Sources.writeBucketed(post, "graft_posidx", idxPath, 32,
-        Seq("term"), Seq("term"))
-      spark.table("graft_posidx").count()
-    }
-    time("phrase_indexed") {
-      Retrieval.phraseMatches(spark.table("graft_posidx"), phrase).count()
-    }
-    time("phrase_inline") {
-      Retrieval.phraseMatches(
-        Retrieval.positionalPostings(docs, "doc_id", "text"), phrase).count()
-    }
-    time("proximity_indexed") {
-      Retrieval.proximityPairs(spark.table("graft_posidx"),
-        "table", "value", 3).count()
-    }
-    time("containment_join_t08") {
-      Dedup.containmentJoin(docs, "doc_id", "text", 0.8).count()
-    }
-    time("containment_dedup_t08") {
-      Dedup.containmentDedup(docs, "doc_id", "text", 0.8).count()
-    }
-    time("tfidf_cosine_3q") {
-      Retrieval.tfidfCosineTopK(docs, "doc_id", "text",
-        docs.filter(col("doc_id") < 3), "doc_id", "text", 5).count()
-    }
+    def idx = spark.table("graft_posidx")
+    for ((label, count) <- Seq[(String, () => Long)](
+        "positional_index_build" -> { () =>
+          val post = Retrieval.positionalPostings(docs, "doc_id", "text")
+          graft.etd.Sources.writeBucketed(post, "graft_posidx", idxPath, 32,
+            Seq("term"), Seq("term"))
+          idx.count()
+        },
+        "phrase_indexed" -> (() => Retrieval.phraseMatches(idx, phrase).count()),
+        "phrase_inline" -> (() => Retrieval.phraseMatches(
+          Retrieval.positionalPostings(docs, "doc_id", "text"), phrase).count()),
+        "proximity_indexed" -> (() =>
+          Retrieval.proximityPairs(idx, "table", "value", 3).count()),
+        "containment_join_t08" -> (() =>
+          Dedup.containmentJoin(docs, "doc_id", "text", 0.8).count()),
+        "containment_dedup_t08" -> (() =>
+          Dedup.containmentDedup(docs, "doc_id", "text", 0.8).count()),
+        "tfidf_cosine_3q" -> (() => Retrieval.tfidfCosineTopK(docs, "doc_id",
+          "text", docs.filter(col("doc_id") < 3), "doc_id", "text", 5).count())))
+      probe.timedWith("serving" -> label, "docs" -> nDocs)(count())(rows)
   }
 
   /** Crawl/curation gate shapes at the 20x corpus (r17). Claims:
@@ -805,44 +696,32 @@ object ScaleBench {
     * stay rule-table-sized, not corpus-sized).
     */
   private def gateScale(spark: SparkSession, outDir: String,
-                        listener: TaskMetricsProbe): Unit = {
+                        probe: Probe): Unit = {
     import spark.implicits._
     import graft.llm.{Curation, Robots}
     val docs = SparkEntry.table(spark, outDir, "documents")
       .select(col("doc_id"), col("text"))
     val nDocs = docs.count()
-    def time(label: String, extra: String = "")(body: => Long): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val rows = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"gate":"$label","sec":$sec%.2f,"rows":$rows,""" +
-        f""""docs":$nDocs,$extra""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-    }
     val small = Seq("slow", "dup", "big").toDF("term")
     val large = spark.range(50000)
       .select(concat(lit("blk_"), col("id")).as("term"))
       .unionByName(small)
-    time("blocklist_3_terms", """"terms":3,""") {
-      Curation.blocklistGate(docs, "doc_id", "text", small, "term").count()
-    }
-    time("blocklist_50k_terms", """"terms":50003,""") {
-      Curation.blocklistGate(docs, "doc_id", "text", large, "term").count()
-    }
+    for ((label, terms, nTerms) <- Seq(("blocklist_3_terms", small, 3),
+        ("blocklist_50k_terms", large, 50003)))
+      probe.timedWith("gate" -> label, "docs" -> nDocs, "terms" -> nTerms) {
+        Curation.blocklistGate(docs, "doc_id", "text", terms, "term").count()
+      }(rows)
     // 10k hosts, each with a realistic 4-rule robots body; URLs at
     // corpus grain spread over those hosts
     val bodies = spark.range(10000).select(
       concat(lit("h"), col("id"), lit(".example.com")).as("host"),
       lit("User-agent: *\nDisallow: /private/\nAllow: /private/ok/\n" +
         "Disallow: /tmp$\nDisallow: /star/*/x$").as("txt"))
-    var rules: DataFrame = null
-    time("robots_parse_10k_hosts", """"hosts":10000,""") {
-      rules = Robots.parseRobots(bodies, "host", "txt").localCheckpoint()
-      rules.count()
-    }
+    val rules = probe.timedWith("gate" -> "robots_parse_10k_hosts",
+        "docs" -> nDocs, "hosts" -> 10000) {
+      val r = Robots.parseRobots(bodies, "host", "txt").localCheckpoint()
+      (r, r.count())
+    }(r => rows(r._2))._1
     try {
       val paths = array(lit("/private/file"), lit("/private/ok/file"),
         lit("/tmp"), lit("/tmpextra"), lit("/star/deep/x"), lit("/p/1page"),
@@ -850,10 +729,11 @@ object ScaleBench {
       val urls = docs.select(col("doc_id"), concat(lit("http://h"),
         col("doc_id") % 10000, lit(".example.com"),
         element_at(paths, (col("doc_id") % 8 + 1).cast("int"))).as("url"))
-      time("robots_decide_corpus", """"hosts":10000,""") {
+      probe.timedWith("gate" -> "robots_decide_corpus", "docs" -> nDocs,
+          "hosts" -> 10000) {
         Robots.robotsAllowed(urls, rules, "graftbot", "doc_id")
           .filter(col("allowed")).count()
-      }
+      }(rows)
       // the full scheduler batch at corpus grain: dedup + anti join an
       // already-seen half + gate + authority + continuing slots. The
       // slot window keys on host (10k hosts ≈ 10 allowed URLs each);
@@ -870,11 +750,12 @@ object ScaleBench {
             lit(".example.com")).as("host"))
         .localCheckpoint()
       try {
-        time("frontier_batch_corpus", """"hosts":10000,""") {
+        probe.timedWith("gate" -> "frontier_batch_corpus", "docs" -> nDocs,
+            "hosts" -> 10000) {
           graft.streaming.StreamingFrontier.frontierBatch(
             urls, "doc_id", "url", rules, "graftbot", auth, half)
             ._1.count()
-        }
+        }(rows)
       } finally graft.Checkpoints.free(half)
     } finally graft.Checkpoints.free(rules)
   }
@@ -898,29 +779,11 @@ object ScaleBench {
     * VERDICT r15 #6 acceptance).
     */
   private def serveLog(spark: SparkSession, outDir: String,
-                       listener: TaskMetricsProbe): Unit = {
+                       probe: Probe): Unit = {
     import graft.llm.{Retrieval, Similarity}
     import graft.streaming.{StreamingRetrieval, StreamingSimilarity}
     val tmp = java.nio.file.Files.createTempDirectory("servelog")
     val nBatches = 48
-    def parquetFiles(dir: String): Int = {
-      def walk(f: java.io.File): Int =
-        if (f.isDirectory) Option(f.listFiles()).fold(0)(_.map(walk).sum)
-        else if (f.getName.endsWith(".parquet")) 1 else 0
-      walk(new java.io.File(dir))
-    }
-    def timed[A](label: String, extra: => String = "")(body: => A): A = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"servelog":"$label","sec":$sec%.2f,""" +
-        s""""input_bytes":${listener.totInput},""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}$extra}""")
-      r
-    }
     try {
       // ---- lexical log: 48 micro-batch appends of the 100k-doc corpus
       val docs = SparkEntry.table(spark, outDir, "documents")
@@ -929,7 +792,7 @@ object ScaleBench {
       docs.withColumn("b", pmod(col("doc_id"), lit(nBatches)))
         .write.partitionBy("b").mode("overwrite").parquet(staged)
       val bmDir = s"$tmp/bm25"
-      timed("bm25_append_48", s""","batches":$nBatches""") {
+      probe.timed("servelog" -> "bm25_append_48", "batches" -> nBatches) {
         for (b <- 0 until nBatches)
           StreamingRetrieval.appendBatch(bmDir, "doc_id", "text")(
             spark.read.parquet(staged).filter(col("b") === b).drop("b"),
@@ -941,13 +804,12 @@ object ScaleBench {
         Retrieval.searchPostingsNorm(p, t, s, queries, "doc_id", "text",
           k = 10).orderBy("query_id", "rank").collect().toSeq
       }
-      val bmFiles0 = parquetFiles(bmDir)
-      val bmPre = timed("bm25_search_precompact",
-        s""","log_files":$bmFiles0""")(bmSearch())
-      timed("bm25_compact")(StreamingRetrieval.compactIndex(spark, bmDir))
-      val bmFiles1 = parquetFiles(bmDir)
-      val bmPost = timed("bm25_search_postcompact",
-        s""","log_files":$bmFiles1""")(bmSearch())
+      val bmPre = probe.timed("servelog" -> "bm25_search_precompact",
+        "log_files" -> parquetFiles(bmDir))(bmSearch())
+      probe.timed("servelog" -> "bm25_compact")(
+        StreamingRetrieval.compactIndex(spark, bmDir))
+      val bmPost = probe.timed("servelog" -> "bm25_search_postcompact",
+        "log_files" -> parquetFiles(bmDir))(bmSearch())
       require(bmPre == bmPost, "bm25 fold changed search results")
 
       // ---- coded ANN log: same arrival pattern over the embeddings
@@ -963,7 +825,7 @@ object ScaleBench {
       emb.withColumn("b", pmod(col("vec_id"), lit(nBatches)))
         .write.partitionBy("b").mode("overwrite").parquet(stagedE)
       val annDir = s"$tmp/ann"
-      timed("ann_append_48", s""","batches":$nBatches""") {
+      probe.timed("servelog" -> "ann_append_48", "batches" -> nBatches) {
         for (b <- 0 until nBatches)
           StreamingSimilarity.appendBatch(annDir, "vec_id", "embedding",
             coarse, pqCb)(
@@ -978,34 +840,32 @@ object ScaleBench {
           StreamingSimilarity.loadIndex(spark, annDir), "id", "codes",
           "cell", q => ranking(q).take(2), pqCb, qVecs, k = 10)
           .orderBy("query_id", "rank").collect().toSeq
-      val annFiles0 = parquetFiles(s"$annDir/coded")
-      val annPre = timed("ann_search_precompact",
-        s""","log_files":$annFiles0""")(annSearch())
-      timed("ann_compact")(StreamingSimilarity.compactIndex(spark, annDir))
-      val annFiles1 = parquetFiles(s"$annDir/coded")
-      val annPost = timed("ann_search_postcompact",
-        s""","log_files":$annFiles1""")(annSearch())
+      val annPre = probe.timed("servelog" -> "ann_search_precompact",
+        "log_files" -> parquetFiles(s"$annDir/coded"))(annSearch())
+      probe.timed("servelog" -> "ann_compact")(
+        StreamingSimilarity.compactIndex(spark, annDir))
+      val annPost = probe.timed("servelog" -> "ann_search_postcompact",
+        "log_files" -> parquetFiles(s"$annDir/coded"))(annSearch())
       require(annPre == annPost, "ann fold changed search results")
 
       // ---- auto-fold (r16): the same 48-batch lexical stream with the
       // in-band trigger and NO manual compact call — the file count must
       // stay bounded by the trigger window, results identical
       val bmAutoDir = s"$tmp/bm25_auto"
-      timed("bm25_append_48_autofold", s""","batches":$nBatches""") {
+      probe.timed("servelog" -> "bm25_append_48_autofold",
+          "batches" -> nBatches) {
         for (b <- 0 until nBatches)
           StreamingRetrieval.appendBatch(bmAutoDir, "doc_id", "text",
             autoCompactEvery = 12)(
             spark.read.parquet(staged).filter(col("b") === b).drop("b"),
             b.toLong)
       }
-      val bmAutoFiles = parquetFiles(bmAutoDir)
-      val bmAuto = timed("bm25_search_autofold",
-        s""","log_files":$bmAutoFiles""")(
-        {
-          val (p, t, s) = StreamingRetrieval.loadIndex(spark, bmAutoDir)
-          Retrieval.searchPostingsNorm(p, t, s, queries, "doc_id", "text",
-            k = 10).orderBy("query_id", "rank").collect().toSeq
-        })
+      val bmAuto = probe.timed("servelog" -> "bm25_search_autofold",
+          "log_files" -> parquetFiles(bmAutoDir)) {
+        val (p, t, s) = StreamingRetrieval.loadIndex(spark, bmAutoDir)
+        Retrieval.searchPostingsNorm(p, t, s, queries, "doc_id", "text",
+          k = 10).orderBy("query_id", "rank").collect().toSeq
+      }
       require(bmAuto == bmPost, "auto-fold changed search results")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
@@ -1026,7 +886,7 @@ object ScaleBench {
     * digest-only and never re-reads archive payloads.
     */
   private def crawlStream(spark: SparkSession, outDir: String,
-                          listener: TaskMetricsProbe): Unit = {
+                          probe: Probe): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.StreamingCrawl
     implicit val sqlCtx = spark.sqlContext
@@ -1082,21 +942,16 @@ object ScaleBench {
         var accepted0 = 0L
         for ((label, segs) <- Seq(("quarter", quarter),
           ("recrawl_all_dup", recrawl), ("threequarters", rest))) {
-          listener.reset()
-          val t0 = System.nanoTime()
-          input.addData(segs.map(_._1))
-          query.processAllAvailable()
-          val sec = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300)
-          val mb = segs.map(_._2).sum / 1e6
-          val total = spark.read.parquet(sink).count()
-          val batchAccepted = total - accepted0
-          accepted0 = total
-          println(f"""{"crawlstream":"$label$tag","batch_mb":$mb%.1f,""" +
-            f""""sec":$sec%.2f,"mb_per_sec":${mb / sec}%.1f,""" +
-            s""""accepted":$batchAccepted,""" +
-            s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-            s""""max_task_peak_mem":${listener.maxPeakMem}}""")
+          probe.timedWith("crawlstream" -> s"$label$tag",
+              "batch_mb" -> segs.map(_._2).sum / 1e6) {
+            input.addData(segs.map(_._1))
+            query.processAllAvailable()
+          } { _ =>
+            val total = spark.read.parquet(sink).count()
+            val batchAccepted = total - accepted0
+            accepted0 = total
+            Seq("accepted" -> batchAccepted)
+          }
         }
       } finally query.stop()
     }
@@ -1109,23 +964,12 @@ object ScaleBench {
       // out-of-band compaction (stream stopped): the per-batch bucket
       // file sets fold to one file per bucket; the screen's row set is
       // unchanged (count asserted) and the read loses only file count
-      def parquetFiles(dir: String): Int = {
-        def walk(f: java.io.File): Int =
-          if (f.isDirectory) Option(f.listFiles()).fold(0)(_.map(walk).sum)
-          else if (f.getName.endsWith(".parquet")) 1 else 0
-        walk(new java.io.File(dir))
-      }
-      val filesBefore = parquetFiles(store.path)
       val rowsBefore = spark.table(store.table).count()
-      val t0 = System.nanoTime()
-      store.compact(spark)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val filesAfter = parquetFiles(store.path)
+      probe.timedWith("crawlstream" -> "compact", "rows" -> rowsBefore,
+        "files_before" -> parquetFiles(store.path))(store.compact(spark))(
+        _ => Seq("files_after" -> parquetFiles(store.path)))
       require(spark.table(store.table).count() == rowsBefore,
         "compaction changed the digest row count")
-      println(f"""{"crawlstream":"compact","sec":$sec%.2f,""" +
-        s""""rows":$rowsBefore,"files_before":$filesBefore,""" +
-        s""""files_after":$filesAfter}""")
     } finally {
       spark.sql("DROP TABLE IF EXISTS crawlstream_scale_idx")
       org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
@@ -1145,7 +989,7 @@ object ScaleBench {
     * of the saturated sketch ≤ the ~1/sqrt(k) band.
     */
   private def quantileSketchScale(spark: SparkSession, outDir: String,
-                                  listener: TaskMetricsProbe): Unit = {
+                                  probe: Probe): Unit = {
     import graft.llm.{Kmv, TextFunctions}
     import org.apache.spark.sql.graft.KmvExpressions
     val vals = SparkEntry.table(spark, outDir, "documents")
@@ -1153,18 +997,7 @@ object ScaleBench {
         size(TextFunctions.tokens(col("text"))).cast("double").as("v"))
     val n = vals.count()
     val k = 4096
-    def timed[T](label: String)(body: => T): T = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"qsketch":"$label","n":$n,"sec":$sec%.2f,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-      r
-    }
-    val exact = timed("exact_percentile") {
+    val exact = probe.timed("qsketch" -> "exact_percentile", "n" -> n) {
       vals.agg(expr("percentile(v, array(0.5, 0.9, 0.99))")).head()
         .getSeq[Double](0)
     }
@@ -1172,12 +1005,12 @@ object ScaleBench {
       val es = rows.map(r => (r.getLong(0), r.getDouble(1)))
       Kmv.VSummary(k, es.map(_._1), es.map(_._2))
     }
-    val oneShot = timed("kmv_oneshot") {
+    val oneShot = probe.timed("qsketch" -> "kmv_oneshot", "n" -> n) {
       toSummary(vals.agg(KmvExpressions.quantileKmv(col("h"), col("v"), k).as("s"))
         .select(explode(col("s")).as("e")).select(col("e.h"), col("e.v"))
         .collect())
     }
-    val folded = timed("kmv_fold16") {
+    val folded = probe.timed("qsketch" -> "kmv_fold16", "n" -> n) {
       // one pass building 16 independent snapshot summaries, folded on
       // the driver — the cross-day shape (each day persists O(k))
       val parts = vals.groupBy(pmod(col("h"), lit(16L)).as("snap"))
@@ -1221,7 +1054,7 @@ object ScaleBench {
     * restored after.
     */
   private def pageRankSkew(spark: SparkSession,
-                           listener: TaskMetricsProbe): Unit = {
+                           probe: Probe): Unit = {
     // 4 M edges over 2 M nodes; the hub variants put 1.6 M edges OUT of
     // one node and 1.6 M INTO another (distinct pairs — multi-edges
     // collapse inside the operator, so hub degree must come from
@@ -1237,18 +1070,9 @@ object ScaleBench {
         .select(lit(n).as("src"), col("id").as("dst")))
       .unionByName(spark.range(1600000L)
         .select(col("id").as("src"), lit(n + 1).as("dst")))
-    def time(label: String,
-             edges: org.apache.spark.sql.DataFrame, salt: Int): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val ranks = graft.ops.PageRank.pageRankFast(edges, 3, saltJoin = salt)
-      ranks.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"prskew":"$label","sec":$sec%.2f,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_ms":${listener.maxTaskMs},""" +
-        s""""max_task_shuffle_read":${listener.maxShuffleRead}}""")
+    def rank(label: String, edges: DataFrame, salt: Int): Unit = {
+      probe.timed("prskew" -> label)(
+        noop(graft.ops.PageRank.pageRankFast(edges, 3, saltJoin = salt)))
       graft.Checkpoints.sweep(spark)
     }
     val conf = spark.conf
@@ -1268,10 +1092,10 @@ object ScaleBench {
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
       conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
       conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      time("uniform", uniform, 1)
-      time("hub", hub, 1)
-      time("hub_salt4", hub, 4)
-      time("hub_salt8", hub, 8)
+      rank("uniform", uniform, 1)
+      rank("hub", hub, 1)
+      rank("hub_salt4", hub, 4)
+      rank("hub_salt8", hub, 8)
       // auto (saltJoin = 0, the r15 default): report the salt the
       // regime rule resolves for the hub graph (the claim: >= 4, i.e.
       // the straggler mitigation engages without the manual knob),
@@ -1287,7 +1111,7 @@ object ScaleBench {
         st.getLong(1), nNodes,
         conf.get("spark.sql.shuffle.partitions", "200").toInt)
       println(s"""{"prskew":"hub_auto","resolved_salt":$resolved}""")
-      time("hub_auto", hub, 0)
+      rank("hub_auto", hub, 0)
     } finally saved.foreach { case (k, v) =>
       v.fold(conf.unset(k))(conf.set(k, _))
     }
@@ -1303,7 +1127,7 @@ object ScaleBench {
     * cheap integer levenshtein.
     */
   private def fuzzyScale(spark: SparkSession,
-                         listener: TaskMetricsProbe): Unit = {
+                         probe: Probe): Unit = {
     import spark.implicits._
     import graft.llm.TextFunctions
     for (n <- Seq(5000, 20000)) {
@@ -1318,26 +1142,23 @@ object ScaleBench {
         .groupBy("g").agg(count(lit(1)).as("df"))
         .agg(sum((col("df") * (col("df") - 1) / 2).cast("long")))
         .collect().head.getLong(0)
-      listener.reset()
-      val t0 = System.nanoTime()
-      val found = graft.ops.FuzzyJoin.editDistancePairs(vocab, "s", 1).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // the COUNT filter's surviving verify set vs the single-gram bill:
-      // the claim is that levenshtein runs on a fraction of candBill.
-      // Counted AFTER the timed run (ADVICE r11): a pre-pass over the
-      // same vocab would warm JIT/shuffle dirs/page cache and break
-      // first-touch comparability with earlier rounds.
-      val counted = graft.ops.FuzzyJoin.countFilterCandidates(vocab, "s", 1)
-      // r16: the positional band's own lever — gram-join OUTPUT rows,
-      // vs the unbanded single-gram bill above
-      val joinRows = graft.ops.FuzzyJoin.gramJoinRows(vocab, "s", 1)
-      Thread.sleep(300)
-      println(f"""{"fuzzy":"ed1_join","n":$nDistinct,"sec":$sec%.2f,""" +
-        s""""pairs_found":$found,"gram_candidates":$candBill,""" +
-        s""""gram_join_rows":$joinRows,""" +
-        s""""count_filter_verified":$counted,""" +
-        s""""quadratic_cells":${nDistinct * (nDistinct - 1) / 2},""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite}}""")
+      probe.timedWith("fuzzy" -> "ed1_join", "n" -> nDistinct,
+          "gram_candidates" -> candBill,
+          "quadratic_cells" -> nDistinct * (nDistinct - 1) / 2) {
+        graft.ops.FuzzyJoin.editDistancePairs(vocab, "s", 1).count()
+      } { found =>
+        // the COUNT filter's surviving verify set vs the single-gram
+        // bill: the claim is that levenshtein runs on a fraction of
+        // candBill. Counted AFTER the timed run (ADVICE r11): a pre-pass
+        // over the same vocab would warm JIT/shuffle dirs/page cache and
+        // break first-touch comparability with earlier rounds. r16: the
+        // positional band's own lever — gram-join OUTPUT rows, vs the
+        // unbanded single-gram bill above
+        Seq("pairs_found" -> found,
+          "count_filter_verified" ->
+            graft.ops.FuzzyJoin.countFilterCandidates(vocab, "s", 1),
+          "gram_join_rows" -> graft.ops.FuzzyJoin.gramJoinRows(vocab, "s", 1))
+      }
       graft.Checkpoints.free(vocab)
     }
   }
@@ -1351,45 +1172,35 @@ object ScaleBench {
     * portability costs nothing structural).
     */
   private def eventOps(spark: SparkSession, srcDir: String, outDir: String,
-                       listener: TaskMetricsProbe): Unit = {
+                       probe: Probe): Unit = {
     // noop-sink materialization: a bare count() lets Catalyst prune the
     // whole operator under test away (the r1 bench lesson — a count of
     // the as-of join is just a count of the left side)
-    def time(label: String, df: => org.apache.spark.sql.DataFrame): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"eventops":"$label","sec":$sec%.2f,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite}}""")
-    }
     for (dir <- Seq(srcDir, outDir)) {
       val tag = if (dir == srcDir) "1x" else "20x"
-      time(s"asof_$tag", graft.Queries.q_asof_join(spark, dir))
-      time(s"sessionize_$tag", graft.Queries.q_sessionize(spark, dir))
+      probe.timed("eventops" -> s"asof_$tag")(
+        noop(graft.Queries.q_asof_join(spark, dir)))
+      probe.timed("eventops" -> s"sessionize_$tag")(
+        noop(graft.Queries.q_sessionize(spark, dir)))
     }
     // the scaled dir's lineitem offsets orderkeys away from the 1x
     // orders dim, so a scaled GRAPH is built directly: 20 disjoint
     // offset copies of the 1x customer→supplier edges (a sharded link
     // graph — PageRank cost is edges + ranks per round regardless of
     // connectivity)
-    val li = SparkEntry.table(spark, srcDir, "lineitem")
-      .select("l_orderkey", "l_suppkey")
-    val ord = SparkEntry.table(spark, srcDir, "orders")
-      .select("o_orderkey", "o_custkey")
-    val edges1 = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-      .select(col("o_custkey").cast("long").as("src"),
-        (col("l_suppkey").cast("long") + 1000000L).as("dst"))
-    time("pagerank3_1x", graft.ops.PageRank.pageRank(edges1, 3))
+    val edges1 = orderEdges(spark, srcDir).drop("weight")
+    probe.timed("eventops" -> "pagerank3_1x")(
+      noop(graft.ops.PageRank.pageRank(edges1, 3)))
     val edges20 = (0 until 20).map { i =>
       edges1.select((col("src") + lit(i.toLong * 10000000L)).as("src"),
         (col("dst") + lit(i.toLong * 10000000L)).as("dst"))
     }.reduce(_ unionByName _)
-    time("pagerank3_20x", graft.ops.PageRank.pageRank(edges20, 3))
+    probe.timed("eventops" -> "pagerank3_20x")(
+      noop(graft.ops.PageRank.pageRank(edges20, 3)))
     // throughput tier on the same scaled graph: identical iteration,
     // IEEE-double sums — the shuffle_write delta IS the decimal price
-    time("pagerank3_20x_fast", graft.ops.PageRank.pageRankFast(edges20, 3))
+    probe.timed("eventops" -> "pagerank3_20x_fast")(
+      noop(graft.ops.PageRank.pageRankFast(edges20, 3)))
   }
 
   /** WARC ingestion throughput: synthesize a multi-file archive from
@@ -1401,7 +1212,7 @@ object ScaleBench {
     * adds no shuffle (map-only until an aggregation).
     */
   private def warcThroughput(spark: SparkSession, outDir: String,
-                             listener: TaskMetricsProbe): Unit = {
+                             probe: Probe): Unit = {
     import graft.llm.{TextFunctions, Warc}
     val dir = java.nio.file.Files.createTempDirectory("warcscale")
     val crlf = "\r\n"
@@ -1429,28 +1240,18 @@ object ScaleBench {
       }
       out.close()
     }
-    def timed(label: String)(body: => Long): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val n = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"warc":"$label","files":$nFiles,""" +
-        f""""archive_mb":${totalBytes / 1e6}%.1f,"sec":$sec%.2f,""" +
-        f""""mb_per_sec":${totalBytes / 1e6 / sec}%.1f,"rows_or_tokens":$n,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite}}""")
-    }
     // parse-only vs parse + extraction chain: attributes the wall to
     // the record walk vs the per-doc regex passes
-    timed("parse_only") {
-      Warc.readWarc(spark, s"$dir/*.warc").count()
-    }
-    timed("read_extract_count") {
-      Warc.responses(Warc.readWarc(spark, s"$dir/*.warc"))
-        .select(TextFunctions.regexTokenCount(
-          TextFunctions.htmlToText(col("html"))).as("n"))
-        .agg(sum("n")).collect().head.getLong(0)
-    }
+    for ((label, count) <- Seq[(String, () => Long)](
+        "parse_only" -> (() => Warc.readWarc(spark, s"$dir/*.warc").count()),
+        "read_extract_count" -> (() =>
+          Warc.responses(Warc.readWarc(spark, s"$dir/*.warc"))
+            .select(TextFunctions.regexTokenCount(
+              TextFunctions.htmlToText(col("html"))).as("n"))
+            .agg(sum("n")).collect().head.getLong(0))))
+      probe.timedWith("warc" -> label, "files" -> nFiles,
+          "archive_mb" -> totalBytes / 1e6)(count())(
+        n => Seq("rows_or_tokens" -> n))
     org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
@@ -1460,41 +1261,32 @@ object ScaleBench {
     * the full corpus through the noop sink. All three are map-only
     * (broadcast model + mapPartitions), so the claim to check is that
     * NONE of them shuffles and wall scales with corpus bytes, not
-    * model size; reported as docs/sec next to each family's model
-    * size.
+    * model size; reported as wall next to the corpus size and each
+    * family's model size.
     */
   private def tokenizeThroughput(spark: SparkSession, outDir: String,
-                                 listener: TaskMetricsProbe): Unit = {
+                                 probe: Probe): Unit = {
     import graft.llm.{BpeTrain, UnigramLm, WordPiece}
     val docs = SparkEntry.table(spark, outDir, "documents")
       .select(col("doc_id"), col("text"))
     val nDocs = docs.count()
     val wc = BpeTrain.wordCounts(docs, "text").localCheckpoint()
-    def time(label: String, model: String)(body: => Unit): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"tokenize":"$label","sec":$sec%.2f,""" +
-        f""""docs_per_sec":${nDocs / sec}%.0f,$model""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite}}""")
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     try {
       val merges = BpeTrain.learnMerges(wc, numMerges = 64)
-      time("bpe_rank_greedy", s""""n_merges":${merges.size},""") {
+      probe.timed("tokenize" -> "bpe_rank_greedy", "docs" -> nDocs,
+          "n_merges" -> merges.size) {
         noop(BpeTrain.bpeTokensPartitions(docs, "doc_id", "text", merges))
       }
       val uni = UnigramLm.train(wc, vocabSize = 512, seedSize = 1024)
-      time("unigram_viterbi", s""""vocab":${uni.logp.size},""") {
+      probe.timed("tokenize" -> "unigram_viterbi", "docs" -> nDocs,
+          "vocab" -> uni.logp.size) {
         noop(UnigramLm.tokenize(docs, "doc_id", "text", uni))
       }
       val wpMerges = WordPiece.learnMerges(wc, numMerges = 64)
       val vocab = WordPiece.vocabulary(wc, wpMerges)
         .select("piece").collect().map(_.getString(0)).toSet
-      time("wordpiece_greedy", s""""vocab":${vocab.size},""") {
+      probe.timed("tokenize" -> "wordpiece_greedy", "docs" -> nDocs,
+          "vocab" -> vocab.size) {
         noop(WordPiece.wordPieceTokens(docs, "doc_id", "text", vocab))
       }
     } finally graft.Checkpoints.free(wc)
@@ -1511,46 +1303,33 @@ object ScaleBench {
     * and the merge-vs-retrain wall pair.
     */
   private def knLm(spark: SparkSession, srcDir: String, outDir: String,
-                   listener: TaskMetricsProbe): Unit = {
+                   probe: Probe): Unit = {
     import graft.llm.NgramLm
-    def time[T](label: String, extra: String = "")(body: => T): T = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"knlm":"$label","sec":$sec%.2f,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite}$extra}""")
-      r
-    }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     for (dir <- Seq(srcDir, outDir)) {
       val tag = if (dir == srcDir) "1x" else "20x"
       val docs = SparkEntry.table(spark, dir, "documents")
       val counts = NgramLm
         .trigramCounts(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text")
         .localCheckpoint(false)
-      val modelRows = time(s"counts_pass_$tag") { counts.count() }
+      val modelRows = probe.timed("knlm" -> s"counts_pass_$tag")(counts.count())
       val tokenInstances = docs.filter(col("doc_id") % 2 === 0)
         .select(sum(size(split(coalesce(col("text"), lit("")), "\\s+"))))
         .collect().head.getLong(0)
       println(s"""{"knlm":"size_$tag","token_instances":$tokenInstances,""" +
         s""""model_rows":$modelRows}""")
       val model = NgramLm.trainFromCounts(counts)
-      time(s"model_tables_$tag") { noop(NgramLm.modelTable(model)) }
-      time(s"score_corpus_$tag") {
-        noop(NgramLm.score(docs, "doc_id", "text", model))
-      }
+      probe.timed("knlm" -> s"model_tables_$tag")(noop(NgramLm.modelTable(model)))
+      probe.timed("knlm" -> s"score_corpus_$tag")(
+        noop(NgramLm.score(docs, "doc_id", "text", model)))
       // incremental refresh: a 5% snapshot folds into the persisted
       // counts (snapshot pass + model-scale merge) vs a full retrain
       // (re-pays the whole corpus pass)
       val snapshot = docs.filter(col("doc_id") % 20 === 1)
-      time(s"merge_snapshot_$tag") {
+      probe.timed("knlm" -> s"merge_snapshot_$tag") {
         NgramLm.mergeCounts(counts,
           NgramLm.trigramCounts(snapshot, "doc_id", "text")).count()
       }
-      time(s"full_retrain_$tag") {
+      probe.timed("knlm" -> s"full_retrain_$tag") {
         NgramLm.trigramCounts(
           docs.filter(col("doc_id") % 2 === 0).unionByName(snapshot),
           "doc_id", "text").count()
@@ -1574,7 +1353,7 @@ object ScaleBench {
     * candidates, never the full-index count.
     */
   private def jacJoinScale(spark: SparkSession, outDir: String,
-                           listener: TaskMetricsProbe): Unit = {
+                           probe: Probe): Unit = {
     import graft.llm.Dedup
     val docs = SparkEntry.table(spark, outDir, "documents")
     val sets = Dedup.jaccardSets(docs, "doc_id", "text").localCheckpoint()
@@ -1607,19 +1386,13 @@ object ScaleBench {
           .select("id_a", "id_b").distinct().count()
         val positional = Dedup.candidatePairsPositional(pa, pb, t,
           col("id_a") < col("id_b")).count()
-        listener.reset()
-        val t0 = System.nanoTime()
-        val nOut = Dedup.jaccardJoin(docs, "doc_id", "text", t).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
-        println(f"""{"jacjoin_t":$t,"n_docs":$nDocs,""" +
-          s""""index_rows_full":$nFullRows,"index_rows_prefix":${pc.getLong(1)},""" +
-          s""""cand_rows_full":$fullPairs,"cand_rows_prefix":${pc.getLong(0)},""" +
-          s""""verify_pairs_size_only":$sizeOnly,"verify_pairs_positional":$positional,""" +
-          s""""n_shingles":$nShingles,"n_pairs_out":$nOut,""" +
-          f""""sec":$sec%.2f,""" +
-          s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-          s""""max_task_peak_mem":${listener.maxPeakMem}}""")
+        probe.timedWith("jacjoin_t" -> t, "n_docs" -> nDocs,
+            "index_rows_full" -> nFullRows, "index_rows_prefix" -> pc.getLong(1),
+            "cand_rows_full" -> fullPairs, "cand_rows_prefix" -> pc.getLong(0),
+            "verify_pairs_size_only" -> sizeOnly,
+            "verify_pairs_positional" -> positional, "n_shingles" -> nShingles)(
+          Dedup.jaccardJoin(docs, "doc_id", "text", t).count())(
+          nOut => Seq("n_pairs_out" -> nOut))
       }
     } finally graft.Checkpoints.free(sets)
   }
@@ -1633,23 +1406,13 @@ object ScaleBench {
     * unsaturated oracle can't show.
     */
   private def kmvOverlap(spark: SparkSession, outDir: String,
-                         listener: TaskMetricsProbe): Unit = {
+                         probe: Probe): Unit = {
     import graft.llm.{Kmv, TextFunctions}
     val docs = SparkEntry.table(spark, outDir, "documents")
     val grams = docs.select(col("source"),
       explode(array_distinct(
         TextFunctions.shingleHashes(col("text"), 3))).as("h"))
-    def time[T](label: String)(body: => T): T = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"kmv":"$label","sec":$sec%.2f,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite}}""")
-      r
-    }
-    val exact = time("exact_join") {
+    val exact = probe.timed("kmv" -> "exact_join") {
       val hs = grams.distinct()
       hs.as("a").join(hs.as("b").select(col("source").as("source_b"), col("h")), Seq("h"))
         .filter(col("source") < col("source_b"))
@@ -1657,13 +1420,13 @@ object ScaleBench {
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     }
     val k = 4096
-    val sketches = time("sketch_build") {
+    val sketches = probe.timed("kmv" -> "sketch_build") {
       grams.groupBy("source")
         .agg(org.apache.spark.sql.graft.KmvExpressions.kmvSketch(col("h"), k).as("s"))
         .collect().map(r => r.getString(0) ->
           Kmv.Summary(k, r.getSeq[Long](1).toArray)).toMap
     }
-    val perSource = time("exact_distincts") {
+    val perSource = probe.timed("kmv" -> "exact_distincts") {
       grams.distinct().groupBy("source").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
@@ -1692,7 +1455,7 @@ object ScaleBench {
     * pruning on l_partkey only, z-order pruning on BOTH.
     */
   private def zorderSkip(spark: SparkSession, outDir: String,
-                         listener: TaskMetricsProbe): Unit = {
+                         probe: Probe): Unit = {
     import graft.ops.ZOrder
     val li = SparkEntry.table(spark, outDir, "lineitem")
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
@@ -1720,17 +1483,11 @@ object ScaleBench {
       "suppkey_only" -> col("l_suppkey").between(100L, 200L))
     for (layout <- Seq("natural", "sorted", "zordered");
          (shape, pred) <- shapes) {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val got = spark.read.parquet(s"$base/$layout")
-        .filter(pred)
-        .agg(count(lit(1)), sum("l_quantity")).collect().head.getLong(0)
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"zorder":"$layout","shape":"$shape","n_total":$n,""" +
-        f""""n_match":$got,"sec":$sec%.2f,""" +
-        s""""rows_read":${listener.totRecords},""" +
-        s""""input_bytes":${listener.totInput}}""")
+      probe.timedWith("zorder" -> layout, "shape" -> shape, "n_total" -> n) {
+        spark.read.parquet(s"$base/$layout")
+          .filter(pred)
+          .agg(count(lit(1)), sum("l_quantity")).collect().head.getLong(0)
+      }(got => Seq("n_match" -> got))
     }
   }
 
@@ -1761,29 +1518,18 @@ object ScaleBench {
     * both phases.
     */
   private def pcaScale(spark: SparkSession, srcDir: String, outDir: String,
-                       listener: TaskMetricsProbe): Unit = {
+                       probe: Probe): Unit = {
     import graft.llm.Embeddings
     for (dir <- Seq(srcDir, outDir)) {
       val emb = SparkEntry.table(spark, dir, "embeddings")
       val n = emb.count()
       val dim = emb.select(org.apache.spark.sql.functions.size(col("embedding")))
         .first().getInt(0)
-      def time(label: String)(body: => Unit): Unit = {
-        listener.reset()
-        val t0 = System.nanoTime()
-        body
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
-        println(f"""{"pca":"$label","dir":"$dir","n_corpus":$n,"dim":$dim,""" +
-          f""""sec":$sec%.2f,""" +
-          s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-          s""""input_bytes":${listener.totInput}}""")
-      }
-      var model: Embeddings.PcaModel = null
-      time("train_k16") { model = Embeddings.pcaTrain(emb, "embedding", dim, k = 16) }
-      time("project")(emb.select(col("vec_id"),
-          Embeddings.pcaProjectF(col("embedding"), model).as("p"))
-        .write.format("noop").mode("overwrite").save())
+      val model = probe.timed("pca" -> "train_k16", "dir" -> dir,
+        "n_corpus" -> n, "dim" -> dim)(Embeddings.pcaTrain(emb, "embedding", dim, k = 16))
+      probe.timed("pca" -> "project", "dir" -> dir, "n_corpus" -> n, "dim" -> dim)(
+        noop(emb.select(col("vec_id"),
+          Embeddings.pcaProjectF(col("embedding"), model).as("p"))))
     }
   }
 
@@ -1798,7 +1544,7 @@ object ScaleBench {
     * [[graft.ops.TopK.topKPerQuery]] remains the A/B alternative.
     */
   private def topkFinisher(spark: SparkSession, outDir: String,
-                           listener: TaskMetricsProbe): Unit = {
+                           probe: Probe): Unit = {
     import org.apache.spark.sql.expressions.Window
     val emb = SparkEntry.table(spark, outDir, "embeddings")
     val queries = emb.filter(col("vec_id") >= 8 && col("vec_id") < 208)
@@ -1808,23 +1554,14 @@ object ScaleBench {
     def scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", graft.llm.Dedup.cosine(col("qv"), col("cv")))
       .select("query_id", "neighbor_id", "cos")
-    def time(label: String)(df: => DataFrame): Long = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val n = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"topk":"$label","n_corpus":$nCorpus,"n_out":$n,"sec":$sec%.2f,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-      n
-    }
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id"))
-    val nWindow = time("window")(scored
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 10))
-    val nAgg = time("agg")(
-      graft.ops.TopK.topKPerQuery(scored, "query_id", "neighbor_id", "cos", 10))
+    val nWindow = probe.timedWith("topk" -> "window", "n_corpus" -> nCorpus)(
+      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
+        .count())(n => Seq("n_out" -> n))
+    val nAgg = probe.timedWith("topk" -> "agg", "n_corpus" -> nCorpus)(
+      graft.ops.TopK.topKPerQuery(scored, "query_id", "neighbor_id", "cos", 10)
+        .count())(n => Seq("n_out" -> n))
     require(nWindow == nAgg, s"finisher mismatch: window=$nWindow agg=$nAgg")
   }
 
@@ -1841,29 +1578,19 @@ object ScaleBench {
     * ~(true overlap + fpp x grams), wall dropping with it.
     */
   private def bloomScreen(spark: SparkSession, outDir: String,
-                          listener: TaskMetricsProbe): Unit = {
+                          probe: Probe): Unit = {
     import graft.llm.Dedup
     val docs = SparkEntry.table(spark, outDir, "documents")
     val bench = docs.filter(col("doc_id") < 20)
     val nCorpus = docs.count()
-    def time(label: String)(df: => DataFrame): Long = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      val n = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"decontam":"$label","n_corpus":$nCorpus,"n_out":$n,"sec":$sec%.2f,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""rows_read":${listener.totRecords},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-      n
-    }
-    val nPlain = time("plain")(Dedup.contaminationScores(
-      docs, "doc_id", "text", bench, "doc_id", "text", threshold = 0.1,
-      maxDf = Some(50000L)))
-    val nBloom = time("bloom")(Dedup.contaminationScoresBloom(
-      docs, "doc_id", "text", bench, "doc_id", "text", threshold = 0.1,
-      maxDf = Some(50000L)))
+    val nPlain = probe.timedWith("decontam" -> "plain", "n_corpus" -> nCorpus)(
+      Dedup.contaminationScores(docs, "doc_id", "text", bench, "doc_id",
+        "text", threshold = 0.1, maxDf = Some(50000L)).count())(
+      n => Seq("n_out" -> n))
+    val nBloom = probe.timedWith("decontam" -> "bloom", "n_corpus" -> nCorpus)(
+      Dedup.contaminationScoresBloom(docs, "doc_id", "text", bench, "doc_id",
+        "text", threshold = 0.1, maxDf = Some(50000L)).count())(
+      n => Seq("n_out" -> n))
     require(nPlain == nBloom, s"decontam mismatch: plain=$nPlain bloom=$nBloom")
   }
 
@@ -1886,7 +1613,7 @@ object ScaleBench {
     * index — the realistic "mostly novel archive" regime).
     */
   private def incDedup(spark: SparkSession, srcDir: String, outDir: String,
-                       listener: TaskMetricsProbe): Unit = {
+                       probe: Probe): Unit = {
     import graft.llm.Dedup
     val snap = SparkEntry.table(spark, srcDir, "documents")
     val nSnap = snap.count()
@@ -1906,25 +1633,16 @@ object ScaleBench {
         else base.withColumn("text", translate(col("text"), alpha, rot))
       }.reduce(_ unionByName _)
 
-    def time(label: String, mult: Int, extra: String = "")(body: => Unit): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"incdedup":"$label","archive_mult":$mult,""" +
-        f""""n_snapshot":$nSnap,"sec":$sec%.2f,""" +
-        s""""input_bytes":${listener.totInput},""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite}$extra}""")
-    }
-
     for (mult <- Seq(2, 10, 20)) {
       val dir = s"$outDir/incdedup/m$mult"
       val archive = archiveOf(mult)
+      def row(label: String, extra: (String, Any)*): Seq[(String, Any)] =
+        Seq("incdedup" -> label, "archive_mult" -> mult, "n_snapshot" -> nSnap) ++
+          extra
       // build + persist both indexes — linear in archive size BY DESIGN
       // (one pass over the new snapshot when the archive accretes
       // monthly; rebuilt whole here only to create the fixture)
-      time("build_indexes", mult) {
+      probe.timed(row("build_indexes"): _*) {
         Dedup.digestIndex(archive, "text")
           .repartition(32).write.mode("overwrite").parquet(s"$dir/digest")
         Dedup.bandIndex(archive, "doc_id", "text")
@@ -1949,19 +1667,16 @@ object ScaleBench {
       val archiveText = spark.read.parquet(s"$dir/archive_text")
       // the two screens: wall should NOT follow mult — the snapshot side
       // is the work, the archive participates digest-only
-      time("screen_exact", mult)(
-        Dedup.exactDedupAgainst(snap, "doc_id", "text", digestIdx)
-          .write.format("noop").mode("overwrite").save())
-      time("screen_near", mult)(
-        Dedup.nearDupScreenAgainst(snap, "doc_id", "text", bandIdx)
-          .write.format("noop").mode("overwrite").save())
+      probe.timed(row("screen_exact"): _*)(
+        noop(Dedup.exactDedupAgainst(snap, "doc_id", "text", digestIdx)))
+      probe.timed(row("screen_near"): _*)(
+        noop(Dedup.nearDupScreenAgainst(snap, "doc_id", "text", bandIdx)))
       // the exact-verify batch: only the collision subset touches
       // archived text (semi join on candidate archive ids); wall should
       // track collisions — constant here — not the archive multiple
-      time("verify_exact", mult)(
-        Dedup.nearDupVerifyAgainst(snap, "doc_id", "text", bandIdsIdx,
-            archiveText, "doc_id", "text", jaccardThreshold = 0.9)
-          .write.format("noop").mode("overwrite").save())
+      probe.timed(row("verify_exact"): _*)(
+        noop(Dedup.nearDupVerifyAgainst(snap, "doc_id", "text", bandIdsIdx,
+          archiveText, "doc_id", "text", jaccardThreshold = 0.9)))
       // the COMPLETE screen (prefix index, no banding miss-rate):
       // same flat-in-mult contract, index is shingle-prefix-scale
       // rather than signature-scale — report its bytes alongside
@@ -1970,24 +1685,21 @@ object ScaleBench {
         .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
       val bandIdsBytes = new java.io.File(s"$dir/band_ids").listFiles()
         .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-      time("screen_exact_jaccard", mult,
-        s""","index_bytes":$jacBytes,"band_ids_bytes":$bandIdsBytes""")(
-        Dedup.jaccardDedupAgainst(snap, "doc_id", "text", jacIdx,
-            archiveText, "doc_id", "text", threshold = 0.9)
-          .write.format("noop").mode("overwrite").save())
+      probe.timed(row("screen_exact_jaccard", "index_bytes" -> jacBytes,
+          "band_ids_bytes" -> bandIdsBytes): _*)(
+        noop(Dedup.jaccardDedupAgainst(snap, "doc_id", "text", jacIdx,
+          archiveText, "doc_id", "text", threshold = 0.9)))
       // frozen-df order: same completeness, archive-statistics pruning
       val jacFIdx = spark.read.parquet(s"$dir/jaccard_frozen")
       val jacDfIdx = spark.read.parquet(s"$dir/jaccard_df")
-      time("screen_exact_jaccard_frozen", mult)(
-        Dedup.jaccardDedupAgainstFrozen(snap, "doc_id", "text", jacFIdx,
-            jacDfIdx, archiveText, "doc_id", "text", threshold = 0.9)
-          .write.format("noop").mode("overwrite").save())
+      probe.timed(row("screen_exact_jaccard_frozen"): _*)(
+        noop(Dedup.jaccardDedupAgainstFrozen(snap, "doc_id", "text", jacFIdx,
+          jacDfIdx, archiveText, "doc_id", "text", threshold = 0.9)))
       // the exact-verify batch's working set: snapshot docs with >= 1
       // band collision — everything else never touches archived text
       val nCollisions = nSnap -
         Dedup.nearDupScreenAgainst(snap, "doc_id", "text", bandIdx).count()
-      time("collision_subset", mult,
-        s""","n_collisions":$nCollisions""")(())
+      probe.timed(row("collision_subset", "n_collisions" -> nCollisions): _*)(())
     }
   }
 
@@ -1999,34 +1711,24 @@ object ScaleBench {
     * (whose per-round cost is word-table-sized, not corpus-sized).
     */
   private def bpeScale(spark: SparkSession, outDir: String,
-                       listener: TaskMetricsProbe): Unit = {
+                       probe: Probe): Unit = {
     import graft.llm.BpeTrain
     val docs = SparkEntry.table(spark, outDir, "documents")
     val nCorpus = docs.count()
-    def time(label: String, extra: Long = -1L)(body: => Unit): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"bpe":"$label","n_corpus":$nCorpus,"sec":$sec%.2f,""" +
-        s""""n_words":$extra,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite}}""")
-    }
+    def row(label: String, nWords: Long): Seq[(String, Any)] =
+      Seq("bpe" -> label, "n_corpus" -> nCorpus, "n_words" -> nWords)
     val wc = BpeTrain.wordCounts(docs, "text")
-    var nWords = -1L
-    time("word_counts") { nWords = wc.count() }
-    var sequential: Seq[(String, String)] = Nil
-    time("learn_60_sequential", nWords) {
-      sequential = BpeTrain.learnMerges(wc, numMerges = 60)
-      require(sequential.size == 60,
-        s"expected 60 merges, got ${sequential.size}")
+    val nWords = probe.timed(row("word_counts", -1L): _*)(wc.count())
+    val sequential = probe.timed(row("learn_60_sequential", nWords): _*) {
+      val merges = BpeTrain.learnMerges(wc, numMerges = 60)
+      require(merges.size == 60, s"expected 60 merges, got ${merges.size}")
+      merges
     }
     // batched argmax: SAME merge list (required — the whole point is
     // equivalence), fewer rounds; at 32k production merges the round
     // count is what multiplies the 0.29 s/round job overhead into hours
     var rounds = 0
-    time("learn_60_batched", nWords) {
+    probe.timed(row("learn_60_batched", nWords): _*) {
       val batched = BpeTrain.learnMergesBatched(wc, numMerges = 60,
         batchSize = 16, onRound = r => rounds = r)
       require(batched == sequential,
@@ -2052,12 +1754,10 @@ object ScaleBench {
       (w, math.max(1L, (200000.0 / i).toLong))
     }.toDF("word", "cnt").groupBy("word").agg(sum("cnt").as("cnt"))
       .localCheckpoint()
-    var richSeq: Seq[(String, String)] = Nil
-    time("rich_200_sequential", 20000) {
-      richSeq = BpeTrain.learnMerges(richVocab, numMerges = 200)
-    }
+    val richSeq = probe.timed(row("rich_200_sequential", 20000): _*)(
+      BpeTrain.learnMerges(richVocab, numMerges = 200))
     var richRounds = 0
-    time("rich_200_batched", 20000) {
+    probe.timed(row("rich_200_batched", 20000): _*) {
       val batched = BpeTrain.learnMergesBatched(richVocab, numMerges = 200,
         batchSize = 16, onRound = r => richRounds = r)
       require(batched == richSeq,
@@ -2089,22 +1789,14 @@ object ScaleBench {
     * further.
     */
   private def semDedupNlist(spark: SparkSession, outDir: String,
-                            listener: TaskMetricsProbe): Unit = {
+                            probe: Probe): Unit = {
     import graft.llm.Dedup
     val emb = SparkEntry.table(spark, outDir, "embeddings")
     val nCorpus = emb.count()
-    for (nlist <- Seq(8, 128)) {
-      listener.reset()
-      val t0 = System.nanoTime()
-      Dedup.semDedup(emb, "vec_id", "embedding", 0.35,
-          graft.queries.QueriesLLM.firstKCodebookLit(emb, nlist))
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"semdedup_nlist":$nlist,"n_corpus":$nCorpus,"sec":$sec%.2f,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-    }
+    for (nlist <- Seq(8, 128))
+      probe.timed("semdedup_nlist" -> nlist, "n_corpus" -> nCorpus)(
+        noop(Dedup.semDedup(emb, "vec_id", "embedding", 0.35,
+          graft.queries.QueriesLLM.firstKCodebookLit(emb, nlist))))
     // TABLE-mode codebook at 16k cells (r13 task 5 / r15 task 4): a
     // LITERAL codebook this size is nlist×dim ≈ 1 M lit nodes — plan
     // blowup; the broadcast-joined centroid table must keep planning
@@ -2114,38 +1806,24 @@ object ScaleBench {
     val cents = emb.filter(col("vec_id") < bigNlist)
       .select((col("vec_id") + 1).cast("int").as("cell"),
         col("embedding").as("cvec"))
-    listener.reset()
-    val t0 = System.nanoTime()
-    val out = Dedup.semDedupTable(emb, "vec_id", "embedding", 0.35, cents)
-    out.queryExecution.executedPlan // force analysis + planning
-    val planSec = (System.nanoTime() - t0) / 1e9
-    out.write.format("noop").mode("overwrite").save()
-    val sec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(300)
-    println(f"""{"semdedup_nlist":$bigNlist,"mode":"table","n_corpus":$nCorpus,""" +
-      f""""plan_sec":$planSec%.2f,"sec":$sec%.2f,""" +
-      s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-      s""""max_task_peak_mem":${listener.maxPeakMem}}""")
+    probe.timedWith("semdedup_nlist" -> bigNlist, "mode" -> "table",
+        "n_corpus" -> nCorpus)(
+      plannedNoop(Dedup.semDedupTable(emb, "vec_id", "embedding", 0.35, cents)))(
+      planSec => Seq("plan_sec" -> planSec))
     // TWO-LEVEL assignment at the same nlist (r15): the flat argmax above
     // scores row×nlist cosines; coarse→refine scores m + nlist/m per row
     // (m = sqrt(nlist)) — the claim is the assignment fan-out collapses
     // while the cell-local pair join stays equivalent work
     val m = math.max(1, math.ceil(math.sqrt(bigNlist.toDouble)).toInt)
-    listener.reset()
-    val t1 = System.nanoTime()
-    val (coarseLit, fine) = graft.llm.Similarity.twoLevelCodebook(
-      emb, "vec_id", "embedding", m, bigNlist)
-    val out2 = Dedup.semDedupTwoLevel(emb, "vec_id", "embedding", 0.35,
-      coarseLit, fine)
-    out2.queryExecution.executedPlan
-    val planSec2 = (System.nanoTime() - t1) / 1e9
-    out2.write.format("noop").mode("overwrite").save()
-    val sec2 = (System.nanoTime() - t1) / 1e9
-    Thread.sleep(300)
-    println(f"""{"semdedup_nlist":$bigNlist,"mode":"twolevel","m":$m,""" +
-      f""""n_corpus":$nCorpus,"plan_sec":$planSec2%.2f,"sec":$sec2%.2f,""" +
-      s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-      s""""max_task_peak_mem":${listener.maxPeakMem}}""")
+    val (coarseLit, fine) = probe.timedWith("semdedup_nlist" -> bigNlist,
+        "mode" -> "twolevel", "m" -> m, "n_corpus" -> nCorpus) {
+      // built inside plannedNoop's by-name argument: plan_sec includes it
+      lazy val cb = graft.llm.Similarity.twoLevelCodebook(
+        emb, "vec_id", "embedding", m, bigNlist)
+      val planSec = plannedNoop(Dedup.semDedupTwoLevel(emb, "vec_id",
+        "embedding", 0.35, cb._1, cb._2))
+      (cb, planSec)
+    }(r => Seq("plan_sec" -> r._2))._1
 
     // ---- probe-lever RECALL (r16): how many TRUE near-dup pairs does
     // the two-level tier surface, single-probe vs coarse×fine probing?
@@ -2169,29 +1847,20 @@ object ScaleBench {
           greatest(col("qid"), col("nid")).as("id_b"))
         .distinct().persist()
       val gtN = gt.count()
-      def recallOf(label: String)(pairs: => org.apache.spark.sql.DataFrame): Unit = {
-        listener.reset()
-        val t0 = System.nanoTime()
-        // restrict to pairs touching the slice (ground truth's domain)
-        val found = pairs.select("id_a", "id_b")
-          .join(gt, Seq("id_a", "id_b"), "left_semi").count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
-        val r = if (gtN == 0) 0.0 else found.toDouble / gtN
-        println(f"""{"semdedup_recall":"$label","threshold":$t%.2f,""" +
-          f""""true_pairs":$gtN,"found":$found,"recall":$r%.4f,""" +
-          f""""sec":$sec%.2f,""" +
-          s""""shuffle_write_bytes":${listener.totShuffleWrite}}""")
-      }
-      recallOf("twolevel_single")(
-        Dedup.embeddingNearDupsBucketedTwoLevel(
-          emb, "vec_id", "embedding", t, coarseLit, fine))
-      recallOf("twolevel_cp1_fp2")(
-        Dedup.embeddingNearDupsBucketedTwoLevelProbed(
-          emb, "vec_id", "embedding", t, coarseLit, fine, 1, 2))
-      recallOf("twolevel_cp2_fp2")(
-        Dedup.embeddingNearDupsBucketedTwoLevelProbed(
-          emb, "vec_id", "embedding", t, coarseLit, fine, 2, 2))
+      for ((label, pairs) <- Seq[(String, () => DataFrame)](
+          "twolevel_single" -> (() => Dedup.embeddingNearDupsBucketedTwoLevel(
+            emb, "vec_id", "embedding", t, coarseLit, fine)),
+          "twolevel_cp1_fp2" -> (() => Dedup.embeddingNearDupsBucketedTwoLevelProbed(
+            emb, "vec_id", "embedding", t, coarseLit, fine, 1, 2)),
+          "twolevel_cp2_fp2" -> (() => Dedup.embeddingNearDupsBucketedTwoLevelProbed(
+            emb, "vec_id", "embedding", t, coarseLit, fine, 2, 2))))
+        probe.timedWith("semdedup_recall" -> label, "threshold" -> t,
+            "true_pairs" -> gtN) {
+          // restrict to pairs touching the slice (ground truth's domain)
+          pairs().select("id_a", "id_b")
+            .join(gt, Seq("id_a", "id_b"), "left_semi").count()
+        }(found => Seq("found" -> found,
+          "recall" -> (if (gtN == 0) 0.0 else found.toDouble / gtN)))
       gt.unpersist(blocking = true)
       ()
     }
@@ -2207,7 +1876,7 @@ object ScaleBench {
     * one-time build+persist, search-over-persisted cold and warm.
     */
   private def denseSplit(spark: SparkSession, outDir: String,
-                         listener: TaskMetricsProbe): Unit = {
+                         probe: Probe): Unit = {
     import graft.llm.Similarity
     val emb = SparkEntry.table(spark, outDir, "embeddings")
     val queries = emb.filter(col("vec_id") >= 8 && col("vec_id") < 208)
@@ -2219,32 +1888,18 @@ object ScaleBench {
     val qVecs = queries.orderBy("vec_id").select("vec_id", "embedding")
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
     val ranking = Similarity.probeRanking(coarse)
-    def time(label: String)(body: => Unit): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"dense":"$label","n_corpus":$nCorpus,""" +
-        f""""n_queries":${qVecs.size},"sec":$sec%.2f,""" +
-        s""""input_bytes":${listener.totInput},""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-    }
-    time("one_call")(Similarity.ivfPqTopK(emb, "vec_id", "embedding",
-      coarse, pqCb, qVecs, k = 5, nprobe = 2)
-      .write.format("noop").mode("overwrite").save())
-    time("build_persist")(graft.etd.Sources.writeBucketed(
+    def row(label: String): Seq[(String, Any)] = Seq("dense" -> label,
+      "n_corpus" -> nCorpus, "n_queries" -> qVecs.size)
+    probe.timed(row("one_call"): _*)(noop(Similarity.ivfPqTopK(emb, "vec_id",
+      "embedding", coarse, pqCb, qVecs, k = 5, nprobe = 2)))
+    probe.timed(row("build_persist"): _*)(graft.etd.Sources.writeBucketed(
       Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", coarse, pqCb),
       "ivfpq_index_scale", s"$outDir/ivfpq_index", buckets = 32,
       bucketCols = Seq("cell"), sortCols = Seq("cell")))
     val idx = spark.table("ivfpq_index_scale")
-    time("search_persisted")(Similarity.ivfPqTopKCoded(idx, "id", "codes",
-      "cell", q => ranking(q).take(2), pqCb, qVecs, k = 5)
-      .write.format("noop").mode("overwrite").save())
-    time("search_persisted_warm")(Similarity.ivfPqTopKCoded(idx, "id", "codes",
-      "cell", q => ranking(q).take(2), pqCb, qVecs, k = 5)
-      .write.format("noop").mode("overwrite").save())
+    for (label <- Seq("search_persisted", "search_persisted_warm"))
+      probe.timed(row(label): _*)(noop(Similarity.ivfPqTopKCoded(idx, "id",
+        "codes", "cell", q => ranking(q).take(2), pqCb, qVecs, k = 5)))
   }
 
   /** BM25 build/search split at 100k docs: the lexical analogue of the
@@ -2255,26 +1910,15 @@ object ScaleBench {
     * one-time build+persist, and search-over-persisted.
     */
   private def bm25Split(spark: SparkSession, outDir: String,
-                        listener: TaskMetricsProbe): Unit = {
+                        probe: Probe): Unit = {
     import graft.llm.Retrieval
     val docs = SparkEntry.table(spark, outDir, "documents")
     val queries = docs.filter(col("doc_id") < 3)
     val nCorpus = docs.count()
-    def time(label: String)(body: => Unit): Unit = {
-      listener.reset()
-      val t0 = System.nanoTime()
-      body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"bm25":"$label","n_corpus":$nCorpus,"sec":$sec%.2f,""" +
-        s""""shuffle_write_bytes":${listener.totShuffleWrite},""" +
-        s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-    }
-    time("one_call")(Retrieval.bm25TopK(docs, "doc_id", "text",
-      queries, "doc_id", "text", k = 5)
-      .write.format("noop").mode("overwrite").save())
+    probe.timed("bm25" -> "one_call", "n_corpus" -> nCorpus)(noop(
+      Retrieval.bm25TopK(docs, "doc_id", "text", queries, "doc_id", "text", k = 5)))
     val statsPath = s"$outDir/bm25_stats.parquet"
-    time("build_persist") {
+    probe.timed("bm25" -> "build_persist", "n_corpus" -> nCorpus) {
       val (post, stats) = Retrieval.buildPostings(docs, "doc_id", "text")
       graft.etd.Sources.writeBucketed(post, "bm25_postings_scale",
         s"$outDir/bm25_postings", buckets = 32,
@@ -2285,12 +1929,9 @@ object ScaleBench {
     val stats = spark.read.parquet(statsPath)
     // twice: the second run shows the steady-state per-batch cost once
     // the OS page cache holds the index files
-    time("search_persisted")(Retrieval.searchPostings(idx, stats,
-      queries, "doc_id", "text", k = 5)
-      .write.format("noop").mode("overwrite").save())
-    time("search_persisted_warm")(Retrieval.searchPostings(idx, stats,
-      queries, "doc_id", "text", k = 5)
-      .write.format("noop").mode("overwrite").save())
+    for (label <- Seq("search_persisted", "search_persisted_warm"))
+      probe.timed("bm25" -> label, "n_corpus" -> nCorpus)(noop(
+        Retrieval.searchPostings(idx, stats, queries, "doc_id", "text", k = 5)))
   }
 
   /** IVF/PQ-vs-brute crossover: the registry's ann queries carry 3-10
@@ -2301,7 +1942,7 @@ object ScaleBench {
     * the 2k corpus (sf0.1) and the 100k corpus (scaled).
     */
   private def annCrossover(spark: SparkSession, srcDir: String,
-                           outDir: String, listener: TaskMetricsProbe): Unit = {
+                           outDir: String, probe: Probe): Unit = {
     import graft.llm.Similarity
     for (dir <- Seq(srcDir, outDir)) {
       val emb = SparkEntry.table(spark, dir, "embeddings")
@@ -2318,22 +1959,17 @@ object ScaleBench {
         .localCheckpoint() // encode once; time only the ADC scan below
       val qVecs = queries.orderBy("vec_id").select("vec_id", "embedding")
         .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-      def time(label: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        listener.reset()
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
-        println(f"""{"ann":"$label","dir":"$dir","n_corpus":$nCorpus,""" +
-          f""""n_queries":${qVecs.size},"sec":$sec%.2f,""" +
-          s""""max_task_peak_mem":${listener.maxPeakMem}}""")
-      }
-      time("brute")(Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 5))
-      time("ivf_probe2")(Similarity.ivfTopKProbed(queries, emb, "vec_id",
-        "embedding", cents, k = 5, nprobe = 2))
-      time("pq_adc")(Similarity.pqTopK(coded, "vec_id", "codes", qVecs, pqCb, k = 5))
-      time("pq_rerank_of8")(Similarity.pqRerankTopK(queries, emb, "vec_id",
-        "embedding", pqCb, k = 5, overfetch = 8))
+      for ((label, df) <- Seq[(String, () => DataFrame)](
+          "brute" -> (() =>
+            Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 5)),
+          "ivf_probe2" -> (() => Similarity.ivfTopKProbed(queries, emb, "vec_id",
+            "embedding", cents, k = 5, nprobe = 2)),
+          "pq_adc" -> (() =>
+            Similarity.pqTopK(coded, "vec_id", "codes", qVecs, pqCb, k = 5)),
+          "pq_rerank_of8" -> (() => Similarity.pqRerankTopK(queries, emb,
+            "vec_id", "embedding", pqCb, k = 5, overfetch = 8))))
+        probe.timed("ann" -> label, "dir" -> dir, "n_corpus" -> nCorpus,
+          "n_queries" -> qVecs.size)(noop(df()))
       // recall@5 vs brute (untimed; n_queries x k rows per method — a
       // bounded driver read): the QUALITY half of the speed tradeoff the
       // timed rows measure. Departures from 1.0 are the documented
@@ -2363,10 +1999,10 @@ object ScaleBench {
       // 5 Lloyd iterations over the corpus instead of the raw first-8
       // seeds — the delta between this line and the one above is what
       // codebook training buys before any nprobe/overfetch spend.
-      val tT = System.nanoTime()
-      val pqTrained = Similarity.pqTrain(emb, "vec_id", "embedding",
-        m = m, k = 8, iterations = 5)
-      val trainSec = (System.nanoTime() - tT) / 1e9
+      val pqTrained = probe.timed("ann" -> "pq_train", "dir" -> dir,
+          "n_corpus" -> nCorpus)(
+        Similarity.pqTrain(emb, "vec_id", "embedding", m = m, k = 8, iterations = 5))
+      val trainSec = probe.last.sec
       val codedT = emb.select(col("vec_id"),
         Similarity.pqEncode(col("embedding"), pqTrained).as("codes"))
         .localCheckpoint()
@@ -2386,7 +2022,7 @@ object ScaleBench {
   /** r17 soak (VERDICT r16 #7): the three composed flagships —
     * training-data chain, curation chain, incremental crawl — once at
     * sf0.1 and once at the 20x-documents corpus in one session, with
-    * wall + shuffle/input bytes from the task listener. The claim under
+    * wall + shuffle/input bytes from [[Probe]]. The claim under
     * test is "nothing superlinear": the scaled/base WALL ratio should
     * sit within ~1.3x of the scaled/base INPUT ratio (the linear
     * extrapolation), and shuffle bytes should scale with input, at a
@@ -2396,48 +2032,37 @@ object ScaleBench {
     * lineage-cut blocks so run 2 doesn't measure run 1's memory.
     */
   private def flagshipSoak(spark: SparkSession, srcDir: String,
-                           outDir: String, listener: TaskMetricsProbe): Unit = {
+                           outDir: String, probe: Probe): Unit = {
     val names = Seq("q_training_data_e2e", "q_curation_e2e",
       "q_crawl_incremental")
     val registry = SparkEntry.queries ++ Bench.benchOnly
     for (name <- names) {
-      val rows = for (dir <- Seq(srcDir, outDir)) yield {
-        listener.reset()
-        val t0 = System.nanoTime()
-        val outcome =
-          try {
-            registry(name)(spark, dir)
-              .write.format("noop").mode("overwrite").save()
-            "ok"
-          } catch { case e: Throwable => s"failed: ${e.getMessage}" }
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // listener events post asynchronously
+      val readings = for (dir <- Seq(srcDir, outDir)) yield {
+        probe.timedWith("soak" -> name, "dir" -> dir) {
+          try { noop(registry(name)(spark, dir)); "ok" }
+          catch { case e: Throwable => s"failed: ${e.getMessage}" }
+        }(status => Seq("status" -> status))
         Checkpoints.sweep(spark)
-        (dir, sec, listener.totInput, listener.totShuffleWrite,
-          listener.maxShuffleRead, listener.maxPeakMem, outcome)
+        probe.last
       }
-      val (base, scaled) = (rows.head, rows.last)
-      val wallRatio = scaled._2 / base._2
+      val (base, scaled) = (readings.head, readings.last)
+      val wallRatio = scaled.sec / base.sec
       val inputRatio =
-        if (base._3 > 0) scaled._3.toDouble / base._3 else -1.0
+        if (base.totInput > 0) scaled.totInput.toDouble / base.totInput else -1.0
       val shuffleRatio =
-        if (base._4 > 0) scaled._4.toDouble / base._4 else -1.0
-      rows.foreach { case (dir, sec, in, sw, msr, mpm, st) =>
-        println(f"""{"soak":"$name","dir":"$dir","sec":$sec%.2f,""" +
-          s""""input_bytes":$in,"shuffle_write_bytes":$sw,""" +
-          s""""max_task_shuffle_read":$msr,"max_task_peak_mem":$mpm,""" +
-          s""""status":"$st"}""")
-      }
+        if (base.totShuffleWrite > 0)
+          scaled.totShuffleWrite.toDouble / base.totShuffleWrite
+        else -1.0
       println(f"""{"soak":"$name","wall_ratio":$wallRatio%.2f,""" +
         f""""input_ratio":$inputRatio%.2f,"shuffle_ratio":$shuffleRatio%.2f,""" +
         f""""linear_headroom":${wallRatio / math.max(inputRatio, 1e-9)}%.2f}""")
     }
   }
 
-  private def generate(spark: SparkSession, srcDir: String, outDir: String): Unit = {
+  private def generate(spark: SparkSession, srcDir: String, outDir: String,
+                       probe: Probe): Unit = probe.timed("generated" -> outDir) {
     def copies(df: DataFrame, n: Int)(f: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until n).map(i => f(df, i)).reduce(_ unionByName _)
-    val t0 = System.nanoTime()
 
     // events x20: user_id (the household key) offsets — household COUNT
     // grows, per-house history length stays constant, exactly how the
@@ -2480,6 +2105,5 @@ object ScaleBench {
         SparkEntry.table(spark, srcDir, t)
           .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
-    println(f"""{"generated":"$outDir","sec":${(System.nanoTime() - t0) / 1e9}%.1f}""")
   }
 }

@@ -9,7 +9,7 @@ import graft.ops.Skew
   * dimension is forced above the broadcast path (sort-merge join), and
   * the same join runs three ways — unsalted with AQE skew-split OFF
   * (the straggler), unsalted with AQE skew-split ON, and
-  * [[Skew.saltedJoin]]. A listener reports the MAX task duration per
+  * [[Skew.saltedJoin]]. [[Probe]] reports the MAX task duration per
   * run: the straggler signal a wall-clock total hides on an otherwise
   * idle box. The aggregation scenario is measured too, documenting the
   * honest negative result: for algebraic aggs map-side combine already
@@ -31,8 +31,7 @@ object SkewBench {
     // 256 MB threshold targets cluster-sized partitions)
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-    val probe = new TaskMetricsProbe
-    spark.sparkContext.addSparkListener(probe)
+    val probe = Probe(spark)
 
     // 8M rows, 2000 keys, key 0 owns 50%; ~100-byte payload so the hot
     // key's sort-merge partition is ~400 MB. uid is the salt
@@ -51,17 +50,9 @@ object SkewBench {
     val bigP = spark.read.parquet("/tmp/skewbench/big.parquet")
     val dimP = spark.read.parquet("/tmp/skewbench/dim.parquet")
 
-    def run(label: String, skewJoinOn: Boolean)(df: => DataFrame): Long = {
+    def run(label: String, skewJoinOn: Boolean)(df: => DataFrame): Unit = {
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewJoinOn.toString)
-      probe.reset()
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      println(f"""{"skew":"$label","sec":$sec%.2f,""" +
-        s""""max_task_ms":${probe.maxTaskMs},""" +
-        s""""max_task_shuffle_read":${probe.maxShuffleRead},"tasks":${probe.tasks}}""")
-      probe.maxTaskMs
+      probe.timed("skew" -> label)(df.write.format("noop").mode("overwrite").save())
     }
 
     // correctness guard: all three joins must produce the same row count
