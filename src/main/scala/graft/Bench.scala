@@ -172,112 +172,29 @@ object Bench {
   private def jsonArr(xs: Option[Seq[Double]]): String =
     xs.fold("null")(_.map(num(_)).mkString("[", ",", "]"))
 
-  /** Per-query reference medians from BENCH_REFERENCE.md (the pinned
-    * clean-run budgets — that table is the source of truth; this map is
-    * its machine-readable copy for the `load_offset_estimate` field).
-    * The median of measured/reference ratios over these rows makes a
-    * uniform environment offset self-report in the bench JSON: r13→r14
-    * ran bit-identical binaries and still moved −24% in aggregate on a
-    * quieter box (VERDICT r14) — without this field only a judge rerun
-    * could tell that from a real regression.
-    */
-  val referenceMedians: Map[String, Double] = Map(
-    "q_agg_pricing" -> 0.50, "q_pipeline_e2e" -> 3.49,
-    "q_pipeline_full13" -> 15.18, "q_i7_impute_cascade" -> 1.63,
-    "q_i1_avg_diff" -> 1.64, "q_i10_summary_house" -> 2.28,
-    "q_i11_cumsum_rebuild" -> 0.88, "q_i13_energy_balance" -> 0.61,
-    "q_a8_resample" -> 0.71, "q_a6a7_project_agg" -> 0.57,
-    "q_w1_rolling" -> 0.37, "q_w12_mark_coldest" -> 0.27,
-    "q_weather_table" -> 0.98, "q_j3_weather_join" -> 0.96,
-    "q_dedup_exact" -> 0.23, "q_dedup_spans" -> 0.56,
-    "q_minhash_sig" -> 0.34, "q_minhash_fast" -> 1.36,
-    "q_lsh_pairs" -> 1.07, "q_near_dup_jaccard" -> 1.16,
-    "q_jaccard_join" -> 1.25, "q_simhash" -> 0.35,
-    "q_embed_cosine_dup" -> 0.98, "q_embed_dup_ivf" -> 0.46,
-    "q_ann_topk" -> 0.27, "q_ann_pq" -> 0.44, "q_ann_ivfpq" -> 0.45,
-    "q_bpe_pairs" -> 0.41, "q_text_quality" -> 0.35,
-    "q_text_fingerprint" -> 0.24, "q_text_bigram_lm" -> 1.06,
-    "q_kn_score" -> 1.89, "q_bm25_topk" -> 0.60,
-    "q_bm25_indexed" -> 0.56, "q_bm25_incremental" -> 0.75,
-    "q_contamination_bloom" -> 0.54, "q_curation_e2e" -> 3.24,
-    "q_image_neardup_e2e" -> 1.90, "q_cc_pipeline" -> 1.02,
-    "q_asof_join" -> 0.33, "q_pagerank" -> 3.53,
-    // q_profile_fold re-pinned r21 (VERDICT r19 #5): median of five
-    // clean protocol readings r17-r21 (0.454/0.463/0.468/0.507/0.577)
-    // — the 0.31 r13-era pin predates stages the fold has since gained;
-    // wall is the per-stage scheduling floor (~0.3 s task CPU total),
-    // not a plan regression. BENCH_REFERENCE.md carries the audit.
-    "q_fuzzy_join" -> 0.50, "q_profile_fold" -> 0.47,
-    "q_warc_roundtrip" -> 0.52, "q_wordpiece_tokens" -> 0.66,
-    // r15-tier rows, pinned r16 from three clean readings
-    "q_crawl_incremental" -> 3.72, "q_semdedup_twolevel" -> 0.82,
-    // r16-new flagship, pinned from three clean r16 readings
-    "q_training_data_e2e" -> 6.52,
-    // r17-new crawl-gate rows, pinned from three clean r17 full-protocol
-    // readings at offsets 1.12-1.28 (0.52/0.41/0.46 and 0.22/0.23/0.28,
-    // offset-adjusted medians)
-    "q_blocklist_filter" -> 0.40, "q_sitemap_entries" -> 0.20,
-    // r17 session-3 serving/dedup/graph rows, pinned from three clean
-    // full-protocol readings at offsets 0.93-0.95 (q_hits from the two
-    // post-checkpointEvery-fix protocol readings + warm isolation)
-    "q_hits" -> 6.10, "q_containment_join" -> 1.15,
-    "q_tfidf_cosine" -> 1.03, "q_phrase_search" -> 0.42,
-    // r18-new crawl-loop flagship, pinned from the first clean 5-run
-    // block (median 7.84) and a 3-run block (median 7.38), quiet box;
-    // the wall is ~40 small scheduler jobs (pageRank rounds, apportion
-    // collects, broadcasts) over fixture-grain data — orchestration
-    // floor, not data work
-    "q_crawl_loop_e2e" -> 7.40)
-
-  /** Per-query pinned process-CPU/wall ratios — mean of two clean
+  /** A query's pinned reference readings — what [[alertReasons]] and
+    * `load_offset_estimate` compare a measurement against.
+    *
+    * `medianSec`: the clean-run median from BENCH_REFERENCE.md (the
+    * pinned budgets — that table is the source of truth; [[pins]] is its
+    * machine-readable copy). The median of measured/reference ratios
+    * over these makes a uniform environment offset self-report in the
+    * bench JSON: r13→r14 ran bit-identical binaries and still moved −24%
+    * in aggregate on a quieter box (VERDICT r14) — without that field
+    * only a second run could tell that from a real regression.
+    *
+    * `cpuWall`: the process-CPU/wall ratio — mean of two clean
     * same-binary sessions (the r16 judge protocol run at offset 1.15
     * and the r17 builder run at offset 1.03). The WITHIN-RUN contention
     * signal VERDICT r16 #1 demanded: a scheduler/I-O-starved query's
-    * cpu/wall COLLAPSES relative to this table (BENCH_r16's poisoned
+    * cpu/wall COLLAPSES relative to its pin (BENCH_r16's poisoned
     * q_simhash read 1.16 against a 1.9-2.6 clean history) while its
     * wall inflates — a combination no real plan regression produces
     * (regressions keep the cores busy). Clean sessions sit within
     * ~0.8-1.2x of these pins; the alert threshold is 0.7x AND 1.5x
     * wall, so both gates must trip together.
-    */
-  val referenceCpuWall: Map[String, Double] = Map(
-    "q_agg_pricing" -> 3.57, "q_pipeline_e2e" -> 3.65,
-    "q_pipeline_full13" -> 10.87, "q_i7_impute_cascade" -> 3.49,
-    "q_i1_avg_diff" -> 2.47, "q_i10_summary_house" -> 3.67,
-    "q_i11_cumsum_rebuild" -> 1.96, "q_i13_energy_balance" -> 1.83,
-    "q_a8_resample" -> 2.38, "q_a6a7_project_agg" -> 1.72,
-    "q_w1_rolling" -> 1.73, "q_w12_mark_coldest" -> 2.30,
-    "q_weather_table" -> 2.79, "q_j3_weather_join" -> 2.56,
-    "q_dedup_exact" -> 2.95, "q_dedup_spans" -> 2.63,
-    "q_minhash_sig" -> 1.89, "q_minhash_fast" -> 4.16,
-    "q_lsh_pairs" -> 1.47, "q_near_dup_jaccard" -> 2.57,
-    "q_jaccard_join" -> 2.55, "q_simhash" -> 1.90,
-    "q_embed_cosine_dup" -> 1.28, "q_embed_dup_ivf" -> 2.65,
-    "q_ann_topk" -> 1.93, "q_ann_pq" -> 1.74, "q_ann_ivfpq" -> 2.09,
-    "q_bpe_pairs" -> 2.27, "q_text_quality" -> 1.62,
-    "q_text_fingerprint" -> 1.45, "q_text_bigram_lm" -> 1.90,
-    "q_kn_score" -> 3.41, "q_bm25_topk" -> 2.03,
-    "q_bm25_indexed" -> 3.24, "q_bm25_incremental" -> 3.03,
-    "q_contamination_bloom" -> 1.89, "q_curation_e2e" -> 2.03,
-    "q_image_neardup_e2e" -> 2.17, "q_cc_pipeline" -> 2.12,
-    "q_asof_join" -> 2.30, "q_pagerank" -> 3.70,
-    "q_fuzzy_join" -> 3.62, "q_profile_fold" -> 3.05,
-    "q_warc_roundtrip" -> 1.56, "q_wordpiece_tokens" -> 1.67,
-    "q_crawl_incremental" -> 1.60, "q_semdedup_twolevel" -> 2.38,
-    "q_training_data_e2e" -> 1.71,
-    // r17 rows: mean of warm isolation runs (SPARK_GRAFT_BENCH_ONLY,
-    // runs 2-5, quiet box)
-    "q_blocklist_filter" -> 2.2, "q_sitemap_entries" -> 2.7,
-    // r18 crawl-loop flagship: median of the first clean block's
-    // per-run readings (4.0/3.0/2.6)
-    "q_crawl_loop_e2e" -> 3.0,
-    // r17 session-3 rows: medians of the post-fix per-run readings
-    // (q_hits re-pinned after the per-round materialization cut its
-    // redundant parallel work: 7.0 -> 3.8 at unchanged wall)
-    "q_hits" -> 3.8, "q_containment_join" -> 2.1,
-    "q_tfidf_cosine" -> 2.6, "q_phrase_search" -> 1.9)
-
-  /** Per-query pinned process-CPU SECONDS (VERDICT r18 #4 — the
+    *
+    * `cpuSec`: process-CPU SECONDS (VERDICT r18 #4 — the
     * LOAD-INDEPENDENT second gate): the per-query CEILING of two clean
     * same-binary r19 protocol readings (offsets 1.02 / 1.04; see
     * BENCH_REFERENCE.md's CPU column). Ceiling, not median: measured
@@ -292,7 +209,6 @@ object Bench {
     * moves only when the PLAN moves, so a real regression trips
     * [[alertReasons]]'s `cpu_vs_pin` even on a day the wall offset
     * would absorb it, and a drifted wall alone never does.
-    *
     * r21 (VERDICT r20 #7): ceilings re-derived with a THIRD clean
     * session — per-query max of the r19-derived pins and the r21
     * closing clean protocol run (BENCH_r21_full.json, offset 1.14,
@@ -301,36 +217,113 @@ object Bench {
     * rows the r21 box read hotter than r19 (q_hits, q_pagerank,
     * q_jaccard_join, …) widen toward the ceiling as designed.
     */
-  val referenceCpuSec: Map[String, Double] = Map(
-    "q_agg_pricing" -> 1.26, "q_pipeline_e2e" -> 13.97,
-    "q_pipeline_full13" -> 145.09, "q_i7_impute_cascade" -> 8.23,
-    "q_i1_avg_diff" -> 3.65, "q_i10_summary_house" -> 9.70,
-    "q_i11_cumsum_rebuild" -> 1.96, "q_i13_energy_balance" -> 1.71,
-    "q_a8_resample" -> 1.68, "q_a6a7_project_agg" -> 1.15,
-    "q_w1_rolling" -> 0.84, "q_w12_mark_coldest" -> 0.68,
-    "q_weather_table" -> 3.30, "q_j3_weather_join" -> 3.47,
-    "q_dedup_exact" -> 0.70, "q_dedup_spans" -> 1.13,
-    "q_minhash_sig" -> 0.86, "q_minhash_fast" -> 6.72,
-    "q_lsh_pairs" -> 1.17, "q_near_dup_jaccard" -> 2.78,
-    "q_jaccard_join" -> 3.41, "q_simhash" -> 1.12,
-    "q_embed_cosine_dup" -> 1.43, "q_embed_dup_ivf" -> 1.17,
-    "q_ann_topk" -> 0.56, "q_ann_pq" -> 1.07,
-    "q_ann_ivfpq" -> 1.15, "q_bpe_pairs" -> 0.79,
-    "q_text_quality" -> 0.59, "q_text_fingerprint" -> 0.47,
-    "q_text_bigram_lm" -> 2.94, "q_kn_score" -> 7.75,
-    "q_bm25_topk" -> 2.45, "q_bm25_indexed" -> 2.90,
-    "q_bm25_incremental" -> 3.35, "q_contamination_bloom" -> 1.85,
-    "q_curation_e2e" -> 8.27, "q_image_neardup_e2e" -> 5.40,
-    "q_cc_pipeline" -> 2.94, "q_asof_join" -> 1.05,
-    "q_pagerank" -> 21.49, "q_fuzzy_join" -> 2.39,
-    "q_profile_fold" -> 1.42, "q_warc_roundtrip" -> 1.13,
-    "q_wordpiece_tokens" -> 2.06, "q_crawl_incremental" -> 5.86,
-    "q_semdedup_twolevel" -> 2.36, "q_training_data_e2e" -> 10.91,
-    "q_blocklist_filter" -> 1.07, "q_sitemap_entries" -> 0.56,
-    "q_hits" -> 19.22, "q_containment_join" -> 3.51,
-    "q_tfidf_cosine" -> 3.93, "q_phrase_search" -> 0.93,
-    "q_crawl_loop_e2e" -> 15.31
-  )
+  final case class Pin(medianSec: Double, cpuWall: Double, cpuSec: Double)
+
+  /** The timed queries, in timing order — representative heavy queries,
+    * one per operator family — each with its [[Pin]]. A query without
+    * a row is not timed; one outside the table still gets dispersion
+    * cover from [[alertReasons]].
+    */
+  val pins: Seq[(String, Pin)] = Seq(
+    "q_agg_pricing" -> Pin(0.50, 3.57, 1.26),
+    "q_pipeline_e2e" -> Pin(3.49, 3.65, 13.97),
+    "q_pipeline_full13" -> Pin(15.18, 10.87, 145.09),
+    "q_i7_impute_cascade" -> Pin(1.63, 3.49, 8.23),
+    "q_i1_avg_diff" -> Pin(1.64, 2.47, 3.65),
+    "q_i10_summary_house" -> Pin(2.28, 3.67, 9.70),
+    "q_i11_cumsum_rebuild" -> Pin(0.88, 1.96, 1.96),
+    "q_i13_energy_balance" -> Pin(0.61, 1.83, 1.71),
+    "q_a8_resample" -> Pin(0.71, 2.38, 1.68),
+    "q_a6a7_project_agg" -> Pin(0.57, 1.72, 1.15),
+    "q_w1_rolling" -> Pin(0.37, 1.73, 0.84),
+    "q_w12_mark_coldest" -> Pin(0.27, 2.30, 0.68),
+    "q_weather_table" -> Pin(0.98, 2.79, 3.30),
+    "q_j3_weather_join" -> Pin(0.96, 2.56, 3.47),
+    "q_dedup_exact" -> Pin(0.23, 2.95, 0.70),
+    "q_dedup_spans" -> Pin(0.56, 2.63, 1.13),
+    "q_minhash_sig" -> Pin(0.34, 1.89, 0.86),
+    "q_minhash_fast" -> Pin(1.36, 4.16, 6.72),
+    "q_lsh_pairs" -> Pin(1.07, 1.47, 1.17),
+    "q_near_dup_jaccard" -> Pin(1.16, 2.57, 2.78),
+    "q_jaccard_join" -> Pin(1.25, 2.55, 3.41),
+    "q_simhash" -> Pin(0.35, 1.90, 1.12),
+    "q_embed_cosine_dup" -> Pin(0.98, 1.28, 1.43),
+    "q_embed_dup_ivf" -> Pin(0.46, 2.65, 1.17),
+    "q_ann_topk" -> Pin(0.27, 1.93, 0.56),
+    "q_ann_pq" -> Pin(0.44, 1.74, 1.07),
+    "q_ann_ivfpq" -> Pin(0.45, 2.09, 1.15),
+    "q_bpe_pairs" -> Pin(0.41, 2.27, 0.79),
+    "q_text_quality" -> Pin(0.35, 1.62, 0.59),
+    "q_text_fingerprint" -> Pin(0.24, 1.45, 0.47),
+    "q_text_bigram_lm" -> Pin(1.06, 1.90, 2.94),
+    "q_kn_score" -> Pin(1.89, 3.41, 7.75),
+    "q_bm25_topk" -> Pin(0.60, 2.03, 2.45),
+    "q_bm25_indexed" -> Pin(0.56, 3.24, 2.90),
+    "q_bm25_incremental" -> Pin(0.75, 3.03, 3.35),
+    "q_contamination_bloom" -> Pin(0.54, 1.89, 1.85),
+    "q_curation_e2e" -> Pin(3.24, 2.03, 8.27),
+    "q_image_neardup_e2e" -> Pin(1.90, 2.17, 5.40),
+    "q_cc_pipeline" -> Pin(1.02, 2.12, 2.94),
+    "q_asof_join" -> Pin(0.33, 2.30, 1.05),
+    "q_pagerank" -> Pin(3.53, 3.70, 21.49),
+    // r12-new operator tier (VERDICT r12 #7): green oracles, now with a
+    // round-over-round perf track
+    "q_fuzzy_join" -> Pin(0.50, 3.62, 2.39),
+    // median re-pinned r21 (VERDICT r19 #5): median of five clean
+    // protocol readings r17-r21 (0.454/0.463/0.468/0.507/0.577) — the
+    // 0.31 r13-era pin predates stages the fold has since gained; wall
+    // is the per-stage scheduling floor (~0.3 s task CPU total), not a
+    // plan regression. BENCH_REFERENCE.md carries the audit.
+    "q_profile_fold" -> Pin(0.47, 3.05, 1.42),
+    "q_warc_roundtrip" -> Pin(0.52, 1.56, 1.13),
+    "q_wordpiece_tokens" -> Pin(0.66, 1.67, 2.06),
+    // r15-new: incremental crawl intake and the two-level codebook
+    // (medians pinned r16 from three clean readings, the r12-tier
+    // precedent); the other r15 oracle rows (q_semdedup_table,
+    // q_bm25_pruned) time near-identical plans to existing rows and
+    // stay Verify-only
+    "q_crawl_incremental" -> Pin(3.72, 1.60, 5.86),
+    "q_semdedup_twolevel" -> Pin(0.82, 2.38, 2.36),
+    // r16-new: the training-data flagship chain (intake → curation
+    // ledger → mixture → packing, one hash-checked composition); median
+    // pinned from three clean r16 readings
+    "q_training_data_e2e" -> Pin(6.52, 1.71, 10.91),
+    // r17-new corpus-scale crawl-gate rows (the fixture-grain robots/
+    // frontier queries stay Verify-only). Medians from three clean r17
+    // full-protocol readings at offsets 1.12-1.28 (0.52/0.41/0.46 and
+    // 0.22/0.23/0.28, offset-adjusted medians); cpu/wall the mean of
+    // warm isolation runs (SPARK_GRAFT_BENCH_ONLY, runs 2-5, quiet box)
+    "q_blocklist_filter" -> Pin(0.40, 2.2, 1.07),
+    "q_sitemap_entries" -> Pin(0.20, 2.7, 0.56),
+    // r17 session-3: HITS (second graph iteration), the asymmetric
+    // containment join (prefix+full-index SSJoin variant), vector-space
+    // cosine over the postings build, and phrase search over the
+    // positional index (q_proximity_search and q_url_traps are
+    // map-side/fixture-grain — Verify-only, the r17 precedent). Medians
+    // from three clean full-protocol readings at offsets 0.93-0.95
+    // (q_hits from the two post-checkpointEvery-fix protocol readings +
+    // warm isolation); cpu/wall the medians of the post-fix per-run
+    // readings (q_hits re-pinned after the per-round materialization
+    // cut its redundant parallel work: 7.0 -> 3.8 at unchanged wall)
+    "q_hits" -> Pin(6.10, 3.8, 19.22),
+    "q_containment_join" -> Pin(1.15, 2.1, 3.51),
+    "q_tfidf_cosine" -> Pin(1.03, 2.6, 3.93),
+    "q_phrase_search" -> Pin(0.42, 1.9, 0.93),
+    // r18-new: the pre-fetch crawl-loop flagship (sitemap two-level
+    // round-trip → trap gate → robots → slot schedule → budget quotas
+    // → anchor votes, one hash-checked composition). Median pinned from
+    // the first clean 5-run block (median 7.84) and a 3-run block
+    // (median 7.38), quiet box; the wall is ~40 small scheduler jobs
+    // (pageRank rounds, apportion collects, broadcasts) over
+    // fixture-grain data — orchestration floor, not data work. cpu/wall
+    // the median of the first clean block's per-run readings
+    // (4.0/3.0/2.6)
+    "q_crawl_loop_e2e" -> Pin(7.40, 3.0, 15.31))
+
+  /** The timing order: [[pins]]' keys. */
+  val headline: Seq[String] = pins.map(_._1)
+
+  private val pinOf: Map[String, Pin] = pins.toMap
 
   /** The per-query within-run alert decision (VERDICT r16 #1), pure so
     * the poisoned-artifact histories pin it in BenchDetectorSpec:
@@ -366,9 +359,7 @@ object Bench {
     */
   def alertReasons(name: String, medianSec: Double, dispersion: Double,
                    cpuWall: Double, cpuSec: Double = -1.0): List[String] = {
-    val pinSec = referenceMedians.get(name)
-    val pinCw = referenceCpuWall.get(name)
-    val pinCpu = referenceCpuSec.get(name)
+    val pin = pinOf.get(name)
     // Absolute-excess floors under the ratios (r19 close): on a
     // contended evening box the sub-second rows alert from environment
     // alone — wall 0.46→1.15 s scheduler noise, and a single full GC
@@ -382,99 +373,62 @@ object Bench {
     val cpuExcess = 2.0
     List(
       if (dispersion > 2.0) Some("dispersion") else None,
-      if (cpuWall > 0 && pinCw.exists(cpuWall < 0.7 * _) &&
-          pinSec.exists(p => medianSec > 1.5 * p &&
-            medianSec > p + wallExcess)) Some("cpu_wall_collapse")
+      if (cpuWall > 0 && pin.exists(p => cpuWall < 0.7 * p.cpuWall &&
+          medianSec > 1.5 * p.medianSec &&
+          medianSec > p.medianSec + wallExcess)) Some("cpu_wall_collapse")
       else None,
-      if (pinSec.exists(p => medianSec > 2.5 * p &&
-          medianSec > p + wallExcess)) Some("slow_vs_pin")
+      if (pin.exists(p => medianSec > 2.5 * p.medianSec &&
+          medianSec > p.medianSec + wallExcess)) Some("slow_vs_pin")
       else None,
-      if (cpuSec > 0 && pinCpu.exists(p => cpuSec > 2.5 * p &&
-          cpuSec > p + cpuExcess)) Some("cpu_vs_pin")
+      if (cpuSec > 0 && pin.exists(p => cpuSec > 2.5 * p.cpuSec &&
+          cpuSec > p.cpuSec + cpuExcess)) Some("cpu_vs_pin")
       else None).flatten
   }
 
-  /** Representative heavy queries, one per operator family. */
-  val headline: Seq[String] = Seq(
-    "q_agg_pricing",
-    "q_pipeline_e2e",
-    "q_pipeline_full13",
-    "q_i7_impute_cascade",
-    "q_i1_avg_diff",
-    "q_i10_summary_house",
-    "q_i11_cumsum_rebuild",
-    "q_i13_energy_balance",
-    "q_a8_resample",
-    "q_a6a7_project_agg",
-    "q_w1_rolling",
-    "q_w12_mark_coldest",
-    "q_weather_table",
-    "q_j3_weather_join",
-    "q_dedup_exact",
-    "q_dedup_spans",
-    "q_minhash_sig",
-    "q_minhash_fast",
-    "q_lsh_pairs",
-    "q_near_dup_jaccard",
-    "q_jaccard_join",
-    "q_simhash",
-    "q_embed_cosine_dup",
-    "q_embed_dup_ivf",
-    "q_ann_topk",
-    "q_ann_pq",
-    "q_ann_ivfpq",
-    "q_bpe_pairs",
-    "q_text_quality",
-    "q_text_fingerprint",
-    "q_text_bigram_lm",
-    "q_kn_score",
-    "q_bm25_topk",
-    "q_bm25_indexed",
-    "q_bm25_incremental",
-    "q_contamination_bloom",
-    "q_curation_e2e",
-    "q_image_neardup_e2e",
-    "q_cc_pipeline",
-    "q_asof_join",
-    "q_pagerank",
-    // r12-new operator tier (VERDICT r12 #7): green oracles, now with a
-    // round-over-round perf track
-    "q_fuzzy_join",
-    "q_profile_fold",
-    "q_warc_roundtrip",
-    "q_wordpiece_tokens",
-    // r15-new: incremental crawl intake and the two-level codebook —
-    // pinned in BENCH_REFERENCE once three clean readings exist (the
-    // r12-tier precedent); the other r15 oracle rows (q_semdedup_table,
-    // q_bm25_pruned) time near-identical plans to existing headline rows
-    // and stay Verify-only
-    "q_crawl_incremental",
-    "q_semdedup_twolevel",
-    // r16-new: the training-data flagship chain (intake → curation
-    // ledger → mixture → packing, one hash-checked composition) — pin
-    // once three clean readings exist, the r12-tier process
-    "q_training_data_e2e",
-    // r17-new corpus-scale crawl-gate rows (the fixture-grain robots/
-    // frontier queries stay Verify-only) — pin once three clean
-    // readings exist, the r12-tier process
-    "q_blocklist_filter",
-    "q_sitemap_entries",
-    // r17 session-3: HITS (second graph iteration), the asymmetric
-    // containment join (prefix+full-index SSJoin variant), vector-space
-    // cosine over the postings build, and phrase search over the
-    // positional index (q_proximity_search and q_url_traps are
-    // map-side/fixture-grain — Verify-only, the r17 precedent) — pin
-    // once three clean readings exist, the r12-tier process
-    "q_hits",
-    "q_containment_join",
-    "q_tfidf_cosine",
-    "q_phrase_search",
-    // r18-new: the pre-fetch crawl-loop flagship (sitemap two-level
-    // round-trip → trap gate → robots → slot schedule → budget quotas
-    // → anchor votes, one hash-checked composition) — pin once three
-    // clean readings exist, the r12-tier process
-    "q_crawl_loop_e2e",
-  )
+  private val registry = SparkEntry.queries ++ benchOnly
+
+  private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The untimed warm-up: runs each of `names` once on `dir` through the
+    * timed loop's own per-query setup and teardown ([[setup]], then
+    * [[dropBm25Index]] and a full [[Checkpoints.sweep]]), so it leaves
+    * no state behind — nothing a timed run can reuse as precomputation.
+    * Returns the names that threw.
+    *
+    * Why every query, not just the first: the JIT and codegen cost of a
+    * query's first execution lands inside whichever timed block runs it
+    * first, so a cold reading depends on what ran before it. The
+    * measured cold-JVM decays: q_i7_impute_cascade ~47 CPU-seconds of
+    * C2/janino compilation, runs 12.3 → 5.3 → 3.3 → 3.0 s at cpu/wall
+    * 4.6 → 3.3 with gc and major faults negligible (VERDICT r15 #2,
+    * attributed r16), enough that its 3-run MEDIAN was bimodal across
+    * clean sessions; q_i10_summary_house 5.1 → 4.5 → 4.7 → 4.3 → 3.0 s
+    * in isolation; q_kn_score 4.97 → 2.39 → 2.03 → 1.94 s at cpu/wall
+    * 5.9 → 3.6, a protocol median 1.5-1.6x its pin (VERDICT r16 #5);
+    * q_training_data_e2e 13.66 s cold vs 6.18 s once rerun (VERDICT r17
+    * #2); q_fuzzy_join's first block ~2× its 0.50 s pin in two of three
+    * clean r19 sessions while the rerun read 0.52 s. One pass over every
+    * selected query at the smallest scale factor covers those families
+    * and any later one alike (codegen classes are data-independent).
+    */
+  private[graft] def warmUp(spark: SparkSession, dir: String,
+                            names: Seq[String]): Seq[String] =
+    names.filter { name =>
+      try {
+        setup.get(name).foreach(_(spark, dir))
+        materialize(registry(name)(spark, dir))
+        false
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] warm-up $name failed: " +
+            s"${e.getClass.getName}: ${e.getMessage}")
+          true
+      } finally {
+        dropBm25Index(spark)
+        Checkpoints.sweep(spark)
+      }
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = Harness.sfDir(None)
@@ -508,123 +462,16 @@ object Bench {
       preflightWaited += 5
     }
 
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // Untimed warmup: absorb session/JIT/scan-cache startup so the first
-    // timed query measures the operator, not initialization.
-    Harness.untimed("bench warm-up events") {
-      materialize(SparkEntry.table(spark, sfDir, "events").limit(1000))
-    }
-    // Cascade JIT warm-up (VERDICT r15 #2, attributed r16): the impute
-    // cascade triggers ~47 CPU-seconds of C2/janino compilation on a
-    // cold JVM, decaying over ~3 executions (measured: cold-JVM
-    // q_i7 runs 12.3 → 5.3 → 3.3 → 3.0 s, cpu/wall 4.6 → 3.3, gc and
-    // major faults negligible) — enough that its 3-run MEDIAN was
-    // bimodal across clean sessions, landing wherever the preceding
-    // queries had left the compilation state. Running the same code
-    // shape here on a 2-house slice (untimed, trivial data) compiles
-    // the shared window/cascade paths so the timed reading is
-    // position-independent.
-    Harness.untimed("bench warm-up impute") {
-      import org.apache.spark.sql.functions.col
-      // the batched single-column engine — the path the q_i* entries
-      // actually run since r21 (warming the sequential imputeColumn
-      // would compile the wrong codegen classes)
-      val tiny = graft.queries.QueriesEtd.imputeOne(
-        graft.queries.QueriesEtd.withAverages(
-          graft.queries.QueriesEtd.readings(spark, sfDir)
-            .filter(col("user_id") < 2)),
-        "Meter", keepGapCols = true)
-      materialize(tiny)
-      // ...and the summaries shape on the same slice: q_i10 showed the
-      // same (gentler) cold-JVM decay — 5.1 → 4.5 → 4.7 → 4.3 → 3.0 s
-      // in isolation — through the gap-stats + householdSummary aggs
-      materialize(graft.etd.ImputeSummaries.householdSummary(
-        graft.etd.ImputeSummaries.gapStats(tiny, "Meter"), tiny))
-    }
-    // Fuzzy-join warm-up (r19): the fifth JIT family — q_fuzzy_join's
-    // FIRST 3-run block read ~2× its pin in two of three clean r19
-    // sessions (first medians ~1.0 s vs pin 0.50, cpu/wall collapsed by
-    // compilation stalls) while the detector's auto-rerun read clean
-    // (0.52 s) every time; the edit-distance gram join is its own
-    // codegen class no earlier warmup compiles. Same code shape on a
-    // ~200-word slice, untimed — the established playbook.
-    Harness.untimed("bench warm-up fuzzy join") {
-      import org.apache.spark.sql.functions._
-      val words = graft.llm.BpeTrain.wordCounts(
-          SparkEntry.table(spark, sfDir, "documents")
-            .filter(col("doc_id") < 20), "text")
-        .select(col("word")).limit(200)
-      materialize(graft.ops.FuzzyJoin.editDistancePairs(
-        words, "word", maxDist = 1))
-    }
-    // KN-LM warm-up (VERDICT r16 #5, attributed r17): the KN scorer is
-    // the third JIT-warm-up family — measured cold-JVM decay in
-    // isolation 4.97 → 2.39 → 2.03 → 1.94 s at cpu/wall 5.9 → 3.6, gc
-    // and major faults negligible — enough that its protocol median
-    // lands 1.5-1.6x the pin whenever the preceding queries left the
-    // train/score paths uncompiled (the judge's 2.97 vs 1.89 residual).
-    // Same code shape on a 20-document slice, untimed.
-    Harness.untimed("bench warm-up kn-lm") {
-      import org.apache.spark.sql.functions.col
-      val slice = SparkEntry.table(spark, sfDir, "documents")
-        .filter(col("doc_id") < 20)
-      materialize(graft.llm.NgramLm.score(slice, "doc_id", "text",
-        graft.llm.NgramLm.trainFromCounts(
-          graft.llm.NgramLm.trigramCounts(
-            slice.filter(col("doc_id") % 2 === 0), "doc_id", "text"))))
-    }
-    // Training-data-flagship warm-up (VERDICT r17 #2): the fourth JIT
-    // family — q_training_data_e2e's first 3-run block read a 13.66 s
-    // median cold (r17) vs 6.18 s once the within-run detector reran
-    // it; the curation chain + mixture expansion + packing windows are
-    // their own codegen classes no earlier warmup compiles. Same code
-    // shape on a ~30-document slice (codegen classes are
-    // data-independent), untimed — the r15/r16/r17 playbook.
-    Harness.untimed("bench warm-up training data") {
-      import org.apache.spark.sql.functions._
-      import graft.llm.{Curation, Mixing, Packing, TextFunctions}
-      val slice = SparkEntry.table(spark, sfDir, "documents")
-        .filter(col("doc_id") < 30)
-        .select(col("doc_id"), col("source"), col("text"))
-        .withColumn("main", TextFunctions.htmlMainText(col("text")))
-        .withColumn("n_tokens",
-          size(TextFunctions.tokens(col("main"))).cast("long"))
-        .localCheckpoint(false)
-      val intake = slice.filter(col("n_tokens") >= 5)
-        .select(col("doc_id"), col("source"), col("main").as("text"))
-      val ledger = Curation.curateAuditKeyed(
-          intake.select("doc_id", "text"), "doc_id", "text",
-          minQuality = 0.25, jaccardThreshold = 0.2)
-        .withColumn("split",
-          when(col("stage") === "kept",
-            TextFunctions.splitAssign(col("split_key").cast("string"),
-              Seq("train" -> 0.9, "validation" -> 0.05, "test" -> 0.05),
-              salt = "cluster-split")))
-        .localCheckpoint(false)
-      val keptDocs = intake
-        .join(ledger.filter(col("stage") === "kept")
-          .select("doc_id", "split"), Seq("doc_id"))
-        .withColumn("text", TextFunctions.redactPii(col("text")))
-        .withColumn("n_tok",
-          TextFunctions.regexTokenCount(col("text")).cast("long"))
-        .select("doc_id", "source", "n_tok", "split")
-      val plan = Mixing.mixturePlan(keptDocs, "source", "n_tok",
-        Map("src0" -> 0.4, "src1" -> 0.3, "src2" -> 0.2, "src3" -> 0.1),
-        budget = 5000.0, maxEpochs = 2.5)
-      val epochs = plan.select("source", "epochs").collect()
-        .map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val packedRaw = Packing.packSequences(
-          Mixing.mixtureExpand(keptDocs, "doc_id", "source", epochs)
-            .withColumn("inst_id",
-              col("doc_id") * 4 + col("epoch").cast("long")),
-          "inst_id", "n_tok", budget = 2048L, shards = 4)
-        .localCheckpoint(false)
-      materialize(packedRaw)
-      materialize(Packing.manifestFromPacked(packedRaw, "n_tok", 2048L))
-      graft.Checkpoints.sweep(spark)
-    }
+    // iteration aid: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times (and warms)
+    // just those headline entries (unset for the full run)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val selected = only.fold(headline)(s => headline.filter(s.contains))
+    val warm0 = System.nanoTime()
+    val warmupFailed = warmUp(spark, SparkEntry.smokeDir, selected)
+    System.err.println(f"[bench] warm-up: ${selected.size} queries, " +
+      f"${(System.nanoTime() - warm0) / 1e9}%.1fs untimed, " +
+      s"failed ${warmupFailed.mkString("[", ",", "]")}")
 
     // Each query runs `runs` times and reports the MEDIAN: single runs on
     // this box drift +/-30% between rounds on identical binaries (VERDICT
@@ -637,12 +484,6 @@ object Bench {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
     var failed = List.empty[String]
-    val registry = SparkEntry.queries ++ benchOnly
-    // iteration aid: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times just those
-    // headline entries (unset for the driver's full run)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only.fold(headline)(s => headline.filter(s.contains))
     import scala.jdk.CollectionConverters._
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -685,7 +526,7 @@ object Bench {
                 // round-over-round; a collapsed ratio on unchanged code
                 // means the host stole the cores, not that the plan
                 // regressed (VERDICT r12 #1). The raw CPU seconds are
-                // the r19 load-independent gate ([[referenceCpuSec]]).
+                // the r19 load-independent gate ([[Pin]]'s `cpuSec`).
                 val cpu = if (c0 < 0) -1.0 else procCpuSec - c0
                 val ratio = if (c0 < 0) -1.0 else cpu / sec
                 // per-run detail to stderr: medians hide run-over-run
@@ -796,10 +637,8 @@ object Bench {
     // uniform-environment offset: median measured/reference over the
     // pinned rows that ran (see BENCH_REFERENCE.md "Reading
     // load_offset_estimate"); robust to a few real regressions
-    val offsets = results.collect {
-      case (name, sec) if sec >= 0 && referenceMedians.contains(name) =>
-        sec / referenceMedians(name)
-    }
+    val offsets = for ((name, sec) <- results if sec >= 0;
+                       pin <- pinOf.get(name)) yield sec / pin.medianSec
     val loadOffsetNum = if (offsets.isEmpty) None else Some(median(offsets))
     val loadOffset = loadOffsetNum.fold("null")(num(_, 2))
     // contended: a foreign workload held >= 1/8 of the box during the
@@ -816,7 +655,7 @@ object Bench {
     // one or two of these is a plausible real regression; four or more
     // simultaneously is an environment the reruns could not outrun
     val unresolved = results.count { case (name, sec) =>
-      sec >= 0 && referenceMedians.get(name).exists(sec > 2.5 * _)
+      sec >= 0 && pinOf.get(name).exists(sec > 2.5 * _.medianSec)
     }
     val contended =
       externalCores.exists(_ > nCpus / 8.0) ||
@@ -839,7 +678,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
     // per-query process-CPU seconds (r19, VERDICT r18 #4): the
-    // load-independent readings referenceCpuSec pins. Full payload
+    // load-independent readings the `cpuSec` pins gate. Full payload
     // only — the stdout line must stay inside the driver's 2000-char
     // tail window (the BENCH_r16 truncation lesson)
     val cpuSecsJson = cpuSecs.reverse
@@ -870,6 +709,7 @@ object Bench {
     } ++ resolved.reverse.map { case (k, rs, m1, m2) =>
       s"""{"query":"$k","reasons":${rs.map("\"" + _ + "\"").mkString("[", ",", "]")},"persisted":false,"first_median":${num(m1, 3)},"rerun_median":${num(m2, 3)}}"""
     }).mkString("[", ",", "]")
+    val warmupFailedJson = warmupFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val shared = s""""unit":"sec","failed":$failedJson,"sf":"$sfDir","runs_per_query":$runs,"stat":"median","env":$env,"contended":$contended,"load_offset_estimate":$loadOffset"""
     // STDOUT line is the driver artifact and the driver keeps only a
     // 2000-char stdout tail (BENCH_r16.json: 'parsed: null' with the
@@ -882,7 +722,7 @@ object Bench {
     val stdoutLine =
       s"""{"metric":"total","value":${num(total, 3)},"queries":$qsCompact,$shared,"cpu_total_sec":${num(cpuTotal, 1)},"alerts":$alertsCompactJson,"alerts_resolved":$resolvedCompactJson}"""
     val fullLine =
-      s"""{"metric":"total","value":$total,"queries":$qs,$shared,"cpu_total_sec":${num(cpuTotal, 1)},"alerts":$alertsFullJson,"alerts_resolved":$resolvedFullJson,"cpu_wall_ratio":$ratios,"cpu_sec":$cpuSecsJson,"dispersion":$dispJson,"alert_detail":$alertDetail}"""
+      s"""{"metric":"total","value":$total,"queries":$qs,$shared,"cpu_total_sec":${num(cpuTotal, 1)},"alerts":$alertsFullJson,"alerts_resolved":$resolvedFullJson,"cpu_wall_ratio":$ratios,"cpu_sec":$cpuSecsJson,"dispersion":$dispJson,"alert_detail":$alertDetail,"warmup_failed":$warmupFailedJson}"""
     println(stdoutLine)
     if (stdoutLine.length > 1900)
       System.err.println(s"[bench] WARNING stdout line ${stdoutLine.length}" +

@@ -109,7 +109,12 @@ object Probe {
     case x => x.toString
   }
 
-  private def quote(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal: backslash, quote and ALL control chars (< 0x20)
+    * escaped. Verify's oracle_sql.json goes through it too: a tab or CR
+    * in an oracle query would otherwise make the checker's `json.load`
+    * fail and silently zero the correctness compare.
+    */
+  private[graft] def quote(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => "\\u%04x".format(c.toInt)

@@ -64,12 +64,15 @@ object SparkEntry {
     ev.withColumn("t_us", tUs)
   }
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
+  /** The smallest scale factor: [[entry]]'s input and Bench's warm-up. */
+  val smokeDir = "/root/testdata/sf0.001"
+
+  /** Flagship query on [[smokeDir]], smoke-checked for rows > 0.
     * The full imputation cascade (SURVEY §2.9 I3-I9) — the reference's
     * core IP — run end-to-end through graft.etd.Impute.
     */
   def entry(spark: SparkSession): DataFrame =
-    _root_.graft.queries.QueriesEtd.q_i7_impute_cascade(spark, "/root/testdata/sf0.001")
+    _root_.graft.queries.QueriesEtd.q_i7_impute_cascade(spark, smokeDir)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

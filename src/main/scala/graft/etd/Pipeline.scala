@@ -76,8 +76,8 @@ object Pipeline {
     * additionally cut lineage after the impute stage (mirrors the
     * reference's staged materialization; at production scale prefer
     * durable checkpoints via [[Sources.writeStage]]).
-    */
-  /** `assumeColocated = true` declares the input already hash-partitioned
+    *
+    * `assumeColocated = true` declares the input already hash-partitioned
     * on (ProjectIdBSV, HuisIdBSV) — a bucketed table written with
     * [[Sources.writeBucketed]] on those keys. The pipeline then relies on
     * the storage co-location instead of shuffling the full readings: the
@@ -170,8 +170,8 @@ object Pipeline {
     * after the impute stage) when writing all of them — otherwise every
     * sink re-executes the shared cascade (the reference avoids the same
     * re-compute by materializing parquet between steps).
-    */
-  /** `partitionByProject` routes every HOUSEHOLD-grain sink through
+    *
+    * `partitionByProject` routes every HOUSEHOLD-grain sink through
     * `partitionBy(ProjectIdBSV)` so downstream project-sliced reads prune
     * at the directory level — the production layout. Project-grain sinks
     * (summaries, project_{iv}) stay unpartitioned: they are small by

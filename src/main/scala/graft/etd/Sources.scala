@@ -148,11 +148,6 @@ object Sources {
       .withColumn("Weerstation", upper(col("Weerstation")))
       .withColumn("STN", col("Nummer"))
 
-  /** S7 — staged parquet sink (aggregate.py:118-121 etc.): one directory
-    * per stage, `{name}_{interval}` naming, partition-parallel writes (the
-    * reference writes single files; at 100 TB the sink partitions by
-    * ProjectIdBSV so downstream project-grain reads prune).
-    */
   /** The reference's safe-name rule for stage files
     * (aggregate.py:322,480: `re.sub(r"\W+", "_", name.lower())`) — a
     * stage named after a column like `Zon-opwekTotaal` must not produce a
@@ -164,6 +159,11 @@ object Sources {
   def safeName(name: String): String =
     name.toLowerCase(java.util.Locale.ROOT).replaceAll("(?U)\\W+", "_")
 
+  /** S7 — staged parquet sink (aggregate.py:118-121 etc.): one directory
+    * per stage, `{name}_{interval}` naming, partition-parallel writes (the
+    * reference writes single files; at 100 TB the sink partitions by
+    * ProjectIdBSV so downstream project-grain reads prune).
+    */
   def writeStage(df: DataFrame, dir: String, name: String,
                  partitionByProject: Boolean = false): Unit = {
     val w = df.write.mode("overwrite")

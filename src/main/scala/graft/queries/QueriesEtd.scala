@@ -385,9 +385,6 @@ object QueriesEtd {
       .groupBy(col(HouseId).as("huis"))
       .agg(round(max("house_impute_factor"), 6).as("house_factor"))
 
-  /** I7/I8 — the full impute cascade via Impute.imputeColumn (library
-    * end-to-end: I3..I9 with no thresholds registered for MeterDiff).
-    */
   /** Single-column impute for the query entries via the BATCHED engine
     * (the optimized implementation the pipeline runs — r21: one fewer
     * lag pass and the house-factor frames folded into the boundary-lag
@@ -406,6 +403,9 @@ object QueriesEtd {
     else out
   }
 
+  /** I7/I8 — the full impute cascade via [[imputeOne]] (library
+    * end-to-end: I3..I9 with no thresholds registered for MeterDiff).
+    */
   def q_i7_impute_cascade(spark: SparkSession, dir: String): DataFrame =
     imputeOne(withAverages(readings(spark, dir)), "Meter",
         keepGapCols = true)
@@ -710,36 +710,6 @@ object QueriesEtd {
         round(col("percentage_imputed"), 6).as("pct_imputed"))
   }
 
-  /** End-to-end pipeline over the shim: fabricated diff columns + rebuilt
-    * cumulative meters for two variables run through Pipeline.run
-    * (avg-diff prep -> impute -> calculated columns -> resample -> project
-    * aggregation) in ONE lazy DAG, surfacing the hourly project aggregates.
-    *
-    * The house frame is RE-GRIDDED first: each house's reading sequence is
-    * mapped onto consecutive 5-minute slots (the reference grain). The
-    * shim's raw µs timestamps are far too sparse for any resample
-    * min_count gate (~13 readings/house/day vs the 288 a day needs), which
-    * made every aggregated value NULL — a vacuous flagship. On the grid,
-    * full hours clear the 60min gate (12 slots) and the composed output
-    * carries real imputed-then-aggregated numbers.
-    *
-    * Oracled end-to-end (the composed-DAG hash check VERDICT r5 asked
-    * for): the whole chain is engine-portable because every addend is a
-    * rounded-at-definition artifact and both aggregation hops use the
-    * decimal-stable sum/mean (see Model.aggregationVariables note).
-    */
-  /** BENCH-ONLY full-width flagship: the e2e pipeline over ALL 13
-    * production cumulative columns (q_pipeline_e2e imputes 2 — enough
-    * for its hand-written oracle, not for proving the batched plan
-    * holds at production width). fabricatedDiffs covers 10 diffs; the
-    * remaining 3 are fabricated here the same way. NOT in
-    * SparkEntry.queries: column-level correctness of the batched impute
-    * is pinned by ImputeSpec's batched==sequential equivalence test and
-    * the q_pipeline_e2e hash oracle; this entry exists so BENCH_r{N}
-    * carries a full-width timing (Bench.benchOnly). Covers ALL FIVE
-    * production intervals (aggregate.py:830-841) — 13-column impute ->
-    * 5 resamples -> 5 project aggregates + the household checksum leg.
-    */
   /** The full-width shim input q_pipeline_full13 and
     * q_pipeline_full13_calculated share: fabricated diffs for all 13
     * production cumulative columns on the 5-minute grid, cumulative
@@ -772,6 +742,18 @@ object QueriesEtd {
         cums.map(c => sum(Model.diffCol(c)).over(running).as(c)): _*)
   }
 
+  /** BENCH-ONLY full-width flagship: the e2e pipeline over ALL 13
+    * production cumulative columns (q_pipeline_e2e imputes 2 — enough
+    * for its hand-written oracle, not for proving the batched plan
+    * holds at production width). fabricatedDiffs covers 10 diffs; the
+    * remaining 3 are fabricated here the same way. NOT in
+    * SparkEntry.queries: column-level correctness of the batched impute
+    * is pinned by ImputeSpec's batched==sequential equivalence test and
+    * the q_pipeline_e2e hash oracle; this entry exists so BENCH_r{N}
+    * carries a full-width timing (Bench.benchOnly). Covers ALL FIVE
+    * production intervals (aggregate.py:830-841) — 13-column impute ->
+    * 5 resamples -> 5 project aggregates + the household checksum leg.
+    */
   def q_pipeline_full13(spark: SparkSession, dir: String): DataFrame = {
     val cums = Model.cumulativeColumns
     val withCums = full13Input(spark, dir)
@@ -823,6 +805,24 @@ object QueriesEtd {
   def q_pipeline_full13_calculated(spark: SparkSession, dir: String): DataFrame =
     graft.etd.Pipeline.run(full13Input(spark, dir), Model.cumulativeColumns).calculated
 
+  /** End-to-end pipeline over the shim: fabricated diff columns + rebuilt
+    * cumulative meters for two variables run through Pipeline.run
+    * (avg-diff prep -> impute -> calculated columns -> resample -> project
+    * aggregation) in ONE lazy DAG, surfacing the hourly project aggregates.
+    *
+    * The house frame is RE-GRIDDED first: each house's reading sequence is
+    * mapped onto consecutive 5-minute slots (the reference grain). The
+    * shim's raw µs timestamps are far too sparse for any resample
+    * min_count gate (~13 readings/house/day vs the 288 a day needs), which
+    * made every aggregated value NULL — a vacuous flagship. On the grid,
+    * full hours clear the 60min gate (12 slots) and the composed output
+    * carries real imputed-then-aggregated numbers.
+    *
+    * Oracled end-to-end (the composed-DAG hash check VERDICT r5 asked
+    * for): the whole chain is engine-portable because every addend is a
+    * rounded-at-definition artifact and both aggregation hops use the
+    * decimal-stable sum/mean (see Model.aggregationVariables note).
+    */
   def q_pipeline_e2e(spark: SparkSession, dir: String): DataFrame = {
     val cums = Seq("ElektriciteitNetgebruikLaag", "ElektriciteitTerugleveringLaag")
     val grid = fabricatedDiffs(spark, dir)

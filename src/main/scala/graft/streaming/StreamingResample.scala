@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.etd.{Aggregates, Model, Resample}
+import graft.etd.{Aggregates, Model}
 
 /** Structured Streaming extension: the resample operator (SURVEY §2.4 A8)
   * as a streaming tumbling-window aggregation.
@@ -29,8 +29,9 @@ import graft.etd.{Aggregates, Model, Resample}
   */
 object StreamingResample {
 
-  /** Gated streaming resample of `variables` (column -> "sum"|"max"|"avg")
-    * to `interval` buckets, with `lateness` watermark on ReadingDate.
+  /** Gated streaming resample of `variables` (column -> any
+    * [[graft.etd.Aggregates.gated]] method, the batch vocabulary) to
+    * `interval` buckets, with `lateness` watermark on ReadingDate.
     * Input must be a streaming DataFrame with the ETD grain columns.
     */
   def resampleStream(readings: DataFrame,
@@ -41,13 +42,7 @@ object StreamingResample {
       : DataFrame = {
     val minCount = lit(Model.intervalMinCount(interval))
     val aggs = variables.map { case (v, method) =>
-      val gated = method match {
-        case "sum" => Aggregates.sumMinCount(col(v), minCount)
-        case "max" => Aggregates.maxMinCount(col(v), minCount)
-        case "avg" => Aggregates.avgMinCount(col(v), minCount)
-        case other => throw new IllegalArgumentException(s"Unknown method $other")
-      }
-      gated.as(v)
+      Aggregates.gated(method, col(v), minCount).as(v)
     }
     readings
       .withWatermark(Model.ReadingDate, lateness)

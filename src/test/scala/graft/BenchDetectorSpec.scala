@@ -58,9 +58,17 @@ class BenchDetectorSpec extends AnyFunSuite {
     assert(Bench.alertReasons("q_simhash", 0.80, 1.1, 2.0).isEmpty)
   }
 
+  test("the query table: 55 rows, distinct names, every median pin > 0") {
+    assert(Bench.pins.size == 55)
+    val dup = Bench.pins.map(_._1).diff(Bench.pins.map(_._1).distinct)
+    assert(dup.isEmpty, s"duplicated rows: $dup")
+    val bad = Bench.pins.collect { case (q, p) if !(p.medianSec > 0) => q }
+    assert(bad.isEmpty, s"non-positive median pins: $bad")
+  }
+
   test("every headline query with a median pin also carries a cpu/wall pin") {
-    val missing = Bench.headline.filter(q =>
-      Bench.referenceMedians.contains(q) && !Bench.referenceCpuWall.contains(q))
+    val missing = Bench.pins.collect {
+      case (q, p) if p.medianSec > 0 && !(p.cpuWall > 0) => q }
     assert(missing.isEmpty, s"cpu/wall pins missing for: $missing")
   }
 
@@ -72,7 +80,7 @@ class BenchDetectorSpec extends AnyFunSuite {
     // reading (wall 1.37x pin, CPU at pin) must stay alert-free.
     // Arms are PIN-RELATIVE (r21: the ceilings re-derive each time a
     // clean session is folded in, so hardcoded CPU values would rot)
-    val cpuPin = Bench.referenceCpuSec("q_pagerank")
+    val cpuPin = Bench.pins.toMap.apply("q_pagerank").cpuSec
     assert(Bench.alertReasons("q_pagerank", 3.53 * 1.37, 1.3,
       cpuPin / (3.53 * 1.37), cpuPin).isEmpty)
     // a REAL plan regression burns cores: CPU 3x pin. On a drifted-FAST
@@ -108,7 +116,7 @@ class BenchDetectorSpec extends AnyFunSuite {
     // clears the 2.5x ratio on a ~1 s pin but sits under the +2 s CPU
     // floor — the covering value for the cpuExcess branch (pin-relative
     // since r21: the ceilings re-derive per clean session)
-    val ivfPin = Bench.referenceCpuSec("q_embed_dup_ivf")
+    val ivfPin = Bench.pins.toMap.apply("q_embed_dup_ivf").cpuSec
     // the covering value max(2.5x·pin, pin + 1.8) is pin + 1.8 (ratio
     // fires, floor suppresses) only while pin + 1.8 > 2.5x·pin, i.e. pin
     // < 1.2; from 1.2 on it is 2.5x·pin, where the strict cpuSec >
@@ -129,8 +137,8 @@ class BenchDetectorSpec extends AnyFunSuite {
   }
 
   test("every headline query with a median pin also carries a CPU-seconds pin") {
-    val missing = Bench.headline.filter(q =>
-      Bench.referenceMedians.contains(q) && !Bench.referenceCpuSec.contains(q))
+    val missing = Bench.pins.collect {
+      case (q, p) if p.medianSec > 0 && !(p.cpuSec > 0) => q }
     assert(missing.isEmpty, s"cpu-seconds pins missing for: $missing")
   }
 }
