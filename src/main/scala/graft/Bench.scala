@@ -385,6 +385,36 @@ object Bench {
       else None).flatten
   }
 
+  /** Why a run is `contended`; empty means it is not. The flag marks
+    * "do not read this round-over-round", it does not grade severity, so
+    * the thresholds are deliberately coarse:
+    *   - `external_cpu`: a foreign workload held more than 1/8 of the box
+    *     during the timed section (`externalCores`, own CPU subtracted);
+    *   - `loaded_before`: the 1-minute loadavg exceeded 1/4 of the box
+    *     before the run started — read before the JVM's own warm-up, so
+    *     the warm-up cannot flag its own run;
+    *   - `iowait`: the run spent more than one core-equivalent stalled
+    *     on I/O (`iowaitSec` > `wallSec`);
+    *   - `load_offset`: the run landed above 1.5x the pinned medians
+    *     overall (the hard rule VERDICT r15 added after BENCH_r15's
+    *     CPU-clean 2.5x poisoning: a uniform landing on a 47-query set is
+    *     an environment, not 47 regressions);
+    *   - `unresolved`: four or more queries still above 2.5x their pin
+    *     after the reruns (one or two is a plausible real regression; four
+    *     at once is an environment the reruns could not outrun).
+    */
+  def contendedReasons(nCpus: Int, loadBefore: Option[Seq[Double]],
+                       externalCores: Option[Double],
+                       iowaitSec: Option[Double], wallSec: Double,
+                       loadOffset: Option[Double],
+                       unresolved: Int): List[String] =
+    List(
+      if (externalCores.exists(_ > nCpus / 8.0)) Some("external_cpu") else None,
+      if (loadBefore.exists(_.head > nCpus / 4.0)) Some("loaded_before") else None,
+      if (iowaitSec.exists(_ > wallSec)) Some("iowait") else None,
+      if (loadOffset.exists(_ > 1.5)) Some("load_offset") else None,
+      if (unresolved >= 4) Some("unresolved") else None).flatten
+
   private val registry = SparkEntry.queries ++ benchOnly
 
   private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
@@ -467,6 +497,10 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(headline)(s => headline.filter(s.contains))
+    // the load the run starts onto: read after the preflight wait and
+    // before the warm-up, whose own full load on every core would
+    // otherwise read as an already-loaded box
+    val loadBefore = loadavg
     val warm0 = System.nanoTime()
     val warmupFailed = warmUp(spark, SparkEntry.smokeDir, selected)
     System.err.println(f"[bench] warm-up: ${selected.size} queries, " +
@@ -487,7 +521,6 @@ object Bench {
     import scala.jdk.CollectionConverters._
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    val loadBefore = loadavg
     val boxBusy0 = boxBusySec
     val iowait0 = boxIowaitSec
     val majFaults0 = procMajorFaults
@@ -641,28 +674,12 @@ object Bench {
                        pin <- pinOf.get(name)) yield sec / pin.medianSec
     val loadOffsetNum = if (offsets.isEmpty) None else Some(median(offsets))
     val loadOffset = loadOffsetNum.fold("null")(num(_, 2))
-    // contended: a foreign workload held >= 1/8 of the box during the
-    // run, or the box was already loaded >= 1/4 before it started, or
-    // the run spent >= one core-equivalent stalled on I/O, or — the
-    // hard rule VERDICT r15 added after BENCH_r15's CPU-clean 2.5x
-    // poisoning — the run landed > 1.5x the pinned medians overall.
-    // A >1.5x UNIFORM landing on a 47-query set is an environment, not
-    // 47 simultaneous regressions; whichever contention mode caused it
-    // (CPU, disk, page cache), the run must not be read
-    // round-over-round. Thresholds are deliberately coarse — the flag
-    // marks "do not read this", it does not grade severity.
-    // queries whose FINAL (post-rerun) median still exceeds 2.5x pin:
-    // one or two of these is a plausible real regression; four or more
-    // simultaneously is an environment the reruns could not outrun
+    // queries whose FINAL (post-rerun) median still exceeds 2.5x pin
     val unresolved = results.count { case (name, sec) =>
       sec >= 0 && pinOf.get(name).exists(sec > 2.5 * _.medianSec)
     }
-    val contended =
-      externalCores.exists(_ > nCpus / 8.0) ||
-        loadBefore.exists(_.head > nCpus / 4.0) ||
-        iowaitDelta.exists(_ > wallSec) ||
-        loadOffsetNum.exists(_ > 1.5) ||
-        unresolved >= 4
+    val contended = contendedReasons(nCpus, loadBefore, externalCores,
+      iowaitDelta, wallSec, loadOffsetNum, unresolved).nonEmpty
     val env = List(
       "\"loadavg_before\":" + jsonArr(loadBefore),
       "\"loadavg_after\":" + jsonArr(loadavg),

@@ -203,46 +203,16 @@ object Impute {
       .withColumn(diffC, when(outside, col(avgC)).otherwise(col(diffC)))
   }
 
-  private val tempCols = Seq(
-    "cumulative_value_group", "gap_length", "prev_cum_value", "end_cum_value",
-    "gap_jump", "gap_jump_is_na", "impute_values", "impute_jump",
-    "impute_na_ratio", "house_impute_factor")
-
-  /** Full single-column imputation: I3..I9 composed, flag columns added,
-    * temp columns dropped (mirrors process_imputation_vectorized,
-    * vectorized_impute.py:428-782). `keepGapCols=true` retains
-    * cumulative_value_group/gap_length for the gap-stats pass (I10).
-    */
-  def imputeColumn(df: DataFrame, cum: String,
-                   keepGapCols: Boolean = false): DataFrame = {
-    val diffC = diffCol(cum)
-    val avgC = avgCol(cum)
-    val isImp = isImputedCol(cum)
-    val impTy = imputeTypeCol(cum)
-    val staged = withHouseFactor(
-      withImputeInputs(
-        withGapStats(
-          withGapGroups(df, diffC, cum), cum), avgC), diffC, avgC)
-    val (imputedDiff, imputeType) = imputeCascade(diffC)
-    val cascaded = staged
-      .withColumn(impTy, imputeType)
-      .withColumn(isImp, col(impTy).isNotNull)
-      .withColumn(diffC, imputedDiff)
-    val (lo, hi) = thresholds.getOrElse(diffC, (Double.NegativeInfinity, Double.PositiveInfinity))
-    val clamped = applyThresholds(cascaded, diffC, avgC, isImp, impTy, lo, hi)
-    val drop = if (keepGapCols) tempCols.diff(Seq("cumulative_value_group", "gap_length"))
-               else tempCols
-    clamped.drop(drop: _*)
-  }
-
   /** All-columns imputation in BATCHED stages: every column's lag pass,
     * running-sum pass, per-gap windows, and house-factor sums are computed
     * in shared selects, so the plan has ~6 + |columns| Window nodes
     * instead of the per-column fold's |columns| x ~7 nested stages.
-    * Column results are byte-identical to [[imputeColumn]] (columns are
-    * mutually independent; the expressions are the same, routed through
-    * the shared cascade) — the difference is OPTIMIZER time: Catalyst's
-    * cost grows superlinearly with plan depth, and the 13-column fold
+    * Column results are byte-identical to chaining the I3..I9 functions
+    * above one column at a time (the test-scope
+    * `SequentialImpute.imputeColumn` ImputeSpec pins this against; columns
+    * are mutually independent; the expressions are the same, routed
+    * through the shared cascade) — the difference is OPTIMIZER time:
+    * Catalyst's cost grows superlinearly with plan depth, and the 13-column fold
     * builds a ~130-node chain (minutes to optimize; the batched shape is
     * seconds).
     *
@@ -349,7 +319,8 @@ object Impute {
     // full13 submission at 13 columns (Profile, sf0.1). Columns are
     // mutually independent, so all-cascades-then-all-thresholds is
     // byte-identical to the interleaved fold (ImputeSpec's
-    // "batched == sequential" test pins it against imputeColumn).
+    // "batched == sequential" test pins it against
+    // SequentialImpute.imputeColumn).
     val cascadePair = cums.map { c =>
       val grp = col(cvgC(c))
       c -> cascadeExprs(col(diffCol(c)), grp,

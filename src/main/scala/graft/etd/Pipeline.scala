@@ -72,10 +72,11 @@ object Pipeline {
     * or is even analyzed — until the caller touches a stage. The impute
     * stage is the BATCHED all-columns implementation
     * ([[Impute.imputeColumnsBatched]]), whose plan size is bounded
-    * regardless of column count; set `localCheckpointEvery` to
-    * additionally cut lineage after the impute stage (mirrors the
-    * reference's staged materialization; at production scale prefer
-    * durable checkpoints via [[Sources.writeStage]]).
+    * regardless of column count. Any `localCheckpointEvery` value cuts
+    * lineage once after the impute stage, so consumers of several stages
+    * share one cascade execution. [[writeStages]] needs the cut for its
+    * gap-stats sink only: every other sink builds from the parquet the
+    * stage before it wrote, which is also the durable restart point.
     *
     * `assumeColocated = true` declares the input already hash-partitioned
     * on (ProjectIdBSV, HuisIdBSV) — a bucketed table written with
@@ -120,8 +121,8 @@ object Pipeline {
     // to the per-column fold, but the plan is ~20 nodes instead of
     // |columns| x ~10 nested stages — at 13 columns that is the
     // difference between minutes and seconds of optimizer time.
-    // `localCheckpointEvery` (kept for API compatibility) now means: cut
-    // lineage once after the impute stage.
+    // `localCheckpointEvery` (any value) means: cut lineage once after
+    // the impute stage.
     lazy val imputedAll = {
       // I1/I2 — averages + bounds, then J4 join-back.
       val (avgDiffs, _) = Diffs.prepare(sorted, cumulativeCols)
@@ -165,11 +166,26 @@ object Pipeline {
     * (SURVEY §1.1 eager-pipeline row; names mirror
     * aggregate.py:118-121,224-261,294-297,411-414,481-484).
     *
-    * Each write materializes its own lineage; the stages share the impute
-    * DAG, so build `stages` with `localCheckpointEvery = Some(1)` (cut
-    * after the impute stage) when writing all of them — otherwise every
-    * sink re-executes the shared cascade (the reference avoids the same
-    * re-compute by materializing parquet between steps).
+    * Staged like the reference: every stage after `household_imputed`
+    * builds from the sink it depends on, read back from parquet
+    * ([[Sources.readStage]]), never from the lazy lineage, so no sink
+    * re-plans or re-runs an earlier stage:
+    *   1. `household_imputed` from `stages.imputed`;
+    *   2. beside each other: `impute_gap_stats` from `stages.gapStats`
+    *      (the one sink that needs the gap columns the imputed sink
+    *      drops, so it stays on [[run]]'s impute lineage) and
+    *      `household_calculated` from the read-back imputed sink;
+    *   3. beside each other: both summaries (read-back gap stats and
+    *      imputed sink) and, per interval, `household_{iv}` from the
+    *      read-back calculated sink, then `project_{iv}` from the
+    *      read-back `household_{iv}`.
+    * Sinks ready at the same point run concurrently, one thread each
+    * ([[concurrently]]); the first sink to fail cancels the others and
+    * its exception is the one thrown. Call it outside any SQL execution.
+    *
+    * Build `stages` with `localCheckpointEvery = Some(1)` to let the gap
+    * stats share the impute cascade `household_imputed` executed; without
+    * the cut that one sink re-runs the cascade.
     *
     * `partitionByProject` routes every HOUSEHOLD-grain sink through
     * `partitionBy(ProjectIdBSV)` so downstream project-sliced reads prune
@@ -180,19 +196,80 @@ object Pipeline {
     */
   def writeStages(stages: Stages, dir: String,
                   partitionByProject: Boolean = false): Unit = {
-    Sources.writeStage(stages.imputed, dir, "household_imputed",
-      partitionByProject)
-    Sources.writeStage(stages.gapStats, dir, "impute_gap_stats")
-    Sources.writeStage(stages.householdSummary, dir, "impute_summary_household")
-    Sources.writeStage(stages.projectSummary, dir, "impute_summary_project")
-    Sources.writeStage(stages.calculated, dir, "household_calculated",
-      partitionByProject)
-    stages.intervals.foreach { iv =>
-      Sources.writeStage(stages.resampled(iv), dir, s"household_$iv",
-        partitionByProject)
-      Sources.writeStage(stages.projectAggregated(iv), dir, s"project_$iv")
+    val spark = stages.imputed.sparkSession
+    def write(df: DataFrame, name: String, byProject: Boolean = false): Unit =
+      Sources.writeStage(df, dir, name, byProject)
+    def staged(df: DataFrame, name: String, byProject: Boolean): DataFrame = {
+      write(df, name, byProject)
+      Sources.readStage(df, dir, name)
     }
+
+    val imputed = staged(stages.imputed, "household_imputed", partitionByProject)
+    val Seq(gapStats, calculated) = concurrently(spark, Seq(
+      () => staged(stages.gapStats, "impute_gap_stats", byProject = false),
+      () => staged(Calculated.addEnergyBalance(imputed), "household_calculated",
+        partitionByProject)))
+    concurrently(spark, Seq(
+      () => write(ImputeSummaries.householdSummary(gapStats, imputed),
+        "impute_summary_household"),
+      () => write(ImputeSummaries.projectSummary(gapStats, imputed),
+        "impute_summary_project")
+    ) ++ stages.intervals.map { iv => () =>
+      val resampled = staged(Resample.resampleStandard(calculated, iv),
+        s"household_$iv", partitionByProject)
+      write(ProjectAggregate.aggregateStandard(resampled), s"project_$iv")
+    })
   }
+
+  /** Name prefix of [[concurrently]]'s pool threads. */
+  private[etd] val SinkThreadPrefix = "etd-sink-"
+
+  /** Runs `jobs` at once and returns their results in order: a fixed pool
+    * of one thread per job, created from the caller's thread, so the
+    * threads inherit its Spark local properties (call it outside any SQL
+    * execution, whose id would be inherited too). Every Spark job the
+    * threads submit carries one job tag. The first job to throw ends the
+    * call: the other threads are interrupted and joined, the tagged Spark
+    * jobs still running are cancelled, and that first exception is the
+    * one thrown. On every path no pool thread is left alive.
+    */
+  private[etd] def concurrently[T](spark: SparkSession,
+                                   jobs: Seq[() => T]): Seq[T] =
+    if (jobs.isEmpty) Nil
+    else {
+      import java.util.concurrent._
+      val sc = spark.sparkContext
+      val tag = s"etd-sinks-${java.util.UUID.randomUUID()}"
+      val threads = new ConcurrentLinkedQueue[Thread]()
+      val pool = Executors.newFixedThreadPool(jobs.size, { (r: Runnable) =>
+        val t = new Thread(r, SinkThreadPrefix + threads.size)
+        t.setDaemon(true)
+        threads.add(t)
+        t
+      })
+      val done = new ExecutorCompletionService[T](pool)
+      var failed = false
+      try {
+        val results = jobs.map(job => done.submit { () =>
+          sc.addJobTag(tag)
+          sc.setInterruptOnCancel(true)
+          job()
+        })
+        jobs.foreach(_ => done.take().get())
+        results.map(_.get())
+      } catch {
+        case e: Throwable =>
+          failed = true
+          throw (e match {
+            case ee: ExecutionException if ee.getCause != null => ee.getCause
+            case other => other
+          })
+      } finally {
+        pool.shutdownNow()
+        threads.forEach(_.join())
+        if (failed) sc.cancelJobsWithTag(tag)
+      }
+    }
 }
 
 /** Analysis-loading facade (SURVEY §3.2): lazy tables per interval, like

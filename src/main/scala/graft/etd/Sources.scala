@@ -167,10 +167,25 @@ object Sources {
   def writeStage(df: DataFrame, dir: String, name: String,
                  partitionByProject: Boolean = false): Unit = {
     val w = df.write.mode("overwrite")
-    val path = s"$dir/${safeName(name)}.parquet"
+    val path = stagePath(dir, name)
     if (partitionByProject) w.partitionBy(Model.ProjectId).parquet(path)
     else w.parquet(path)
   }
+
+  /** The sink [[writeStage]] wrote from `df`, read back with `df`'s own
+    * schema and column order: no schema inference, a partition column
+    * keeps its written type (partition inference could retype
+    * ProjectIdBSV), and a partitioned sink's partition column, which the
+    * reader lists last, returns to its written position.
+    */
+  def readStage(df: DataFrame, dir: String, name: String): DataFrame = {
+    val back = df.sparkSession.read.schema(df.schema).parquet(stagePath(dir, name))
+    back.select(df.columns.toIndexedSeq.map(c =>
+      back.col("`" + c.replace("`", "``") + "`")): _*)
+  }
+
+  private def stagePath(dir: String, name: String): String =
+    s"$dir/${safeName(name)}.parquet"
 
   /** JSONL corpus ingest — the arrival format of most LLM training
     * corpora (one JSON document per line, thousands of files). Contract

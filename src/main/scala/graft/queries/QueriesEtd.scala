@@ -69,8 +69,8 @@ object QueriesEtd {
   }
 
   /** Library-staged frame: gap groups -> gap stats -> impute inputs ->
-    * house factor (I3..I6 chained, exactly as Impute.imputeColumn stages
-    * them).
+    * house factor (I3..I6 chained, exactly as the test-scope
+    * SequentialImpute.imputeColumn stages them).
     */
   def staged(spark: SparkSession, dir: String): DataFrame =
     Impute.withHouseFactor(
@@ -389,10 +389,9 @@ object QueriesEtd {
     * (the optimized implementation the pipeline runs — r21: one fewer
     * lag pass and the house-factor frames folded into the boundary-lag
     * window node), renamed to the fixed gap-column names the summaries
-    * expect. `Impute.imputeColumn` stays untouched as the sequential
-    * reference implementation ImputeSpec pins the batched engine
-    * against; every consumer below is additionally hash-pinned by its
-    * DuckDB oracle.
+    * expect. ImputeSpec pins the batched engine against the sequential
+    * test-scope SequentialImpute.imputeColumn; every consumer below is
+    * additionally hash-pinned by its DuckDB oracle.
     */
   private[graft] def imputeOne(df: DataFrame, cum: String,
                                keepGapCols: Boolean = false): DataFrame = {

@@ -141,4 +141,40 @@ class BenchDetectorSpec extends AnyFunSuite {
       case (q, p) if p.medianSec > 0 && !(p.cpuSec > 0) => q }
     assert(missing.isEmpty, s"cpu-seconds pins missing for: $missing")
   }
+
+  /** contendedReasons on a 4-core box with every input clean: loadavg 0.3
+    * before the run, 0.1 external cores, 1 s iowait over a 100 s run, the
+    * 4-core offset 1.3 every pin-at-32-cores run reads, nothing unresolved.
+    */
+  private def contended(loadBefore: Double = 0.3, external: Double = 0.1,
+                        iowait: Double = 1.0, offset: Double = 1.3,
+                        unresolved: Int = 0): List[String] =
+    Bench.contendedReasons(4, Some(Seq(loadBefore, 0.5, 0.5)), Some(external),
+      Some(iowait), 100.0, Some(offset), unresolved)
+
+  test("contended: a clean 4-core run is not contended") {
+    assert(contended().isEmpty)
+    // unreadable /proc (off-Linux) and no pinned rows flag nothing
+    assert(Bench.contendedReasons(4, None, None, None, 100.0, None, 0).isEmpty)
+  }
+
+  test("contended: each rule still flags on its own") {
+    // foreign load on the box before the run: > nCpus/4
+    assert(contended(loadBefore = 1.2) == List("loaded_before"))
+    assert(contended(loadBefore = 1.0).isEmpty)
+    // foreign CPU during the run: > nCpus/8 external cores
+    assert(contended(external = 0.6) == List("external_cpu"))
+    assert(contended(external = 0.5).isEmpty)
+    // more than one core-equivalent stalled on I/O
+    assert(contended(iowait = 120.0) == List("iowait"))
+    // a uniform landing above 1.5x the pins
+    assert(contended(offset = 1.6) == List("load_offset"))
+    // four queries above 2.5x their pin after the reruns
+    assert(contended(unresolved = 4) == List("unresolved"))
+    assert(contended(unresolved = 3).isEmpty)
+    // and together, in rule order
+    assert(contended(loadBefore = 3.0, external = 2.0, iowait = 300.0,
+      offset = 2.0, unresolved = 9) ==
+      List("external_cpu", "loaded_before", "iowait", "load_offset", "unresolved"))
+  }
 }

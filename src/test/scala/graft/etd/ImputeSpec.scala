@@ -53,7 +53,7 @@ class ImputeSpec extends AnyFunSuite {
   )
 
   private lazy val imputed =
-    Impute.imputeColumn(frame(h1), "Meter", keepGapCols = true)
+    SequentialImpute.imputeColumn(frame(h1), "Meter", keepGapCols = true)
       .select(HouseId, "t", "MeterDiff", "MeterDiff_impute_type",
         "MeterDiff_is_imputed", "cumulative_value_group", "gap_length")
       .collect()
@@ -102,7 +102,7 @@ class ImputeSpec extends AnyFunSuite {
   }
 
   test("invariant: is_imputed <=> impute_type non-null; no negative diffs") {
-    val df = Impute.imputeColumn(frame(h1), "Meter")
+    val df = SequentialImpute.imputeColumn(frame(h1), "Meter")
     assert(df.filter(col("MeterDiff_is_imputed") =!=
       col("MeterDiff_impute_type").isNotNull).count() == 0)
     assert(df.filter(col("MeterDiff") < 0).count() == 0)
@@ -151,7 +151,7 @@ class ImputeSpec extends AnyFunSuite {
     val (avgDiffs, _) = Diffs.prepare(sorted, cums)
     val withAvgs = Diffs.joinAverages(sorted, avgDiffs)
 
-    val sequential = cums.foldLeft(withAvgs)((acc, c) => Impute.imputeColumn(acc, c))
+    val sequential = cums.foldLeft(withAvgs)((acc, c) => SequentialImpute.imputeColumn(acc, c))
     // keepGapCols = true: the form Pipeline.run consumes
     val batched = Impute.imputeColumnsBatched(withAvgs, cums, keepGapCols = true)
 
@@ -166,7 +166,7 @@ class ImputeSpec extends AnyFunSuite {
     // __gap_length_<c> == the sequential path's cumulative_value_group
     // and gap_length, row by row
     val gapRows = cums.map { c =>
-      val seqGaps = Impute.imputeColumn(withAvgs, c, keepGapCols = true)
+      val seqGaps = SequentialImpute.imputeColumn(withAvgs, c, keepGapCols = true)
         .select(col(HouseId), col("t_us"), col("cumulative_value_group"),
           col("gap_length"))
         .collect().toSet
@@ -183,7 +183,7 @@ class ImputeSpec extends AnyFunSuite {
 
   test("readingDateStats: counts partition into imputed/na/original (impute.py:330-412)") {
     val stats = ImputeSummaries.readingDateStats(
-        Impute.imputeColumn(frame(h1), "Meter", keepGapCols = true),
+        SequentialImpute.imputeColumn(frame(h1), "Meter", keepGapCols = true),
         Seq("Meter"), dateCol = "t")
       .collect()
     assert(stats.nonEmpty)

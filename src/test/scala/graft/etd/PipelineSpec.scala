@@ -1,7 +1,13 @@
 package graft.etd
 
+import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SharedSpark
 
@@ -161,5 +167,105 @@ class PipelineSpec extends AnyFunSuite {
       .groupBy(ProjectId, HouseId, "g")
       .agg(max("jump").as("jump"), sum(diffC).as("filled"))
     assert(sums.filter(abs(col("jump") - col("filled")) > 1e-6).count() == 0)
+  }
+
+  test("every sink, read back, equals its lazy stage (flat and by-project layouts)") {
+    val all = Pipeline.run(household, localCheckpointEvery = Some(1))
+    val lazyStages = (Seq(
+      "household_imputed" -> all.imputed,
+      "impute_gap_stats" -> all.gapStats,
+      "impute_summary_household" -> all.householdSummary,
+      "impute_summary_project" -> all.projectSummary,
+      "household_calculated" -> all.calculated) ++
+      all.intervals.flatMap(iv => Seq(
+        s"household_$iv" -> all.resampled(iv),
+        s"project_$iv" -> all.projectAggregated(iv))))
+      .map { case (name, df) => name -> df.cache() }
+    assert(lazyStages.size == 15)
+    // names and types, in order; nullability aside (a parquet read is
+    // nullable throughout)
+    def fields(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType.catalogString)
+    try Seq(false, true).foreach { byProject =>
+      val dir = Files.createTempDirectory("sinks").toFile.getAbsolutePath
+      Pipeline.writeStages(all, dir, byProject)
+      lazyStages.foreach { case (name, expected) =>
+        val at = s"$name (partitionByProject = $byProject)"
+        val back = Sources.readStage(expected, dir, name)
+        assert(fields(back) == fields(expected), at)
+        // the files themselves carry those types: a plain read lists the
+        // partition column last, with an inferred type, so leave it out
+        val partitioned = byProject && name.startsWith("household_")
+        val onDisk = fields(spark.read.parquet(s"$dir/$name.parquet"))
+        assert(onDisk.filterNot(partitioned && _._1 == ProjectId) ==
+          fields(expected).filterNot(partitioned && _._1 == ProjectId), at)
+        assert(back.exceptAll(expected).isEmpty, s"$at: rows only in the sink")
+        assert(expected.exceptAll(back).isEmpty, s"$at: rows missing from the sink")
+      }
+    } finally lazyStages.foreach(_._2.unpersist())
+  }
+
+  test("concurrently: results in order, one named thread per job, none left alive") {
+    val n = 5
+    val allStarted = new CountDownLatch(n)
+    val names = Pipeline.concurrently(spark, (0 until n).map { i => () =>
+      allStarted.countDown()
+      // every job waits for all the others: passes only if each job has
+      // its own thread
+      assert(allStarted.await(30, TimeUnit.SECONDS))
+      i -> Thread.currentThread.getName
+    })
+    assert(names.map(_._1) == (0 until n))
+    assert(names.map(_._2).distinct.size == n)
+    assert(names.forall(_._2.startsWith(Pipeline.SinkThreadPrefix)))
+    assert(sinkThreadsAlive.isEmpty)
+    assert(Pipeline.concurrently(spark, Seq.empty[() => Int]).isEmpty)
+  }
+
+  test("concurrently: the first failure is thrown, the other jobs are stopped") {
+    val sc = spark.sparkContext
+    val group = "concurrently-spec"
+    val sleeperStarted = new CountDownLatch(1)
+    val sleeperFinished = new AtomicBoolean(false)
+    val t0 = System.nanoTime()
+    val thrown = intercept[IllegalStateException] {
+      Pipeline.concurrently(spark, Seq(
+        () => {
+          // throw once the two others are under way
+          assert(sleeperStarted.await(30, TimeUnit.SECONDS))
+          eventually(timeout(Span(30, Seconds))) {
+            assert(sc.statusTracker.getActiveJobIds().exists(id =>
+              sc.statusTracker.getJobIdsForGroup(group).contains(id)))
+          }
+          throw new IllegalStateException("first failure")
+        },
+        () => {
+          // a Spark job whose tasks would hold every core for a minute
+          sc.setJobGroup(group, "long tasks")
+          sc.parallelize(1 to 4, 4).foreach(_ => Thread.sleep(60000))
+        },
+        () => {
+          sleeperStarted.countDown()
+          Thread.sleep(60000)
+          sleeperFinished.set(true)
+        }))
+    }
+    assert(thrown.getMessage == "first failure")
+    assert(sinkThreadsAlive.isEmpty)
+    assert(!sleeperFinished.get)
+    // the long Spark job is cancelled and its tasks interrupted
+    eventually(timeout(Span(30, Seconds))) {
+      assert(sc.statusTracker.getActiveJobIds().toSet
+        .intersect(sc.statusTracker.getJobIdsForGroup(group).toSet).isEmpty)
+      assert(sc.statusTracker.getExecutorInfos.forall(_.numRunningTasks == 0))
+    }
+    assert((System.nanoTime() - t0) / 1e9 < 50.0, "the minute-long jobs ran on")
+  }
+
+  private def sinkThreadsAlive: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(Pipeline.SinkThreadPrefix))
+      .map(_.getName)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
-import graft.etd.{Impute, Model}
+import graft.etd.{Model, SequentialImpute}
 import StreamingImpute._
 
 /** Streaming impute must agree with the batch cascade on every CLOSED gap
@@ -112,7 +112,7 @@ class StreamingImputeSpec extends AnyFunSuite {
 
   test("scaled streaming == batch cascade incl. SCALED_FILL (static-join avgs)") {
     val stream = runScaled(Seq(slotsAvg.take(4), slotsAvg.drop(4)))
-    // batch twin: same frame through Impute.imputeColumn with the avg col
+    // batch twin: same frame through SequentialImpute.imputeColumn with the avg col
     val rows = slotsAvg.map { case (ts, cum, avg) =>
       (1L, 1L, new java.sql.Timestamp(ts * 1000),
         cum.getOrElse(Double.NaN), avg.getOrElse(Double.NaN))
@@ -125,7 +125,7 @@ class StreamingImputeSpec extends AnyFunSuite {
       .partitionBy(Model.ProjectId, Model.HouseId).orderBy(Model.ReadingDate)
     val withDiff = base
       .withColumn("MeterDiff", col("Meter") - lag("Meter", 1).over(w))
-    val batch = Impute.imputeColumn(withDiff, "Meter")
+    val batch = SequentialImpute.imputeColumn(withDiff, "Meter")
       .select(col(Model.ReadingDate).cast("long").as("ts"),
         col("MeterDiff"), col("MeterDiff_impute_type"))
       .collect()
@@ -186,7 +186,7 @@ class StreamingImputeSpec extends AnyFunSuite {
   }
 
   test("streaming fills match the batch cascade on the same frame") {
-    // Batch twin: the same house run through Impute.imputeColumn. Parity
+    // Batch twin: the same house run through SequentialImpute.imputeColumn. Parity
     // is scoped to the jump-known branches streaming implements (observed
     // rows + NEGATIVE/NEAR_ZERO/LINEAR fills); the batch end-value
     // branches (no-start gaps, types 16/32/64) consume the avg-diff
@@ -202,7 +202,7 @@ class StreamingImputeSpec extends AnyFunSuite {
     val withDiff = base
       .withColumn("MeterDiff", col("Meter") - lag("Meter", 1).over(w))
       .withColumn("MeterDiff_avg", lit(null).cast("double"))
-    val batch = Impute.imputeColumn(withDiff, "Meter")
+    val batch = SequentialImpute.imputeColumn(withDiff, "Meter")
       .select(col(Model.ReadingDate).cast("long").as("ts"),
         col("MeterDiff"), col("MeterDiff_impute_type"))
       .collect()
