@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
@@ -23,7 +24,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *              every field length-prefixed) — proves a restructured plan
   *              output-identical against another commit.
   * - `--phases` analyze / optimize+plan / execute split over three
-  *              rounds, then the optimizer's top 40 rules by time.
+  *              rounds, each with its Janino compile count (the JVM's
+  *              codegen compilations during the round), then the
+  *              optimizer's top 40 rules by time.
   * - `--stages` the third (warm) run's stages by executor-run time.
   * - `--ops`    the second (warm) run's physical operators with their SQL
   *              metrics.
@@ -73,6 +76,7 @@ object Inspect {
         }
         RuleExecutor.resetMetrics()
         for (round <- 1 to 3) {
+          val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val t0 = System.nanoTime()
           val df = query(spark, sfDir) // eager per-select analysis
           val t1 = System.nanoTime()
@@ -81,8 +85,10 @@ object Inspect {
           noop(df)
           val t3 = System.nanoTime()
           Checkpoints.sweep(spark)
+          val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
           println(f"[phases] $name round $round: analyze=${(t1 - t0) / 1e9}%6.2fs " +
-            f"plan=${(t2 - t1) / 1e9}%6.2fs exec=${(t3 - t2) / 1e9}%6.2fs")
+            f"plan=${(t2 - t1) / 1e9}%6.2fs exec=${(t3 - t2) / 1e9}%6.2fs " +
+            s"compiles=$compiles")
         }
         // which optimizer rules own the optimize+plan phase
         println(RuleExecutor.dumpTimeSpent().linesIterator.take(40).mkString("\n"))

@@ -1,13 +1,20 @@
 package graft.etd
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GroupKeys
+import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 import Model._
 
-/** The vectorized gap-imputation core (SURVEY §2.9 I3-I9), re-expressed as
-  * Catalyst column expressions over per-house windows.
+/** The vectorized gap-imputation core (SURVEY §2.9 I3-I9) in two forms:
+  * the per-column building blocks I3..I9, Catalyst column expressions over
+  * per-house windows (the single-column queries and the test-scope
+  * `SequentialImpute` oracle chain them), and the all-columns engine
+  * [[imputeColumnsBatched]], one sorted pass per house in plain Scala.
   *
   * Reference semantics: /root/reference/etdtransform/vectorized_impute.py —
   * gap/cumulative grouping at :343-426 (I3), gap statistics at :481-530
@@ -18,13 +25,11 @@ import Model._
   * Spark-first translation notes:
   *   - The reference shifts/cumsums over a *globally sorted* frame and
   *     hand-masks house transitions (vectorized_impute.py:390-395). Here
-  *     every window partitions by (ProjectIdBSV, HuisIdBSV), which removes
-  *     the masking and makes group ids per-house (SURVEY §7.4.2): all
-  *     downstream logic grouping by gap therefore keys on
-  *     (house keys, cumulative_value_group), never on the id alone.
-  *   - One shuffle to (ProjectIdBSV, HuisIdBSV) sorted by ReadingDate
-  *     serves every window below — Catalyst reuses the exchange+sort for
-  *     identical window specs, so the 13-column fan-out does not re-shuffle.
+  *     every window (and the batched engine's group) is one
+  *     (ProjectIdBSV, HuisIdBSV), which removes the masking and makes
+  *     group ids per-house (SURVEY §7.4.2): all downstream logic grouping
+  *     by gap therefore keys on (house keys, cumulative_value_group),
+  *     never on the id alone.
   *   - pandas nullable Float64 NA maps to Spark null; the divisions in I6
   *     guard zero denominators explicitly because Spark double division
   *     yields Infinity, not null (SURVEY §7.4.3).
@@ -141,21 +146,17 @@ object Impute {
     * at 1e-10 (measure-zero for real meter data). The engine and its
     * oracle share HALF_UP, so cross-engine determinism is unaffected.
     */
-  def imputeCascade(diffC: String): (Column, Column) =
-    cascadeExprs(col(diffC), col("cumulative_value_group"),
-      col("gap_jump_is_na"), col("gap_jump"), col("end_cum_value"),
-      col("prev_cum_value"), col("impute_values"), col("impute_jump"),
-      col("gap_length"), col("house_impute_factor"))
-
-  /** The seven-branch cascade over explicit input columns — shared by the
-    * fixed-name single-column path and the suffixed batched path.
-    */
-  private def cascadeExprs(diffC: Column, grp: Column, jumpIsNa: Column,
-                           jump: Column, end: Column, prev: Column,
-                           iv: Column, imputeJump: Column, gapLength: Column,
-                           houseFactor: Column): (Column, Column) = {
-    val hasJump = !jumpIsNa && grp.isNotNull
-    val noJump = jumpIsNa && grp.isNotNull
+  def imputeCascade(diffC: String): (Column, Column) = {
+    val grp = col("cumulative_value_group")
+    val jump = col("gap_jump")
+    val end = col("end_cum_value")
+    val prev = col("prev_cum_value")
+    val iv = col("impute_values")
+    val imputeJump = col("impute_jump")
+    val gapLength = col("gap_length")
+    val houseFactor = col("house_impute_factor")
+    val hasJump = !col("gap_jump_is_na") && grp.isNotNull
+    val noJump = col("gap_jump_is_na") && grp.isNotNull
 
     val imputed =
       when(hasJump && jump < 0, lit(0.0))
@@ -167,7 +168,7 @@ object Impute {
         .when(noJump && end.isNotNull && prev.isNull && end < 1e-8, lit(0.0))
         .when(noJump && end.isNotNull && prev.isNull && end > 1e-8, iv)
         .when(noJump && end.isNull && prev.isNotNull, iv * houseFactor)
-        .otherwise(diffC) // incl. no-start-no-end: left NA, logged upstream
+        .otherwise(col(diffC)) // incl. no-start-no-end: left NA, logged upstream
 
     val imputeType =
       when(hasJump && jump < 0, lit(ImputeType.NegativeGapJump))
@@ -203,171 +204,247 @@ object Impute {
       .withColumn(diffC, when(outside, col(avgC)).otherwise(col(diffC)))
   }
 
-  /** All-columns imputation in BATCHED stages: every column's lag pass,
-    * running-sum pass, per-gap windows, and house-factor sums are computed
-    * in shared selects, so the plan has ~6 + |columns| Window nodes
-    * instead of the per-column fold's |columns| x ~7 nested stages.
-    * Column results are byte-identical to chaining the I3..I9 functions
-    * above one column at a time (the test-scope
-    * `SequentialImpute.imputeColumn` ImputeSpec pins this against; columns
-    * are mutually independent; the expressions are the same, routed
-    * through the shared cascade) — the difference is OPTIMIZER time:
-    * Catalyst's cost grows superlinearly with plan depth, and the 13-column fold
-    * builds a ~130-node chain (minutes to optimize; the batched shape is
-    * seconds).
+  /** All-columns imputation: I3..I9 for every column in `cums` as ONE
+    * sorted pass per house — a `flatMapSortedGroups` over
+    * (ProjectIdBSV, HuisIdBSV) ordered by ReadingDate (the reference's
+    * sort_for_impute order, impute.py:415-441), whose kernel computes the
+    * gap groups, gap statistics, impute inputs, house factor, cascade and
+    * thresholds of each column in plain Scala over the house's rows. The
+    * plan is one exchange (none when the input is already partitioned by
+    * the house keys), one sort and one group node, however many columns.
     *
-    * With `keepGapCols` the per-column gap metadata survives as
-    * `__cvg_<col>` / `__gap_length_<col>` (the names the pipeline's
-    * gap-stats pass consumes).
+    * Every value equals chaining the per-column building blocks above one
+    * column at a time (the test-scope `SequentialImpute.imputeColumn`,
+    * which ImputeSpec pins this against bit for bit): double sums start
+    * from null and add `coalesce(sum, 0.0) + x` in reading order,
+    * comparisons order doubles as Spark SQL does (NaN greatest, -0.0 ==
+    * 0.0) and fills round like Spark's `round(x, 10)`.
+    *
+    * Output: the input columns in order, each `<col>Diff` replaced by its
+    * imputed value; with `keepGapCols` then `__cvg_<col>` for every column
+    * and `__gap_length_<col>` for every column (the per-column
+    * `cumulative_value_group`/`gap_length` the pipeline's gap-stats pass
+    * consumes); then `<col>Diff_impute_type` and `<col>Diff_is_imputed`
+    * per column. The Diff, cumulative and `_avg` inputs must be double.
+    *
+    * Memory: a task holds one house at a time — its deserialized rows plus
+    * a few primitive arrays per column — so its peak is O(rows of one
+    * house), like the per-partition buffer of a window operator.
     */
   def imputeColumnsBatched(df: DataFrame, cums: Seq[String],
                            keepGapCols: Boolean = false): DataFrame = {
-    def cvgC(c: String) = s"__cvg_$c"
-    def glC(c: String) = s"__gap_length_$c"
-    val wH = houseWindow
-    def gapAllC(c: String) = Window
-      .partitionBy(col(ProjectId), col(HouseId), col(cvgC(c)))
-      .orderBy(ReadingDate)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-
-    val star = col("*")
-
-    // S1 — boundary lags + house-factor sums in ONE window node: the
-    // lag frames and the whole-house aggregate frames share the same
-    // (project, house) partitioning and ReadingDate order, so Catalyst
-    // plans them as one WindowExec with per-frame processors — the
-    // separate house-factor pass (the old S5) re-materialized every
-    // ~150-column row once more for sums that were computable here
-    // (r21: each full-width window pass is ~5% of the cascade stage's
-    // measured 115 CPU-s). The raw (nullable) lag of isNa is kept: S2b
-    // derives the old S3 lag node's group-first detection from it
-    // arithmetically, which removes another full-width window pass.
-    val hAll = houseAll
-    val s1 = df.select(star +: (cums.flatMap { c =>
-      val isNa = col(diffCol(c)).isNull
-      val cumSeen = col(c).isNotNull && isNa
-      val comparable = col(avgCol(c)).isNotNull && col(diffCol(c)).isNotNull &&
-        col(diffCol(c)) >= 0
-      Seq(
-        lag(isNa, 1).over(wH).as(s"__lagisna_$c"),
-        coalesce(lag(cumSeen, 1).over(wH), lit(false)).as(s"__lagseen_$c"),
-        lag(col(c), 1).over(wH).as(s"__lagcum_$c"),
-        sum(when(comparable, col(avgCol(c)))).over(hAll).as(s"__asum_$c"),
-        sum(when(comparable, col(diffCol(c)))).over(hAll).as(s"__dsum_$c"),
-        sum(comparable.cast("long")).over(hAll).as(s"__ncmp_$c"))
-    } :+ count(lit(1)).over(hAll).as("__ntot")): _*)
-
-    // S2 — running group ids (one running-frame window node). The gap
-    // start is derived from the raw lag: lag(isNa) null (house head)
-    // coalesces to false exactly like the old dedicated column.
-    def gapStart(c: String) =
-      col(diffCol(c)).isNull && !coalesce(col(s"__lagisna_$c"), lit(false))
-    def bumpLong(c: String) =
-      (col(s"__lagseen_$c") || gapStart(c)).cast("long")
-    val s2 = s1.select(star +: cums.map { c =>
-      sum(bumpLong(c)).over(runningHouse).as(s"__grp_$c")
-    }: _*)
-
-    // S2b — one projection: the NA-masked group id, the impute values,
-    // the house factor (old S5b), and the group-first prev candidate
-    // (old S3) WITHOUT a third lag pass: the previous row's group id is
-    // exact integer arithmetic over this row's running sum —
-    // grp(i-1) = grp(i) - bump(i) — and the previous row's masked cvg
-    // is that value under lag(isNa), which is null at the house head
-    // exactly like the lag the old node computed.
-    val s2b = s2.select(star +: cums.flatMap { c =>
-      val grp = col(s"__grp_$c")
-      val cvg = when(col(diffCol(c)).isNull, grp)
-      val lagCvg = when(col(s"__lagisna_$c"), grp - bumpLong(c))
-      val first = cvg.isNotNull && !(lagCvg <=> cvg)
-      val p = col(s"__lagcum_$c")
-      val ratio = when(col(s"__dsum_$c") =!= 0.0,
-        col(s"__asum_$c") / col(s"__dsum_$c")) // inf guard
-      Seq(
-        cvg.as(cvgC(c)),
-        coalesce(col(avgCol(c)), lit(0.0)).as(s"__iv_$c"),
-        when(first && p >= 0, p).as(s"__prevcand_$c"), // negative prev invalid
-        when(col(s"__ncmp_$c") <= col("__ntot") / 2.0, lit(1.0))
-          .otherwise(coalesce(ratio, lit(1.0))).as(s"__hf_$c"))
-    }: _*)
-
-    // S4 — per-gap whole-group windows (one window node PER COLUMN — each
-    // column has its own group ids — but all reuse the (project, house)
-    // partitioning: local sorts, no exchanges).
-    val s4 = s2b.select(star +: cums.flatMap { c =>
-      val grp = col(cvgC(c))
-      val g = gapAllC(c)
-      Seq(
-        when(grp.isNotNull, count(lit(1)).over(g)).as(glC(c)),
-        when(grp.isNotNull, max(col(s"__prevcand_$c")).over(g)).as(s"__prev_$c"),
-        last(col(c), ignoreNulls = true).over(g).as(s"__endraw_$c"),
-        when(grp.isNotNull, sum(col(s"__iv_$c")).over(g)).as(s"__ij_$c"))
-    }: _*)
-    val s5b = s4.select(star +: cums.flatMap { c =>
-      val grp = col(cvgC(c))
-      val e = col(s"__endraw_$c")
-      val end = when(grp.isNotNull && !(e < 0), e) // end<0 -> NA
-      Seq(
-        end.as(s"__end_$c"),
-        (end - col(s"__prev_$c")).as(s"__jump_$c"))
-    }: _*)
-
-    // S6 — cascade + thresholds for ALL columns in TWO projections. The
-    // previous per-column withColumn fold (6 chained withColumns x 13
-    // columns) re-ran the analyzer over the whole ~300-column tree ~78
-    // times — measured 11 s of pure driver-side construction time per
-    // full13 submission at 13 columns (Profile, sf0.1). Columns are
-    // mutually independent, so all-cascades-then-all-thresholds is
-    // byte-identical to the interleaved fold (ImputeSpec's
-    // "batched == sequential" test pins it against
-    // SequentialImpute.imputeColumn).
-    val cascadePair = cums.map { c =>
-      val grp = col(cvgC(c))
-      c -> cascadeExprs(col(diffCol(c)), grp,
-        col(s"__jump_$c").isNull && grp.isNotNull, col(s"__jump_$c"),
-        col(s"__end_$c"), col(s"__prev_$c"), col(s"__iv_$c"),
-        col(s"__ij_$c"), col(glC(c)), col(s"__hf_$c"))
-    }.toMap
-    val diffOwner = cums.map(c => diffCol(c) -> c).toMap
-    val afterCascade = s5b.select(
-      s5b.columns.map { n =>
-        diffOwner.get(n).fold(col(n))(c => cascadePair(c)._1.as(n))
-      }.toSeq ++ cums.flatMap { c =>
-        val ty = cascadePair(c)._2
-        Seq(ty.as(imputeTypeCol(c)), ty.isNotNull.as(isImputedCol(c)))
-      }: _*)
-    // thresholds (I9) — the when() wraps even for (-inf, inf) bounds:
-    // Spark orders NaN above +inf, so an unbounded column's NaNs still
-    // clamp to the average exactly like applyThresholds does
-    def outsideC(c: String): Column = {
-      val d = diffCol(c)
-      val (lo, hi) = thresholds.getOrElse(d,
-        (Double.NegativeInfinity, Double.PositiveInfinity))
-      (col(d) < lo || col(d) > hi) && col(d).isNotNull
+    val in = df.schema
+    def doubleIx(name: String): Int = {
+      val i = in.fieldIndex(name)
+      require(in(i).dataType == DoubleType,
+        s"imputeColumnsBatched: $name is ${in(i).dataType.sql}, not DOUBLE")
+      i
     }
-    val typeOwner = cums.map(c => imputeTypeCol(c) -> c).toMap
-    val impOwner = cums.map(c => isImputedCol(c) -> c).toMap
-    val cascaded = afterCascade.select(afterCascade.columns.map { n =>
-      diffOwner.get(n).map { c =>
-        when(outsideC(c), col(avgCol(c))).otherwise(col(n)).as(n)
-      }.orElse(typeOwner.get(n).map { c =>
-        when(outsideC(c),
-          coalesce(col(n), lit(ImputeType.None))
-            .bitwiseOR(lit(ImputeType.ThresholdAdjusted)))
-          .otherwise(col(n)).as(n)
-      }).orElse(impOwner.get(n).map { c =>
-        when(outsideC(c), lit(true)).otherwise(col(n)).as(n)
-      }).getOrElse(col(n))
-    }.toSeq: _*)
+    val (lo, hi) = cums.map(c => thresholds.getOrElse(diffCol(c),
+      (Double.NegativeInfinity, Double.PositiveInfinity))).unzip
+    val kernel = new HouseKernel(
+      cums.map(c => doubleIx(diffCol(c))).toArray,
+      cums.map(doubleIx).toArray,
+      cums.map(c => doubleIx(avgCol(c))).toArray,
+      lo.toArray, hi.toArray, keepGapCols, in.length)
 
-    val tempDrop = cums.flatMap(c => Seq(
-      s"__lagisna_$c", s"__lagseen_$c", s"__lagcum_$c", s"__grp_$c",
-      s"__prevcand_$c",
-      s"__iv_$c", s"__prev_$c", s"__endraw_$c", s"__ij_$c",
-      s"__end_$c", s"__jump_$c", s"__asum_$c", s"__dsum_$c", s"__ncmp_$c",
-      s"__hf_$c")) ++ Seq("__ntot") ++
-      (if (keepGapCols) Nil else cums.flatMap(c => Seq(cvgC(c), glC(c))))
-    cascaded.drop(tempDrop: _*)
+    val diffs = cums.map(diffCol).toSet
+    val gapFields =
+      if (!keepGapCols) Nil
+      else cums.map(c => StructField(s"__cvg_$c", LongType)) ++
+        cums.map(c => StructField(s"__gap_length_$c", LongType))
+    val outSchema = StructType(
+      in.fields.toSeq.map(f =>
+        if (diffs(f.name)) StructField(f.name, DoubleType) else f) ++
+      gapFields ++
+      cums.flatMap(c => Seq(
+        StructField(imputeTypeCol(c), IntegerType),
+        StructField(isImputedCol(c), BooleanType, nullable = false))))
+    val keys = Seq(ProjectId, HouseId)
+    val out = df.groupBy(keys.map(col): _*)
+      .as[Row, Row](Encoders.row(StructType(keys.map(in(_)))), Encoders.row(in))
+      .flatMapSortedGroups(col(ReadingDate))(
+        (_: Row, house: Iterator[Row]) => kernel(house))(Encoders.row(outSchema))
+    // the kernel copies the keys, so the house partitioning it ran under
+    // still serves the per-house windows and aggregations downstream
+    GroupKeys.keep(out, df, keys)
+  }
+
+  /** Spark's `round(x, 10)` on a double: NaN and ±Inf pass through. */
+  private def round10(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(10, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** The per-house kernel of [[imputeColumnsBatched]] over input rows
+    * `width` wide: column j reads the Diff, cumulative and average at
+    * `diffIx(j)`, `cumIx(j)`, `avgIx(j)` and clamps to [`lo(j)`, `hi(j)`].
+    */
+  private final class HouseKernel(diffIx: Array[Int], cumIx: Array[Int],
+                                  avgIx: Array[Int], lo: Array[Double],
+                                  hi: Array[Double], keepGapCols: Boolean,
+                                  width: Int)
+      extends Serializable {
+
+    /** One column's results over the house. 0 stands for null in `cvg`,
+      * `gapLength` and `imputeType`: a gap id counts at least its own
+      * start, a gap holds a row, and every type the cascade or the clamp
+      * writes has a bit set.
+      */
+    private final class Imputed(n: Int) {
+      val diff = new Array[Double](n)
+      val diffNull = new Array[Boolean](n)
+      val cvg = new Array[Long](n)
+      val gapLength = new Array[Long](n)
+      val imputeType = new Array[Int](n)
+    }
+
+    def apply(house: Iterator[Row]): Iterator[Row] = {
+      val rows = house.toArray
+      val cols = diffIx.indices.map(imputeColumn(rows, _))
+      val k = cols.size
+      val gapWidth = if (keepGapCols) 2 * k else 0
+      rows.iterator.zipWithIndex.map { case (r, i) =>
+        val v = new Array[Any](width + gapWidth + 2 * k)
+        var f = 0
+        while (f < width) { v(f) = r.get(f); f += 1 }
+        var j = 0
+        while (j < k) {
+          val c = cols(j)
+          v(diffIx(j)) = if (c.diffNull(i)) null else c.diff(i)
+          if (keepGapCols && c.cvg(i) != 0) {
+            v(width + j) = c.cvg(i)
+            v(width + k + j) = c.gapLength(i)
+          }
+          val ty = c.imputeType(i)
+          v(width + gapWidth + 2 * j) = if (ty == 0) null else ty
+          v(width + gapWidth + 2 * j + 1) = ty != 0
+          j += 1
+        }
+        new GenericRow(v): Row
+      }
+    }
+
+    /** I3..I9 for column j over one house's rows in reading order. */
+    private def imputeColumn(rows: Array[Row], j: Int): Imputed = {
+      val n = rows.length
+      def read(ix: Int): (Array[Double], Array[Boolean]) = {
+        val xs = new Array[Double](n)
+        val na = new Array[Boolean](n)
+        var i = 0
+        while (i < n) {
+          if (rows(i).isNullAt(ix)) na(i) = true else xs(i) = rows(i).getDouble(ix)
+          i += 1
+        }
+        (xs, na)
+      }
+      val (diff, diffNa) = read(diffIx(j))
+      val (cum, cumNa) = read(cumIx(j))
+      val (avg, avgNa) = read(avgIx(j))
+      def iv(i: Int) = if (avgNa(i)) 0.0 else avg(i)
+      val out = new Imputed(n)
+
+      // I6 — house factor over the comparable rows (avg and diff present,
+      // diff >= 0); both sums are null exactly when nComparable is 0
+      var avgSum, diffSum = 0.0
+      var nComparable = 0L
+      var i = 0
+      while (i < n) {
+        if (!avgNa(i) && !diffNa(i) && compareDoubles(diff(i), 0.0) >= 0) {
+          avgSum += avg(i)
+          diffSum += diff(i)
+          nComparable += 1
+        }
+        i += 1
+      }
+      val houseFactor =
+        if (nComparable <= n / 2.0) 1.0
+        else if (diffSum != 0.0) avgSum / diffSum // inf guard
+        else 1.0
+
+      // I3 — running group id: bump at a gap start and on the row after
+      // a gap row whose cumulative value is present
+      var grp = 0L
+      i = 0
+      while (i < n) {
+        val lagNa = i > 0 && diffNa(i - 1)
+        if (diffNa(i) && !lagNa || lagNa && !cumNa(i - 1)) grp += 1
+        if (diffNa(i)) out.cvg(i) = grp
+        i += 1
+      }
+
+      // I4/I5 + I7/I8 — per gap: each group is one contiguous run of rows
+      var a = 0
+      while (a < n) {
+        if (out.cvg(a) == 0) a += 1
+        else {
+          var b = a
+          while (b + 1 < n && out.cvg(b + 1) == out.cvg(a)) b += 1
+          val gapLength = b - a + 1
+          // the row before the gap; a negative one is invalid
+          val hasPrev = a > 0 && !cumNa(a - 1) && compareDoubles(cum(a - 1), 0.0) >= 0
+          val prev = if (hasPrev) cum(a - 1) else 0.0
+          var hasEnd = false
+          var end = 0.0
+          var imputeJump = 0.0
+          i = a
+          while (i <= b) {
+            if (!cumNa(i)) { hasEnd = true; end = cum(i) }
+            imputeJump += iv(i)
+            i += 1
+          }
+          hasEnd &&= compareDoubles(end, 0.0) >= 0 // end < 0 -> NA
+          val jump = end - prev
+          i = a
+          while (i <= b) {
+            out.gapLength(i) = gapLength
+            var fill = 0.0
+            val ty =
+              if (hasPrev && hasEnd) {
+                if (compareDoubles(jump, 0.0) < 0) ImputeType.NegativeGapJump
+                else if (compareDoubles(jump, 1e-8) < 0) ImputeType.NearZeroGapJump
+                else if (compareDoubles(imputeJump, 1e-8) < 0) {
+                  fill = round10(jump / gapLength)
+                  ImputeType.LinearFill
+                } else {
+                  fill = round10(iv(i) * (jump / imputeJump))
+                  ImputeType.ScaledFill
+                }
+              } else if (hasEnd) {
+                if (compareDoubles(end, 1e-8) < 0) ImputeType.ZeroEndValue
+                else if (compareDoubles(end, 1e-8) > 0) {
+                  fill = iv(i)
+                  ImputeType.PositiveEndValue
+                } else ImputeType.None
+              } else if (hasPrev) {
+                fill = iv(i) * houseFactor
+                ImputeType.NoEndValue
+              } else ImputeType.None // no start, no end: left NA
+            out.imputeType(i) = ty
+            if (ty == ImputeType.None) out.diffNull(i) = true
+            else out.diff(i) = fill
+            i += 1
+          }
+          a = b + 1
+        }
+      }
+
+      // I9 — thresholds: a value outside [lo, hi] (NaN is above +Inf)
+      // becomes the average, flagged THRESHOLD_ADJUSTED on top of its type
+      i = 0
+      while (i < n) {
+        if (out.cvg(i) == 0) out.diff(i) = diff(i)
+        val d = out.diff(i)
+        if (!out.diffNull(i) &&
+            (compareDoubles(d, lo(j)) < 0 || compareDoubles(d, hi(j)) > 0)) {
+          out.diffNull(i) = avgNa(i)
+          out.diff(i) = avg(i)
+          out.imputeType(i) |= ImputeType.ThresholdAdjusted
+        }
+        i += 1
+      }
+      out
+    }
   }
 
   /** Data-quality gates the reference enforces with exceptions

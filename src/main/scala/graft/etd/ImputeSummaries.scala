@@ -19,8 +19,8 @@ object ImputeSummaries {
 
   /** I10/A13 — per (project, house) stats for one column after imputation
     * (requires the per-column `gap_length`/`cumulative_value_group`
-    * columns, which Impute.imputeColumnsBatched(keepGapCols = true) keeps
-    * as `__gap_length_<col>`/`__cvg_<col>`). One aggregation pass
+    * columns, which Impute.imputeColumnsBatched(keepGapCols = true)
+    * emits as `__gap_length_<col>`/`__cvg_<col>`). One aggregation pass
     * replaces the reference's groupby-apply.
     */
   def gapStats(df: DataFrame, cum: String): DataFrame = {

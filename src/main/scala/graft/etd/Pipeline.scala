@@ -16,10 +16,17 @@ import Model._
   * reference's restartability checkpoints, but *within* a stage Catalyst
   * pipelines everything (SURVEY §3.1 IR note).
   *
-  * Scale: one repartition to (ProjectIdBSV, HuisIdBSV) ahead of the impute
-  * stage serves all 13 columns' windows (exchange reuse); the project
-  * aggregation reuses the project-hash partitioning; sinks partition by
-  * project so downstream reads prune.
+  * Plan (executed, AQE on): `run` repartitions the input to
+  * (ProjectIdBSV, HuisIdBSV) ahead of the impute stage, but that is not
+  * the only pass over it. Column pruning gives each consumer of the
+  * repartitioned frame (the two `Diffs.prepare` branches and the
+  * join-back) its own scan of the input files, and a sort-merge avg-diffs
+  * join-back re-shuffles the readings by (ProjectIdBSV, ReadingDate), so
+  * the impute pass shuffles them by house once more (a broadcast
+  * join-back keeps the house partitioning). The impute pass keeps its
+  * house partitioning for the cumulative rebuild and the gap statistics;
+  * the project aggregation reuses the project-hash partitioning; sinks
+  * partition by project so downstream reads prune.
   */
 object Pipeline {
 
@@ -70,9 +77,8 @@ object Pipeline {
   /** Run the full transformation pipeline lazily over a combined household
     * frame (cumulative meters + Diff columns present). Nothing executes —
     * or is even analyzed — until the caller touches a stage. The impute
-    * stage is the BATCHED all-columns implementation
-    * ([[Impute.imputeColumnsBatched]]), whose plan size is bounded
-    * regardless of column count. Any `localCheckpointEvery` value cuts
+    * stage is [[Impute.imputeColumnsBatched]]: one sorted pass per house
+    * for all columns. Any `localCheckpointEvery` value cuts
     * lineage once after the impute stage, so consumers of several stages
     * share one cascade execution. [[writeStages]] needs the cut for its
     * gap-stats sink only: every other sink builds from the parquet the
@@ -82,7 +88,7 @@ object Pipeline {
     * on (ProjectIdBSV, HuisIdBSV) — a bucketed table written with
     * [[Sources.writeBucketed]] on those keys. The pipeline then relies on
     * the storage co-location instead of shuffling the full readings: the
-    * one full-table exchange the impute windows otherwise require
+    * one full-table exchange the impute pass otherwise requires
     * disappears from the plan (BucketingSpec asserts zero
     * house-partitioned exchanges remain; the only shuffles left touch
     * house- or project-grain aggregates). At 100 TB this turns every
@@ -96,19 +102,15 @@ object Pipeline {
           assumeColocated: Boolean = false)
       : Stages = {
 
-    // One shuffle serves all per-house windows of every column below
-    // (mirrors sort_for_impute, impute.py:415-441, as a physical hint);
-    // a co-located input skips it and only sorts within partitions.
-    // AQE's byte-based coalescing is deliberately left in charge of the
-    // exchange's partition count after two r21 A/Bs on the
-    // 16-physical-core bench box: pinning the full thread count (32)
-    // doubled the cascade stage's CPU (115 -> 213 CPU-s, hyperthread
-    // contention) at unchanged wall, and pinning a rows-derived 13
-    // (vs AQE's coalesced 7) raised CPU 137 -> 198 with the wall flat
-    // — the cascade's row churn is memory-bandwidth-bound, so extra
-    // tasks burn cycles without buying wall. Bytes-per-partition is a
-    // poor proxy for this stage's work, but the coalesced count beat
-    // every pinned alternative on real hardware.
+    // The house repartition mirrors sort_for_impute (impute.py:415-441)
+    // as a physical hint; a co-located input skips it and only sorts
+    // within partitions. Whether it reaches the impute pass depends on
+    // the avg-diffs join-back (see the plan note on [[Pipeline]]).
+    // AQE's byte-based coalescing is left in charge of the exchange's
+    // partition count: two r21 A/Bs on the 16-physical-core bench box,
+    // run on the earlier window-node cascade, found that pinning 32 or
+    // a rows-derived 13 partitions (vs AQE's coalesced 7) raised the
+    // cascade stage's CPU (115 -> 213, 137 -> 198 CPU-s) at a flat wall.
     lazy val sorted =
       if (assumeColocated)
         household.sortWithinPartitions(ProjectId, HouseId, ReadingDate)
@@ -116,11 +118,7 @@ object Pipeline {
         .repartition(col(ProjectId), col(HouseId))
         .sortWithinPartitions(ProjectId, HouseId, ReadingDate)
 
-    // I3..I9 for ALL columns in batched stages (shared lag/cumsum/house
-    // window nodes + one per-gap window node per column): byte-identical
-    // to the per-column fold, but the plan is ~20 nodes instead of
-    // |columns| x ~10 nested stages — at 13 columns that is the
-    // difference between minutes and seconds of optimizer time.
+    // I3..I9 for all columns in one sorted pass per house.
     // `localCheckpointEvery` (any value) means: cut lineage once after
     // the impute stage.
     lazy val imputedAll = {
@@ -129,9 +127,12 @@ object Pipeline {
       val withAvgs = Diffs.joinAverages(sorted, avgDiffs)
       val imputedAll0 = Impute.imputeColumnsBatched(withAvgs, cumulativeCols,
         keepGapCols = true)
-      // lazy: materialize inside the first consumer's execution instead
-      // of blocking at stage construction (r9 full13 lesson — an eager
-      // checkpoint charges every build, even ones that never execute).
+      // eager = false skips only the cut's own count job: under AQE the
+      // call still executes the adaptive plan, so every shuffle-map stage
+      // below the cut (the input exchanges, the avg-diffs join-back, the
+      // impute pass's house exchange) runs here, on the calling thread,
+      // when the stage is first touched; only the final stage (the
+      // impute pass itself) waits for the first consumer's job.
       // The cut's blocks belong to the caller: free them with
       // Checkpoints.free(<consumed stage frame>) after the last action
       // over the stages, or Checkpoints.sweep between measurements.

@@ -79,8 +79,7 @@ object ProjectAggregate {
     // Two shared projections instead of a per-column withColumn fold: pass 1
     // carries EVERY running sum in one Window spec, pass 2 every lag-delta in
     // another. The fold form produced 3·|cols| chained projections whose
-    // analyzer/optimizer cost grew superlinearly — the same disease
-    // Impute.imputeColumnsBatched cures (Impute.scala batching note).
+    // analyzer/optimizer cost grew superlinearly with plan depth.
     val rebuilt = df.select(
       df.columns.map { c =>
         if (cumSet(c))

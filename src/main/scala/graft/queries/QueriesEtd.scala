@@ -385,10 +385,9 @@ object QueriesEtd {
       .groupBy(col(HouseId).as("huis"))
       .agg(round(max("house_impute_factor"), 6).as("house_factor"))
 
-  /** Single-column impute for the query entries via the BATCHED engine
-    * (the optimized implementation the pipeline runs — r21: one fewer
-    * lag pass and the house-factor frames folded into the boundary-lag
-    * window node), renamed to the fixed gap-column names the summaries
+  /** Single-column impute for the query entries via the engine the
+    * pipeline runs ([[Impute.imputeColumnsBatched]], one sorted pass per
+    * house), renamed to the fixed gap-column names the summaries
     * expect. ImputeSpec pins the batched engine against the sequential
     * test-scope SequentialImpute.imputeColumn; every consumer below is
     * additionally hash-pinned by its DuckDB oracle.

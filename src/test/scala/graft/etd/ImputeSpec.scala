@@ -181,6 +181,106 @@ class ImputeSpec extends AnyFunSuite {
     assert(gapRows.sum > 0, "no gap rows exercised")
   }
 
+  /** A seeded frame over 3 projects that share house ids: per project a
+    * one-row house, an all-NA house, a house with gaps at its start and
+    * end and a meter reset, and random houses whose cells draw NaN, -0.0,
+    * 0.0, negatives and values past both threshold bounds.
+    */
+  private def edgeFrame(seed: Int, cums: Seq[String]) = {
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(seed)
+    def pick(xs: (Int, () => Any)*): Any = {
+      var r = rnd.nextInt(xs.map(_._1).sum)
+      xs.find { case (w, _) => r -= w; r < 0 }.get._2()
+    }
+    def diff(): Any = pick(35 -> (() => null), 35 -> (() => rnd.nextDouble() * 1.5),
+      5 -> (() => -0.5), 5 -> (() => 3.0), 5 -> (() => Double.NaN),
+      5 -> (() => -0.0), 5 -> (() => 0.0), 5 -> (() => 1e-9))
+    def cum(): Any = pick(40 -> (() => null), 45 -> (() => rnd.nextDouble() * 10),
+      3 -> (() => -1.0), 4 -> (() => Double.NaN), 4 -> (() => -0.0),
+      4 -> (() => 0.0))
+    def avg(): Any = pick(30 -> (() => null), 55 -> (() => rnd.nextDouble()),
+      5 -> (() => Double.NaN), 5 -> (() => -0.0), 5 -> (() => 2.5))
+    // (cum, diff, avg) per slot: a gap at the start (meter new at 0), a
+    // reading run, a meter reset to 0 behind a gap, a gap without use, a
+    // gap at the end
+    val shaped: Seq[(Any, Any, Any)] = Seq(
+      (null, null, 0.2), (0.0, null, null), (1.0, 1.0, 0.9), (2.0, 1.0, 1.1),
+      (null, null, null), (null, null, null), (0.5, null, 0.4),
+      (1.5, 1.0, 1.0), (null, null, 0.1), (1.5, null, null),
+      (2.5, 1.0, 1.0), (null, null, 0.3), (null, null, null))
+    val rows = for {
+      p <- 1L to 3L
+      h <- 1L to 6L
+      t <- 0 until (h match {
+        case 1L => 1; case 2L => 5; case 3L => shaped.size
+        case _ => 6 + rnd.nextInt(30) })
+    } yield Row.fromSeq(Seq(p, h, new java.sql.Timestamp(t * 300000L)) ++
+      cums.flatMap { _ =>
+        h match {
+          case 1L | 2L => Seq(cum(), null, avg())
+          case 3L => shaped(t).productIterator.toSeq
+          case _ => Seq(cum(), diff(), avg())
+        }
+      })
+    val schema = StructType(Seq(StructField(ProjectId, LongType),
+      StructField(HouseId, LongType), StructField(ReadingDate, TimestampType)) ++
+      cums.flatMap(c => Seq(c, Model.diffCol(c), Model.avgCol(c))
+        .map(StructField(_, DoubleType))))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** Rows as cells, doubles by their raw bits (NaN payload and -0.0 kept). */
+  private def cells(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+    df.select(cols.map(col): _*).collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }).toSet
+
+  test("batched impute == sequential fold bit for bit on edge-case frames") {
+    // MeterDiff is unbounded (its NaNs still clamp); the electricity
+    // column clamps to [0, 2]
+    val cums = Seq("Meter", "ElektriciteitNetgebruikLaag")
+    val keys = Seq(ProjectId, HouseId, ReadingDate)
+    for (seed <- 1 to 3) {
+      val df = edgeFrame(seed, cums)
+      val n = df.count()
+      val sequential = cums.foldLeft(df)((acc, c) => SequentialImpute.imputeColumn(acc, c))
+      val plain = Impute.imputeColumnsBatched(df, cums)
+      val kept = Impute.imputeColumnsBatched(df, cums, keepGapCols = true)
+      assert(plain.columns.toSeq == sequential.columns.toSeq)
+      val a = cells(sequential, sequential.columns.toSeq)
+      assert(a.size == n)
+      assert(cells(plain, sequential.columns.toSeq) == a, s"seed $seed, keepGapCols = false")
+      assert(cells(kept, sequential.columns.toSeq) == a, s"seed $seed, keepGapCols = true")
+      cums.foreach { c =>
+        val gaps = SequentialImpute.imputeColumn(df, c, keepGapCols = true)
+        assert(cells(kept, keys ++ Seq(s"__cvg_$c", s"__gap_length_$c")) ==
+          cells(gaps, keys ++ Seq("cumulative_value_group", "gap_length")),
+          s"seed $seed: $c gap columns")
+      }
+      // every cascade branch and the clamp fire
+      val types = cums.flatMap(c => kept.select(Model.imputeTypeCol(c)).collect()
+        .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Int]))).toSet
+      assert((0 to 7).forall(b => types.exists(t => (t & (1 << b)) != 0)),
+        s"seed $seed: types $types")
+    }
+    // the column list (names, order, types) of the window implementation
+    // this engine replaced, recorded for this input
+    val schema = Impute.imputeColumnsBatched(edgeFrame(1, cums), cums,
+      keepGapCols = true).schema.map(f => s"${f.name}:${f.dataType.sql}")
+    assert(schema == Seq(
+      "ProjectIdBSV:BIGINT", "HuisIdBSV:BIGINT", "ReadingDate:TIMESTAMP",
+      "Meter:DOUBLE", "MeterDiff:DOUBLE", "MeterDiff_avg:DOUBLE",
+      "ElektriciteitNetgebruikLaag:DOUBLE", "ElektriciteitNetgebruikLaagDiff:DOUBLE",
+      "ElektriciteitNetgebruikLaagDiff_avg:DOUBLE",
+      "__cvg_Meter:BIGINT", "__cvg_ElektriciteitNetgebruikLaag:BIGINT",
+      "__gap_length_Meter:BIGINT", "__gap_length_ElektriciteitNetgebruikLaag:BIGINT",
+      "MeterDiff_impute_type:INT", "MeterDiff_is_imputed:BOOLEAN",
+      "ElektriciteitNetgebruikLaagDiff_impute_type:INT",
+      "ElektriciteitNetgebruikLaagDiff_is_imputed:BOOLEAN"))
+  }
+
   test("readingDateStats: counts partition into imputed/na/original (impute.py:330-412)") {
     val stats = ImputeSummaries.readingDateStats(
         SequentialImpute.imputeColumn(frame(h1), "Meter", keepGapCols = true),

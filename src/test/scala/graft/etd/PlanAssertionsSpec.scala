@@ -46,6 +46,23 @@ class PlanAssertionsSpec extends AnyFunSuite {
     assert(exchanges <= 5, s"unexpected exchange count $exchanges in plan")
   }
 
+  test("batched impute is one sorted pass per house: no Window, one Sort") {
+    import spark.implicits._
+    val in = Seq(
+        (1L, 1L, new java.sql.Timestamp(0L), Option(1.0), Option.empty[Double], Option(0.5)),
+        (1L, 1L, new java.sql.Timestamp(300000L), Option(2.0), Option(1.0), Option(0.5)))
+      .toDF(Model.ProjectId, Model.HouseId, Model.ReadingDate, "M", "MDiff", "MDiff_avg")
+    val out = Impute.imputeColumnsBatched(in, Seq("M"), keepGapCols = true)
+    val optimized = out.queryExecution.optimizedPlan
+    import org.apache.spark.sql.catalyst.plans.logical
+    assert(optimized.collect { case w: logical.Window => w }.isEmpty,
+      s"window node in the batched impute:\n$optimized")
+    assert(optimized.collect { case s: logical.Sort => s }.size <= 1, optimized.toString)
+    val p = plan(out)
+    assert(!p.contains("Window"), s"window operator in the batched impute:\n$p")
+    assert("Sort \\[".r.findAllIn(p).length <= 1, s"more than one sort:\n$p")
+  }
+
   test("relational MinHash: one aggregation shuffle, no join-back") {
     val sigs = graft.llm.Dedup.minhashSignatures(
       spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
