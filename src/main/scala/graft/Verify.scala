@@ -42,10 +42,24 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally Checkpoints.sweep(spark) // no cross-query leaked blocks
     }
-    val json = only.fold(SparkEntry.oracleSql)(s =>
-        SparkEntry.oracleSql.filter(kv => s(kv._1)))
-      .map { case (k, v) => s"${Probe.quote(k)}: ${Probe.quote(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val oracles = only.fold(SparkEntry.oracleSql)(s =>
+      SparkEntry.oracleSql.filter(kv => s(kv._1)))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(oracles))
     spark.stop()
   }
+
+  /** The oracle_sql.json body: one JSON object of query name → SQL. */
+  private[graft] def oracleJson(oracles: Iterable[(String, String)]): String =
+    oracles.map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
+
+  /** JSON string literal: backslash, quote and ALL control chars (< 0x20)
+    * escaped. A tab or CR in an oracle query would otherwise make the
+    * checker's `json.load` fail and silently zero the correctness compare.
+    */
+  private def quote(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => "\\u%04x".format(c.toInt)
+    case c => c.toString
+  } + "\""
 }

@@ -128,8 +128,8 @@ object BpeTrain {
     * sequential loop's cost is rounds x job overhead (~0.29 s/round
     * measured = ~2.6 h of pure scheduling); this variant applies a whole
     * prefix of the sorted pair table per round, so round count — and
-    * with it the scheduling bill — drops ~10x (ScaleBench `bpe`
-    * measures it).
+    * with it the scheduling bill — drops ~10x (round 11, PERFNOTES
+    * "BPE batched argmax — measured").
     *
     * Why a prefix batch is EXACT (BatchedBpeSpec property-pins it
     * against the sequential list on twin-heavy corpora):

@@ -789,7 +789,8 @@ object Dedup {
     * the kept set is the true transitive-closure minimum per cluster
     * with NO banding miss-rate. The tool when dedup is a compliance
     * contract rather than a statistical cleanup; costs the prefix-join
-    * candidate bill (ScaleBench `jacjoin`) instead of the banded one.
+    * candidate bill (round 11, PERFNOTES "Exact prefix-filtered Jaccard
+    * join at 100k docs") instead of the banded one.
     */
   def nearDedupComplete(df: DataFrame, idCol: String, textCol: String,
                         threshold: Double, shingleSize: Int = 3): DataFrame =
@@ -1498,7 +1499,8 @@ object Dedup {
     * Both routes keep the FLAT row×nlist assignment (so the kept set
     * never depends on which side of the threshold a corpus lands on);
     * past ~10k cells that argmax itself dominates (measured 31 s at
-    * 100k×16k, ScaleBench `semdedup`) — call [[semDedupTwoLevel]]
+    * 100k×16k, PERFNOTES "Round 15 — SemDeDup past the literal codebook
+    * cap") — call [[semDedupTwoLevel]]
     * explicitly there (2.8× faster assignment, a DIFFERENT
     * deterministic bucketing with its own oracle).
     */
@@ -1586,7 +1588,8 @@ object Dedup {
     * (coarse → refine) assignment ([[Similarity.ivfAssignTwoLevel]]) —
     * the very-large-nlist form: assignment costs m + nlist/m cosines
     * per row instead of nlist (measured 37 s → sub-second argmax at
-    * 100k × 16k, ScaleBench `semdedup`). The cells are a DIFFERENT
+    * 100k × 16k, PERFNOTES "Round 15 — SemDeDup past the literal
+    * codebook cap"). The cells are a DIFFERENT
     * (deterministic, oracle-replayable) partitioning than the flat
     * argmax's, which is fine for dedup — cells are a bucketing
     * heuristic; with m = 1 the partitioning (and so the pair set) is
@@ -1779,7 +1782,8 @@ object Dedup {
     * band-colliding archive partner clears `jaccardThreshold`; screen
     * false positives (collision but low Jaccard) are recovered.
     *
-    * Scale shape — the claim ScaleBench `incdedup` measures: candidate
+    * Scale shape — measured in round 11 (PERFNOTES "Incremental
+    * near-dup: the exact-verify batch, implemented and measured"): candidate
     * pairs come from the snapshot's band keys joined to the id-carrying
     * index (signature-scale); the archive PAYLOAD (`archiveText`) is
     * touched only through a semi join on the candidates' archive ids —

@@ -213,7 +213,8 @@ object Embeddings {
     * codegen exactly like the IVF codebooks). Backed by the native
     * [[org.apache.spark.sql.graft.PcaProjectExpr]] — one fused loop
     * instead of k x d interpreted higher-order-function lambdas
-    * (measured 2.07 -> sub-second at 100k x 64, ScaleBench `pca`);
+    * (measured 2.07 -> sub-second at 100k x 64, round 11, PERFNOTES
+    * "Z-order clustered sink", native PCA addendum);
     * bit-identical to [[pcaProjectComposed]] (same left-to-right
     * double arithmetic — PcaSpec pins it).
     */

@@ -122,8 +122,9 @@ object Similarity {
 
   /** TWO-LEVEL (coarse → refine) cell assignment — the escape from the
     * flat row×nlist argmax fan-out that [[ivfAssignTable]] still pays
-    * (measured: 100k rows × 16k cells = 1.6 B cosines = 37 s, ScaleBench
-    * `semdedup` / PERFNOTES r15). Each row first takes its nearest
+    * (measured: 100k rows × 16k cells = 1.6 B cosines = 37 s, PERFNOTES
+    * "Round 15 — SemDeDup past the literal codebook cap"). Each row
+    * first takes its nearest
     * COARSE centroid through the fused literal expression
     * ([[ivfAssign]], m cells), then argmaxes only over the fine cells
     * OWNED by that coarse group — cost m + nlist/m per row ≈ 2·√nlist

@@ -43,8 +43,9 @@ import graft.llm.TextFunctions
   * vocabulary, no longer join at all. On repeat-heavy grams the row
   * count can exceed the true matching (cnt_a×cnt_b banded pairs vs
   * min — it only loosens the filter, never drops a true pair; the
-  * verifier owns precision). Measured (ScaleBench `fuzzy`, 20k
-  * seeded-random vocab): gram-join output rows drop to 6.66M against
+  * verifier owns precision). Measured (round 16, PERFNOTES "Round 16 —
+  * positional q-grams land"; 20k seeded-random vocab): gram-join
+  * output rows drop to 6.66M against
   * the 24.0M unbanded single-gram bill (3.6×), wall 9.7 s (r11 occ
   * form) → 8.6 s, the surviving verify set stays at the occ form's
   * level (14,313 vs 14,281; 13,590 true hits — the count bound was
@@ -159,8 +160,10 @@ object FuzzyJoin {
   }
 
   /** Surviving-candidate count for [[editDistancePairs]]'s verify stage
-    * — the COUNT filter's output size, measured by ScaleBench `fuzzy`
-    * against the single-gram candidate bill (Σ df·(df−1)/2). Built on
+    * — the COUNT filter's output size, measured against the
+    * single-gram candidate bill (Σ df·(df−1)/2) in round 11 (PERFNOTES
+    * "Gravano COUNT filter lands"); FuzzyJoinSpec "count filter: verify
+    * set is complete and strictly prunes" holds the pruning. Built on
     * the same [[candidates]] pipeline the operator runs.
     */
   def countFilterCandidates(df: DataFrame, strCol: String, maxDist: Int,
@@ -170,9 +173,10 @@ object FuzzyJoin {
   }
 
   /** Gram-join OUTPUT rows (pre-aggregation) — the stage whose volume
-    * the positional band cuts relative to the unbanded Σ df(g)² bill;
-    * ScaleBench `fuzzy` reports it next to the single-gram bill and the
-    * surviving verify set. Counts the SAME [[gramJoinRaw]] frame
+    * the positional band cuts relative to the unbanded Σ df(g)² bill
+    * (round 16, PERFNOTES "Round 16 — positional q-grams land", next to
+    * the single-gram bill and the surviving verify set). Counts the
+    * SAME [[gramJoinRaw]] frame
     * [[candidates]] aggregates, so the metric can never diverge from
     * the operator.
     */

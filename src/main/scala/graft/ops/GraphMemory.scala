@@ -58,7 +58,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   * ANY throw after the conf is applied, `sizedEdges` restores before
   * rethrowing (ADVICE r19: the collapse checkpoint is exactly where
   * the documented 55M-edge OOM fires; a leaked conf would outlive the
-  * failure into the caller's session, which ScaleBench keeps using).
+  * failure into the caller's session; GraphMemorySpec "above the
+  * trigger" pins the restore).
   * Results cannot change — the exact tiers sum through order-free
   * decimals (spec-pinned partitioning invariance), which is what makes
   * auto-sizing correctness-free. Below the trigger edge count

@@ -39,8 +39,9 @@ object PageRank {
   /** THROUGHPUT tier: the same power iteration with IEEE-double sums
     * instead of DECIMAL(38,18), at the price of the cross-engine/
     * cross-partitioning bit-guarantee (fp addition is not associative,
-    * so results drift in the last ulps run-to-run). Measured
-    * (ScaleBench `eventops`, 3 rounds over 1.2 M edges): 36.6 → 15.8 s
+    * so results drift in the last ulps run-to-run). Measured (round 11,
+    * PERFNOTES "PageRank throughput tier"; 3 rounds over 1.2 M edges):
+    * 36.6 → 15.8 s
     * — the 2.3× is the aggregation CPU (Decimal partial sums are
     * object-backed and fall off the codegen fast path), NOT shuffle
     * volume, which the per-round edge-join traffic dominates in both
@@ -57,8 +58,9 @@ object PageRank {
     run(edges, None, iterations, damping, checkpointEvery, exact = false,
       saltJoin = saltJoin)
 
-  /** The measured hub-skew regime rule (PERFNOTES r12 + r15, ScaleBench
-    * `prskew`) as a pure function — `saltJoin = 0` resolves through it
+  /** The measured hub-skew regime rule (PERFNOTES "Round 12 — hub-skew
+    * PageRank" + r15; PageRankSpec "auto salt" pins it) as a pure
+    * function — `saltJoin = 0` resolves through it
     * from statistics the iteration already aggregates. A hot OUT-hub
     * serializes its edge rows into one task of the per-round
     * rank⋈edges join (AQE's skew split skips this chained-SMJ shape —
@@ -137,7 +139,8 @@ object PageRank {
     * graphs where one node's out-edges would otherwise serialize into
     * a single join task. AQE's skew split does NOT cover this join (it
     * is chained SMJ-after-SMJ on the same key inside one stage, which
-    * the splitter skips — measured, ScaleBench `prskew`). Exact-tier
+    * the splitter skips — measured, PERFNOTES "Round 12 — hub-skew
+    * PageRank"). Exact-tier
     * results are bit-identical under any salt (decimal sums are
     * order-free); fast-tier results move in the last ulps like any
     * repartitioning would. `saltJoin = 0` (the default) AUTO-sizes via

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   * Delta/Iceberg OPTIMIZE ZORDER, built here from plain bitwise
   * Columns — everything stays inside whole-stage codegen).
   *
-  * ScaleBench `zorder` measures the claim: records read for a
-  * two-column box filter, natural vs single-sort vs z-order layout.
+  * ZOrderSpec "z-locality" holds the bounded per-chunk ranges the claim
+  * rests on; records read for a two-column box filter, natural vs
+  * single-sort vs z-order layout, were measured in round 11 (PERFNOTES
+  * "Z-order clustered sink — data skipping measured").
   */
 object ZOrder {
 

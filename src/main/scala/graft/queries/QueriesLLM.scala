@@ -2050,8 +2050,8 @@ object QueriesLLM {
   }
 
   /** Query-scoped temp-dir cleanup, shared repo-wide (the streamed
-    * oracles, the ledger-fold queries, and ScaleBench all tear down
-    * through the one definition in [[StreamHarness.deleteTempDir]]).
+    * oracles and the ledger-fold queries both tear down through the one
+    * definition in [[StreamHarness.deleteTempDir]]).
     */
   private def deleteTempDir(dir: String): Unit =
     StreamHarness.deleteTempDir(dir)

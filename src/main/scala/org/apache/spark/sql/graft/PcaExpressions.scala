@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   *
   * Why not the composed `zip_with`/`aggregate` form: higher-order
   * functions evaluate an interpreted lambda per element — k x d lambda
-  * invocations with boxing per row (ScaleBench `pca`: ~2 s for 100k x
-  * 64 -> 16 — the projection dominating a pass whose scan is
+  * invocations with boxing per row (round 11, PERFNOTES "PCA at scale +
+  * new bench rows": ~2 s for 100k x 64 -> 16 — the projection
+  * dominating a pass whose scan is
   * sub-second). This loop reads the float array once, centers into a
   * stack array, and accumulates the k dot products in order — the
   * SAME left-to-right double arithmetic as the composed form, so

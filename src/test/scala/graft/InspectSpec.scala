@@ -3,7 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `graft.Inspect`: every mode runs on a cheap registry entry, and the
-  * `--hash` row encoding keeps field boundaries and nulls apart.
+  * `--hash` row encoding keeps field boundaries and nulls apart. Also
+  * `graft.Verify`'s oracle_sql.json encoding, the other harness encoding
+  * a checker reads back.
   */
 class InspectSpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -25,6 +27,16 @@ class InspectSpec extends AnyFunSuite {
     // row order does not matter, field order does
     assert(Inspect.digest(Seq(Seq("x", 1L), Seq("y", null))) ==
       Inspect.digest(Seq(Seq("y", null), Seq("x", 1L))))
+  }
+
+  test("Verify's oracle_sql.json round-trips quote, backslash and every control char") {
+    val tricky = "q\"uote\\d\nline\ttab\rcr" + (0 until 0x20).map(_.toChar).mkString
+    val oracles = Seq(tricky -> s"SELECT '$tricky' AS x", "plain" -> "SELECT 1")
+    // Jackson's defaults are strict: a raw control char inside a string fails
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Verify.oracleJson(oracles))
+    assert(tree.size == oracles.size)
+    oracles.foreach { case (k, v) => assert(tree.get(k).asText == v, k) }
   }
 
   test("each mode prints its header; --hash is stable across two calls") {

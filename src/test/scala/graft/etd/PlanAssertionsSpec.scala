@@ -343,7 +343,8 @@ class PlanAssertionsSpec extends AnyFunSuite {
       s"rules must broadcast:\n$p")
     // the winner is an array_max over the packed rules, NOT a
     // window-by-URL (which would shuffle the whole corpus — the r17
-    // session-2 rework; ScaleBench `gates` measures the delta). The
+    // session-2 rework; PERFNOTES "Round 17, second session" has the
+    // measured delta under "robotsAllowed rework"). The
     // only windows left are parseRobots' host-keyed line grouping —
     // rule-table-grain, never the corpus.
     assert(!p.contains("windowspecdefinition(doc_id"),

@@ -134,8 +134,9 @@ class PageRankSpec extends AnyFunSuite {
   }
 
   test("salted hub-skew join: exact tier bit-identical under any salt") {
-    // the hot-OUT-hub mitigation (ScaleBench prskew measures the
-    // straggler lever) must not move a single bit of the exact tier:
+    // the hot-OUT-hub mitigation (PERFNOTES "Round 12 — hub-skew
+    // PageRank" measures the straggler lever) must not move a single
+    // bit of the exact tier:
     // decimal sums are order-free, so spreading a node's edges over
     // salt buckets only changes the partitioning
     val hubby = edges ++ (200L to 260L).map(d => (7L, d)) // node 7 fans out
