@@ -21,7 +21,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * The contract: an operator that cuts lineage OWNS the cut. Iterative
   * loops free each superseded generation as soon as the next one is
   * materialized ([[graft.llm.Dedup.clusterPairs]],
-  * [[graft.llm.BpeTrain.learnMerges]]); operators whose RESULT is a
+  * [[graft.llm.BpeTrain.learnMergesBatched]]); operators whose RESULT is a
   * lazily-checkpointed frame cannot free it themselves (the caller has
   * not consumed it yet) — callers free those with [[free]] once done, and
   * harnesses sweep whole sessions with [[sweep]] between measurements.

@@ -77,53 +77,8 @@ object BpeTrain {
           concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
         .otherwise(concat(acc, array(x))))
 
-  /** Learn up to `numMerges` merges from a [[wordCounts]] frame. Stops
-    * early when the best remaining pair's frequency falls below
-    * `minFrequency` (merging hapax pairs just memorizes the corpus).
-    * Each round: one aggregation + a 1-row collect (the argmax pick,
-    * deterministic tie-break) + a lazy map-only merge; the driver only
-    * ever holds the merge list.
-    */
-  def learnMerges(wordCounts: DataFrame, numMerges: Int,
-                  minFrequency: Long = 2,
-                  checkpointEvery: Int = 8): Seq[(String, String)] = {
-    var words = wordCounts
-      .select(initSymbols(col("word")).as("syms"), col("cnt"))
-      .localCheckpoint()
-    // the frame whose checkpoint blocks `words` currently rides on; each
-    // new cut frees the superseded one so the loop holds ONE generation
-    // of the distinct-word table, not numMerges/checkpointEvery of them
-    var cut = words
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var i = 0
-    var done = false
-    try {
-      while (i < numMerges && !done) {
-        val top = pairCounts(words)
-          .filter(col("n") >= minFrequency)
-          .orderBy(col("n").desc, col("a"), col("b")).limit(1)
-          .collect()
-        if (top.isEmpty) done = true
-        else {
-          val (a, b) = (top(0).getString(0), top(0).getString(1))
-          merges += ((a, b))
-          words = words.withColumn("syms", mergePair(col("syms"), a, b))
-          // bound the accumulated merge-expression plan (clusterPairs'
-          // lineage-cut pattern); off the checkpoint rounds the merge
-          // stays lazy and fuses into the next round's aggregation
-          if ((i + 1) % checkpointEvery == 0) {
-            words = words.localCheckpoint() // eager — old cut now dead
-            graft.Checkpoints.free(cut)
-            cut = words
-          }
-          i += 1
-        }
-      }
-    } finally graft.Checkpoints.free(cut)
-    merges.toSeq
-  }
-
-  /** Batched merge learning: EXACTLY the [[learnMerges]] merge list, in
+  /** Batched merge learning: EXACTLY the merge list of the one-merge-
+    * per-round loop (argmax by count DESC, then (a, b) ASC), in
     * ~batchSize-fold fewer Spark rounds. At 32k production merges the
     * sequential loop's cost is rounds x job overhead (~0.29 s/round
     * measured = ~2.6 h of pure scheduling); this variant applies a whole

@@ -1267,16 +1267,6 @@ object Dedup {
       org.apache.spark.sql.graft.TextHashExpressions.longSetJaccard(sa, sb),
       lit(0.0))
 
-  /** The composed intersect/union formulation [[jaccardBySets]] replaced
-    * (kept as its equivalence oracle): four hash-table builds per pair
-    * vs the native kernel's one.
-    */
-  def jaccardBySetsComposed(sa: Column, sb: Column): Column = {
-    val inter = size(array_intersect(sa, sb)).cast("double")
-    val union = size(array_union(sa, sb)).cast("double")
-    when(union > 0, inter / union).otherwise(lit(0.0))
-  }
-
   /** SimHash (64-bit here 32 to stay engine-portable): sign-sum of token
     * hash bits. Two near-identical documents differ in few bits; dedup
     * buckets on bit-prefixes or compares hamming distance on candidates.
@@ -1287,17 +1277,6 @@ object Dedup {
         (s, h) => s + shiftright(h, j).bitwiseAND(1L) * 2 - 1)
       when(bitSum > 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
-
-  /** Adds `out` = simhash of the text; token hashes come from ONE native
-    * fused pass ([[TextFunctions.shingleHashes]] with n=1) materialized in
-    * a column so the `bits` fold branches don't each recompute the md5 pass.
-    */
-  def withSimhash(df: DataFrame, textCol: String, out: String,
-                  bits: Int = 32): DataFrame =
-    df
-      .withColumn("__sh_hs", shingleHashes(col(textCol), 1))
-      .withColumn(out, simhashFromHashes(col("__sh_hs"), bits))
-      .drop("__sh_hs")
 
   /** Single-expression simhash (tests / small inputs). */
   def simhash(textCol: Column, bits: Int = 32): Column =
@@ -1384,7 +1363,7 @@ object Dedup {
     *
     * Recall: same-cell pairs only at `nprobe = 1`; boundary pairs whose
     * members straddle cells are recovered by probing — one side joins on
-    * its `nprobe` nearest cells ([[Similarity.ivfRanking]]), the other on
+    * its `nprobe` nearest cells ([[Similarity.ivfProbeCells]]), the other on
     * its home cell, and orientations are normalized + deduplicated
     * (cosine is bit-symmetric, so distinct is exact). nprobe = nlist
     * degenerates to exact brute force (property-tested).

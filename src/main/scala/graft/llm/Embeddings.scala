@@ -215,24 +215,12 @@ object Embeddings {
     * instead of k x d interpreted higher-order-function lambdas
     * (measured 2.07 -> sub-second at 100k x 64, round 11, PERFNOTES
     * "Z-order clustered sink", native PCA addendum);
-    * bit-identical to [[pcaProjectComposed]] (same left-to-right
-    * double arithmetic — PcaSpec pins it).
+    * bit-identical to the composed higher-order-function form (same
+    * left-to-right double arithmetic — PcaSpec pins it).
     */
   def pcaProject(vec: Column, model: PcaModel): Column =
     org.apache.spark.sql.graft.PcaExpressions.pcaProject(
       vec, model.mean, model.components)
-
-  /** The composed HOF formulation [[pcaProject]] replaced — kept as
-    * its equivalence oracle.
-    */
-  def pcaProjectComposed(vec: Column, model: PcaModel): Column = {
-    val meanLit = array(model.mean.toIndexedSeq.map(lit(_)): _*)
-    val centered = zip_with(vec, meanLit, (x, m) => x.cast("double") - m)
-    array(model.components.toIndexedSeq.map { comp =>
-      val cl = array(comp.toIndexedSeq.map(lit(_)): _*)
-      aggregate(zip_with(centered, cl, (x, c) => x * c), lit(0.0), (acc, y) => acc + y)
-    }: _*)
-  }
 
   /** [[pcaProject]] narrowed to the engine's `array<float>` embedding
     * convention — the column the ANN / SemDeDup / IVF-PQ stack consumes

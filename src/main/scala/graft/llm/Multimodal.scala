@@ -28,16 +28,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** The typed metadata struct every media column carries. */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("mime", StringType),
-    StructField("byte_length", LongType),
-    StructField("content_hash", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType),
-    StructField("decode_error", StringType)))
-
   /** Map-only metadata for a binary media column: length + content digest
     * (no decode needed; pure Catalyst expressions).
     */

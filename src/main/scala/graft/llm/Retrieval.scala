@@ -46,20 +46,6 @@ object Retrieval {
         col("__t.tf").as("tf"), col("dl"))
   }
 
-  /** The composed explode + (doc, term) hash-agg + per-doc dl window
-    * formulation [[postings]] replaced — kept as its equivalence
-    * oracle (RetrievalSpec pins row-identity on randomized corpora).
-    */
-  def postingsComposed(corpus: DataFrame, idCol: String, textCol: String): DataFrame =
-    corpus
-      .select(col(idCol).as("doc_id"),
-        explode(tokens(col(textCol))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .withColumn("dl", sum(col("tf")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id"))
-        .cast("double"))
-      .select("doc_id", "term", "tf", "dl")
-
   /** Build-once postings index: the (doc, term) postings with document
     * frequency and document length ALREADY resolved, plus the one-row
     * corpus-stats frame — everything [[searchPostings]] needs, so search

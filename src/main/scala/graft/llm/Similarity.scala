@@ -93,7 +93,7 @@ object Similarity {
 
   /** [[ivfProbeCells]]'s table form: the `nprobe` nearest cells as
     * (idCol, `__cell`) rows — (cos desc, cell asc) ranked per row, the
-    * same order [[ivfRanking]] pins; a zero-norm vector probes no
+    * same order [[ivfProbeCells]] returns; a zero-norm vector probes no
     * cells. The rank runs as a window over the bare (id, cell, cos)
     * projection, never the payload.
     */
@@ -326,25 +326,6 @@ object Similarity {
       .select("query_id", "neighbor_id", "rank", "cos")
   }
 
-  /** Centroid indices (1-based) ordered by descending cosine to `vec`,
-    * ties broken by index — element 1 is [[ivfAssign]]'s cell. A zero-norm
-    * vector (every cosine null) ranks NO cells: the result is null, exactly
-    * as [[ivfAssign]] assigns null — so `explode` of a probe slice emits no
-    * rows and probed search agrees with single-cell search on degenerate
-    * inputs.
-    */
-  def ivfRanking(vec: Column, centroids: Column): Column = {
-    val scored = transform(centroids, c => cosine(vec, c))
-    val n = size(centroids)
-    // sort (negated cosine, index) pairs; null cosines (zero-norm) last
-    val pairs = transform(sequence(lit(1), n), i =>
-      struct(coalesce(-element_at(scored, i), lit(Double.MaxValue)).as("neg"),
-        i.as("idx")))
-    // array_max(scored) null <=> all cosines null <=> ivfAssign is null
-    when(array_max(scored).isNotNull,
-      transform(array_sort(pairs), p => p.getField("idx")))
-  }
-
   /** Lloyd's k-means over the embedding column — trains the IVF codebook
     * that [[ivfAssign]]/[[ivfTopK]] consume. Centroids initialize from the
     * first k rows by id; assignments are deterministic, and the mean
@@ -555,7 +536,7 @@ object Similarity {
     * [[pqTopK]] over every corpus row with a cell assignment
     * (property-tested); zero-norm corpus vectors have no cell (ivfAssign
     * returns null, matching [[ivfTopK]]) and zero-norm queries probe
-    * nothing (matching [[ivfRanking]]'s null contract).
+    * nothing (matching [[ivfProbeCells]]'s null contract).
     */
   /** Query-side coarse probe: every cell id (1-based, matching
     * [[ivfAssign]]) ranked by centroid cosine against the query vector.

@@ -210,13 +210,6 @@ object TextFunctions {
       .select("gram", "n_pair", "n_left", "n_right", "lift")
   }
 
-  /** Character n-grams of a string. */
-  def charShingles(text: Column, n: Int): Column =
-    when(length(text) >= n,
-      transform(sequence(lit(1), length(text) - (n - 1)),
-        i => text.substr(i, lit(n))))
-      .otherwise(array())
-
   /** Token count via a BPE-ish regex: alphanumeric runs and single
     * non-space symbols each count as one token — a cheap, deterministic
     * stand-in for subword tokenizers when budgeting corpus token counts.

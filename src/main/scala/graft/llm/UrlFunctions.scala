@@ -48,82 +48,14 @@ object UrlFunctions {
       .otherwise(concat_ws(".", sld, tld))
   }
 
-  /** A snapshot SUBSET of the publicsuffix.org rule list (same syntax:
-    * plain suffixes, `*.` wildcard rules, `!` exception rules) covering
-    * the high-traffic ccTLD second levels plus the `*.ck` / `!www.ck`
-    * pair. Kept as a SMALL deterministic fixture for specs and
-    * documentation; since r17 the bundled COMPLETE list
-    * ([[fullPslRules]]) is the [[pslRulesTable]] default — the
-    * algorithm is rule-set-agnostic and the join broadcasts at any
-    * realistic list size (~10k rows).
-    */
-  val defaultPslRules: Seq[String] = Seq(
-    // gTLD-style single labels are handled by the implicit `*` default;
-    // listing common ones anyway keeps parity with the real list
-    "com", "org", "net", "edu", "gov", "mil", "int", "io", "co",
-    // United Kingdom
-    "uk", "co.uk", "org.uk", "net.uk", "ac.uk", "gov.uk", "me.uk",
-    "ltd.uk", "plc.uk", "sch.uk", "nhs.uk",
-    // Australia
-    "au", "com.au", "net.au", "org.au", "edu.au", "gov.au", "asn.au",
-    "id.au",
-    // Japan
-    "jp", "co.jp", "or.jp", "ne.jp", "ac.jp", "go.jp", "ad.jp", "ed.jp",
-    "gr.jp", "lg.jp",
-    // Brazil
-    "br", "com.br", "net.br", "org.br", "gov.br", "edu.br",
-    // New Zealand
-    "nz", "co.nz", "net.nz", "org.nz", "ac.nz", "govt.nz", "school.nz",
-    // South Africa
-    "za", "co.za", "org.za", "net.za", "ac.za", "gov.za", "web.za",
-    // China
-    "cn", "com.cn", "net.cn", "org.cn", "gov.cn", "edu.cn", "ac.cn",
-    // India
-    "in", "co.in", "net.in", "org.in", "gen.in", "firm.in", "ind.in",
-    "ac.in", "edu.in", "res.in", "gov.in", "mil.in", "nic.in",
-    // South Korea
-    "kr", "co.kr", "or.kr", "ne.kr", "re.kr", "pe.kr", "go.kr", "ac.kr",
-    "mil.kr", "hs.kr", "ms.kr", "es.kr", "sc.kr",
-    // Mexico, Argentina, Turkey
-    "mx", "com.mx", "net.mx", "org.mx", "gob.mx", "edu.mx",
-    "ar", "com.ar", "net.ar", "org.ar", "gob.ar", "edu.ar",
-    "tr", "com.tr", "net.tr", "org.tr", "gov.tr", "edu.tr", "gen.tr",
-    "web.tr",
-    // Singapore, Hong Kong, Taiwan, Malaysia, Indonesia, Thailand
-    "sg", "com.sg", "net.sg", "org.sg", "gov.sg", "edu.sg", "per.sg",
-    "hk", "com.hk", "net.hk", "org.hk", "gov.hk", "edu.hk", "idv.hk",
-    "tw", "com.tw", "net.tw", "org.tw", "gov.tw", "edu.tw", "idv.tw",
-    "my", "com.my", "net.my", "org.my", "gov.my", "edu.my", "name.my",
-    "id", "co.id", "or.id", "net.id", "web.id", "ac.id", "sch.id",
-    "go.id", "mil.id", "biz.id", "my.id",
-    "th", "co.th", "or.th", "net.th", "ac.th", "go.th", "in.th",
-    "mi.th",
-    // Vietnam, Philippines, Pakistan, Bangladesh, Nigeria, Egypt,
-    // Saudi Arabia, Israel, Russia, Ukraine, Poland
-    "vn", "com.vn", "net.vn", "org.vn", "edu.vn", "gov.vn",
-    "ph", "com.ph", "net.ph", "org.ph", "gov.ph", "edu.ph",
-    "pk", "com.pk", "net.pk", "org.pk", "edu.pk", "gov.pk",
-    "bd", "com.bd", "net.bd", "org.bd", "edu.bd", "gov.bd", "ac.bd",
-    "ng", "com.ng", "net.ng", "org.ng", "edu.ng", "gov.ng", "name.ng",
-    "eg", "com.eg", "net.eg", "org.eg", "edu.eg", "gov.eg", "sci.eg",
-    "sa", "com.sa", "net.sa", "org.sa", "edu.sa", "gov.sa", "med.sa",
-    "il", "co.il", "org.il", "net.il", "ac.il", "gov.il", "muni.il",
-    "k12.il",
-    "ru", "com.ru", "org.ru", "net.ru", "msk.ru", "spb.ru",
-    "ua", "com.ua", "net.ua", "org.ua", "edu.ua", "gov.ua", "in.ua",
-    "pl", "com.pl", "net.pl", "org.pl", "edu.pl", "gov.pl", "waw.pl",
-    // Cook Islands: the real list's canonical wildcard + exception pair
-    "ck", "*.ck", "!www.ck")
-
   /** The COMPLETE publicsuffix.org rule list, bundled verbatim as a
     * classpath resource (public content — the Mozilla Public Suffix
     * List; its MPL 2.0 notice rides in the file's own comment header,
-    * which [[parsePslRules]] drops like any `//` line). VERDICT r16
-    * missing #1: with only the [[defaultPslRules]] snapshot subset, a
-    * real crawl hits suffixes outside the subset on day one and
-    * silently falls to the implicit `*` rule — the full list (~9.5k
-    * rules, still broadcast-sized) is now the [[pslRulesTable]]
-    * default. Raw lines; normalization happens at parse time.
+    * which [[parsePslRules]] drops like any `//` line). A subset would
+    * send a real crawl's suffixes outside it to the implicit `*` rule;
+    * the full list (~9.5k rules, still broadcast-sized) is the
+    * [[pslRulesTable]] default. Raw lines; normalization happens at
+    * parse time.
     */
   lazy val fullPslRules: Seq[String] = {
     val in = getClass.getResourceAsStream("/graft/public_suffix_list.dat")

@@ -8,13 +8,13 @@ import org.apache.spark.sql.functions._
   * tokenizer family next to [[BpeTrain]] (frequency-merge) and
   * [[UnigramLm]] (likelihood-prune):
   *
-  *  - TRAINING picks merges by the likelihood objective: merge the
-  *    adjacent pair maximizing count(ab) / (count(a)·count(b)) — the
-  *    pair whose fusion most increases a unigram LM's corpus
-  *    likelihood — instead of BPE's raw count(ab). Runs on the exact
-  *    [[BpeTrain]] machinery (distinct-word table, `pairCounts`,
-  *    `mergePair`, lineage cuts), so only the argmax differs: one
-  *    extra symbol-count aggregation per round, joined broadcast
+  *  - TRAINING ranks merges by the likelihood objective
+  *    ([[scoredPairs]]): the adjacent pair maximizing
+  *    count(ab) / (count(a)·count(b)) — the pair whose fusion most
+  *    increases a unigram LM's corpus likelihood — instead of BPE's raw
+  *    count(ab). It runs on the [[BpeTrain]] machinery (distinct-word
+  *    table, `pairCounts`, `mergePair`), so only the argmax differs:
+  *    one extra symbol-count aggregation per round, joined broadcast
   *    (symbol inventory = chars + learned merges, driver-bounded).
   *  - INFERENCE is greedy longest-match-first against a vocabulary in
   *    the `##`-continuation convention (how published vocab.txt files
@@ -30,15 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object WordPiece {
 
-  /** Learn up to `numMerges` merges by the likelihood score
-    * count(ab)/(count(a)·count(b)) over the [[BpeTrain.wordCounts]]
-    * frame ([[BpeTrain.EndOfWord]] convention). `minFrequency` floors
-    * the raw pair count — the likelihood score RANKS rare exclusive
-    * pairs highly (a hapax pair of hapax symbols scores 1.0), so the
-    * floor is what keeps the vocabulary from memorizing typos.
-    * Tie-break: (score, count) DESC then (a, b) ASC — deterministic on
-    * any cluster.
-    */
   /** The likelihood-scored pair table one training round ranks:
     * (a, b, n, na, nb, score) with score = n/(na·nb) — `n` the
     * adjacency count, `na`/`nb` the symbol occurrence counts, all
@@ -58,40 +49,6 @@ object WordPiece {
         Seq("b"))
       .withColumn("score", col("n").cast("double") /
         (col("na").cast("double") * col("nb").cast("double")))
-  }
-
-  def learnMerges(wordCounts: DataFrame, numMerges: Int,
-                  minFrequency: Long = 2,
-                  checkpointEvery: Int = 8): Seq[(String, String)] = {
-    var words = wordCounts
-      .select(BpeTrain.initSymbols(col("word")).as("syms"), col("cnt"))
-      .localCheckpoint()
-    var cut = words
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var i = 0
-    var done = false
-    try {
-      while (i < numMerges && !done) {
-        val top = scoredPairs(words, minFrequency)
-          .orderBy(col("score").desc, col("n").desc, col("a"), col("b"))
-          .limit(1)
-          .select("a", "b").collect()
-        if (top.isEmpty) done = true
-        else {
-          val (a, b) = (top(0).getString(0), top(0).getString(1))
-          merges += ((a, b))
-          words = words.withColumn("syms",
-            BpeTrain.mergePair(col("syms"), a, b))
-          if ((i + 1) % checkpointEvery == 0) {
-            words = words.localCheckpoint()
-            graft.Checkpoints.free(cut)
-            cut = words
-          }
-          i += 1
-        }
-      }
-    } finally graft.Checkpoints.free(cut)
-    merges.toSeq
   }
 
   /** The trained vocabulary in the `##` convention: replay `merges`

@@ -91,10 +91,7 @@ object FuzzyJoin {
       .withColumn("len", length(col("s")))
 
   /** The pre-aggregation gram join — the positional band, length band,
-    * ordering, and short-pair exclusion written ONCE (ADVICE r16:
-    * [[gramJoinRows]] previously re-implemented this 4-clause predicate,
-    * so a band tweak in [[candidates]] could silently diverge the
-    * benchmark metric from the operator it claims to measure). Output:
+    * ordering, and short-pair exclusion written ONCE. Output:
     * one row per surviving banded gram co-occurrence,
     * (s_a, s_b, __la, __lb).
     */
@@ -171,16 +168,4 @@ object FuzzyJoin {
     val (gramPairs, shortPairs) = candidates(df, strCol, maxDist, q)
     gramPairs.count() + shortPairs.count()
   }
-
-  /** Gram-join OUTPUT rows (pre-aggregation) — the stage whose volume
-    * the positional band cuts relative to the unbanded Σ df(g)² bill
-    * (round 16, PERFNOTES "Round 16 — positional q-grams land", next to
-    * the single-gram bill and the surviving verify set). Counts the
-    * SAME [[gramJoinRaw]] frame
-    * [[candidates]] aggregates, so the metric can never diverge from
-    * the operator.
-    */
-  def gramJoinRows(df: DataFrame, strCol: String, maxDist: Int,
-                   q: Int = 2): Long =
-    gramJoinRaw(distinctStrings(df, strCol), maxDist, q).count()
 }

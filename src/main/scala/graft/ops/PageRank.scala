@@ -33,30 +33,7 @@ object PageRank {
     */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85,
                checkpointEvery: Int = 4, saltJoin: Int = 0): DataFrame =
-    run(edges, None, iterations, damping, checkpointEvery, exact = true,
-      saltJoin = saltJoin)
-
-  /** THROUGHPUT tier: the same power iteration with IEEE-double sums
-    * instead of DECIMAL(38,18), at the price of the cross-engine/
-    * cross-partitioning bit-guarantee (fp addition is not associative,
-    * so results drift in the last ulps run-to-run). Measured (round 11,
-    * PERFNOTES "PageRank throughput tier"; 3 rounds over 1.2 M edges):
-    * 36.6 → 15.8 s
-    * — the 2.3× is the aggregation CPU (Decimal partial sums are
-    * object-backed and fall off the codegen fast path), NOT shuffle
-    * volume, which the per-round edge-join traffic dominates in both
-    * tiers (433 vs 427 MB). The 100 TB default when ranks feed a
-    * threshold or a sort, not an oracle; PageRankSpec pins
-    * |fast − exact| ≤ 1e-9 per node and identical top-k ordering ON
-    * THE TEST GRAPH (ADVICE r11: a fixture-scale pin, not a tier
-    * guarantee — at millions of edges partial-sum drift can exceed
-    * 1e-9 and flip near-tied orderings; callers needing bit-stable
-    * ranks use the exact tier).
-    */
-  def pageRankFast(edges: DataFrame, iterations: Int, damping: Double = 0.85,
-                   checkpointEvery: Int = 4, saltJoin: Int = 0): DataFrame =
-    run(edges, None, iterations, damping, checkpointEvery, exact = false,
-      saltJoin = saltJoin)
+    run(edges, None, iterations, damping, checkpointEvery, saltJoin = saltJoin)
 
   /** The measured hub-skew regime rule (PERFNOTES "Round 12 — hub-skew
     * PageRank" + r15; PageRankSpec "auto salt" pins it) as a pure
@@ -78,7 +55,7 @@ object PageRank {
     *     salt 13 = +10% vs salt 4 — r15 rerun); a degree-20 crawl
     *     graph caps at 40 and takes parity instead.
     *
-    * Cap 16 backstops both. Exact-tier results are bit-identical under
+    * Cap 16 backstops both. Results are bit-identical under
     * ANY salt (decimal sums are order-free; spec-pinned), so
     * auto-sizing is free of correctness risk.
     */
@@ -107,8 +84,7 @@ object PageRank {
     */
   def pageRankFrom(edges: DataFrame, initRanks: DataFrame, iterations: Int,
                    damping: Double = 0.85, checkpointEvery: Int = 4): DataFrame =
-    run(edges, Some(initRanks), iterations, damping, checkpointEvery,
-      exact = true)
+    run(edges, Some(initRanks), iterations, damping, checkpointEvery)
 
   /** CONVERGENCE-STOPPED power iteration (VERDICT r17 #5): iterate
     * until the DECIMAL-EXACT L1 delta of successive rank vectors —
@@ -118,9 +94,8 @@ object PageRank {
     * caller reads `roundsRun < maxIterations` as "converged". The stop
     * round is DETERMINISTIC under any partitioning (decimal sums are
     * order-free and every per-node update is a fixed expression tree —
-    * spec-pinned), which is why this variant exists only on the exact
-    * tier: IEEE-double partial sums would make the delta, and with it
-    * the ROUND COUNT, partitioning-dependent. Each round is
+    * spec-pinned); IEEE-double partial sums would make the delta, and
+    * with it the ROUND COUNT, partitioning-dependent. Each round is
     * materialized (the delta is an action on the successive pair), so
     * `checkpointEvery` does not apply — production authority runs
     * iterate to tolerance instead of guessing a fixed count.
@@ -129,9 +104,13 @@ object PageRank {
                     maxIterations: Int = 100, damping: Double = 0.85,
                     saltJoin: Int = 0): (DataFrame, Int) = {
     require(epsilon >= 0.0, "pageRankUntil: epsilon must be >= 0")
-    runCounted(edges, None, maxIterations, damping, 1, exact = true,
-      saltJoin = saltJoin, epsilon = Some(epsilon))
+    runCounted(edges, None, maxIterations, damping, 1, saltJoin = saltJoin,
+      epsilon = Some(epsilon))
   }
+
+  /** Every rank-mass sum goes through order-free DECIMAL(38,18). */
+  private def massSum(c: org.apache.spark.sql.Column) =
+    sum(c.cast("decimal(38,18)")).cast("double")
 
   /** `saltJoin` > 1 spreads each node's EDGE rows over that many salt
     * buckets in the per-round rank⋈edges join (the rank row replicates
@@ -140,19 +119,17 @@ object PageRank {
     * a single join task. AQE's skew split does NOT cover this join (it
     * is chained SMJ-after-SMJ on the same key inside one stage, which
     * the splitter skips — measured, PERFNOTES "Round 12 — hub-skew
-    * PageRank"). Exact-tier
-    * results are bit-identical under any salt (decimal sums are
-    * order-free); fast-tier results move in the last ulps like any
-    * repartitioning would. `saltJoin = 0` (the default) AUTO-sizes via
+    * PageRank"). Results are bit-identical under any salt (decimal
+    * sums are order-free). `saltJoin = 0` (the default) AUTO-sizes via
     * [[autoSaltJoin]] from the max out-degree — one extra 1-row
     * aggregation over the degree table the iteration builds anyway,
     * amortized across every round.
     */
   private def run(edges: DataFrame, init: Option[DataFrame], iterations: Int,
                   damping: Double, checkpointEvery: Int,
-                  exact: Boolean, saltJoin: Int = 0): DataFrame =
-    runCounted(edges, init, iterations, damping, checkpointEvery, exact,
-      saltJoin, epsilon = None)._1
+                  saltJoin: Int = 0): DataFrame =
+    runCounted(edges, init, iterations, damping, checkpointEvery, saltJoin,
+      epsilon = None)._1
 
   /** The shared loop. `epsilon = None` is the fixed-iteration path,
     * byte-identical to the pre-r18 `run` (the round body is one shared
@@ -163,20 +140,14 @@ object PageRank {
     */
   private def runCounted(edges: DataFrame, init: Option[DataFrame],
                          iterations: Int, damping: Double,
-                         checkpointEvery: Int, exact: Boolean,
-                         saltJoin: Int,
+                         checkpointEvery: Int, saltJoin: Int,
                          epsilon: Option[Double]): (DataFrame, Int) = {
-    // the ONLY tier difference: how cross-edge/cross-node mass sums.
-    // exact = order-free decimal; fast = native IEEE double agg.
-    def massSum(c: org.apache.spark.sql.Column) =
-      if (exact) sum(c.cast("decimal(38,18)")).cast("double")
-      else sum(c)
     require(iterations >= 0, "pageRank: iterations must be >= 0")
     require(checkpointEvery >= 1, "pageRank: checkpointEvery must be >= 1")
     // memory auto-sizing (VERDICT r18 #1): above the trigger the
     // edge collapse AND the iteration run on edge-proportional
     // partitions with the AQE coalescing floor pinned and a fat input
-    // respread — conf restored in the finally. Exact-tier results are
+    // respread — conf restored in the finally. Results are
     // partitioning-invariant (order-free decimal sums), so this cannot
     // move a byte; below the trigger the plan is byte-identical.
     val (e, edgeCount, restoreConf) = GraphMemory.sizedEdgesCounted(
@@ -375,8 +346,6 @@ object PageRank {
                           damping: Double, checkpointEvery: Int,
                           saltJoin: Int,
                           epsilon: Option[Double]): (DataFrame, Int) = {
-    def massSum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(38,18)")).cast("double")
     require(iterations >= 0, "pageRankWeighted: iterations must be >= 0")
     require(checkpointEvery >= 1,
       "pageRankWeighted: checkpointEvery must be >= 1")

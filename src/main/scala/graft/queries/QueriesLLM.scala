@@ -1077,18 +1077,6 @@ object QueriesLLM {
       .select(col("doc_id"), TextFunctions.htmlToText(html).as("extracted"))
   }
 
-  /** DEFLATE compression-ratio signal per document. NOT in the driver
-    * registry (r11 verdict: every registry entry must carry an oracle,
-    * and zlib output bytes are JDK-build-specific — no SQL replay can
-    * exist); CompressSpec is the verification surface: determinism,
-    * the repetitive≪prose ordering, and agreement with a direct
-    * Deflater computation.
-    */
-  def q_compression_ratio(spark: SparkSession, dir: String): DataFrame =
-    table(spark, dir, "documents")
-      .select(col("doc_id"),
-        TextFunctions.compressionRatio(col("text")).as("ratio"))
-
   /** The deterministic hostile-page template the crawl-extraction
     * queries share: styled head, script with markup-looking strings, a
     * link-farm nav (fails the density test), the document text as the
@@ -1444,9 +1432,9 @@ object QueriesLLM {
 
   /** The shared RFC 9309 oracle chain (parse + decision through the
     * `win` CTE) — `q_robots_filter` adds the projection,
-    * `q_crawl_frontier` composes scheduling on top. Written ONCE (the
-    * gramJoinRows lesson, ADVICE r11/r16): a tweak to the grammar or
-    * the ranking diverges every consumer together or not at all.
+    * `q_crawl_frontier` composes scheduling on top. Written ONCE: a
+    * tweak to the grammar or the ranking diverges every consumer
+    * together or not at all.
     */
   private lazy val robotsChainSql: String =
     s"""WITH RECURSIVE robots(host, txt) AS (VALUES $robotsValuesSql),
@@ -2330,28 +2318,6 @@ object QueriesLLM {
     UnigramLm.seedVocab(
       BpeTrain.wordCounts(table(spark, dir, "documents"), "text"),
       seedSize = 256)
-
-  /** TRAINED unigram-LM tokenization of the corpus. NOT in the driver
-    * registry (r11 verdict: every registry entry must carry an oracle;
-    * EM training runs through libm exp/log, whose last-ulp behavior no
-    * SQL replay can pin) — UnigramLmSpec is the verification surface:
-    * trainer vs brute-force enumeration, cross-partitioning
-    * bit-equality, and pieces re-concatenating to each document's
-    * letter-words. The VITERBI TOKENIZER itself returned to the oracle
-    * set in r17 as [[q_unigram_tokens]] (exact-grid model).
-    */
-  def q_unigram_tokens_trained(spark: SparkSession, dir: String): DataFrame = {
-    val docs = table(spark, dir, "documents")
-    val model = UnigramLm.train(
-      BpeTrain.wordCounts(docs, "text"), vocabSize = 512, seedSize = 1024)
-    UnigramLm.tokenize(
-        docs.select(col("doc_id"),
-          concat_ws(" ", filter(TextFunctions.tokens(col("text")),
-            w => w.rlike("^[a-z]+$"))).as("letters")),
-        "doc_id", "letters", model)
-      .select(col("doc_id"), col("pieces"),
-        size(col("pieces")).cast("long").as("n_pieces"))
-  }
 
   /** Unigram-LM VITERBI tokenization restored to the oracle set (r17,
     * VERDICT r16 missing #3) via the q_wordpiece_tokens playbook: the

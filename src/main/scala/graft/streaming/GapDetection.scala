@@ -50,58 +50,4 @@ object GapDetection {
           gaps.result().iterator
       }
   }
-
-  /** A reading carrying its event time (for TTL state eviction). */
-  case class ReadingTs(huis: Long, tsSec: Long, value: Double,
-                       eventTime: java.sql.Timestamp)
-
-  /** [[detectGaps]] with EVENT-TIME state eviction — the long-running
-    * fleet shape: `detectGaps` holds one LastSeen row per house EVER
-    * seen, dead meters forever included. Each house arms a timeout `ttl`
-    * past its newest reading; when the watermark passes it the row
-    * evicts silently (no gap is emitted for the tail — the stream cannot
-    * know whether the meter died or was decommissioned; the batch
-    * backfill owns open tails, as for [[StreamingImpute]]). A meter that
-    * resumes after eviction is treated as new: its first reading emits
-    * no gap, because the pre-resume silence already belongs to the batch
-    * horizon. The input MUST carry a watermark on `eventTime`.
-    */
-  def detectGapsExpiring(readings: Dataset[ReadingTs],
-                         stepSec: Long = 300L,
-                         ttlMs: Long = 24L * 3600 * 1000): Dataset[Gap] = {
-    implicit val gapEnc = Encoders.product[Gap]
-    implicit val stateEnc = Encoders.product[LastSeen]
-    implicit val longEnc = Encoders.scalaLong
-    readings
-      .groupByKey(_.huis)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (huis: Long, rows: Iterator[ReadingTs], state: GroupState[LastSeen]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsSec)
-            var last = state.getOption.map(_.tsSec)
-            val gaps = Seq.newBuilder[Gap]
-            sorted.foreach { r =>
-              last.foreach { l =>
-                val missed = (r.tsSec - l) / stepSec - 1
-                if (missed >= 1)
-                  gaps += Gap(huis, l + stepSec, r.tsSec - stepSec, missed)
-              }
-              last = Some(r.tsSec)
-            }
-            last.foreach { l =>
-              state.update(LastSeen(l))
-              // all-late batches must not arm a timeout the watermark
-              // already passed (setTimeoutTimestamp rejects those)
-              val maxEventMs = sorted.map(_.eventTime.getTime).max
-              state.setTimeoutTimestamp(math.max(maxEventMs + ttlMs,
-                state.getCurrentWatermarkMs() + 1))
-            }
-            gaps.result().iterator
-          }
-      }
-  }
 }

@@ -19,17 +19,12 @@ import graft.llm.{Dedup, TextFunctions, Warc}
   * [[Dedup.digestIndex]]) — stream == batch agreement is by
   * construction, StreamingCrawlSpec pins it on a two-batch fixture.
   *
-  * Two scale levers, each with both a small and a large mode:
+  * Two scale levers:
   *
-  *   - '''Archive bytes.''' [[ingestPaths]] is the production intake:
-  *     the stream carries file PATHS and each batch walks just the new
-  *     files via `binaryFiles` + [[Warc.parseWarcStream]] — a 1 GB
-  *     crawl segment streams record-by-record through an iterator and
-  *     never exists as one row value. [[parseWarcFiles]] (whole file
-  *     images as binary rows) remains for sources that genuinely
-  *     deliver bytes (a message bus carrying small segments); its
-  *     per-row footprint is the file size, so it does not scale to
-  *     standard ~1 GB segments.
+  *   - '''Archive bytes.''' [[parseWarcFiles]] maps whole file images
+  *     (binary rows) for sources that deliver bytes (a message bus
+  *     carrying small segments); its per-row footprint is the file
+  *     size.
   *   - '''Index size.''' The index the screen joins against is 16
   *     bytes per distinct accepted document (digest-only — archive
   *     payloads are never re-read, the monthly-crawl property the
@@ -360,47 +355,6 @@ object StreamingCrawl {
     ingest(stream, idCol, htmlCol, sinkDir, DirIndex(indexDir),
       checkpointDir, minTokens)
 
-  /** Production intake over a STREAMING frame of file PATHS (column
-    * `pathCol`) — the form that scales to standard ~1 GB crawl
-    * segments: each batch hands just the newly-arrived paths to
-    * `binaryFiles`, whose [[Warc.parseWarcStream]] walk streams each
-    * archive record-by-record in constant memory; the file bytes never
-    * exist as a row value (contrast [[parseWarcFiles]]). `prepare`
-    * maps the parsed response frame ([[Warc.Record]] fields + `html`)
-    * to the (idCol, html) rows the chain screens — e.g. deriving a
-    * numeric id from `target_uri`; it defaults to using `target_uri`
-    * itself as the id. Paths are collected to the driver per batch
-    * (bounded: file NAMES of one batch of arriving segments — the same
-    * driver-side path list any `binaryFiles` read starts from); paths
-    * must not contain commas (the Hadoop multi-path separator).
-    */
-  def ingestPaths(pathStream: DataFrame, pathCol: String,
-                  sinkDir: String, index: IndexStore, checkpointDir: String,
-                  prepare: DataFrame => DataFrame = identity,
-                  idCol: String = "target_uri",
-                  minTokens: Int = 5,
-                  autoCompactEvery: Int = 0): StreamingQuery =
-    pathStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val paths = batch.select(col(pathCol).cast("string"))
-          .distinct().as[String].collect()
-        if (paths.nonEmpty)
-          runBatch(prepare(parseWarcPaths(spark, paths.toSeq)), batchId,
-            idCol, "html", sinkDir, index, minTokens, autoCompactEvery)
-      }
-      .start()
-
-  /** Parsed `response` rows (with `html` decoded UTF-8) for the WARC
-    * files at exactly `paths` — [[Warc.readWarc]]'s streaming
-    * file-at-a-time walk over an explicit file list, the per-batch
-    * read behind [[ingestPaths]].
-    */
-  def parseWarcPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
-    Warc.responses(Warc.readWarc(spark, paths.mkString(",")))
-
   /** The shared `foreachBatch` body: screen against the committed
     * index, write survivors and their digests replay-exactly.
     */
@@ -435,9 +389,7 @@ object StreamingCrawl {
     * Map-only (flatMap over rows), so it composes with any streaming
     * source that delivers file images — but each row's footprint is
     * the whole file, so this is for SMALL segments (a message bus
-    * carrying pages or mini-batches); standard ~1 GB crawl segments
-    * take [[ingestPaths]], whose per-record iterator walk never holds
-    * a file in memory.
+    * carrying pages or mini-batches).
     */
   def parseWarcFiles(files: DataFrame, fileCol: String,
                      bytesCol: String): DataFrame = {

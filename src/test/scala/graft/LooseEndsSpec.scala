@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etd.{Impute, ImputeSummaries}
-import graft.llm.{Multimodal, Similarity, TextFunctions}
+import graft.llm.{ComposedForms, Multimodal, Similarity}
 
 /** Coverage for the smaller library surfaces not exercised elsewhere. */
 class LooseEndsSpec extends AnyFunSuite {
@@ -15,9 +15,9 @@ class LooseEndsSpec extends AnyFunSuite {
     spark.range(1).select(c).collect().head.get(0)
 
   test("character shingles") {
-    assert(one(TextFunctions.charShingles(lit("abcde"), 3))
+    assert(one(ComposedForms.charShingles(lit("abcde"), 3))
       .asInstanceOf[scala.collection.Seq[String]].toSeq == Seq("abc", "bcd", "cde"))
-    assert(one(size(TextFunctions.charShingles(lit("ab"), 3))) == 0)
+    assert(one(size(ComposedForms.charShingles(lit("ab"), 3))) == 0)
   }
 
   test("hyperplane LSH bucket: deterministic, equal for equal vectors") {

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 
-/** Pins [[BpeTrain.learnMergesBatched]] == [[BpeTrain.learnMerges]] —
+/** Pins [[BpeTrain.learnMergesBatched]] == [[SequentialMerges.bpe]] —
   * the EXACT merge list, not an approximation — on corpora built to
   * hit every hazard the prefix-batch argument guards against:
   * twin-heavy words (deep shared merge chains), tiny alphabets
@@ -33,7 +33,7 @@ class BatchedBpeSpec extends AnyFunSuite {
     for ((seed, alphabet) <- Seq((1, "ab"), (2, "abc"), (5, "aab"));
          batchSize <- Seq(2, 4, 16)) {
       val wc = BpeTrain.wordCounts(corpus(seed, alphabet, 40), "text")
-      val sequential = BpeTrain.learnMerges(wc, numMerges = 30)
+      val sequential = SequentialMerges.bpe(wc, numMerges = 30)
       val batched = BpeTrain.learnMergesBatched(wc, numMerges = 30,
         batchSize = batchSize)
       assert(batched == sequential,
@@ -46,7 +46,7 @@ class BatchedBpeSpec extends AnyFunSuite {
   test("batched respects numMerges and minFrequency like sequential") {
     val wc = BpeTrain.wordCounts(corpus(3, "abc", 30), "text")
     for (mf <- Seq(2L, 5L)) {
-      val sequential = BpeTrain.learnMerges(wc, numMerges = 12, minFrequency = mf)
+      val sequential = SequentialMerges.bpe(wc, numMerges = 12, minFrequency = mf)
       val batched = BpeTrain.learnMergesBatched(wc, numMerges = 12,
         minFrequency = mf, batchSize = 8)
       assert(batched == sequential, s"minFrequency=$mf")
@@ -59,7 +59,7 @@ class BatchedBpeSpec extends AnyFunSuite {
 
   test("batched uses fewer rounds than merges (the point of batching)") {
     val wc = BpeTrain.wordCounts(corpus(4, "abcd", 60), "text")
-    val sequential = BpeTrain.learnMerges(wc, numMerges = 25)
+    val sequential = SequentialMerges.bpe(wc, numMerges = 25)
     var rounds = 0
     val batched = BpeTrain.learnMergesBatched(wc, numMerges = 25,
       batchSize = 8, onRound = r => rounds = r)

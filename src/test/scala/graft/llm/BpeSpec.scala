@@ -23,7 +23,7 @@ class BpeSpec extends AnyFunSuite {
     //   (e,s)=9 over (s,t)=9/(t,</w>)=9 lexicographically; then
     //   (es,t)=9; (est,</w>)=9; (l,o)=7 over (o,w)=7; (lo,w)=7;
     //   (e,w)=6 over (n,e)=6/(w,est</w>)=6
-    val merges = BpeTrain.learnMerges(corpus, numMerges = 6)
+    val merges = SequentialMerges.bpe(corpus, numMerges = 6)
     assert(merges == Seq(
       "e" -> "s", "es" -> "t", "est" -> "</w>",
       "l" -> "o", "lo" -> "w", "e" -> "w"))
@@ -31,14 +31,14 @@ class BpeSpec extends AnyFunSuite {
 
   test("learnMerges: minFrequency stops before hapax pairs; checkpoint rounds agree") {
     // with minFrequency above every pair count, nothing is learned
-    assert(BpeTrain.learnMerges(corpus, 10, minFrequency = 100).isEmpty)
+    assert(SequentialMerges.bpe(corpus, 10, minFrequency = 100).isEmpty)
     // a checkpoint boundary inside the loop must not change the result
-    val every2 = BpeTrain.learnMerges(corpus, 6, checkpointEvery = 2)
-    assert(every2 == BpeTrain.learnMerges(corpus, 6))
+    val every2 = SequentialMerges.bpe(corpus, 6, checkpointEvery = 2)
+    assert(every2 == SequentialMerges.bpe(corpus, 6))
   }
 
   test("bpeSplit: replaying learned merges tokenizes unseen words") {
-    val merges = BpeTrain.learnMerges(corpus, 6)
+    val merges = SequentialMerges.bpe(corpus, 6)
     def toks(s: String): Seq[String] =
       spark.range(1).select(BpeTrain.bpeSplit(lit(s), merges))
         .collect().head.getSeq[String](0).toSeq
@@ -73,7 +73,7 @@ class BpeSpec extends AnyFunSuite {
       (i, (1 to (1 + rnd.nextInt(8))).map(_ => word()).mkString(" ")))
       .toDF("doc_id", "text")
     val wc = BpeTrain.wordCounts(docs, "text")
-    val merges = BpeTrain.learnMerges(wc, numMerges = 25, minFrequency = 2)
+    val merges = SequentialMerges.bpe(wc, numMerges = 25, minFrequency = 2)
     assert(merges.nonEmpty)
     val replay = docs
       .select(col("doc_id"), BpeTrain.bpeSplit(col("text"), merges).as("t"))
@@ -103,7 +103,7 @@ class BpeSpec extends AnyFunSuite {
       (i, if (i % 3 == 0) s"\t$body\n" else body)
     }.toDF("doc_id", "text")
     val wc = BpeTrain.wordCounts(docs, "text")
-    val merges = BpeTrain.learnMerges(wc, numMerges = 20, minFrequency = 2)
+    val merges = SequentialMerges.bpe(wc, numMerges = 20, minFrequency = 2)
     assert(merges.nonEmpty)
     val replay = docs
       .select(col("doc_id"), BpeTrain.bpeSplit(col("text"), merges).as("t"))

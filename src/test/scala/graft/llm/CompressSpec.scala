@@ -39,21 +39,6 @@ class CompressSpec extends AnyFunSuite {
     assert(ratios(texts, parts = 1) == ratios(texts, parts = 7))
   }
 
-  test("corpus query (spec-only since r12): every doc scored, bounded, stable") {
-    // deregistered from the driver registry (zlib bytes are
-    // JDK-build-specific — no SQL oracle can exist), so THIS is its
-    // whole-corpus pin
-    val dir = "/root/testdata/sf0.001"
-    val out = graft.queries.QueriesLLM.q_compression_ratio(SharedSpark.spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1))
-    assert(out.nonEmpty)
-    assert(out.forall { case (_, r) => r > 0.0 && r < 2.0 })
-    val again = graft.queries.QueriesLLM
-      .q_compression_ratio(SharedSpark.spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1))
-    assert(out.toSeq == again.toSeq)
-  }
-
   test("callable from SQL (extension registration path)") {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "compression_ratio",

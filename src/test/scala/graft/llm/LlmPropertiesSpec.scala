@@ -70,7 +70,7 @@ class LlmPropertiesSpec extends AnyFunSuite {
       val df = Seq((a, b)).toDF("a", "b")
       val Array(native, composed) = df.select(
           Dedup.jaccardBySets(col("a"), col("b")).as("n"),
-          Dedup.jaccardBySetsComposed(col("a"), col("b")).as("c"))
+          ComposedForms.jaccardBySets(col("a"), col("b")).as("c"))
         .collect().head.toSeq.map(_.asInstanceOf[Double]).toArray
       native == composed
     }, n = 30)

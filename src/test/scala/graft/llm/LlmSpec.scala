@@ -508,7 +508,7 @@ class LlmSpec extends AnyFunSuite {
     val zero = Seq((9L, Array(0.0f, 0.0f))).toDF("id", "v")
     val r = zero.select(
       Similarity.ivfAssign(col("v"), cents).as("cell"),
-      Similarity.ivfRanking(col("v"), cents).as("ranking")).collect()(0)
+      ComposedForms.ivfRanking(col("v"), cents).as("ranking")).collect()(0)
     assert(r.isNullAt(0) && r.isNullAt(1),
       "assignment and ranking must agree (both null) on degenerate input")
     val corpus = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)))
@@ -557,7 +557,7 @@ class LlmSpec extends AnyFunSuite {
     for (n <- Seq(1, 2, 3, 4, 9)) { // 9 > nlist: full ranking
       val rows = vecs.select(
         Similarity.ivfProbeCells(col("v"), cents, n).as("native"),
-        slice(Similarity.ivfRanking(col("v"), cents), 1, n).as("ranked"))
+        slice(ComposedForms.ivfRanking(col("v"), cents), 1, n).as("ranked"))
         .collect()
       rows.foreach { r =>
         val nv = if (r.isNullAt(0)) null else r.getSeq[Long](0)

@@ -48,7 +48,7 @@ class NativeTextHashSpec extends AnyFunSuite {
     for (n <- Seq(2, 3)) {
       val rows = df.select(
         TextFunctions.charShingleHashes(col("t"), n) ===
-          transform(TextFunctions.charShingles(col("t"), n),
+          transform(ComposedForms.charShingles(col("t"), n),
             s => legacyHash(s))).collect()
       assert(rows.forall(_.getBoolean(0)), s"mismatch at n=$n")
     }
@@ -65,7 +65,7 @@ class NativeTextHashSpec extends AnyFunSuite {
     for (n <- Seq(2, 3)) {
       val rows = df.select(
         TextFunctions.charShingleHashesFast(col("t"), n) ===
-          transform(TextFunctions.charShingles(col("t"), n),
+          transform(ComposedForms.charShingles(col("t"), n),
             s => xxhash64(s))).collect()
       assert(rows.forall(_.getBoolean(0)), s"char mismatch at n=$n")
     }
@@ -110,7 +110,7 @@ class NativeTextHashSpec extends AnyFunSuite {
   test("relational simhashSignatures == array-column withSimhash") {
     val rel = Dedup.simhashSignatures(df, "id", "t")
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val arr = Dedup.withSimhash(df, "t", "sh")
+    val arr = ComposedForms.withSimhash(df, "t", "sh")
       .select(col("id"), coalesce(col("sh"), lit(0L)))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(rel == arr)

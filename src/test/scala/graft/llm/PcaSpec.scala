@@ -90,7 +90,7 @@ class PcaSpec extends AnyFunSuite {
   test("native projection == composed HOF form bit-for-bit; short vectors null") {
     val rows = df.select(col("id"),
         Embeddings.pcaProject(col("vec"), model).as("nat"),
-        Embeddings.pcaProjectComposed(col("vec"), model).as("comp"))
+        ComposedForms.pcaProject(col("vec"), model).as("comp"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[Double](1) == r.getSeq[Double](2), s"id ${r.getLong(0)}")

@@ -305,7 +305,7 @@ class RetrievalSpec extends AnyFunSuite {
     val corpus = ((0L until 40L).map(i => (i, doc())) :+ (98L, "") :+ (99L, " \t\n "))
       .toDF("doc_id", "text")
     val rowLocal = Retrieval.postings(corpus, "doc_id", "text").collect().toSet
-    val composed = Retrieval.postingsComposed(corpus, "doc_id", "text").collect().toSet
+    val composed = ComposedForms.postings(corpus, "doc_id", "text").collect().toSet
     assert(rowLocal == composed)
     // the row-local build plans NO exchange for the postings table
     val plan = Retrieval.postings(corpus, "doc_id", "text")

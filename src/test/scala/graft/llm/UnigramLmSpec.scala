@@ -116,27 +116,4 @@ class UnigramLmSpec extends AnyFunSuite {
     assert(rows(2L).isEmpty)
   }
 
-  test("trained corpus query (spec-only): pieces re-concatenate; deterministic") {
-    // the TRAINED path stays out of the driver registry (EM runs
-    // through libm — no SQL oracle can exist), so THIS is its
-    // whole-corpus pin; the Viterbi tokenizer itself is driver-checked
-    // since r17 via q_unigram_tokens' exact-grid model
-    val dir = "/root/testdata/sf0.001"
-    val out = graft.queries.QueriesLLM.q_unigram_tokens_trained(SharedSpark.spark, dir)
-      .collect().map(r => (r.getLong(0), r.getSeq[String](1), r.getLong(2)))
-    assert(out.nonEmpty)
-    val letters = SharedSpark.spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), concat_ws(" ",
-        filter(TextFunctions.tokens(col("text")),
-          w => w.rlike("^[a-z]+$"))).as("l"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    out.foreach { case (id, pieces, n) =>
-      assert(n == pieces.length.toLong)
-      assert(pieces.mkString == letters(id).replace(" ", ""),
-        s"doc $id pieces do not re-concatenate")
-    }
-    val again = graft.queries.QueriesLLM.q_unigram_tokens_trained(SharedSpark.spark, dir)
-      .collect().map(r => (r.getLong(0), r.getSeq[String](1), r.getLong(2)))
-    assert(out.toSeq == again.toSeq)
-  }
 }

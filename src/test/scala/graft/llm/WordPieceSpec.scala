@@ -25,8 +25,8 @@ class WordPieceSpec extends AnyFunSuite {
       ("xa", 3L), ("ya", 3L), ("ax", 2L), ("ay", 2L), // x,y inflation
       ("qz", 3L))   // q,z exclusive
       .toDF("word", "cnt")
-    val bpePick = BpeTrain.learnMerges(wc, numMerges = 1, minFrequency = 2)
-    val wpPick = WordPiece.learnMerges(wc, numMerges = 1, minFrequency = 2)
+    val bpePick = SequentialMerges.bpe(wc, numMerges = 1, minFrequency = 2)
+    val wpPick = SequentialMerges.wordPiece(wc, numMerges = 1, minFrequency = 2)
     assert(bpePick.head != wpPick.head)
     assert(wpPick.head == (("q", "z")))
   }
@@ -34,9 +34,9 @@ class WordPieceSpec extends AnyFunSuite {
   test("minFrequency floors the score ranking; merges stay deterministic") {
     // hapax pair of hapax symbols scores 1.0 — the floor must exclude it
     val wc = Seq(("ab", 5L), ("qz", 1L)).toDF("word", "cnt")
-    val merges = WordPiece.learnMerges(wc, numMerges = 3, minFrequency = 2)
+    val merges = SequentialMerges.wordPiece(wc, numMerges = 3, minFrequency = 2)
     assert(merges.forall { case (a, b) => !(a == "q" || b == "z") })
-    val again = WordPiece.learnMerges(wc.repartition(7), numMerges = 3,
+    val again = SequentialMerges.wordPiece(wc.repartition(7), numMerges = 3,
       minFrequency = 2)
     assert(merges == again)
   }
@@ -74,7 +74,7 @@ class WordPieceSpec extends AnyFunSuite {
   test("trained vocab round-trips its own training words") {
     val wc = Seq(("hello", 4L), ("hell", 2L), ("help", 2L), ("low", 3L))
       .toDF("word", "cnt")
-    val merges = WordPiece.learnMerges(wc, numMerges = 4, minFrequency = 2)
+    val merges = SequentialMerges.wordPiece(wc, numMerges = 4, minFrequency = 2)
     val vocab = WordPiece.vocabulary(wc, merges)
       .as[(String, Long)].collect().map(_._1).toSet
     val docs = Seq((0L, "hello hell help low")).toDF("doc_id", "text")

@@ -34,40 +34,6 @@ class GapDetectionSpec extends AnyFunSuite {
     assert(got == Set((600L, 1200L, 3L), (1800L, 1800L, 1L)))
   }
 
-  test("expiring: an evicted house resumes as new — no cross-horizon gap") {
-    implicit val sqlCtx = spark.sqlContext
-    import GapDetection.ReadingTs
-    val input = MemoryStream[ReadingTs]
-    def r(huis: Long, ts: Long) =
-      ReadingTs(huis, ts, 1.0, new java.sql.Timestamp(ts * 1000))
-    val query = GapDetection.detectGapsExpiring(
-        input.toDS().withWatermark("eventTime", "0 seconds").as[ReadingTs],
-        stepSec = 300L, ttlMs = 600 * 1000) // 10 min TTL
-      .writeStream.format("memory").queryName("gaps_expiring")
-      .outputMode("append").start()
-    // house 1 reports once then dies; house 2 keeps the watermark moving
-    input.addData(r(1L, 300), r(2L, 300))
-    query.processAllAvailable()
-    input.addData(r(2L, 7200))
-    query.processAllAvailable()
-    input.addData(r(2L, 7500)) // house 1's timeout fires this batch
-    query.processAllAvailable()
-    // house 1 resumes 2.5h later: with NoTimeout state this would emit a
-    // ~28-slot gap; post-eviction it is a fresh house — silence older
-    // than the TTL horizon belongs to the batch backfill
-    input.addData(r(1L, 9300), r(1L, 9600))
-    query.processAllAvailable()
-    query.stop()
-    val got = spark.table("gaps_expiring").as[Gap].collect()
-      .map(g => (g.huis, g.fromSec, g.toSec, g.missedSlots)).toSet
-    // resume slots 9300/9600 are contiguous, so the evicted house emits
-    // NOTHING — the ~28-slot silence never surfaces as an in-stream gap
-    assert(got.forall(_._1 != 1L),
-      s"cross-horizon gap emitted for the evicted house: $got")
-    // the live house's in-horizon gaps still detect normally
-    assert(got.contains((2L, 600L, 6900L, 22L)), s"got $got")
-  }
-
   test("off-grid consecutive readings emit no inverted zero-slot gaps") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Reading]

@@ -113,57 +113,6 @@ class StreamingCrawlSpec extends AnyFunSuite {
     assert(ids == Set(1L, 3L), s"politeness must drop id 2, got $ids")
   }
 
-  test("path-based ingestion == image-based ingestion on the two-batch fixture") {
-    implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("crawl_paths").toString
-    val (warcDir, sink, idx, ckpt) =
-      (s"$tmp/warc", s"$tmp/sink", s"$tmp/index", s"$tmp/ckpt")
-    Files.createDirectory(java.nio.file.Paths.get(warcDir))
-    def writeSeg(id: Long, body: String): String = {
-      val (name, bytes) = warcFile(id, body)
-      val p = java.nio.file.Paths.get(warcDir, name)
-      Files.write(p, bytes)
-      p.toString
-    }
-
-    val input = MemoryStream[String]
-    val query = StreamingCrawl.ingestPaths(
-      input.toDF().toDF("path"), "path", sink,
-      StreamingCrawl.DirIndex(idx), ckpt,
-      prepare = df => df
-        .withColumn("id",
-          regexp_extract(col("target_uri"), "/(\\d+)$", 1).cast("long"))
-        .select("id", "html"),
-      idCol = "id", minTokens = 5)
-
-    input.addData(
-      writeSeg(1L, s"$prose one"),
-      writeSeg(2L, "thin"),
-      writeSeg(3L, s"$prose one"))
-    query.processAllAvailable()
-    input.addData(
-      writeSeg(4L, s"$prose one"),
-      writeSeg(5L, s"$prose two"))
-    query.processAllAvailable()
-    query.stop()
-
-    // identical accepted set and field values as the image-variant test:
-    // the one-shot batch chain over the union is the shared truth
-    val got = spark.read.parquet(sink)
-      .select("id", "main", "n_tokens").collect().map(_.toSeq).toSet
-    val union = Seq(
-      1L -> s"$prose one", 2L -> "thin", 3L -> s"$prose one",
-      4L -> s"$prose one", 5L -> s"$prose two")
-      .map { case (id, b) => (id, page(b)) }.toDF("id", "html")
-    val (batchAccepted, _) = StreamingCrawl.acceptBatch(union, "id", "html",
-      Seq.empty[String].toDF("content_hash"), minTokens = 5)
-    val expect = batchAccepted
-      .select("id", "main", "n_tokens").collect().map(_.toSeq).toSet
-    assert(got == expect,
-      "path-variant must equal the image-variant / one-shot batch chain")
-    assert(got.map(_.head) == Set[Any](1L, 5L))
-  }
-
   test("bucketed index: same accepted set, replay-exact append, and the " +
       "anti join reads the index side without an Exchange") {
     implicit val sqlCtx = spark.sqlContext
