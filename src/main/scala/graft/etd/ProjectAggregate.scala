@@ -94,24 +94,4 @@ object ProjectAggregate {
             (delta - lag(delta, 1).over(w)).as(checkCol(c)))
         }: _*)
   }
-
-  /** The original per-column withColumn fold — retained only as the
-    * equivalence oracle for `rebuildCumulative` (ResampleAndAggSpec pins
-    * batched == fold byte-identically).
-    */
-  private[etd] def rebuildCumulativeFold(df: DataFrame,
-                                         cumulativeCols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(ProjectId, HouseId).orderBy(ReadingDate)
-    val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cumulativeCols.foldLeft(df) { (acc, c) =>
-      acc
-        .withColumn(originalCol(c), col(c))
-        .withColumn(c,
-          when(col(diffCol(c)).isNotNull, sum(diffCol(c)).over(running)))
-        .withColumn(checkCol(c), {
-          val delta = col(c) - col(originalCol(c))
-          delta - lag(delta, 1).over(w)
-        })
-    }
-  }
 }

@@ -51,26 +51,6 @@ object Resample {
     case other => throw new IllegalArgumentException(s"Unknown interval $other")
   }
 
-  /** The densified bucket spine: for each group, every interval bucket from
-    * its min to its max observed bucket (aggregate.py:843-852's
-    * `.resample().size()` skeleton). Exposed for spine-shape parity checks;
-    * `resample` itself densifies post-aggregation (see `densify`) so the
-    * input lineage is never executed twice.
-    */
-  def bucketSpine(df: DataFrame, groupCols: Seq[String],
-                  interval: String): DataFrame = {
-    val secs = intervalSeconds(interval)
-    val b = bucket(col(ReadingDate), interval).cast("long")
-    df.groupBy(groupCols.map(col): _*)
-      .agg(min(b).as("__min_b"), max(b).as("__max_b"))
-      .select(
-        groupCols.map(col) :+
-          explode(sequence(col("__min_b"), col("__max_b"), lit(secs)))
-            .as("__bucket"): _*)
-      .withColumn(ReadingDate, timestamp_seconds(col("__bucket")))
-      .drop("__bucket")
-  }
-
   /** Resample one or more variables to `interval` with the reference's
     * min_count gate (aggregate.py:830-841: 3/12/72/288 source rows for
     * 15min/60min/6h/24h). `variables` maps column name -> method

@@ -209,28 +209,15 @@ object BpeTrain {
     if (guarded.isEmpty) Seq((top.head._1, top.head._2)) else guarded.toSeq
   }
 
-  /** Tokenize with a learned merge list: per word, start from
-    * [[initSymbols]] and replay the merges IN LEARNED ORDER (the
-    * definition of BPE application; rank-greedy implementations are an
-    * equivalent optimization). Pure expression — the merge list unrolls
-    * into `merges.size` nested folds inside one transform, so whole
-    * rows never leave codegen'd projection. Intended for bounded merge
-    * lists (vocab prototyping, spec/oracle checks; past a few hundred
-    * merges the expression tree is better replaced by a broadcast
-    * rank-table mapPartitions, the [[Multimodal]] justification).
-    */
-  def bpeSplit(text: Column, merges: Seq[(String, String)]): Column =
-    flatten(transform(TextFunctions.tokens(text), w =>
-      merges.foldLeft(initSymbols(w)) { case (s, (a, b)) => mergePair(s, a, b) }))
-
   /** Production tokenization for UNBOUNDED merge lists (a 32k-vocab
-    * tokenizer would unroll [[bpeSplit]] into 32k nested folds): the
+    * tokenizer unrolled as a learned-order replay expression would be
+    * 32k nested folds): the
     * rank-greedy algorithm over a broadcast rank table — per word,
     * repeatedly merge every occurrence of the lowest-rank adjacent pair
     * until none has a rank. Equivalent to learned-order replay (lower
     * ranks cannot be re-enabled by higher-rank merges — a merged symbol
     * is a NEW symbol, so its pairs were never ranked lower), which
-    * BpeSpec property-pins against [[bpeSplit]]. mapPartitions is
+    * BpeSpec property-pins against the replay. mapPartitions is
     * justified here exactly as for [[Multimodal]]: a per-row iterative
     * loop with data-dependent trip count that no Catalyst expression
     * expresses; the merge table ships once per executor as a broadcast.

@@ -48,10 +48,10 @@ object Curation {
     * S-curve, pinned so the DuckDB oracles replay it. At LOW
     * `jaccardThreshold` that banding under-generates candidates (a
     * true pair at s = 0.2 is found with p ≈ 0.006 vs 0.97 under the
-    * planned (16, 1) — [[Dedup.lshCandidateProbability]]); production
-    * runs targeting loose thresholds should dedup through
-    * [[Dedup.nearDedupPlanned]] instead, accepting that its kept set
-    * is banding-dependent and not replayed by the fixed-band oracles.
+    * planned (16, 1)); production runs targeting loose thresholds
+    * should band per [[Dedup.lshPlan]] instead, accepting that the kept
+    * set is then banding-dependent and not replayed by the fixed-band
+    * oracles.
     */
   def curate(docs: DataFrame, idCol: String, textCol: String,
              minQuality: Double = 0.25,
@@ -178,9 +178,8 @@ object Curation {
     * `smoothed = (sum_g + m·prior) / (n_g + m)` with `prior` the corpus
     * mean and `m` the pseudo-count weight converges to the group mean
     * as n_g grows. One row per group: `n_group`, `group_mean`, `prior`,
-    * `smoothed_quality` — [[withGroupQualityPrior]] broadcasts it back
-    * per document for gates that mix a document's own score with its
-    * group's reputation.
+    * `smoothed_quality` — broadcast-join it back per document for gates
+    * that mix a document's own score with its group's reputation.
     *
     * Arithmetic is the engine-portable contract ([[graft.etd
     * .Aggregates.exactMean]]'s): `qualityCol` is a rounded-at-
@@ -217,15 +216,6 @@ object Curation {
           (col("n_group") + lit(m))))
       .select(groupCol, "n_group", "group_mean", "prior", "smoothed_quality")
   }
-
-  /** [[groupQualityPrior]] joined back onto `docs` (broadcast — the
-    * group table is domain-cardinality): every row gains its group's
-    * `n_group`/`group_mean`/`prior`/`smoothed_quality`.
-    */
-  def withGroupQualityPrior(docs: DataFrame, groupCol: String,
-                            qualityCol: String, m: Double): DataFrame =
-    docs.join(broadcast(groupQualityPrior(docs, groupCol, qualityCol, m)),
-      Seq(groupCol))
 
   /** Token-exact blocklist gate (the UT1/"bad words" filter every
     * curation stack runs ahead of model-based quality): per document,

@@ -123,44 +123,6 @@ object Dedup {
       .drop("__span")
   }
 
-  /** Apply [[duplicateSpans]] output: remove the tokens inside each
-    * document's spans and stitch the remainder back together. Cuts EVERY
-    * span it is given — to keep one canonical copy per duplicated
-    * passage (Lee et al. keep-first), anti-join the canonical documents
-    * out of `spans` before calling (e.g. keep rows whose id is not the
-    * minimum id sharing the span's grams).
-    *
-    * Map-side surgery: spans aggregate to one small array per document
-    * (shuffled by id — span rows, not text), then a single projection
-    * filters each document's token positions through the span list.
-    * Documents without spans pass through untouched via the left join.
-    *
-    * Tokenization is the SAME whitespace-run split (empties dropped) the
-    * span positions were computed against (ShingleHashes64's contract) —
-    * a single-space split would mis-index any document containing
-    * newlines or tabs. Consequence: documents that DO get cut come back
-    * single-space-joined (whitespace runs normalized); untouched
-    * documents keep their original text byte-for-byte.
-    */
-  def cutSpans(df: DataFrame, spans: DataFrame, idCol: String,
-               textCol: String): DataFrame = {
-    val spanArr = spans.groupBy(col(idCol))
-      .agg(collect_list(struct(col("span_start"), col("span_end")))
-        .as("__spans"))
-    df.join(spanArr, Seq(idCol), "left")
-      .withColumn(textCol, when(col("__spans").isNull, col(textCol))
-        .otherwise(array_join(
-          filter(
-            transform(
-              filter(split(col(textCol), "\\s+"), t => length(t) > 0),
-              (t, i) => when(exists(col("__spans"), s =>
-                i >= s.getField("span_start") && i <= s.getField("span_end")),
-                lit(null)).otherwise(t)),
-            t => t.isNotNull),
-          " ")))
-      .drop("__spans")
-  }
-
   // ------------------------------------------------------------------
   // MinHash + LSH
   // ------------------------------------------------------------------
@@ -172,22 +134,6 @@ object Dedup {
   val lshPrime: Long = 2147483647L
   def seedA(i: Int): Long = 2L * i + 131L
   def seedB(i: Int): Long = 7L * i + 87L
-
-  /** MinHash signature from a pre-modded shingle-hash array column: for
-    * each of `numHashes` seeds, min over (a_i*h + b_i) mod p. The hash
-    * array MUST be a bound column (see [[withMinhashSignature]]): a raw
-    * expression would be inlined into all `numHashes` branches and the
-    * md5s recomputed per seed — higher-order-function lambdas get no
-    * common-subexpression elimination (measured 16-64x blowup at sf0.1).
-    */
-  def minhashFromHashes(modHashes: Column, numHashes: Int = 16): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), i => {
-      val a = element_at(array((0 until numHashes).map(j => lit(seedA(j))): _*), i + 1)
-      val b = element_at(array((0 until numHashes).map(j => lit(seedB(j))): _*), i + 1)
-      coalesce(
-        array_min(transform(modHashes, h => pmod(a * h + b, lit(lshPrime)))),
-        lit(lshPrime))
-    })
 
   /** (id, signature) via the relational MinHash shape: one native fused
     * tokenize→shingle→hash pass per document ([[TextFunctions.shingleHashes]]),
@@ -218,16 +164,6 @@ object Dedup {
           coalesce(col(s"__m$i"), lit(lshPrime))): _*).as("sig"))
   }
 
-  /** Single-expression signature (tests / small inputs). Prefer
-    * [[withMinhashSignature]] in pipelines.
-    */
-  def minhashSignature(textCol: Column, numHashes: Int = 16,
-                       shingleSize: Int = 3): Column = {
-    val hashes = transform(wordShingles(textCol, shingleSize),
-      s => pmod(hash64(s), lit(lshPrime)))
-    minhashFromHashes(hashes, numHashes) // hashes inlined per seed: test scale only
-  }
-
   /** LSH band keys: split the signature into `bands` bands of
     * signatureLength/bands rows each; each band's key is the md5 of its
     * joined values. Output: array<string> of length `bands`.
@@ -235,16 +171,6 @@ object Dedup {
   def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)),
       b => md5(concat_ws("_", slice(signature, b * rowsPerBand + 1, lit(rowsPerBand)))))
-
-  /** Exact LSH S-curve: the probability two documents at Jaccard `s`
-    * share at least one band key under independent minhashes —
-    * 1 − (1 − s^rows)^bands (Leskovec/Rajaraman/Ullman, MMDS ch. 3).
-    * The planning arithmetic behind [[lshPlan]], exposed so recall
-    * budgets can be stated in numbers, not folklore.
-    */
-  def lshCandidateProbability(s: Double, bands: Int,
-                              rowsPerBand: Int): Double =
-    1.0 - math.pow(1.0 - math.pow(s, rowsPerBand), bands)
 
   /** LSH band PLAN: the (bands, rowsPerBand) with bands·rows ≤
     * `numHashes` whose S-curve crossover (1/bands)^(1/rows) sits
@@ -271,19 +197,6 @@ object Dedup {
       if (safe.nonEmpty) safe.maxBy(p => (p._3, p._1)) // closest under t
       else plans.minBy(_._3)                           // highest recall
     (pick._1, pick._2)
-  }
-
-  /** [[nearDedup]] with the banding DERIVED from the threshold via
-    * [[lshPlan]] — the parameter a user actually has. Signature length
-    * becomes bands·rows (≤ numHashes; the remainder buys nothing).
-    */
-  def nearDedupPlanned(df: DataFrame, idCol: String, textCol: String,
-                       threshold: Double, numHashes: Int = 16,
-                       shingleSize: Int = 3, fast: Boolean = false)
-      : DataFrame = {
-    val (b, r) = lshPlan(threshold, numHashes)
-    nearDedup(df, idCol, textCol, jaccardThreshold = threshold,
-      numHashes = b * r, bands = b, shingleSize = shingleSize, fast = fast)
   }
 
   /** Candidate pairs from LSH banding: documents sharing any band key.
@@ -812,15 +725,14 @@ object Dedup {
     * (__id, __n, __prefix) with the df-ascending order and the fp-safe
     * prefix length. This is also the exact-join INDEX: persist it and
     * a later snapshot's prefixes join against it without re-reading
-    * archived text (the [[bandIndex]] pattern, but with a completeness
-    * guarantee).
+    * archived text (the [[bandIndexWithIds]] pattern, but with a
+    * completeness guarantee).
     */
   def jaccardPrefixes(sets: DataFrame, threshold: Double): DataFrame =
     jaccardPrefixesWithOrder(sets, jaccardDf(sets), threshold)
 
   /** Shingle document frequencies of a [[jaccardSets]] frame:
-    * (__h, __df) — the global-order statistic both prefix builders
-    * share, and the table [[jaccardIndexFrozen]] freezes.
+    * (__h, __df) — the global-order statistic of the prefix builders.
     */
   def jaccardDf(sets: DataFrame): DataFrame =
     sets.select(explode(col("__set")).as("__h"))
@@ -902,33 +814,11 @@ object Dedup {
       .select(col("__id").as("archive_id"), col("__n").as("n"),
         col("__prefix").as("prefix"), lit(threshold).as("t_build"))
 
-  /** [[jaccardIndex]] under FROZEN df order: returns (index, dfTable)
-    * — persist BOTH; the table (shingle_hash, df) is the global order
-    * every later snapshot must share, so screens prune with df-grade
-    * selectivity (frequent archive shingles leave prefixes) instead of
-    * hash-order's average case. The table is frozen at build: archive
-    * growth may append index rows under the ORIGINAL order (screens
-    * stay complete — consistency is what the bound needs, not
-    * freshness), but refreshing the order itself means rebuilding
-    * prefixes — an out-of-band compaction, the
-    * [[graft.streaming.StreamingRetrieval]] pattern.
-    */
-  def jaccardIndexFrozen(df: DataFrame, idCol: String, textCol: String,
-                         threshold: Double, shingleSize: Int = 3)
-      : (DataFrame, DataFrame) = {
-    val sets = jaccardSets(df, idCol, textCol, shingleSize)
-    val dfTable = jaccardDf(sets)
-    val index = jaccardPrefixesWithOrder(sets, dfTable, threshold)
-      .select(col("__id").as("archive_id"), col("__n").as("n"),
-        col("__prefix").as("prefix"), lit(threshold).as("t_build"))
-    (index, dfTable.select(col("__h").as("shingle_hash"), col("__df").as("df")))
-  }
-
   /** Incremental EXACT near-dup screen: drop every snapshot document
     * whose shingle-set Jaccard against SOME archived document clears
-    * `threshold` — complete (no banding miss-rate, unlike
-    * [[nearDupScreenAgainst]]) and false-positive-free (exact verify,
-    * like [[nearDupVerifyAgainst]]) in one call. Candidates come from
+    * `threshold` — complete (no banding miss-rate) and
+    * false-positive-free (exact verify, like [[nearDupVerifyAgainst]])
+    * in one call. Candidates come from
     * the snapshot's fixed-order prefixes joined to the persisted
     * [[jaccardIndex]] plus the size filter; the archive PAYLOAD is
     * touched only through a semi join on the candidates' archive ids,
@@ -940,34 +830,7 @@ object Dedup {
                           index: DataFrame, archiveText: DataFrame,
                           archiveIdCol: String, archiveTextCol: String,
                           threshold: Double,
-                          shingleSize: Int = 3): DataFrame =
-    jaccardScreen(df, idCol, textCol, index, archiveText, archiveIdCol,
-      archiveTextCol, threshold, shingleSize,
-      jaccardPrefixesFixedOrder(_, threshold))
-
-  /** [[jaccardDedupAgainst]] against a [[jaccardIndexFrozen]] pair: the
-    * snapshot's prefixes order by the index's FROZEN df table, so both
-    * sides share the order the completeness bound requires while
-    * pruning with the archive's selectivity statistics.
-    */
-  def jaccardDedupAgainstFrozen(df: DataFrame, idCol: String, textCol: String,
-                                index: DataFrame, dfTable: DataFrame,
-                                archiveText: DataFrame,
-                                archiveIdCol: String, archiveTextCol: String,
-                                threshold: Double,
-                                shingleSize: Int = 3): DataFrame = {
-    val order = dfTable.select(col("shingle_hash").as("__h"),
-      col("df").as("__df"))
-    jaccardScreen(df, idCol, textCol, index, archiveText, archiveIdCol,
-      archiveTextCol, threshold, shingleSize,
-      jaccardPrefixesWithOrder(_, order, threshold))
-  }
-
-  private def jaccardScreen(df: DataFrame, idCol: String, textCol: String,
-                            index: DataFrame, archiveText: DataFrame,
-                            archiveIdCol: String, archiveTextCol: String,
-                            threshold: Double, shingleSize: Int,
-                            prefixer: DataFrame => DataFrame): DataFrame = {
+                          shingleSize: Int = 3): DataFrame = {
     // a screen BELOW the index's build threshold needs prefixes the
     // index does not carry — candidates would silently go missing, so
     // refuse. One tiny max() job over the index's stamp column; indexes
@@ -987,7 +850,7 @@ object Dedup {
     // without a cut; lazy checkpoint, caller frees via Checkpoints.free
     val snapSets = jaccardSets(df, idCol, textCol, shingleSize)
       .localCheckpoint(false)
-    val snapPref = prefixer(snapSets)
+    val snapPref = jaccardPrefixesFixedOrder(snapSets, threshold)
       .select(col("__id"), col("__n").as("__na"),
         posexplode(col("__prefix")).as(Seq("__pa", "__h")))
     val archPref = index.select(col("archive_id"), col("n").as("__nb"),
@@ -1057,67 +920,14 @@ object Dedup {
                               index: DataFrame, archiveText: DataFrame,
                               archiveIdCol: String, archiveTextCol: String,
                               threshold: Double,
-                              shingleSize: Int = 3): DataFrame =
-    containmentScreen(df, idCol, textCol, index, archiveText, archiveIdCol,
-      archiveTextCol, threshold, shingleSize,
-      jaccardPrefixesFixedOrder(_, threshold))
-
-  /** [[containmentIndex]] under FROZEN df order — the
-    * [[jaccardIndexFrozen]] contract for the asymmetric screen: returns
-    * (index, dfTable); persist BOTH. The full lists order by the
-    * archive's df table, so snapshot prefixes (built by
-    * [[containmentDedupAgainstFrozen]] under the SAME frozen order)
-    * prune with df-grade selectivity — boilerplate shingles sit LAST in
-    * every list and enter prefixes only for all-boilerplate documents.
-    * Same freshness contract as the Jaccard twin: archive growth
-    * appends rows under the ORIGINAL order (consistency, not
-    * freshness, is what the completeness bound needs); refreshing the
-    * order itself is an out-of-band rebuild.
-    */
-  def containmentIndexFrozen(df: DataFrame, idCol: String, textCol: String,
-                             shingleSize: Int = 3): (DataFrame, DataFrame) = {
-    val sets = jaccardSets(df, idCol, textCol, shingleSize)
-    val dfTable = jaccardDf(sets)
-    val index = orderedFull(sets, dfTable)
-      .select(col("__id").as("archive_id"), col("__n").as("n"),
-        col("__full").as("full"))
-    (index, dfTable.select(col("__h").as("shingle_hash"), col("__df").as("df")))
-  }
-
-  /** [[containmentDedupAgainst]] against a [[containmentIndexFrozen]]
-    * pair: snapshot prefixes order by the index's frozen df table, the
-    * [[jaccardDedupAgainstFrozen]] discipline applied to the
-    * asymmetric screen.
-    */
-  def containmentDedupAgainstFrozen(df: DataFrame, idCol: String,
-                                    textCol: String, index: DataFrame,
-                                    dfTable: DataFrame,
-                                    archiveText: DataFrame,
-                                    archiveIdCol: String,
-                                    archiveTextCol: String,
-                                    threshold: Double,
-                                    shingleSize: Int = 3): DataFrame = {
-    val order = dfTable.select(col("shingle_hash").as("__h"),
-      col("df").as("__df"))
-    containmentScreen(df, idCol, textCol, index, archiveText, archiveIdCol,
-      archiveTextCol, threshold, shingleSize,
-      jaccardPrefixesWithOrder(_, order, threshold))
-  }
-
-  private def containmentScreen(df: DataFrame, idCol: String,
-                                textCol: String, index: DataFrame,
-                                archiveText: DataFrame,
-                                archiveIdCol: String,
-                                archiveTextCol: String, threshold: Double,
-                                shingleSize: Int,
-                                prefixer: DataFrame => DataFrame): DataFrame = {
+                              shingleSize: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containment screen: threshold must be in (0, 1], got $threshold")
     // the snapshot re-shingles twice (prefix build + verify side)
     // without a cut; lazy checkpoint, caller frees via Checkpoints.free
     val snapSets = jaccardSets(df, idCol, textCol, shingleSize)
       .localCheckpoint(false)
-    val snapPref = prefixer(snapSets)
+    val snapPref = jaccardPrefixesFixedOrder(snapSets, threshold)
       .select(col("__id"), col("__n").as("__na"),
         posexplode(col("__prefix")).as(Seq("__pa", "__h")))
     val archFull = index.select(col("archive_id"), col("n").as("__nb"),
@@ -1138,7 +948,7 @@ object Dedup {
     val dropped = candidates
       .join(snapCand, Seq("__id"))
       .join(archCand, Seq("archive_id"))
-      // unrounded at the boundary, the jaccardScreen discipline
+      // unrounded at the boundary, the jaccardDedupAgainst discipline
       .filter(containmentBySets(col("__sa"), col("__sb")) >= threshold)
       .select(col("__id").as(idCol)).distinct()
     df.join(dropped, Seq(idCol), "left_anti")
@@ -1303,10 +1113,6 @@ object Dedup {
           when(col(s"__b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
           .reduce(_ + _).as("simhash"))
   }
-
-  /** Hamming distance between two simhash values. */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 
   /** Cosine similarity of two float vectors, computed in double precision
     * with left-to-right accumulation (deterministic summation order — the
@@ -1585,28 +1391,6 @@ object Dedup {
     nearDupsFromCells(df, idCol, vecCol, threshold, aCells, bCells)
   }
 
-  /** [[embeddingNearDupsBucketedTwoLevel]] with coarse×fine MULTI-PROBE
-    * on the a-side ([[Similarity.ivfProbeCellsTwoLevel]], r16): a pair
-    * is found when one side's probe list reaches the other's home cell
-    * — the same asymmetric probing the flat table form uses, now with
-    * the two-level index's second miss surface (a neighbor whose home
-    * COARSE group differs) recoverable via coarseProbe > 1. Pair set is
-    * monotone in both probes; (1, 1) equals the single-probe two-level
-    * form and m = 1 equals the flat table form at the same nprobe
-    * (TwoLevelProbeSpec).
-    */
-  def embeddingNearDupsBucketedTwoLevelProbed(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      coarse: org.apache.spark.sql.Column, fine: DataFrame,
-      coarseProbe: Int, fineProbe: Int): DataFrame = {
-    val aCells = Similarity.ivfProbeCellsTwoLevel(df, idCol, vecCol,
-        coarse, fine, coarseProbe, fineProbe)
-      .withColumnRenamed(idCol, "id_a")
-    val bCells = Similarity.ivfAssignTwoLevel(df, idCol, vecCol, coarse, fine)
-      .withColumnRenamed(idCol, "id_b")
-    nearDupsFromCells(df, idCol, vecCol, threshold, aCells, bCells)
-  }
-
   /** [[semDedup]] over a two-level codebook — keep the lowest id of
     * each cell-local near-dup set, cells from the coarse→refine
     * assignment. Unassigned rows (zero-norm, or a coarse group owning
@@ -1639,9 +1423,10 @@ object Dedup {
     * pre-collapse (one linear hash-agg; provably identical kept set),
     * with only DISTINCT vectors entering the cell-bounded quadratic.
     */
-  def semDedupDistinctTable(df: DataFrame, idCol: String, vecCol: String,
-                            threshold: Double, centroids: DataFrame,
-                            nprobe: Int = 1): DataFrame = {
+  private[llm] def semDedupDistinctTable(df: DataFrame, idCol: String,
+                                         vecCol: String, threshold: Double,
+                                         centroids: DataFrame,
+                                         nprobe: Int = 1): DataFrame = {
     val nonzero = df.filter(l2norm(col(vecCol)) > 0)
     val zero = df.filter(!(l2norm(col(vecCol)) > 0))
     val reps = nonzero.groupBy(col(vecCol)).agg(min(col(idCol)).as(idCol))
@@ -1697,50 +1482,10 @@ object Dedup {
         digestOf(textCol) === index("content_hash"), "left_anti"),
       idCol, textCol)
 
-  /** Archive band-key index for the incremental NEAR-dup screen:
-    * distinct (band, band_key) rows — the banded-LSH analogue of
-    * [[digestIndex]], 1 md5 per band per distinct signature.
-    */
-  def bandIndex(df: DataFrame, idCol: String, textCol: String,
-                numHashes: Int = 16, bands: Int = 4,
-                shingleSize: Int = 3, fast: Boolean = false): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    minhashSignatures(df, idCol, textCol, numHashes, shingleSize, fast)
-      .select(posexplode(lshBandKeys(col("sig"), bands, rowsPerBand))
-        .as(Seq("band", "band_key")))
-      .distinct()
-  }
-
-  /** Near-dup SCREEN of a new snapshot against an archive [[bandIndex]]:
-    * drops every row sharing ANY band key with the archive (band
-    * collision = LSH candidate, treated as duplicate — the membership
-    * semantics of the screen; the false-positive rate is the banding
-    * scheme's, tunable via bands/rowsPerBand). Survivors are documents
-    * no archived signature collides with. Exact Jaccard verification
-    * against archived TEXT requires the archive payload and is a batch
-    * job over both snapshots — this screen exists so that job only ever
-    * runs on the collision subset.
-    */
-  def nearDupScreenAgainst(df: DataFrame, idCol: String, textCol: String,
-                           index: DataFrame,
-                           numHashes: Int = 16, bands: Int = 4,
-                           shingleSize: Int = 3,
-                           fast: Boolean = false): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val hit = minhashSignatures(df, idCol, textCol, numHashes, shingleSize, fast)
-      .select(col(idCol),
-        posexplode(lshBandKeys(col("sig"), bands, rowsPerBand))
-          .as(Seq("band", "band_key")))
-      .join(index, Seq("band", "band_key"), "left_semi")
-      .select(col(idCol)).distinct()
-    df.join(hit, Seq(idCol), "left_anti")
-  }
-
-  /** Id-carrying archive band index — the verify-capable form of
-    * [[bandIndex]]: distinct (band, band_key, archive_id) rows, so a
-    * collision resolves to WHICH archived documents to verify against,
-    * not just that one exists. Still signature-scale (ids ride along —
-    * ~3x the membership index, never payload-scale).
+  /** Id-carrying archive band index: distinct (band, band_key,
+    * archive_id) rows, so a collision resolves to WHICH archived
+    * documents to verify against, not just that one exists. Still
+    * signature-scale (ids ride along, never payload).
     */
   def bandIndexWithIds(df: DataFrame, idCol: String, textCol: String,
                        numHashes: Int = 16, bands: Int = 4,
@@ -1754,9 +1499,9 @@ object Dedup {
       .distinct()
   }
 
-  /** The EXACT-verify batch job the band screen exists to bound
-    * ([[nearDupScreenAgainst]] treats any collision as a duplicate —
-    * membership semantics; this is the false-positive-free form). A
+  /** The EXACT-verify batch job over band collisions (membership
+    * alone would treat any collision as a duplicate; this is the
+    * false-positive-free form). A
     * snapshot document drops iff exact shingle-set Jaccard against some
     * band-colliding archive partner clears `jaccardThreshold`; screen
     * false positives (collision but low Jaccard) are recovered.

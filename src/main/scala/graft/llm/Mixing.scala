@@ -30,10 +30,10 @@ object Mixing {
     * never reorders the survivors within their shards. Changing `salt`
     * is a fresh permutation (new training run, new order).
     *
-    * Map-only: two native hash expressions, no shuffle here. The sink
+    * Map-only: two native hash expressions, no shuffle here. A sink
     * that materializes training files repartitions by `shard` and sorts
-    * within partitions by (`shuffle_order`, id) — see
-    * [[writeShuffled]] — which is ONE exchange for the whole corpus.
+    * within partitions by (`shuffle_order`, id) — ONE exchange for the
+    * whole corpus.
     */
   def shuffleKeys(df: DataFrame, idCol: String, nShards: Int,
                   salt: String = "shuffle"): DataFrame = {
@@ -42,19 +42,6 @@ object Mixing {
     df.withColumn("shard", pmod(TextFunctions.hash64(keyed), lit(nShards.toLong)))
       .withColumn("shuffle_order", TextFunctions.hash64b(keyed))
   }
-
-  /** Materialize the shuffled corpus as shard-grained parquet: one
-    * exchange (repartition on `shard`), local sort by the shuffle order
-    * with id as the total-order tie-break, one file tree per shard via
-    * partitionBy — a training reader streams shard directories in
-    * written order and gets the deterministic permutation.
-    */
-  def writeShuffled(df: DataFrame, idCol: String, nShards: Int, path: String,
-                    salt: String = "shuffle"): Unit =
-    shuffleKeys(df, idCol, nShards, salt)
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("shuffle_order"), col(idCol))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
 
   /** Token-budget mixture plan (the Pile/Llama-recipe step): given
     * per-source mixture `weights` and a total token `budget`, compute

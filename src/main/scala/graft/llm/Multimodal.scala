@@ -23,17 +23,9 @@ import org.apache.spark.sql.types._
   * (a) never shuffles the binary payload — metadata extraction is map-only
   * and joins happen on ids after dropping the bytes, and (b) sizes
   * partitions by bytes, not rows (`spark.sql.files.maxPartitionBytes`
-  * governs scan splits; downstream repartitioning uses byte-weighted
-  * ranges via [[repartitionByBytes]]).
+  * governs scan splits).
   */
 object Multimodal {
-
-  /** Map-only metadata for a binary media column: length + content digest
-    * (no decode needed; pure Catalyst expressions).
-    */
-  def byteMeta(bin: Column): Seq[(String, Column)] = Seq(
-    "byte_length" -> length(bin).cast("long"),
-    "content_hash" -> md5(bin))
 
   /** Expression-only metadata struct for a binary media column: mime tag,
     * byte length, content digest — everything derivable WITHOUT a decode,
@@ -71,32 +63,6 @@ object Multimodal {
       floor((height.cast("long") + (p - 1L)) / p)).cast("long")
   }
 
-  /** Audio/video token cost from HEADER-decoded duration:
-    * `ceil(duration_ms / msPerToken)` — discrete audio codecs spend a
-    * fixed token rate (e.g. 50 tokens/s = 20 ms/token for
-    * EnCodec-style codebooks, Defossez et al., arXiv:2210.13438), so
-    * budgeting reads the RIFF/Xing/mvhd header, never a sample. Null
-    * duration (undecodable) stays null, like [[patchTokens]].
-    */
-  def audioTokens(durationMs: Column, msPerToken: Long): Column = {
-    require(msPerToken > 0,
-      s"audioTokens: msPerToken must be positive, got $msPerToken")
-    val m = lit(msPerToken)
-    (floor((durationMs.cast("long") + (m - 1L)) / m)).cast("long")
-  }
-
-  /** Video token cost from header metadata alone: sampled frame count
-    * (the [[frameSampleIndexes]] grid — `ceil(duration_ms / everyMs)`
-    * frames) x per-frame ViT patches ([[patchTokens]]). Vision-language
-    * models spend tokens per sampled frame, so the budget is the frame
-    * grid times the tile count — all from the mvhd/RIFF duration and
-    * the dimension headers, never a decoded frame. Null duration or
-    * dims yield null, like the other budget columns.
-    */
-  def videoTokens(durationMs: Column, everyMs: Long,
-                  width: Column, height: Column, patch: Int): Column =
-    audioTokens(durationMs, everyMs) * patchTokens(width, height, patch)
-
   /** Frame-sample row expansion for video: one output row per sampled
     * frame index at `fps`-spaced offsets — the explode happens on
     * lightweight (id, frame_idx) rows; the binary payload is NOT
@@ -106,21 +72,6 @@ object Multimodal {
     when(durationMs.isNotNull && durationMs > 0,
       sequence(lit(0L), durationMs - 1, lit(everyMs)))
       .otherwise(array())
-
-  /** Byte-aware repartitioning: rows range-partition on (size class,
-    * content hash) — the size class isolates huge payloads (a 4K video
-    * != a thumbnail) and the hash spreads the rows WITHIN a class
-    * uniformly across its range. Without the hash, every row of one
-    * class shares a sort key and repartitionByRange cannot split them —
-    * a thumbnail-only corpus collapsed into a single partition.
-    * Deterministic (pure function of the payload), unlike a rand() salt.
-    */
-  def repartitionByBytes(df: DataFrame, bin: String, targetBytes: Long,
-                         numPartitions: Int): DataFrame =
-    df.withColumn("__w", (length(col(bin)).cast("long") / targetBytes).cast("int"))
-      .repartitionByRange(numPartitions, col("__w"), col(bin).isNull,
-        xxhash64(col(bin)))
-      .drop("__w")
 
   /** Batch decode via mapPartitions. Image dimensions and audio/video
     * durations come from the REAL payload bytes ([[ImageHeaders]] —

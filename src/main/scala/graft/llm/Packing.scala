@@ -43,80 +43,25 @@ object Packing {
       .drop("__cum", "__before")
   }
 
-  /** No-straddle bin packing — the OTHER packing discipline: each
-    * document lands whole in exactly one bin of capacity `budget`
-    * (trainers that cannot split a document across sequences pad the
-    * bin tail, so the packer's job is minimizing that padding).
-    * Best-fit-decreasing per shard: documents sort (length desc, id)
-    * and each takes the fullest open bin it fits; a bounded open-bin
-    * list (`maxOpenBins`) keeps per-shard state O(1) — bins that fall
-    * off the list are closed and never reopened, trading a bounded
-    * sliver of fill for streaming memory (the practical packer's
-    * standard move).
+  /** No-straddle bin packing, next-fit discipline: each document lands
+    * whole in exactly one bin of capacity `budget` (trainers that cannot
+    * split a document across sequences pad the bin tail). Documents
+    * shard by a content-stable id hash, order (length desc, id) within
+    * a shard, and fill ONE open bin — a document that does not fit
+    * closes the bin and opens the next. The assignment is a pure left
+    * fold over the ordered stream, which makes it the
+    * CROSS-ENGINE-CHECKABLE packer: an independent sequential replay
+    * (the driver's DuckDB recursive CTE) must reproduce every (doc,
+    * shard, bin) exactly. Shard-parallel (the hash repartition keeps
+    * each shard whole inside one partition; the local sort makes shards
+    * contiguous), O(1) state, one local sort. Documents longer than
+    * `budget` are rejected (truncate or chunk upstream — silently
+    * overflowing a bin would corrupt the training shape).
     *
-    * Scale shape mirrors [[packSequences]]: shard by content-stable
-    * hash, repartition so each partition holds whole shards, ONE local
-    * sort, one streaming pass per shard. Deterministic on any cluster
-    * size: same corpus -> same shards -> same (len desc, id) order ->
-    * same bins. Documents longer than `budget` are rejected (truncate
-    * or chunk upstream — silently overflowing a bin would corrupt the
-    * training shape).
-    *
-    * Output: input columns + (shard, bin_id) with bin_id shard-local;
-    * [[binReport]] derives per-bin fill/padding relationally so the
-    * packer itself streams with O(maxOpenBins) state.
+    * Output: input columns + (shard, bin_id) with bin_id shard-local.
     */
-  def packBins(df: DataFrame, idCol: String, tokenCol: String,
-               budget: Long, shards: Int, maxOpenBins: Int = 64): DataFrame = {
-    require(maxOpenBins > 0)
-    packSharded(df, idCol, tokenCol, budget, shards, "packBins") { () =>
-      var nextBin = 0L
-      val open = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      len => {
-        // best fit: fullest open bin with room; ties -> lowest bin id
-        var best = -1
-        var bestRem = Long.MaxValue
-        var i = 0
-        while (i < open.length) {
-          val rem = open(i)._2
-          if (rem >= len && (rem < bestRem ||
-              (rem == bestRem && (best < 0 || open(i)._1 < open(best)._1))))
-            { best = i; bestRem = rem }
-          i += 1
-        }
-        if (best >= 0) {
-          val (id, rem) = open(best)
-          if (rem - len == 0) open.remove(best)
-          else open(best) = (id, rem - len)
-          id
-        } else {
-          val id = nextBin; nextBin += 1
-          if (len < budget) {
-            open += ((id, budget - len))
-            if (open.length > maxOpenBins) {
-              // evict the most-full bin: least remaining to gain from
-              val victim = open.indices.minBy(j => (open(j)._2, open(j)._1))
-              open.remove(victim)
-            }
-          }
-          id
-        }
-      }
-    }
-  }
-
-  /** Shared distribution scaffolding for the no-straddle packers: shard
-    * by id hash, locally order (shard, len desc, id), and run a
-    * per-shard state machine over the ordered stream. `newState` builds
-    * one fold (len => bin id); a fresh fold starts at every shard
-    * boundary (the hash repartition keeps each shard whole inside one
-    * partition; the local sort makes shards contiguous), so the
-    * discipline is the ONLY thing a packer defines — the sharding hash,
-    * sort order, and schema handling cannot drift between them.
-    */
-  private def packSharded(df: DataFrame, idCol: String, tokenCol: String,
-                          budget: Long, shards: Int, name: String)
-                         (newState: () => Long => Long): DataFrame = {
+  def packBinsNextFit(df: DataFrame, idCol: String, tokenCol: String,
+                      budget: Long, shards: Int): DataFrame = {
     require(budget > 0 && shards > 0)
     val sharded = df
       .withColumn("shard", pmod(hash64(col(idCol).cast("string")), lit(shards.toLong)))
@@ -130,52 +75,23 @@ object Packing {
     val lenIdx = sharded.schema.fieldIndex("__len")
     val packed = sharded.mapPartitions { it =>
       var curShard = Long.MinValue
-      var fold: Long => Long = null
+      var bin = -1L // -1 = no open bin yet
+      var fill = 0L
       it.map { row =>
         val shard = row.getLong(shardIdx)
-        if (fold == null || shard != curShard) {
-          curShard = shard; fold = newState()
+        if (shard != curShard) {
+          curShard = shard; bin = -1L; fill = 0L
         }
         val len = row.getLong(lenIdx)
         require(len <= budget,
-          s"$name: document of $len tokens exceeds budget $budget")
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ fold(len))
+          s"packBinsNextFit: document of $len tokens exceeds budget $budget")
+        if (bin >= 0 && fill + len <= budget) fill += len
+        else { bin += 1; fill = len }
+        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ bin)
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
     packed.drop("__len")
   }
-
-  /** No-straddle packing, next-fit discipline: same shard + (length
-    * desc, id) order as [[packBins]], but exactly ONE open bin — a
-    * document that does not fit closes the bin and opens the next.
-    * Strictly more padding than best-fit-decreasing (PackBinsSpec
-    * measures the gap), but the assignment is a pure left fold over
-    * the ordered stream, which makes it the CROSS-ENGINE-CHECKABLE
-    * packer: an independent sequential replay (the driver's DuckDB
-    * recursive CTE) must reproduce every (doc, shard, bin) exactly.
-    * Same scale shape: shard-parallel, O(1) state, one local sort.
-    */
-  def packBinsNextFit(df: DataFrame, idCol: String, tokenCol: String,
-                      budget: Long, shards: Int): DataFrame =
-    packSharded(df, idCol, tokenCol, budget, shards, "packBinsNextFit") { () =>
-      var bin = -1L // -1 = no open bin yet
-      var fill = 0L
-      len => {
-        if (bin >= 0 && fill + len <= budget) fill += len
-        else { bin += 1; fill = len }
-        bin
-      }
-    }
-
-  /** Per-bin padding report over a [[packBins]] result: fill and
-    * padding per (shard, bin) plus the number of documents — a plain
-    * aggregation, so the packer itself never buffers a shard.
-    */
-  def binReport(packed: DataFrame, tokenCol: String, budget: Long): DataFrame =
-    packed.groupBy("shard", "bin_id")
-      .agg(sum(col(tokenCol).cast("long")).as("bin_fill"),
-        count(lit(1)).as("n_docs"))
-      .withColumn("padding", lit(budget) - col("bin_fill"))
 
   /** Overlapping token-window chunking — the within-document counterpart
     * of [[packSequences]] (RAG passage extraction, long-doc context

@@ -143,48 +143,6 @@ object Robots {
       .agg(max(col("crawl_delay")).as("crawl_delay"))
   }
 
-  /** Politeness pre-screen for intake chains: keep only rows whose
-    * `urlCol` the rules allow for `agent`, dropping the decision
-    * columns again so the batch schema comes back unchanged. Compose
-    * AHEAD of [[graft.streaming.StreamingCrawl.acceptBatch]] — or, in a
-    * real crawler, ahead of the fetch itself — so disallowed URLs never
-    * reach extraction. Inherits [[robotsAllowed]]'s zero-corpus-shuffle
-    * shape, so it adds only map work per batch. Batches that already
-    * carry a decision-column name are REJECTED loudly:
-    * [[robotsAllowed]]'s `withColumn` would silently overwrite such a
-    * column with URL-derived contents and this filter would then hand
-    * the corrupted value back under the original name.
-    */
-  def politeFilter(batch: DataFrame, rules: DataFrame, agent: String,
-                   idCol: String, urlCol: String = "url"): DataFrame = {
-    val decision = Seq("host", "path", "allowed", "matched_directive",
-      "matched_pattern")
-    val clash = decision.filter(batch.columns.contains)
-    require(clash.isEmpty,
-      s"politeFilter: batch columns ${clash.mkString(", ")} collide with " +
-        "the robots decision columns — rename them before the screen")
-    robotsAllowed(batch, rules, agent, idCol, urlCol)
-      .filter(col("allowed"))
-      .drop(decision: _*)
-  }
-
-  /** `Sitemap:` references declared in robots.txt — per RFC 9309 /
-    * sitemaps.org the directive is GROUP-INDEPENDENT (it may appear
-    * anywhere, including before any `User-agent` line), which is why
-    * [[parseRobots]] drops it and this reads the raw lines instead.
-    * Returns `(host, sitemap_url)`, URL case preserved.
-    */
-  def sitemapRefs(robots: DataFrame, hostCol: String, txtCol: String): DataFrame =
-    robots
-      .select(col(hostCol).as("host"),
-        explode(split(col(txtCol), "\n")).as("raw"))
-      .select(col("host"),
-        trim(regexp_replace(col("raw"), "#.*", "")).as("line"))
-      .filter(lower(col("line")).rlike("^sitemap\\s*:"))
-      .select(col("host"),
-        trim(regexp_extract(col("line"), "^[^:]+:(.*)$", 1)).as("sitemap_url"))
-      .filter(col("sitemap_url") =!= "")
-
   /** sitemaps.org `<urlset>` parsing: one row per `<url>` entry with
     * `loc` (required; entries without one are dropped), `lastmod`, and
     * `priority` (optional, null when absent). A fixed regex chain —
@@ -218,8 +176,8 @@ object Robots {
     * block with the CHILD sitemap `loc` (required; blocks without one
     * drop) and optional `lastmod` — the one nesting level the protocol
     * allows (index files may not reference index files), so the fetch
-    * loop's recursion is exactly: robots `Sitemap:` refs
-    * ([[sitemapRefs]]) → this parser when the payload is an index →
+    * loop's recursion is exactly: robots `Sitemap:` refs → this
+    * parser when the payload is an index →
     * [[sitemapEntries]] on the children. Same fixed-regex-chain,
     * map-only discipline as the urlset parser.
     */

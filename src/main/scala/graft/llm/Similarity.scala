@@ -218,208 +218,13 @@ object Similarity {
       .select("query_id", "neighbor_id", "rank", "cos")
   }
 
-  /** [[ivfTopK]] through the TWO-LEVEL codebook ([[ivfAssignTwoLevel]])
-    * — IVF search for codebooks past the literal/flat-argmax regime:
-    * corpus and queries take their coarse→refine cell (m + nlist/m
-    * cosines per row instead of nlist), each query searches only its
-    * own fine cell. Same search arithmetic and (cos desc, id) tie rule
-    * as the flat form; with m = 1 results are bit-identical to
-    * [[ivfTopK]] over the same cells (SemDedupTableSpec pins the
-    * degeneracy). Recall behaves like any IVF at nprobe 1 — neighbors
-    * across a cell boundary are missed; the two-level split adds the
-    * coarse boundary as a second miss surface, the standard
-    * inverted-multi-index trade.
-    */
-  def ivfTopKTwoLevel(queries: DataFrame, corpus: DataFrame, idCol: String,
-                      vecCol: String, coarse: Column, fine: DataFrame,
-                      k: Int): DataFrame = {
-    val qCells = ivfAssignTwoLevel(queries, idCol, vecCol, coarse, fine)
-      .withColumnRenamed(idCol, "query_id")
-    val cCells = ivfAssignTwoLevel(corpus, idCol, vecCol, coarse, fine)
-      .withColumnRenamed(idCol, "neighbor_id")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .join(qCells, Seq("query_id"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .join(cCells, Seq("neighbor_id"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("__cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
-  }
-
-  /** TWO-LEVEL multi-probe cell lists — the recall lever
-    * [[ivfTopKProbed]] gives the flat index, for codebooks past the
-    * literal regime (VERDICT r15 #5: the two-level tier previously
-    * degenerated to nprobe=1 semantics with no rescue): each row ranks
-    * its `coarseProbe` nearest coarse groups (one native loop over the
-    * m-cell literal), then cosine-ranks the fine cells OWNED by those
-    * groups and keeps the `fineProbe` best — (id, `__cell`) rows under
-    * the (cos desc, cell asc) tie rule everything else pins. Cost per
-    * row is m + coarseProbe·(nlist/m) cosines (vs nlist for flat
-    * multi-probe), so probing stays sub-linear in nlist while
-    * recovering BOTH miss surfaces of the single-probe two-level form:
-    * a neighbor across a FINE boundary (fineProbe > 1 — the flat
-    * lever) and one across a COARSE boundary, which no amount of fine
-    * probing can see because the home coarse group doesn't own the
-    * neighbor's cell (coarseProbe > 1 is the only rescue — the
-    * inverted-multi-index trade, Babenko & Lempitsky 2012).
-    * Degeneracies (TwoLevelProbeSpec): coarseProbe = fineProbe = 1
-    * reproduces [[ivfAssignTwoLevel]]'s cells; m = 1 with
-    * fineProbe = nprobe equals the flat [[ivfProbeCellsTable]]; probing
-    * everything (coarseProbe = m, fineProbe = nlist) ranks every
-    * defined cell.
-    */
-  def ivfProbeCellsTwoLevel(df: DataFrame, idCol: String, vecCol: String,
-                            coarse: Column, fine: DataFrame,
-                            coarseProbe: Int, fineProbe: Int): DataFrame = {
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("__cos").desc, col("__c"))
-    df.select(col(idCol), col(vecCol).as("__v"),
-        explode(ivfProbeCells(col(vecCol), coarse, coarseProbe)).as("__coarse"))
-      .join(broadcast(fine.select(col("coarse").cast("int").as("__coarse"),
-        col("cell").cast("int").as("__c"), col("cvec").as("__cv"))),
-        Seq("__coarse"))
-      .select(col(idCol), col("__c"),
-        cosine(col("__v"), col("__cv")).as("__cos"))
-      .filter(col("__cos").isNotNull)
-      .withColumn("__r", row_number().over(w))
-      .filter(col("__r") <= fineProbe)
-      .select(col(idCol), col("__c").as("__cell"))
-  }
-
-  /** [[ivfTopKTwoLevel]] with coarse × fine multi-probe on the QUERY
-    * side ([[ivfProbeCellsTwoLevel]]) — the corpus keeps its one home
-    * cell (index structure unchanged; probing is a search-time knob,
-    * exactly as in [[ivfTopKProbed]]). Each query meets a candidate at
-    * most once (its probe list is distinct cells; a corpus row lives in
-    * one cell), so no dedup pass is needed before the rank. Recall is
-    * monotone in both probes — a query's candidate set under
-    * (cp, fp) ⊇ under (1, 1) — and at coarseProbe = m,
-    * fineProbe = nlist every assigned candidate is scored, so results
-    * match flat multi-probe at nprobe = nlist over the same cell
-    * structure (both spec-pinned).
-    */
-  def ivfTopKTwoLevelProbed(queries: DataFrame, corpus: DataFrame,
-                            idCol: String, vecCol: String,
-                            coarse: Column, fine: DataFrame, k: Int,
-                            coarseProbe: Int, fineProbe: Int): DataFrame = {
-    val qCells = ivfProbeCellsTwoLevel(queries, idCol, vecCol, coarse, fine,
-        coarseProbe, fineProbe)
-      .withColumnRenamed(idCol, "query_id")
-    val cCells = ivfAssignTwoLevel(corpus, idCol, vecCol, coarse, fine)
-      .withColumnRenamed(idCol, "neighbor_id")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .join(qCells, Seq("query_id"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .join(cCells, Seq("neighbor_id"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("__cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
-  }
-
-  /** Lloyd's k-means over the embedding column — trains the IVF codebook
-    * that [[ivfAssign]]/[[ivfTopK]] consume. Centroids initialize from the
-    * first k rows by id; assignments are deterministic, and the mean
-    * update is deterministic FOR A FIXED PARTITIONING (double `avg` folds
-    * in partition order — exact reproducibility across different
-    * partitionings would need decimal accumulation, which the few-KB
-    * codebook doesn't warrant).
-    *
-    * Scale shape per iteration: assignment is map-only (centroid literal
-    * broadcast into codegen); the update is posexplode (row per dimension)
-    * -> hash agg on (cell, dim) -> collect of k x dim doubles (the only
-    * driver-side data — the codebook itself, a few KB). The input
-    * projection is persisted for the duration of training so each
-    * iteration re-reads cached vectors, not the full upstream lineage.
-    */
-  def trainCodebook(df: DataFrame, idCol: String, vecCol: String,
-                    k: Int, iterations: Int = 5): Array[Array[Float]] = {
-    val vecs = df.select(col(idCol).as("__id"), col(vecCol).as("__v")).persist()
-    try {
-      var centroids: Array[Array[Float]] = vecs.orderBy("__id").limit(k)
-        .collect().map(_.getSeq[Float](1).toArray)
-      var i = 0
-      while (i < iterations) {
-        val cents = array(centroids.toIndexedSeq.map(c =>
-          array(c.toIndexedSeq.map(lit(_)): _*)): _*)
-        val updated = vecs
-          .withColumn("__cell", ivfAssign(col("__v"), cents))
-          .select(col("__cell"), posexplode(col("__v")).as(Seq("__dim", "__x")))
-          .groupBy("__cell", "__dim")
-          .agg(avg(col("__x").cast("double")).as("__m"))
-          .collect()
-        val next = centroids.map(_.clone())
-        updated.foreach { r =>
-          val cell = r.getLong(0).toInt - 1 // 1-based cell ids
-          if (cell >= 0 && cell < k) next(cell)(r.getInt(1)) = r.getDouble(2).toFloat
-        }
-        centroids = next
-        i += 1
-      }
-      centroids
-    } finally vecs.unpersist()
-  }
-
   /** Int8 scalar quantization of the embedding column (native
     * [[org.apache.spark.sql.graft.Quantize8]]):
     * struct<scale:float, codes:array<tinyint>> — 4x less memory/IO than
-    * float32, the storage lever for corpus-scale similarity search. Use
-    * [[quantizedCosine]] for the approximate scoring pass and re-rank the
-    * top candidates with [[Dedup.cosine]] on the full vectors.
+    * float32, the storage lever for corpus-scale similarity search.
     */
   def quantize8(vec: Column): Column =
     org.apache.spark.sql.graft.VectorExpressions.quantize8(vec)
-
-  /** Approximate cosine from two quantized vectors: the integer code dot
-    * (exact in long) rescaled by both scales, normalized by the quantized
-    * self-norms.
-    */
-  def quantizedCosine(qa: Column, qb: Column): Column = {
-    val dotI8 = org.apache.spark.sql.graft.VectorExpressions.dotI8 _
-    val d = dotI8(qa.getField("codes"), qb.getField("codes")).cast("double")
-    val na = sqrt(dotI8(qa.getField("codes"), qa.getField("codes")).cast("double"))
-    val nb = sqrt(dotI8(qb.getField("codes"), qb.getField("codes")).cast("double"))
-    when(na > 0 && nb > 0, d / (na * nb))
-  }
-
-  /** Two-stage search over a quantized corpus: score every candidate with
-    * the int8 approximate cosine (4x less memory traffic on the scan),
-    * keep the top `candidates` per query, then re-rank ONLY those with
-    * the exact float cosine and return the top `k`. Recall loss is
-    * confined to candidates the approximate scan misranks out of the
-    * pool — `candidates` is the recall lever (candidates = corpus size
-    * degenerates to exact brute force). Queries stay full-precision.
-    */
-  def quantizedRerankTopK(queries: DataFrame, corpus: DataFrame,
-                          idCol: String, vecCol: String, k: Int,
-                          candidates: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qq", quantize8(col("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .withColumn("cq", quantize8(col("cv")))
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(col("acos").desc, col("neighbor_id"))
-    val pool = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("acos", quantizedCosine(col("qq"), col("cq")))
-      .withColumn("__ar", row_number().over(wApprox))
-      .filter(col("__ar") <= candidates)
-    val wExact = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    pool
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
-  }
 
   // ------------------------------------------------------------------
   // Product quantization (IVF-PQ storage + scoring tier)
@@ -470,8 +275,7 @@ object Similarity {
     * column, never the vectors. ONE corpus scan serves all queries (the
     * query LUTs ride along as an exploded literal; only the m-int code
     * array duplicates per query, not payloads). Approximates
-    * inner-product order; recall is governed by m/k and recovered with
-    * [[pqRerankTopK]].
+    * inner-product order; recall is governed by m/k.
     */
   def pqTopK(corpus: DataFrame, idCol: String, codesCol: String,
              queries: Seq[(Long, Array[Float])],
@@ -493,35 +297,6 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-  }
-
-  /** Two-stage PQ search: ADC over the code column keeps the top
-    * `k*overfetch` per query (the cheap wide scan), then ONLY those
-    * candidates re-rank with the exact float cosine via a semi-joined
-    * vector fetch. The overfetch factor is the recall lever, exactly as
-    * `candidates` is for [[quantizedRerankTopK]] — PQ just scans 32-64x
-    * fewer bytes than int8 in the first stage.
-    */
-  def pqRerankTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-                   vecCol: String, codebooks: Array[Array[Array[Float]]],
-                   k: Int, overfetch: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qSeq = queries.select(col(idCol).cast("long"), col(vecCol))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-    val coded = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("cv"), pqEncode(col(vecCol), codebooks).as("__codes"))
-    val cand = pqTopK(coded, "neighbor_id", "__codes", qSeq, codebooks,
-      k * overfetch)
-    val qDf = qSeq.map { case (id, v) => (id, v.toSeq) }.toDF("query_id", "qv")
-    val wExact = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(coded.select(col("neighbor_id"), col("cv")), Seq("neighbor_id"))
-      .join(broadcast(qDf), Seq("query_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cos")
   }
 
   /** IVF + PQ composed — the standard billion-scale ANN index shape:
@@ -658,55 +433,6 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-  }
-
-  /** Distributed PQ codebook training: per-subspace k-means, all m
-    * subspaces advancing in ONE distributed pass per iteration.
-    * Deterministic init (subspace slices of the first k vectors by id);
-    * assignment is the native codegen'd L2 argmin over the literal
-    * codebooks; the update explodes components, keys them by (subspace,
-    * code, component) and averages — a single shuffle of m*k*sub cells
-    * regardless of corpus size, with only the k*dim codebook ever
-    * reaching the driver. The input projection is persisted across
-    * iterations ([[trainCodebook]]'s pattern, try/finally).
-    */
-  def pqTrain(df: DataFrame, idCol: String, vecCol: String, m: Int, k: Int,
-              iterations: Int = 5): Array[Array[Array[Float]]] = {
-    val vecs = df.select(col(idCol).as("__id"), col(vecCol).as("__v")).persist()
-    try {
-      val first = vecs.orderBy("__id").limit(k).collect()
-        .map(_.getSeq[Float](1).toArray)
-      val dim = first.head.length
-      require(dim % m == 0, s"pqTrain: dim $dim not divisible by m=$m")
-      val sub = dim / m
-      var cb: Array[Array[Array[Float]]] = Array.tabulate(m, k) { (j, i) =>
-        first(i % first.length).slice(j * sub, (j + 1) * sub)
-      }
-      var it = 0
-      while (it < iterations) {
-        val updated = vecs
-          .withColumn("__codes", pqEncode(col("__v"), cb))
-          .select(col("__codes"), posexplode(col("__v")).as(Seq("__d", "__x")))
-          .withColumn("__j", (col("__d") / sub).cast("int"))
-          .withColumn("__code", element_at(col("__codes"), col("__j") + 1))
-          // a ragged vector longer than m*sub yields __j >= m and a null
-          // code; drop those components instead of NPE-ing the driver read
-          .filter(col("__code").isNotNull)
-          .groupBy("__j", "__code", "__d")
-          .agg(avg(col("__x").cast("double")).as("__m"))
-          .collect()
-        val next = cb.map(_.map(_.clone()))
-        updated.foreach { r =>
-          val j = r.getInt(0)
-          val code = r.getInt(1)
-          val d = r.getInt(2) - j * sub
-          if (code >= 0 && code < k) next(j)(code)(d) = r.getDouble(3).toFloat
-        }
-        cb = next
-        it += 1
-      }
-      cb
-    } finally vecs.unpersist()
   }
 
   /** Random-hyperplane LSH bucket for a vector: bit b = sign of the dot

@@ -3,81 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The monthly-crawl acceptance pipeline in one operator: everything a
-  * 100 TB corpus needs to admit a new snapshot against years of
-  * archive, composed from this engine's screens and indexes.
-  *
-  *   1. within-snapshot COMPLETE dedup ([[Dedup.nearDedupComplete]] —
-  *      exact pairs are Jaccard-1 pairs, so one pass covers both exact
-  *      and near duplicates with the transitive-closure keep-min);
-  *   2. archive exact screen (anti join on the 16 B/doc
-  *      [[Dedup.digestIndex]]);
-  *   3. archive near screen with the completeness guarantee
-  *      ([[Dedup.jaccardDedupAgainstFrozen]] against the persisted
-  *      prefix index under the FROZEN df order);
-  *   4. index update: the survivors' digests and frozen-order prefixes
-  *      union in — append-only, no archive re-read; the df table stays
-  *      frozen (the order contract — refreshing it is an out-of-band
-  *      compaction that rebuilds prefixes).
-  *
-  * Screen order matters for cost, not correctness: within-snapshot
-  * dedup first shrinks what the archive joins see; the digest screen
-  * is cheapest per row so it runs before the prefix screen.
-  *
-  * Data-quality gating ([[graft.ops.Expectations.enforce]]) is the
-  * caller's step zero — it throws BEFORE any screen spends a shuffle
-  * on a malformed snapshot.
-  */
+/** Snapshot-level corpus operations. */
 object Snapshots {
-
-  /** The persisted index triple one archive carries. `jaccardDf` is
-    * the frozen global order; `jaccard` rows are prefixes UNDER that
-    * order; `digest` is content-hash membership.
-    */
-  final case class ArchiveIndexes(digest: DataFrame, jaccard: DataFrame,
-                                  jaccardDf: DataFrame)
-
-  /** Build the triple from scratch over an initial archive. */
-  def buildIndexes(archive: DataFrame, idCol: String, textCol: String,
-                   threshold: Double, shingleSize: Int = 3): ArchiveIndexes = {
-    val (jac, dfTable) =
-      Dedup.jaccardIndexFrozen(archive, idCol, textCol, threshold, shingleSize)
-    ArchiveIndexes(Dedup.digestIndex(archive, textCol), jac, dfTable)
-  }
-
-  /** Screen `snap` and return (accepted, updated indexes). `accepted`
-    * holds exactly the snapshot documents that survive within-snapshot
-    * complete dedup and both archive screens; the updated indexes admit
-    * them, so re-screening `accepted` against the result (with the
-    * survivors appended to the archive payload) drops EVERYTHING —
-    * SnapshotsSpec pins that idempotence.
-    */
-  def acceptSnapshot(snap: DataFrame, idCol: String, textCol: String,
-                     indexes: ArchiveIndexes, archiveText: DataFrame,
-                     archiveIdCol: String, archiveTextCol: String,
-                     threshold: Double, shingleSize: Int = 3)
-      : (DataFrame, ArchiveIndexes) = {
-    val internal = Dedup.nearDedupComplete(snap, idCol, textCol,
-      threshold, shingleSize)
-    val pastExact = Dedup.exactDedupAgainst(internal, idCol, textCol,
-      indexes.digest)
-    val accepted = Dedup.jaccardDedupAgainstFrozen(pastExact, idCol, textCol,
-      indexes.jaccard, indexes.jaccardDf, archiveText,
-      archiveIdCol, archiveTextCol, threshold, shingleSize)
-    val order = indexes.jaccardDf.select(col("shingle_hash").as("__h"),
-      col("df").as("__df"))
-    val newPrefixes = Dedup.jaccardPrefixesWithOrder(
-        Dedup.jaccardSets(accepted, idCol, textCol, shingleSize),
-        order, threshold)
-      .select(col("__id").as("archive_id"), col("__n").as("n"),
-        col("__prefix").as("prefix"), lit(threshold).as("t_build"))
-    val updated = ArchiveIndexes(
-      indexes.digest.unionByName(Dedup.digestIndex(accepted, textCol))
-        .distinct(),
-      indexes.jaccard.unionByName(newPrefixes),
-      indexes.jaccardDf)
-    (accepted, updated)
-  }
 
   /** CORPUS VERSION DIFF: one row per id present in either version —
     * `added` (id only in new), `removed` (only in old), `changed`

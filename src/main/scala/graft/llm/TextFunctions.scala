@@ -47,16 +47,6 @@ object TextFunctions {
   def hash64b(c: Column): Column =
     org.apache.spark.sql.graft.TextHashExpressions.md5Suffix60(c)
 
-  /** DEFLATE compression ratio of the text (native codegen'd kernel;
-    * [[org.apache.spark.sql.graft.CompressUtil]]) — low ratio =
-    * repetitive/templated/generated content, the RefinedWeb-family
-    * curation heuristic orthogonal to the token-level repetition
-    * stats. Spec-pinned (zlib output is JDK-build-specific, so no
-    * cross-engine hash oracle — same standing as the EM tokenizers).
-    */
-  def compressionRatio(c: Column): Column =
-    org.apache.spark.sql.graft.CompressExpressions.compressionRatio(c)
-
   /** HTML → text extraction as a fixed, engine-portable regex chain
     * (the step between WARC ingestion and the language/quality/dedup
     * gates): drop script/style subtrees and comments, strip tags,
@@ -140,10 +130,6 @@ object TextFunctions {
     */
   def shingleHashesFast(text: Column, n: Int): Column =
     org.apache.spark.sql.graft.TextHashExpressions.xxShingleHashes64(text, n)
-
-  /** FAST character-n-gram hashes (XXH64) — see [[shingleHashesFast]]. */
-  def charShingleHashesFast(text: Column, n: Int): Column =
-    org.apache.spark.sql.graft.TextHashExpressions.xxCharShingleHashes64(text, n)
 
   /** Whitespace tokens. The corpus convention is single-space separation;
     * split on runs of whitespace and drop empties.

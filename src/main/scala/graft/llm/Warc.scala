@@ -1,8 +1,5 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** WARC (Web ARChive, ISO 28500) ingestion — the container format web
   * crawls (Common Crawl among them) ship in, and therefore the first
   * operator of a real pretraining-corpus pipeline: WARC → HTTP response
@@ -18,12 +15,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: WARC members are per-file sequential (and `.gz`
   * archives are multi-member gzip — not block-splittable), so the unit
-  * of parallelism is the FILE, exactly how crawl corpora are shipped
-  * (thousands of ~1 GB segments ⇒ file-level parallelism saturates any
-  * cluster). Implemented over `binaryFiles` + `mapPartitions`: one
-  * sequential streaming walk per file, constant memory per record, no
-  * shuffle — rows land partitioned by source file, ready for a
-  * repartition-by-hash only if downstream needs it.
+  * of parallelism is the FILE, exactly how crawl corpora are shipped:
+  * one sequential streaming walk per file ([[parseWarcStream]]),
+  * constant memory per record, no shuffle.
   */
 object Warc {
 
@@ -41,24 +35,9 @@ object Warc {
       http_status: Int,
       body: Array[Byte])
 
-  /** Read every record of every WARC file under `path` (glob ok;
-    * `.gz` names are decompressed as multi-member gzip). Malformed
-    * trailing garbage in a file raises — a truncated crawl segment
-    * should fail loudly, not silently shorten the corpus.
-    */
-  def readWarc(spark: SparkSession, path: String,
-               minPartitions: Int = 1): DataFrame = {
-    import spark.implicits._
-    spark.sparkContext.binaryFiles(path, minPartitions)
-      .flatMap { case (file, pds) =>
-        parseWarcStream(file, pds.open(), gunzip = file.endsWith(".gz"))
-      }
-      .toDF()
-  }
-
-  /** The record walk behind [[readWarc]], over any stream — also the
-    * in-memory entry ([[parseWarcBytes]]) the roundtrip oracle and
-    * streaming ingestion use. Closes the stream at EOF.
+  /** The record walk over any stream — also the in-memory entry
+    * ([[parseWarcBytes]]) the roundtrip oracle uses. Closes the stream
+    * at EOF.
     */
   def parseWarcStream(file: String, raw: java.io.InputStream,
                       gunzip: Boolean): Iterator[Record] = {
@@ -117,14 +96,6 @@ object Warc {
     gz.write(bytes); gz.finish(); gz.close()
     bos.toByteArray
   }
-
-  /** The crawl-pipeline entry view: `response` records with the body
-    * decoded as UTF-8 text (lenient — undecodable bytes become U+FFFD,
-    * the downstream quality gates' job to catch).
-    */
-  def responses(warc: DataFrame): DataFrame =
-    warc.filter(col("warc_type") === "response")
-      .withColumn("html", decode(col("body"), "UTF-8"))
 
   // ---- sequential record walk ----
 

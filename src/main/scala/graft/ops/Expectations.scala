@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * aggregates every rule in a single `agg(...)` so the corpus is read
   * once regardless of rule count, and whole-stage codegen fuses the
   * predicates into the scan. Rules that need more than row-local
-  * evaluation compose upstream: uniqueness is a [[keyUniqueness]]
-  * pre-aggregation (one extra exchange on the key, unavoidable), and
-  * cross-table reference checks are anti joins the caller counts.
+  * evaluation compose upstream: uniqueness is a pre-aggregation on the
+  * key (one extra exchange, unavoidable), and cross-table reference
+  * checks are anti joins the caller counts.
   *
   * Scale shape: map-only predicate evaluation + one partial/final
   * aggregate — the same rollup shape as the corpus-stats queries; the
@@ -99,41 +99,5 @@ object Expectations {
         col("e.lo").as("lo"), col("e.hi").as("hi"),
         coalesce(col("e.value") >= col("e.lo") &&
           col("e.value") <= col("e.hi"), lit(false)).as("ok"))
-  }
-
-  /** Key-uniqueness report: (n_keys, n_duplicated_keys, n_excess_rows)
-    * — one exchange on the key (the minimum any uniqueness check
-    * costs), then a tiny final aggregate. Null keys group together,
-    * matching the dedup digest convention.
-    */
-  def keyUniqueness(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__c"))
-      .agg(count(lit(1)).as("n_keys"),
-        sum(when(col("__c") > 1, 1L).otherwise(0L)).as("n_duplicated_keys"),
-        sum(when(col("__c") > 1, col("__c") - 1L).otherwise(0L))
-          .as("n_excess_rows"))
-
-  /** Gate: throw unless every rule's violation fraction is within its
-    * budget (`maxRate` per rule name, default 0). The ingest-time
-    * fail-fast; the report itself stays available for the audit trail.
-    *
-    * The comparison uses the EXACT counts (n_violations vs
-    * maxRate * n_rows), not the display-rounded rate: at a billion
-    * rows a handful of violations rounds to rate 0.0, and a
-    * zero-tolerance gate that passes them is no gate.
-    */
-  def enforce(df: DataFrame, rules: Seq[Rule],
-              maxRate: Map[String, Double] = Map.empty): Unit = {
-    val rows = report(df, rules).collect()
-    val broken = rows.filter { r =>
-      r.getAs[Long]("n_violations").toDouble >
-        maxRate.getOrElse(r.getAs[String]("rule"), 0.0) *
-          r.getAs[Long]("n_rows")
-    }
-    if (broken.nonEmpty)
-      throw new IllegalStateException(
-        "expectations violated: " + broken.map(r =>
-          s"${r.getAs[String]("rule")} rate=${r.getAs[Double]("violation_rate")}"
-        ).mkString(", "))
   }
 }

@@ -96,6 +96,10 @@ object Hits {
     runHitsCounted(edges, init, iterations, checkpointEvery, saltJoin,
       epsilon = None)._1
 
+  /** Every score-mass sum goes through order-free DECIMAL(38,18). */
+  private def massSum(c: org.apache.spark.sql.Column) =
+    sum(c.cast("decimal(38,18)")).cast("double")
+
   /** The shared loop. `epsilon = None` is the fixed-iteration path,
     * byte-identical to the pre-r18 `runHits`; `Some(eps)` checkpoints
     * every round (forced cadence 1) and stops on the L1 delta.
@@ -106,8 +110,6 @@ object Hits {
                              epsilon: Option[Double]): (DataFrame, Int) = {
     require(iterations >= 0, "hits: iterations must be >= 0")
     require(checkpointEvery >= 1, "hits: checkpointEvery must be >= 1")
-    def massSum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(38,18)")).cast("double")
     // memory auto-sizing (VERDICT r18 #1, the [[PageRank]] discipline):
     // edge-proportional partitions + AQE coalescing floor + fat-input
     // respread above the trigger, restored in the finally; decimal
@@ -274,8 +276,6 @@ object Hits {
                            scores: DataFrame, saltJoin: Int,
                            mat: DataFrame => DataFrame)
       : (DataFrame, List[DataFrame]) = {
-    def massSum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(38,18)")).cast("double")
     // fresh attribute ids per round: scores descends from e, so
     // joining e directly is an ambiguous self-join (the PageRank
     // rename discipline)

@@ -180,7 +180,7 @@ object PageRank {
         }
       val nD = lit(n.toDouble)
       val d = lit(damping)
-      var ranks = init match {
+      val ranks = init match {
         case None =>
           nodes.withColumn("rank", lit(1.0) / nD).localCheckpoint()
         case Some(prev) =>
@@ -246,52 +246,66 @@ object PageRank {
               d * (coalesce(col("s"), lit(0.0)) + col("m") / nD))
               .as("rank"))
       }
-      var cut = ranks
-      var i = 0
-      try {
-        epsilon match {
-          case None =>
-            while (i < iterations) {
-              ranks = oneRound(ranks)
-              if ((i + 1) % checkpointEvery == 0 || i + 1 == iterations) {
-                ranks = ranks.localCheckpoint()
-                graft.Checkpoints.free(cut)
-                cut = ranks
-              }
-              i += 1
-            }
-            (ranks, i)
-          case Some(eps) =>
-            var converged = false
-            while (i < iterations && !converged) {
-              // LAZY cut: the delta aggregate touches every partition
-              // of `next`, so it materializes the checkpoint in the
-              // same job — one job per round instead of two (r21)
-              val next = oneRound(ranks).localCheckpoint(eager = false)
-              // decimal-exact L1 delta: |Δ| per node is one IEEE
-              // subtraction, the cross-node sum order-free — so the
-              // stop decision cannot depend on partitioning
-              val delta = ranks.select(col("id"), col("rank").as("__old"))
-                .join(next.select(col("id"), col("rank").as("__new")),
-                  Seq("id"))
-                .agg(coalesce(
-                  sum(abs(col("__new") - col("__old"))
-                    .cast("decimal(38,18)")).cast("double"),
-                  lit(0.0)))
-                .collect().head.getDouble(0)
-              graft.Checkpoints.free(cut)
-              ranks = next
-              cut = next
-              converged = delta <= eps
-              i += 1
-            }
-            (ranks, i)
-        }
-      } finally if (cut ne ranks) graft.Checkpoints.free(cut)
+      iterate(ranks, iterations, checkpointEvery, epsilon)(oneRound)
     } finally {
       restoreConf()
       graft.Checkpoints.free(e)
     }
+  }
+
+  /** The power-iteration driver both forms share: run `oneRound` from
+    * `init` for `iterations` rounds, cutting lineage every
+    * `checkpointEvery` rounds and after the last; or, with `epsilon`,
+    * until the decimal-exact L1 delta of successive rank vectors is
+    * ≤ eps (at most `iterations` rounds). Returns (ranks, roundsRun);
+    * every superseded cut is freed.
+    */
+  private def iterate(init: DataFrame, iterations: Int, checkpointEvery: Int,
+                      epsilon: Option[Double])
+                     (oneRound: DataFrame => DataFrame): (DataFrame, Int) = {
+    var ranks = init
+    var cut = ranks
+    var i = 0
+    try {
+      epsilon match {
+        case None =>
+          while (i < iterations) {
+            ranks = oneRound(ranks)
+            if ((i + 1) % checkpointEvery == 0 || i + 1 == iterations) {
+              ranks = ranks.localCheckpoint()
+              graft.Checkpoints.free(cut)
+              cut = ranks
+            }
+            i += 1
+          }
+          (ranks, i)
+        case Some(eps) =>
+          var converged = false
+          while (i < iterations && !converged) {
+            // LAZY cut: the delta aggregate touches every partition
+            // of `next`, so it materializes the checkpoint in the
+            // same job — one job per round instead of two (r21)
+            val next = oneRound(ranks).localCheckpoint(eager = false)
+            // decimal-exact L1 delta: |Δ| per node is one IEEE
+            // subtraction, the cross-node sum order-free — so the
+            // stop decision cannot depend on partitioning
+            val delta = ranks.select(col("id"), col("rank").as("__old"))
+              .join(next.select(col("id"), col("rank").as("__new")),
+                Seq("id"))
+              .agg(coalesce(
+                sum(abs(col("__new") - col("__old"))
+                  .cast("decimal(38,18)")).cast("double"),
+                lit(0.0)))
+              .collect().head.getDouble(0)
+            graft.Checkpoints.free(cut)
+            ranks = next
+            cut = next
+            converged = delta <= eps
+            i += 1
+          }
+          (ranks, i)
+      }
+    } finally if (cut ne ranks) graft.Checkpoints.free(cut)
   }
 
   /** WEIGHTED damped PageRank: edge (u, v, w) contributes
@@ -365,7 +379,7 @@ object PageRank {
       require(n > 0, "pageRankWeighted: empty graph")
       val nD = lit(n.toDouble)
       val d = lit(damping)
-      var ranks = nodes.withColumn("rank", lit(1.0) / nD).localCheckpoint()
+      val ranks = nodes.withColumn("rank", lit(1.0) / nD).localCheckpoint()
       // one weighted round — the single definition both loops execute
       def oneRound(prev: DataFrame): DataFrame = {
         val eOut = e.select(col("src").as("__es"), col("dst").as("__ed"),
@@ -392,42 +406,7 @@ object PageRank {
               d * (coalesce(col("s"), lit(0.0)) + col("m") / nD))
               .as("rank"))
       }
-      var cut = ranks
-      var i = 0
-      try {
-        epsilon match {
-          case None =>
-            while (i < iterations) {
-              ranks = oneRound(ranks)
-              if ((i + 1) % checkpointEvery == 0 || i + 1 == iterations) {
-                ranks = ranks.localCheckpoint()
-                graft.Checkpoints.free(cut)
-                cut = ranks
-              }
-              i += 1
-            }
-            (ranks, i)
-          case Some(eps) =>
-            var converged = false
-            while (i < iterations && !converged) {
-              val next = oneRound(ranks).localCheckpoint()
-              val delta = ranks.select(col("id"), col("rank").as("__old"))
-                .join(next.select(col("id"), col("rank").as("__new")),
-                  Seq("id"))
-                .agg(coalesce(
-                  sum(abs(col("__new") - col("__old"))
-                    .cast("decimal(38,18)")).cast("double"),
-                  lit(0.0)))
-                .collect().head.getDouble(0)
-              graft.Checkpoints.free(cut)
-              ranks = next
-              cut = next
-              converged = delta <= eps
-              i += 1
-            }
-            (ranks, i)
-        }
-      } finally if (cut ne ranks) graft.Checkpoints.free(cut)
+      iterate(ranks, iterations, checkpointEvery, epsilon)(oneRound)
     } finally {
       restoreConf()
       graft.Checkpoints.free(e)

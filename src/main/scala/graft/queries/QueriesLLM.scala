@@ -262,7 +262,7 @@ object QueriesLLM {
       |)""".stripMargin
 
   /** Shared shingle/minhash/band CTEs over `corpus` (mirrors
-    * Dedup.minhashSignature/lshBandKeys semantics exactly: word 3-gram
+    * Dedup.minhashSignatures/lshBandKeys semantics exactly: word 3-gram
     * shingles, 16 universal hashes h_i(x) = (a_i x + b_i) mod p over the
     * md5-derived 60-bit shingle hash, 4 bands of 4 rows keyed by md5).
     */
@@ -1847,8 +1847,7 @@ object QueriesLLM {
     * with ONE host-grain aggregation, and the parser explodes it back
     * to doc-grain rows. Optional-field absence comes back as `''`
     * (both engines' regexp_extract convention), kept that way for the
-    * comparator. `Sitemap:` discovery from robots.txt
-    * ([[Robots.sitemapRefs]]) is fixture-grain and spec-pinned.
+    * comparator.
     */
   def q_sitemap_entries(spark: SparkSession, dir: String): DataFrame = {
     val blocks = robotsFixtureUrls(spark, dir)
@@ -1954,8 +1953,8 @@ object QueriesLLM {
     * dedup on the EXTRACTED text (the injected doc_id+10000 twins
     * collapse here) → canonical id + duplicate count per surviving
     * page. WARC ingestion feeds the same chain in production
-    * ([[graft.llm.Warc.responses]] → html); the driver corpus has no
-    * WARC container, so the oracle starts at the page.
+    * (response bodies → html); the driver corpus has no WARC
+    * container, so the oracle starts at the page.
     */
   def q_cc_pipeline(spark: SparkSession, dir: String): DataFrame = {
     val main = TextFunctions.htmlMainText(ccPage(col("text")))
@@ -2159,8 +2158,8 @@ object QueriesLLM {
     * member 2 = an HTTP 404 response — so record splitting,
     * multi-member gzip, and HTTP status/header stripping ALL sit on
     * the compared path), walk it back through
-    * [[graft.llm.Warc.parseWarcBytes]] (the same record walk
-    * [[graft.llm.Warc.readWarc]] runs per file), and emit the parsed
+    * [[graft.llm.Warc.parseWarcBytes]] (the record walk a crawl runs
+    * per file), and emit the parsed
     * fields. The gzip bytes are JDK-specific but never compared — the
     * oracle recomputes the expected FIELD values per document, which
     * only match if the walk split members/records and stripped HTTP
@@ -2473,8 +2472,7 @@ object QueriesLLM {
     * assign every vector to its nearest first-8 centroid (the codegen'd
     * cosine argmax the IVF family uses), then recompute each cell's
     * per-dimension mean with the decimal-exact mean. This is the
-    * iterated kernel of codebook training
-    * ([[Similarity.trainCodebook]]/[[Similarity.pqTrain]]) pinned as a
+    * iterated kernel of Lloyd codebook training, pinned as a
     * hash-checked oracle: assignment ties, explode indexing, and the
     * mean's rounding must all match.
     */
@@ -2515,12 +2513,10 @@ object QueriesLLM {
 
   /** Upper-triangle population covariance of the embedding corpus in
     * the engine-portable arithmetic contract (products floor-rounded at
-    * 1e-6 at definition, decimal exact-means, entries at 1e-9) — the
-    * cross-engine-checkable twin of the PCA training pass
-    * ([[graft.llm.Embeddings.moments]]: one fixed-size accumulator per
-    * partition, no explode). PcaSpec pins |fast - oracle| inside the
-    * rounding budget; this query pins the covariance values themselves
-    * against DuckDB.
+    * 1e-6 at definition, decimal exact-means, entries at 1e-9). PcaSpec
+    * pins it against driver double arithmetic inside the rounding
+    * budget; this query pins the covariance values themselves against
+    * DuckDB.
     */
   def q_embed_covariance(spark: SparkSession, dir: String): DataFrame =
     graft.llm.Embeddings.covarianceRelational(
@@ -2536,11 +2532,9 @@ object QueriesLLM {
     * oracle regenerates the constants and replays the fused
     * (v - mean) · comp loop, the float narrowing, the cell argmax and
     * the within-cell cosine drops EXACTLY — the full driver check the
-    * TRAINED composition cannot get (the eigensolve is not
-    * SQL-expressible; PcaSpec pins training determinism and
-    * `q_embed_covariance` pins the distributed moment numerics, so
-    * swapping [[graft.llm.Embeddings.pcaTrain]]'s model into this same
-    * pipeline is covered by those two pins plus this one).
+    * TRAINED composition cannot get (an eigensolve is not
+    * SQL-expressible; `q_embed_covariance` pins the covariance a model
+    * is fitted from).
     */
   def q_pca_semdedup(spark: SparkSession, dir: String): DataFrame = {
     val d = 64; val k = 16
@@ -2611,10 +2605,7 @@ object QueriesLLM {
     * shard-local bin; the assignment is a pure left fold over the
     * (length desc, id) order, so the DuckDB oracle replays it
     * row-for-row with a recursive CTE — the full cross-engine check a
-    * best-fit open-bin LIST cannot get (that production packer,
-    * [[Packing.packBins]], stays PackBinsSpec-pinned: capacity,
-    * placement uniqueness, determinism, and its padding win over this
-    * next-fit baseline).
+    * best-fit open-bin LIST could not get.
     */
   def q_pack_bins(spark: SparkSession, dir: String): DataFrame = {
     // token counts capped at the budget: the packers reject oversized
@@ -3252,9 +3243,8 @@ object QueriesLLM {
     * independent md5-bit streams, so the oracle replays both exactly.
     * Scale note: the `position` window exists to make the order
     * oracle-checkable (parallelism = nShards, fine at thousands of
-    * file-grained shards); the production sink is
-    * [[Mixing.writeShuffled]], which sorts within partitions and never
-    * runs a window at all.
+    * file-grained shards); a production sink repartitions by shard
+    * and sorts within partitions, never running a window at all.
     */
   def q_shard_assign(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")

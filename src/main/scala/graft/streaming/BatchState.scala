@@ -32,53 +32,6 @@ object BatchState {
     }
   }
 
-  /** Committed version numbers under a versioned state dir: subdirs
-    * named `v<N>`. A version is only ever visible under that name via
-    * [[commitVersion]]'s rename, so presence == completeness.
-    */
-  def versions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val (f, p) = fs(spark, stateDir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.matches("v\\d+")).map(_.stripPrefix("v").toLong)
-  }
-
-  /** Durably replace versioned state: write the frame to `v<N>.tmp`,
-    * rename to `v<N>` (atomic on HDFS and local FS — the new version
-    * appears all-or-nothing), then prune all versions `< N` EXCEPT the
-    * newest of them. That retained predecessor is the version batch N
-    * folded FROM, and it must outlive batch N's commit: Structured
-    * Streaming commits its source offsets only AFTER foreachBatch
-    * returns, so a crash in that gap re-executes batch N — the replay
-    * reads `latestVersion(beforeVersion = N)`, which must still be the
-    * pre-batch state, not pruned air (folding from nothing would
-    * overwrite v<N> with the lone batch's profile and silently destroy
-    * everything ever ingested — ADVICE r12). The predecessor is freed
-    * at batch N+1's commit, which only runs after batch N's offsets
-    * are durable, i.e. once a replay of N is impossible. Crash safety:
-    *   - mid-write: only `.tmp` is partial; committed versions intact;
-    *   - post-rename, pre-prune: extra versions; readers take the max;
-    *   - replay of batch N: the stale `v<N>` from the failed attempt
-    *     is deleted before the rename (idempotent) and its fold source
-    *     `v<M>`, M < N, is still on disk.
-    */
-  def commitVersion(spark: SparkSession, stateDir: String, version: Long,
-                    df: org.apache.spark.sql.DataFrame): Unit = {
-    val (f, root) = fs(spark, stateDir)
-    val tmp = new Path(root, s"v$version.tmp")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val fin = new Path(root, s"v$version")
-    if (f.exists(fin)) f.delete(fin, true)
-    if (!f.rename(tmp, fin))
-      sys.error(s"commitVersion: cannot promote $tmp to $fin")
-    val older = versions(spark, stateDir).filter(_ < version)
-    if (older.nonEmpty) {
-      val keep = older.max // batch `version`'s fold source — replay-readable
-      older.filter(_ != keep)
-        .foreach(v => f.delete(new Path(root, s"v$v"), true))
-    }
-  }
-
   /** Batch ids recorded in the `_folded_batches` ledger under `dir` —
     * batches whose log rows an out-of-band compaction folded into the
     * `batch_id = -1` generation, so their own partition directories
@@ -181,16 +134,5 @@ object BatchState {
     if (!f.rename(tmp, live)) sys.error(s"swapIn: cannot promote $tmp")
     f.delete(old, true)
     ()
-  }
-
-  /** The newest committed version strictly below `beforeVersion` —
-    * the read side of [[commitVersion]]. Bounding by the current batch
-    * id makes a REPLAYED batch ignore its own failed attempt and fold
-    * from exactly the pre-batch state.
-    */
-  def latestVersion(spark: SparkSession, stateDir: String,
-                    beforeVersion: Long = Long.MaxValue): Option[Long] = {
-    val vs = versions(spark, stateDir).filter(_ < beforeVersion)
-    if (vs.isEmpty) None else Some(vs.max)
   }
 }

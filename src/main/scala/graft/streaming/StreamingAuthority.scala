@@ -22,15 +22,12 @@ import graft.llm.UrlFunctions
   * generation bounded at O(shuffle partitions) files. Edge deltas are
   * ADDITIVE (counts sum), so fold order cannot matter.
   *
-  * Authority refresh tiers over [[loadEdges]]:
-  *   - [[refreshRanks]]: warm-start damped PageRank
-  *     ([[graft.ops.PageRank.pageRankFrom]]) over the DISTINCT edge
-  *     set from the previous rank table — the per-batch serving
-  *     cadence (a few rounds re-converge after incremental graph
-  *     change; PageRankSpec pins warm beats cold at equal budget);
-  *   - [[rebuildRanksWeighted]]: cold link-count-WEIGHTED PageRank
-  *     ([[graft.ops.PageRank.pageRankWeighted]]) — the out-of-band
-  *     full rebuild where multiplicity should count.
+  * Authority refresh over [[loadEdges]]: [[refreshRanks]] is
+  * warm-start damped PageRank ([[graft.ops.PageRank.pageRankFrom]])
+  * over the DISTINCT edge set from the previous rank table — the
+  * per-batch serving cadence (a few rounds re-converge after
+  * incremental graph change; PageRankSpec pins warm beats cold at
+  * equal budget).
   */
 object StreamingAuthority {
 
@@ -63,19 +60,6 @@ object StreamingAuthority {
       compactEdges(batch.sparkSession, graphDir)
   }
 
-  /** The streaming sink: wires `pages.writeStream` through
-    * [[appendBatch]]. Caller starts/awaits the returned query.
-    */
-  def maintainGraph(pages: DataFrame, urlCol: String, htmlCol: String,
-                    graphDir: String, checkpointDir: String,
-                    autoCompactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    pages.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendBatch(graphDir, urlCol, htmlCol, autoCompactEvery)(batch, id)
-      }
-
   /** The accumulated host graph: (src_host, dst_host, n) with deltas
     * summed across batches — identical to the one-shot edge build over
     * the union of everything appended (counts are additive).
@@ -98,15 +82,6 @@ object StreamingAuthority {
       loadEdges(spark, graphDir)
         .select(col("src_host").as("src"), col("dst_host").as("dst")),
       prevRanks, iterations)
-
-  /** Out-of-band full rebuild, link counts as weights. */
-  def rebuildRanksWeighted(spark: SparkSession, graphDir: String,
-                           iterations: Int): DataFrame =
-    graft.ops.PageRank.pageRankWeighted(
-      loadEdges(spark, graphDir)
-        .select(col("src_host").as("src"), col("dst_host").as("dst"),
-          col("n").as("weight")),
-      iterations)
 
   /** Collapse the edge log to one sum-merged `batch_id = -1`
     * generation — deltas are additive, so the fold is the same

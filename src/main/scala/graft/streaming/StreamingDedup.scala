@@ -36,50 +36,4 @@ object StreamingDedup {
       .withColumn("content_hash", md5(col(textCol)))
       .withWatermark(eventTimeCol, lateness)
       .dropDuplicatesWithinWatermark("content_hash")
-
-  /** [[dedupStream]] against a persisted archive digest index
-    * ([[graft.llm.Dedup.digestIndex]]) as well: rows whose content the
-    * archive already holds drop via a stream-static anti join on the
-    * digest BEFORE the within-stream state, so archived duplicates never
-    * even enter the dedup state store. The static side re-reads per
-    * micro-batch (Spark's stream-static contract), which is exactly
-    * what a digest index persisted bucketed-by-hash serves cheaply; the
-    * streaming analogue of [[graft.llm.Dedup.exactDedupAgainst]].
-    */
-  def dedupStreamAgainst(docs: DataFrame, textCol: String,
-                         eventTimeCol: String, index: DataFrame,
-                         lateness: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("content_hash", md5(col(textCol)))
-      .join(index.select(col("content_hash")), Seq("content_hash"), "left_anti")
-      .withWatermark(eventTimeCol, lateness)
-      .dropDuplicatesWithinWatermark("content_hash")
-
-  /** Streaming COMPLETE exact-Jaccard archive screen: each micro-batch
-    * runs [[graft.llm.Dedup.jaccardDedupAgainst]] against the persisted
-    * [[graft.llm.Dedup.jaccardIndex]] + archive payload, so per-batch
-    * semantics are EXACTLY the batch operator's — every batch document
-    * with an archived partner at Jaccard >= `threshold` drops, no
-    * banding miss-rate, no false positives. The screen's candidate/
-    * verify shape needs aggregations a single streaming plan cannot
-    * express in append mode, so this runs through `foreachBatch` (the
-    * [[StreamingRetrieval.maintainIndex]] contract: at-least-once per
-    * batch; `sink` receives the batch id to detect replays). Pairs
-    * WITHIN the stream remain the batch compaction's job — the same
-    * division of labor [[dedupStream]] documents.
-    */
-  def jaccardScreenStream(docs: DataFrame, idCol: String, textCol: String,
-                          index: DataFrame, archiveText: DataFrame,
-                          archiveIdCol: String, archiveTextCol: String,
-                          threshold: Double, checkpointDir: String,
-                          shingleSize: Int = 3)
-                         (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(graft.llm.Dedup.jaccardDedupAgainst(batch, idCol, textCol,
-          index, archiveText, archiveIdCol, archiveTextCol,
-          threshold, shingleSize), id)
-      }
 }

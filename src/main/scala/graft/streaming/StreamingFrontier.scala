@@ -1,14 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.llm.Robots
 
 /** Streaming FRONTIER maintenance — the scheduler half of the crawl
-  * loop ([[StreamingCrawl]] is the intake half): micro-batches of
+  * loop ([[StreamingCrawl.acceptBatch]] is the intake half): micro-batches of
   * newly DISCOVERED candidate URLs (link extraction, sitemap parses)
   * arrive; each batch drops re-discoveries (within-batch min-id, then
   * an anti join on the PERSISTED url-digest index), passes the robots
@@ -19,13 +18,6 @@ import graft.llm.Robots
   * one-shot schedule over the union of discoveries whenever batch
   * order respects id order (the `q_crawl_incremental` convention —
   * `q_frontier_incremental` pins it in DuckDB).
-  *
-  * Persistence follows [[StreamingCrawl]]'s replay-exact discipline:
-  * both the frontier sink and the seen index write one
-  * `batch_id=<N>` partition via dynamic overwrite (a replayed batch
-  * REWRITES, never appends beside, a failed attempt), and each batch
-  * screens against the index EXCLUDING its own partition, so
-  * acceptance is decided from exactly the committed pre-batch state.
   */
 object StreamingFrontier {
 
@@ -59,45 +51,4 @@ object StreamingFrontier {
       .drop("__base")
     (frontier, frontier.select(col("url_hash"), col("host")))
   }
-
-  /** The seen index as stored — `(url_hash, host, batch_id)`; empty on
-    * first start.
-    */
-  def loadSeen(spark: SparkSession, seenDir: String): DataFrame = {
-    import spark.implicits._
-    if (BatchState.hasData(spark, seenDir)) spark.read.parquet(seenDir)
-    else Seq.empty[(String, String, Long)].toDF("url_hash", "host", "batch_id")
-  }
-
-  /** Start the scheduler over a STREAMING frame of (id, url)
-    * discoveries: each batch writes its prioritized frontier slice to
-    * `sinkDir` and its digests to `seenDir` (both as replayed-safe
-    * `batch_id` partitions); `checkpointDir` carries source offsets.
-    */
-  def ingest(stream: DataFrame, idCol: String, urlCol: String,
-             rules: DataFrame, agent: String, authority: DataFrame,
-             sinkDir: String, seenDir: String,
-             checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val committed = loadSeen(spark, seenDir)
-          .filter(col("batch_id") =!= lit(batchId))
-          .select("url_hash", "host")
-        val (frontier, _) = frontierBatch(batch, idCol, urlCol,
-          rules, agent, authority, committed)
-        // consumed twice (sink + seen index): cut once
-        val cut = frontier.withColumn("batch_id", lit(batchId))
-          .localCheckpoint(true)
-        cut.write.partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(sinkDir)
-        cut.select("url_hash", "host", "batch_id")
-          .write.partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(seenDir)
-        graft.Checkpoints.free(cut)
-      }
-      .start()
 }

@@ -58,19 +58,6 @@ object StreamingLm {
       compactCounts(batch.sparkSession, countsDir)
   }
 
-  /** The streaming sink: wires `docs.writeStream` through
-    * [[appendBatch]]. Caller starts/awaits the returned query.
-    */
-  def maintainCounts(docs: DataFrame, idCol: String, textCol: String,
-                     countsDir: String, checkpointDir: String,
-                     autoCompactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendBatch(countsDir, idCol, textCol, autoCompactEvery)(batch, id)
-      }
-
   /** Fold the count log into the (u, v, w, c) table
     * [[graft.llm.NgramLm.trainFromCounts]] consumes — one model-scale
     * aggregation, O(batches)·model rows in, model rows out.
@@ -90,8 +77,7 @@ object StreamingLm {
     * Unlike [[StreamingRetrieval.compactIndex]] — whose swaps replace
     * SUBDIRECTORIES next to which the ledger lives — the swap target
     * here IS `countsDir`, so the `_folded_batches` ledger must be
-    * written INTO the candidate dir and ride the promote (the
-    * [[StreamingCrawl.BucketedIndex.compact]] pattern). A ledger
+    * written INTO the candidate dir and ride the promote. A ledger
     * written into the live dir before the swap would be retired and
     * deleted WITH it, after which every previously-folded batch looks
     * unfolded: a replay would re-write its `batch_id=<N>` partition

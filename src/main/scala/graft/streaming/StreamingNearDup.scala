@@ -42,7 +42,7 @@ object StreamingNearDup {
     * (CollapseProject counts a lambda-bound alias as one use), and lambda
     * bodies get no common-subexpression elimination — the tokenize/md5
     * pass would re-run once per seed, the exact 16x blowup
-    * [[Dedup.minhashFromHashes]]'s docs warn about. The arithmetic is the
+    * measured at sf0.1 on the lambda formulation. The arithmetic is the
     * SAME portable formulas (md5-60-bit shingle hash, seeded universal
     * hashes, md5 band keys), so stream pairs == batch pairs
     * (StreamingNearDupSpec pins it).

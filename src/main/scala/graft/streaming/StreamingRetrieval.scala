@@ -24,8 +24,7 @@ import graft.llm.Retrieval
   * at-least-once retry REWRITES its failed attempt instead of
   * appending next to it), and a batch whose deltas a compaction
   * already folded — detectable via the [[BatchState.readFolded]]
-  * ledger — is skipped outright, the [[StreamingCrawl.BucketedIndex]]
-  * contract.
+  * ledger — is skipped outright.
   *
   * Search parity: `loadIndex` composed with
   * [[graft.llm.Retrieval.searchPostingsNorm]] returns EXACTLY
@@ -174,95 +173,5 @@ object StreamingRetrieval {
     swapIn("termdf")(_.groupBy("term").agg(sum(col("df")).as("df")))
     swapIn("stats")(_.agg(sum(col("n_docs")).as("n_docs"),
       sum(col("total_len")).as("total_len")))
-  }
-
-  // ------------------------------------------------------------------
-  // Positional index maintenance (phrase/proximity serving)
-  // ------------------------------------------------------------------
-
-  /** `foreachBatch` hook for the POSITIONAL index
-    * ([[graft.llm.Retrieval.positionalPostings]]): ONE log with
-    * zero-shuffle appends — a document's token positions are a
-    * row-local fact, so the append is pure map work — under the same
-    * replay discipline as [[appendBatch]] (per-batch dynamic partition
-    * overwrite, folded-batch ledger no-op, crash-window recovery).
-    * The single-log degenerate of the three-log contract: "durably
-    * committed" is presence in the one log, so the fold has no
-    * partial-batch arm at all. Use an `indexDir` of its own — the
-    * `_folded_batches` ledger is per-directory, and sharing one with
-    * the BM25 logs would conflate the two folds' batch ids.
-    *
-    * Serving parity: [[graft.llm.Retrieval.phraseMatches]] /
-    * [[graft.llm.Retrieval.proximityPairs]] over [[loadPositional]]
-    * equal the one-shot build over the union of all appended batches
-    * (positions are per-document, so batch boundaries cannot shift
-    * them — PositionalLogSpec pins it).
-    */
-  def appendPositional(indexDir: String, idCol: String, textCol: String,
-                       autoCompactEvery: Int = 0)
-                      (batch: DataFrame, batchId: Long): Unit = {
-    BatchState.recoverSwap(batch.sparkSession, s"$indexDir/positions")
-    if (BatchState.readFolded(batch.sparkSession, indexDir)
-        .contains(batchId)) return
-    graft.llm.Retrieval.positionalPostings(batch, idCol, textCol)
-      .withColumn("batch_id", lit(batchId))
-      .write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$indexDir/positions")
-    if (autoCompactEvery > 0 &&
-        BatchState.unfoldedBatches(batch.sparkSession,
-          s"$indexDir/positions") >= autoCompactEvery)
-      compactPositional(batch.sparkSession, indexDir)
-  }
-
-  /** The streaming sink: wires `docs.writeStream` through
-    * [[appendPositional]]. Caller starts/awaits the returned query.
-    */
-  def maintainPositional(docs: DataFrame, idCol: String, textCol: String,
-                         indexDir: String, checkpointDir: String,
-                         autoCompactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendPositional(indexDir, idCol, textCol, autoCompactEvery)(batch, id)
-      }
-
-  /** The positional log as the (doc_id, term, pos) frame phrase and
-    * proximity search consume — the log IS the index; no read-time
-    * folding is needed.
-    */
-  def loadPositional(spark: SparkSession, indexDir: String): DataFrame = {
-    BatchState.recoverSwap(spark, s"$indexDir/positions")
-    spark.read.parquet(s"$indexDir/positions").drop("batch_id")
-  }
-
-  /** Collapse the positional log to one `batch_id = -1` generation,
-    * TERM-clustered (repartition + sort by term) — the same file-count
-    * bound and row-group term locality [[compactIndex]] gives the BM25
-    * postings, so a bucketed/pruned phrase read touches only its
-    * terms' row groups. Single log ⇒ every present batch id is
-    * complete; ledger written before the swap ([[compactIndex]]'s
-    * ordering), and a post-fold replay is the ledgered no-op.
-    */
-  def compactPositional(spark: SparkSession, indexDir: String): Unit = {
-    import spark.implicits._
-    // a prior compaction may have crashed between retire and promote;
-    // promote the complete _compacting candidate before reading (the
-    // same self-repair compactEdges runs — a standalone compaction must
-    // not require an append/load to have healed the log first)
-    BatchState.recoverSwap(spark, s"$indexDir/positions")
-    val ids = spark.read.parquet(s"$indexDir/positions")
-      .select(col("batch_id").cast("long")).distinct()
-      .as[Long].collect().toSet.filter(_ != -1L)
-    if (ids.isEmpty) return
-    BatchState.writeFolded(spark, indexDir,
-      ids ++ BatchState.readFolded(spark, indexDir))
-    BatchState.swapIn(spark, s"$indexDir/positions") { tmp =>
-      spark.read.parquet(s"$indexDir/positions").drop("batch_id")
-        .repartition(col("term")).sortWithinPartitions("term")
-        .withColumn("batch_id", lit(-1L))
-        .write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
-    }
   }
 }

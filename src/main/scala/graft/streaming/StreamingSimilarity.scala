@@ -16,8 +16,7 @@ import graft.llm.Similarity
   * micro-batch — no term table, no stats, nothing to fold at read
   * time. The codebooks are trained once on a seed corpus and frozen
   * (the standard serving practice; retrain + re-encode is an
-  * out-of-band operation when drift warrants it — the moments-additive
-  * PCA gives the drift signal cheaply).
+  * out-of-band operation when drift warrants it).
   *
   * Search parity: loadIndex + [[graft.llm.Similarity.ivfPqTopKCoded]]
   * equals the batch index built on everything that arrived

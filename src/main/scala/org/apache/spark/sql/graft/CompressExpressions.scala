@@ -1,9 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
 /** Compression-ratio quality signal (the RefinedWeb/Dolma-family
@@ -66,9 +64,4 @@ case class DeflateRatio(child: Expression)
     copy(child = newChild)
 
   override def prettyName: String = "compression_ratio"
-}
-
-object CompressExpressions {
-  def compressionRatio(c: Column): Column =
-    ExpressionUtils.column(DeflateRatio(ExpressionUtils.expression(c)))
 }

@@ -532,10 +532,6 @@ object TextHashExpressions {
     ExpressionUtils.column(
       ShingleHashes64(ExpressionUtils.expression(text), n, fast = true))
 
-  def xxCharShingleHashes64(text: Column, n: Int): Column =
-    ExpressionUtils.column(
-      CharShingleHashes64(ExpressionUtils.expression(text), n, fast = true))
-
   def tokenStats64(text: Column): Column =
     ExpressionUtils.column(TokenStats64(ExpressionUtils.expression(text)))
 

@@ -504,11 +504,6 @@ object VectorExpressions {
   def quantize8(v: Column): Column =
     ExpressionUtils.column(Quantize8(ExpressionUtils.expression(v)))
 
-  /** Exact integer dot of two int8 code arrays. */
-  def dotI8(a: Column, b: Column): Column =
-    ExpressionUtils.column(DotProductInt8(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
   /** Native argmax-cosine cell assignment (1-based; null on zero norm). */
   def cosineArgmax(vec: Column, cents: Column): Column =
     ExpressionUtils.column(CosineArgmax(

@@ -62,8 +62,8 @@ class LooseEndsSpec extends AnyFunSuite {
       .asInstanceOf[scala.collection.Seq[Long]].toSeq == Seq(0L, 400L, 800L))
     assert(one(size(Multimodal.frameSampleIndexes(lit(null).cast("long"), 400L))) == 0)
     val df = Seq(Tuple1("abc")).toDF("t").withColumn("bin", col("t").cast("binary"))
-    val meta = Multimodal.byteMeta(col("bin"))
-    val row = df.select(meta.map { case (n, c) => c.as(n) }: _*).collect().head
+    val row = df.select(Multimodal.mediaMeta(col("bin"), lit("text/plain"))
+      .getField("byte_length")).collect().head
     assert(row.getLong(0) == 3L)
   }
 
@@ -76,26 +76,5 @@ class LooseEndsSpec extends AnyFunSuite {
         |                     array(cast(3.0 AS float), cast(4.0 AS float))) AS d
       """.stripMargin).collect().head.getDouble(0)
     assert(d == 11.0)
-  }
-
-  test("byte-weighted repartition keeps all rows") {
-    val df = Seq.tabulate(20)(i => (i.toLong, "x" * (i * 100)))
-      .toDF("id", "t").withColumn("bin", col("t").cast("binary"))
-    val out = Multimodal.repartitionByBytes(df, "bin", targetBytes = 500, numPartitions = 4)
-    assert(out.count() == 20)
-    assert(out.rdd.getNumPartitions == 4)
-  }
-
-  test("byte-weighted repartition spreads a single size class (thumbnail corpus)") {
-    // 200 distinct tiny payloads, all in size class 0: without the
-    // content-hash spread they all shared one range-sort key and
-    // collapsed into a single partition
-    val df = Seq.tabulate(200)(i => (i.toLong, s"thumb_$i"))
-      .toDF("id", "t").withColumn("bin", col("t").cast("binary"))
-    val out = Multimodal.repartitionByBytes(df, "bin",
-      targetBytes = 1 << 20, numPartitions = 4)
-    val sizes = out.rdd.glom().map(_.length).collect()
-    assert(sizes.count(_ > 0) >= 3,
-      s"size class collapsed into too few partitions: ${sizes.toSeq}")
   }
 }

@@ -63,7 +63,7 @@ class PropertiesSpec extends AnyFunSuite {
       val df = steps.distinct.map(s => (1L, 1L, s)).toDF(
         Model.ProjectId, Model.HouseId, "s")
         .withColumn(Model.ReadingDate, timestamp_seconds(col("s") * 900))
-      val spine = Resample.bucketSpine(df,
+      val spine = ReferenceForms.bucketSpine(df,
         Seq(Model.ProjectId, Model.HouseId), "15min")
       spine.count() == steps.max - steps.min + 1
     }, n = 8)

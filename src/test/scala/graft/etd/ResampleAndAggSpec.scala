@@ -81,7 +81,7 @@ class ResampleAndAggSpec extends AnyFunSuite {
     val cols = Seq("A", "B")
     val sort = Seq(HouseId, "s").map(col)
     val batched = ProjectAggregate.rebuildCumulative(df, cols)
-    val fold = ProjectAggregate.rebuildCumulativeFold(df, cols)
+    val fold = ReferenceForms.rebuildCumulativeFold(df, cols)
     assert(batched.columns.toSeq == fold.columns.toSeq, "column order differs")
     assert(batched.orderBy(sort: _*).collect().toSeq ==
       fold.orderBy(sort: _*).collect().toSeq)

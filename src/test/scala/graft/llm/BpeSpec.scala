@@ -40,7 +40,7 @@ class BpeSpec extends AnyFunSuite {
   test("bpeSplit: replaying learned merges tokenizes unseen words") {
     val merges = SequentialMerges.bpe(corpus, 6)
     def toks(s: String): Seq[String] =
-      spark.range(1).select(BpeTrain.bpeSplit(lit(s), merges))
+      spark.range(1).select(SequentialMerges.bpeSplit(lit(s), merges))
         .collect().head.getSeq[String](0).toSeq
     // the classic result: "lowest" = low + est</w>
     assert(toks("lowest") == Seq("low", "est</w>"))
@@ -76,7 +76,7 @@ class BpeSpec extends AnyFunSuite {
     val merges = SequentialMerges.bpe(wc, numMerges = 25, minFrequency = 2)
     assert(merges.nonEmpty)
     val replay = docs
-      .select(col("doc_id"), BpeTrain.bpeSplit(col("text"), merges).as("t"))
+      .select(col("doc_id"), SequentialMerges.bpeSplit(col("text"), merges).as("t"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
     val greedy = BpeTrain.bpeTokensPartitions(docs, "doc_id", "text", merges)
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
@@ -106,7 +106,7 @@ class BpeSpec extends AnyFunSuite {
     val merges = SequentialMerges.bpe(wc, numMerges = 20, minFrequency = 2)
     assert(merges.nonEmpty)
     val replay = docs
-      .select(col("doc_id"), BpeTrain.bpeSplit(col("text"), merges).as("t"))
+      .select(col("doc_id"), SequentialMerges.bpeSplit(col("text"), merges).as("t"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
     val greedy = BpeTrain.bpeTokensPartitions(docs, "doc_id", "text", merges)
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
@@ -134,7 +134,7 @@ class BpeSpec extends AnyFunSuite {
     val greedy = BpeTrain.bpeTokensPartitions(letters, "doc_id", "letters", merges)
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
     val replay = letters
-      .select(col("doc_id"), BpeTrain.bpeSplit(col("letters"), merges).as("t"))
+      .select(col("doc_id"), SequentialMerges.bpeSplit(col("letters"), merges).as("t"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
     assert(greedy == replay,
       s"greedy/replay divergence: ${greedy.find(kv => replay(kv._1) != kv._2)}")

@@ -56,7 +56,9 @@ class CollocationPriorSpec extends AnyFunSuite {
     // the whole domain; a: (8 + 1.6)/10 = 0.96 — barely moved
     assert(m2("b")._4 == 0.4 && m2("a")._4 == 0.96)
     // join-back decorates every row with its group's columns
-    val back = Curation.withGroupQualityPrior(docs, "source", "q", 2.0)
+    val back = docs.join(
+      broadcast(Curation.groupQualityPrior(docs, "source", "q", 2.0)),
+      Seq("source"))
     assert(back.count() == 10 &&
       back.filter(col("source") === "b")
         .select("smoothed_quality").distinct().as[Double].collect()

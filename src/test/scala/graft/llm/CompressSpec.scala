@@ -13,10 +13,18 @@ class CompressSpec extends AnyFunSuite {
   import SharedSpark.spark
   import spark.implicits._
 
+  // the native kernel as the SQL function the session extension registers
+  spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    "compression_ratio",
+    exprs => org.apache.spark.sql.graft.DeflateRatio(exprs.head),
+    "built-in")
+  private def compressionRatio(c: org.apache.spark.sql.Column) =
+    call_function("compression_ratio", c)
+
   private def ratios(texts: Seq[String], parts: Int = 3): Seq[Option[Double]] =
     texts.zipWithIndex.map { case (t, i) => (i, t) }
       .toDF("i", "t").repartition(parts)
-      .select(col("i"), TextFunctions.compressionRatio(col("t")))
+      .select(col("i"), compressionRatio(col("t")))
       .as[(Int, Option[Double])].collect().sortBy(_._1).map(_._2).toSeq
 
   test("matches a direct Deflater computation; repetitive << prose") {
@@ -33,7 +41,7 @@ class CompressSpec extends AnyFunSuite {
   test("empty is 1.0, null is null, values partitioning-stable") {
     assert(ratios(Seq("")) == Seq(Some(1.0)))
     assert(Seq((1, null.asInstanceOf[String])).toDF("i", "t")
-      .select(TextFunctions.compressionRatio(col("t")))
+      .select(compressionRatio(col("t")))
       .as[Option[Double]].collect().toSeq == Seq(None))
     val texts = (0 until 50).map(i => s"doc $i " * (i + 1))
     assert(ratios(texts, parts = 1) == ratios(texts, parts = 7))

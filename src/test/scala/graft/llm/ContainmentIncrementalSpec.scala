@@ -70,27 +70,6 @@ class ContainmentIncrementalSpec extends AnyFunSuite {
     assert(run(snap, arch, 0.5) == Set(10L, 11L))
   }
 
-  test("frozen-df order screen equals brute force and the hash-order " +
-      "screen (the jaccardDedupAgainstFrozen discipline, asymmetric)") {
-    for (seed <- Seq(7, 8); t <- Seq(0.4, 0.8)) {
-      val arch = corpus(seed, 50, idBase = 0L)
-      val snap = corpus(seed + 100, 50, idBase = 1000L) ++
-        arch.take(10).map { case (id, s) =>
-          (2000L + id, s.split(" ").take(6).mkString(" ")) }
-      val archDf = arch.toDF("doc_id", "text")
-      val (idx, dfTable) =
-        Dedup.containmentIndexFrozen(archDf, "doc_id", "text")
-      val frozen = Dedup.containmentDedupAgainstFrozen(
-          snap.toDF("doc_id", "text"), "doc_id", "text",
-          idx, dfTable, archDf, "doc_id", "text", t)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(frozen == bruteSurvivors(snap, arch, t),
-        s"frozen-order screen diverged from brute force at t=$t seed=$seed")
-      assert(frozen == run(snap, arch, t),
-        "frozen and hash orders must keep identical survivors")
-    }
-  }
-
   test("index is append-only and threshold-independent; replay is " +
       "idempotent (two-arrival == one-shot)") {
     val arch1 = corpus(7, 30, idBase = 0L)

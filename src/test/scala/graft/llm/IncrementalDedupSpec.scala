@@ -94,11 +94,14 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(kept.contains(13L) && !kept.contains(10L) && !kept.contains(11L))
     assert(kept.contains(12L), "verify must recover the low-Jaccard collision")
 
-    // verify-kept is a STRICT superset of screen-kept here: the screen
-    // over-drops doc 12 (membership semantics), verification recovers it
-    val memIdx = Dedup.bandIndex(archive, "doc_id", "text")
-    val screenKept = Dedup.nearDupScreenAgainst(snapshot, "doc_id", "text",
-        memIdx).select("doc_id").collect().map(_.getLong(0)).toSet
+    // verify-kept is a STRICT superset of screen-kept here: a band
+    // membership screen (any shared band key drops) over-drops doc 12,
+    // verification recovers it
+    val collided = Dedup.bandIndexWithIds(snapshot, "doc_id", "text")
+      .join(idIdx.select("band", "band_key"), Seq("band", "band_key"),
+        "left_semi")
+      .select("archive_id").collect().map(_.getLong(0)).toSet
+    val screenKept = Set(10L, 11L, 12L, 13L) -- collided
     assert(screenKept.subsetOf(kept) && !screenKept.contains(12L))
 
     // and the dropped set equals the union-corpus definition: a cross
@@ -114,27 +117,5 @@ class IncrementalDedupSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     val dropped = Set(10L, 11L, 12L, 13L) -- kept
     assert(dropped == crossVerified)
-  }
-
-  test("nearDupScreenAgainst drops band-collision docs, keeps novel ones") {
-    val archive = Seq(1L -> a, 2L -> b).toDF("doc_id", "text")
-    val snapshot = Seq(
-      10L -> a,               // identical -> every band collides -> dropped
-      11L -> (a + " today"),  // near-dup -> some band collides -> dropped
-      12L -> c                // novel -> no collision -> kept
-    ).toDF("doc_id", "text")
-    val idx = Dedup.bandIndex(archive, "doc_id", "text")
-    val kept = Dedup.nearDupScreenAgainst(snapshot, "doc_id", "text", idx)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(12L))
-
-    // the screen's drop set == snapshot docs with an lshCandidatePairs
-    // pair crossing into the archive on the union corpus
-    val crossPairs = Dedup.lshCandidatePairs(
-        archive.unionByName(snapshot), "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .filter { case (x, y) => (x < 10) != (y < 10) }
-      .flatMap { case (x, y) => Seq(x, y) }.filter(_ >= 10).toSet
-    assert(crossPairs == Set(10L, 11L))
   }
 }

@@ -46,58 +46,6 @@ class JaccardIncrementalSpec extends AnyFunSuite {
     }
   }
 
-  test("frozen-df order screen equals brute force and the hash-order screen") {
-    for (seed <- Seq(7, 8); t <- Seq(0.4, 0.8)) {
-      val arch = corpus(seed, 50, idBase = 0L)
-      val snap = corpus(seed + 100, 50, idBase = 1000L)
-      val archDf = arch.toDF("doc_id", "text")
-      val (idx, dfTable) = Dedup.jaccardIndexFrozen(archDf, "doc_id", "text", t)
-      val frozen = Dedup.jaccardDedupAgainstFrozen(
-          snap.toDF("doc_id", "text"), "doc_id", "text",
-          idx, dfTable, archDf, "doc_id", "text", t)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(frozen == bruteSurvivors(snap, arch, t),
-        s"frozen-order screen diverged from brute force at t=$t seed=$seed")
-      assert(frozen == run(snap, arch, t, t),
-        "frozen and hash orders must keep identical survivors")
-    }
-  }
-
-  test("frozen-df order prunes candidates a boilerplate shingle would flood") {
-    // every archive doc shares one boilerplate sentence; under hash
-    // order it can land in prefixes, under frozen-df order it cannot
-    // (df = corpus size pushes it to every suffix)
-    val boiler = "all rights reserved contact us for details"
-    val arch = (0L until 40L).map(i =>
-      (i, s"unique alpha$i beta$i gamma$i delta$i epsilon$i $boiler"))
-    val snap = (0L until 40L).map(i =>
-      (1000L + i, s"other zeta$i eta$i theta$i iota$i kappa$i $boiler"))
-    val archDf = arch.toDF("doc_id", "text")
-    val snapDf = snap.toDF("doc_id", "text")
-    val t = 0.4
-    def candRows(snapPref: org.apache.spark.sql.DataFrame,
-                 idxPref: org.apache.spark.sql.DataFrame): Long =
-      snapPref.select(col("__id"), explode(col("__prefix")).as("__h"))
-        .join(idxPref.select(col("archive_id"), explode(col("prefix")).as("__h")),
-          Seq("__h"))
-        .count()
-    val (fIdx, dfTable) = Dedup.jaccardIndexFrozen(archDf, "doc_id", "text", t)
-    val order = dfTable.select(col("shingle_hash").as("__h"), col("df").as("__df"))
-    val frozenRows = candRows(
-      Dedup.jaccardPrefixesWithOrder(Dedup.jaccardSets(snapDf, "doc_id", "text"), order, t),
-      fIdx)
-    val hashRows = candRows(
-      Dedup.jaccardPrefixesFixedOrder(Dedup.jaccardSets(snapDf, "doc_id", "text"), t),
-      Dedup.jaccardIndex(archDf, "doc_id", "text", t))
-    assert(frozenRows < hashRows,
-      s"frozen-df order must prune the boilerplate flood: $frozenRows vs $hashRows")
-    // and the screens still agree with brute force
-    assert(Dedup.jaccardDedupAgainstFrozen(snapDf, "doc_id", "text",
-        fIdx, dfTable, archDf, "doc_id", "text", t)
-      .select("doc_id").collect().map(_.getLong(0)).toSet ==
-      bruteSurvivors(snap, arch, t))
-  }
-
   test("a lower-threshold index serves a higher-threshold screen unchanged") {
     val arch = corpus(9, 40, idBase = 0L)
     val snap = corpus(109, 40, idBase = 1000L)

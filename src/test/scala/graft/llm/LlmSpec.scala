@@ -53,7 +53,7 @@ class LlmSpec extends AnyFunSuite {
     val text = "w1 w2 w3 w4 w5 w6 w7 w8"
     val df = Seq((1L, text), (2L, text), (3L, "x1 x2 x3 x4 x5 x6 x7 x8"))
       .toDF("id", "text")
-    val sigs = df.select(col("id"), Dedup.minhashSignature(col("text")).as("s"))
+    val sigs = Dedup.minhashSignatures(df, "id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs(1L) == sigs(2L) && sigs(1L) != sigs(3L))
     assert(sigs(1L).length == 16)
@@ -82,7 +82,7 @@ class LlmSpec extends AnyFunSuite {
     val s1 = one(Dedup.simhash(lit("a b c d e"))).asInstanceOf[Long]
     val s2 = one(Dedup.simhash(lit("a b c d e"))).asInstanceOf[Long]
     assert(s1 == s2)
-    assert(one(Dedup.hammingDistance(lit(s1), lit(s1))) == 0)
+    assert(java.lang.Long.bitCount(s1 ^ s2) == 0) // Hamming distance
   }
 
   test("cosine: orthogonal -> 0, parallel -> 1, zero-norm -> null") {
@@ -101,43 +101,6 @@ class LlmSpec extends AnyFunSuite {
         vecs.filter(col("id") === 1), vecs, "id", "v", 2)
       .orderBy("rank").collect()
     assert(top.map(_.getAs[Long]("neighbor_id")).toSeq == Seq(4L, 2L))
-  }
-
-  test("k-means codebook training converges on separated clusters") {
-    // two tight clusters on orthogonal axes; init from first 2 rows (one
-    // per cluster by construction)
-    val pts = Seq(
-      (1L, Array(1.0f, 0.05f)), (2L, Array(0.05f, 1.0f)),
-      (3L, Array(0.95f, 0.1f)), (4L, Array(0.1f, 0.9f)),
-      (5L, Array(1.05f, 0.0f)), (6L, Array(0.0f, 1.1f)))
-      .toDF("id", "v")
-    val cb = Similarity.trainCodebook(pts, "id", "v", k = 2, iterations = 3)
-    assert(cb.length == 2)
-    // cluster 1 centroid dominated by x, cluster 2 by y
-    assert(cb(0)(0) > cb(0)(1) && cb(1)(1) > cb(1)(0))
-    // assignment with the trained codebook separates the clusters
-    val cents = array(cb.toIndexedSeq.map(c =>
-      array(c.toIndexedSeq.map(lit(_)): _*)): _*)
-    val cells = pts.withColumn("cell", Similarity.ivfAssign(col("v"), cents))
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(Set(1L, 3L, 5L).map(cells) == Set(1L))
-    assert(Set(2L, 4L, 6L).map(cells) == Set(2L))
-  }
-
-  test("quantized scan + exact re-rank recovers the brute-force top-k") {
-    val vecs = Seq(
-      (1L, Array(1.0f, 0.1f, 0.3f)), (2L, Array(0.8f, 0.2f, 0.25f)),
-      (3L, Array(0.1f, 0.9f, 0.2f)), (4L, Array(0.9f, 0.15f, 0.28f)),
-      (5L, Array(0.2f, 0.85f, 0.1f)), (6L, Array(0.95f, 0.12f, 0.31f)))
-      .toDF("id", "v")
-    val queries = vecs.filter(col("id") === 1)
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("rank").collect().map(_.getAs[Long]("neighbor_id")).toSeq
-    val brute = ids(Similarity.bruteForceTopK(queries, vecs, "id", "v", 3))
-    val reranked = ids(Similarity.quantizedRerankTopK(queries, vecs, "id", "v",
-      k = 3, candidates = 5))
-    assert(reranked == brute,
-      "exact re-rank over a wide-enough quantized pool must equal brute force")
   }
 
   test("multi-probe IVF: nprobe = nlist equals brute force; nprobe lifts recall") {
@@ -258,34 +221,6 @@ class LlmSpec extends AnyFunSuite {
       "n_min must come from the smallest REAL language, not the null group")
   }
 
-  test("cutSpans: span tokens removed, remainder stitched, others untouched") {
-    val docs = Seq(
-      (1L, "aa bb one two three four five cc dd"),
-      (2L, "one two three four five zz yy xx ww"),
-      (3L, "untouched text here")).toDF("id", "t")
-    val spans = Dedup.duplicateSpans(docs, "id", "t", n = 3)
-    // keep-first policy: cut only from the higher id of the pair
-    val out = Dedup.cutSpans(docs, spans.filter(col("id") =!= 1L), "id", "t")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(1L) == "aa bb one two three four five cc dd")
-    assert(out(2L) == "zz yy xx ww", s"shared passage not cut: ${out(2L)}")
-    assert(out(3L) == "untouched text here")
-  }
-
-  test("cutSpans aligns with duplicateSpans tokenization on multi-whitespace text") {
-    // newline inside doc 1: a single-space split would shift every index
-    val docs = Seq(
-      (1L, "aa\nbb one two three four five\tcc dd"),
-      (2L, "one two three four five zz yy xx ww")).toDF("id", "t")
-    val spans = Dedup.duplicateSpans(docs, "id", "t", n = 3)
-    val out = Dedup.cutSpans(docs, spans.filter(col("id") === 1L), "id", "t")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(1L) == "aa bb cc dd",
-      s"span cut misaligned on whitespace runs: '${out(1L)}'")
-    assert(out(2L) == "one two three four five zz yy xx ww",
-      "untouched docs keep original bytes")
-  }
-
   test("paragraphDedup preserves non-text columns") {
     val docs = Seq((1L, "boiler\n\nalpha", "web", 9),
       (2L, "boiler", "books", 7)).toDF("id", "t", "source", "extra")
@@ -329,15 +264,17 @@ class LlmSpec extends AnyFunSuite {
     assert((c.getInt(0), c.getInt(1), c.getInt(2)) == ((1, 1, 1)))
   }
 
-  test("PQ: encode/ADC round-trip, rerank recovers brute force, training separates") {
+  test("PQ: encode/ADC round-trip; separated clusters encode apart") {
     // 4-dim vectors, m=2 subspaces of 2; clusters on orthogonal half-axes
     val vecs = Seq(
       (1L, Array(1.0f, 0.1f, 0.3f, 0.0f)), (2L, Array(0.8f, 0.2f, 0.25f, 0.1f)),
       (3L, Array(0.1f, 0.9f, 0.2f, 0.8f)), (4L, Array(0.9f, 0.15f, 0.28f, 0.05f)),
       (5L, Array(0.2f, 0.85f, 0.1f, 0.9f)), (6L, Array(0.95f, 0.12f, 0.31f, 0.02f)))
       .toDF("id", "v")
-    val cb = Similarity.pqTrain(vecs, "id", "v", m = 2, k = 2, iterations = 3)
-    assert(cb.length == 2 && cb(0).length == 2 && cb(0)(0).length == 2)
+    // per subspace, one centroid at each cluster's mean
+    val cb = Array(
+      Array(Array(0.9125f, 0.1425f), Array(0.15f, 0.875f)),
+      Array(Array(0.285f, 0.0425f), Array(0.15f, 0.85f)))
     // codes are 0-based and within range; x-cluster and y-cluster get
     // different codes in subspace 0
     val codes = vecs.select(col("id"),
@@ -349,15 +286,6 @@ class LlmSpec extends AnyFunSuite {
     // ADC score == sum of per-subspace centroid inner products
     val lut = Similarity.pqLut(Array(1.0f, 0.1f, 0.3f, 0.0f), cb)
     assert(lut.length == 4)
-    // full-overfetch rerank equals brute force
-    val queries = vecs.filter(col("id") === 1)
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("rank").collect().map(_.getAs[Long]("neighbor_id")).toSeq
-    val brute = ids(Similarity.bruteForceTopK(queries, vecs, "id", "v", 3))
-    val reranked = ids(Similarity.pqRerankTopK(queries, vecs, "id", "v", cb,
-      k = 3, overfetch = 2))
-    assert(reranked == brute,
-      "exact re-rank over a wide-enough ADC pool must equal brute force")
   }
 
   test("IVF-PQ: nprobe = nlist equals plain PQ; nprobe=1 returns a subset") {
@@ -366,7 +294,9 @@ class LlmSpec extends AnyFunSuite {
       (3L, Array(0.1f, 0.9f, 0.2f, 0.8f)), (4L, Array(0.9f, 0.15f, 0.28f, 0.05f)),
       (5L, Array(0.2f, 0.85f, 0.1f, 0.9f)), (6L, Array(0.95f, 0.12f, 0.31f, 0.02f)))
       .toDF("id", "v")
-    val cb = Similarity.pqTrain(vecs, "id", "v", m = 2, k = 2, iterations = 2)
+    val cb = Array(
+      Array(Array(0.9125f, 0.1425f), Array(0.15f, 0.875f)),
+      Array(Array(0.285f, 0.0425f), Array(0.15f, 0.85f)))
     val coarse = Array(Array(1.0f, 0.0f, 0.3f, 0.0f), Array(0.0f, 1.0f, 0.1f, 0.9f))
     val queries = Seq(1L -> Array(1.0f, 0.1f, 0.3f, 0.0f))
     def pairs(df: org.apache.spark.sql.DataFrame) =
@@ -591,11 +521,15 @@ class LlmSpec extends AnyFunSuite {
         col("a.id") < col("b.id"))
       .select(
         Dedup.cosine(col("a.v"), col("b.v")).as("exact"),
-        Similarity.quantizedCosine(col("a.q"), col("b.q")).as("approx"))
+        col("a.q.codes"), col("b.q.codes"))
       .collect()
     pairs.foreach { r =>
-      assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 0.02,
-        s"approx ${r.getDouble(1)} vs exact ${r.getDouble(0)}")
+      // approximate cosine over the int8 codes alone
+      val (a, b) = (r.getSeq[Byte](1).map(_.toDouble), r.getSeq[Byte](2).map(_.toDouble))
+      val approx = a.zip(b).map { case (x, y) => x * y }.sum /
+        math.sqrt(a.map(x => x * x).sum * b.map(x => x * x).sum)
+      assert(math.abs(r.getDouble(0) - approx) < 0.02,
+        s"approx $approx vs exact ${r.getDouble(0)}")
     }
   }
 

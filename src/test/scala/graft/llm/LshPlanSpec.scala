@@ -34,21 +34,6 @@ class LshPlanSpec extends AnyFunSuite {
     }
   }
 
-  test("lshCandidateProbability: exact S-curve endpoints and monotonicity") {
-    assert(Dedup.lshCandidateProbability(0.0, 4, 4) == 0.0)
-    assert(Dedup.lshCandidateProbability(1.0, 4, 4) == 1.0)
-    val ps = (0 to 20).map(i => Dedup.lshCandidateProbability(i / 20.0, 4, 4))
-    assert(ps.sliding(2).forall(w => w(1) >= w(0)), "monotone in s")
-    // hand value: s=0.8, r=4, b=4: 1-(1-0.4096)^4
-    assert(math.abs(Dedup.lshCandidateProbability(0.8, 4, 4) -
-      (1.0 - math.pow(1.0 - math.pow(0.8, 4), 4))) < 1e-15)
-    // the planned-vs-default recall gap the scaladoc claims at t=0.2:
-    // a true pair at exactly s=0.2 is found with prob 0.972 under the
-    // planned (16,1) vs 0.0064 under the 4x4 default
-    assert(Dedup.lshCandidateProbability(0.2, 16, 1) > 0.97)
-    assert(Dedup.lshCandidateProbability(0.2, 4, 4) < 0.01)
-  }
-
   test("splitAssign: exhaustive, disjoint, growth-stable, salt-independent") {
     import org.apache.spark.sql.functions._
     val splits = Seq("train" -> 0.8, "validation" -> 0.1, "test" -> 0.1)
@@ -90,19 +75,5 @@ class LshPlanSpec extends AnyFunSuite {
       "a cluster must never straddle splits")
     assert(perKey.filter(col("members") > 1).count() > 0,
       "the duplicated fixture must actually produce multi-member clusters")
-  }
-
-  test("nearDedupPlanned == nearDedup with the plan's explicit params") {
-    val docs = (1L to 40L).map { i =>
-      val base = s"alpha beta gamma delta epsilon zeta eta theta word$i"
-      (i, if (i % 5 == 0) base + " extra" else base)
-    }.toDF("doc_id", "text")
-    val (b, r) = Dedup.lshPlan(0.5, 16)
-    val planned = Dedup.nearDedupPlanned(docs, "doc_id", "text", 0.5)
-      .select("doc_id").as[Long].collect().toSet
-    val explicit = Dedup.nearDedup(docs, "doc_id", "text",
-        jaccardThreshold = 0.5, numHashes = b * r, bands = b)
-      .select("doc_id").as[Long].collect().toSet
-    assert(planned == explicit && planned.nonEmpty)
   }
 }

@@ -35,24 +35,6 @@ class MixingSpec extends AnyFunSuite {
     assert(sizes.size == 8 && sizes.values.min > 200 / 8 / 3)
   }
 
-  test("writeShuffled: shard directories hold the deterministic read order") {
-    val docs = (1L to 120L).map(i => (i, s"text $i")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("shuffled").toString
-    Mixing.writeShuffled(docs, "doc_id", nShards = 4, s"$tmp/corpus")
-    val back = spark.read.parquet(s"$tmp/corpus")
-    assert(back.count() == 120)
-    // within one shard directory, file row order IS the shuffle order
-    val shard0 = spark.read.parquet(s"$tmp/corpus/shard=0")
-      .select("shuffle_order", "doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(shard0.nonEmpty && (shard0 sameElements shard0.sortBy(identity)))
-    // and the membership matches shuffleKeys exactly
-    val expected0 = Mixing.shuffleKeys(docs, "doc_id", 4)
-      .filter(col("shard") === 0).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(shard0.map(_._2).toSet == expected0)
-  }
-
   test("mixturePlan: caps at maxEpochs, reports shortfall, zero-weights excluded") {
     val docs = Seq(
       ("a", 100L), ("a", 100L),          // source a: 200 tokens

@@ -30,29 +30,6 @@ class MultimodalPackSpec extends AnyFunSuite {
     assert(n.isNullAt(0), "undecodable payload must surface null, not zero")
   }
 
-  test("audioTokens: ceil-division on decoded duration, null-safe") {
-    val rows = Seq(20L, 21L, 1L, 60000L)
-      .toDF("d")
-      .select(Multimodal.audioTokens(col("d"), 20L).as("t"))
-      .collect().map(_.getLong(0)).toSeq
-    assert(rows == Seq(1L, 2L, 1L, 3000L))
-    val n = Seq(Option.empty[Long]).toDF("d")
-      .select(Multimodal.audioTokens(col("d"), 20L).as("t")).collect().head
-    assert(n.isNullAt(0))
-  }
-
-  test("videoTokens: frame grid x patch tiles, null-safe") {
-    // 10 s at one frame per 2 s = 5 frames; 224x224/14 = 256 tiles
-    val v = Seq((10000L, 224, 224)).toDF("d", "w", "h")
-      .select(Multimodal.videoTokens(col("d"), 2000L, col("w"), col("h"), 14)
-        .as("t")).collect().head
-    assert(v.getLong(0) == 5L * 256L)
-    val n = Seq((Option.empty[Long], 224, 224)).toDF("d", "w", "h")
-      .select(Multimodal.videoTokens(col("d"), 2000L, col("w"), col("h"), 14)
-        .as("t")).collect().head
-    assert(n.isNullAt(0))
-  }
-
   test("q_pack_multimodal: every doc packed once, image cost real, prefix sums consistent") {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.SparkEntry.table(spark, dir, "documents")

@@ -62,9 +62,16 @@ class NativeTextHashSpec extends AnyFunSuite {
             s => xxhash64(s))).collect()
       assert(rows.forall(_.getBoolean(0)), s"word mismatch at n=$n")
     }
+    // the char kernel's fast mode as the SQL function the session
+    // extension registers
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "xx_char_shingle_hashes64",
+      exprs => org.apache.spark.sql.graft.CharShingleHashes64(exprs.head,
+        exprs(1).eval().asInstanceOf[Number].intValue(), fast = true),
+      "built-in")
     for (n <- Seq(2, 3)) {
       val rows = df.select(
-        TextFunctions.charShingleHashesFast(col("t"), n) ===
+        call_function("xx_char_shingle_hashes64", col("t"), lit(n)) ===
           transform(ComposedForms.charShingles(col("t"), n),
             s => xxhash64(s))).collect()
       assert(rows.forall(_.getBoolean(0)), s"char mismatch at n=$n")

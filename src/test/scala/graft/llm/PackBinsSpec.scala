@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 
-/** No-straddle bin packing: capacity respected, every document placed
-  * exactly once, deterministic across partitionings, waste beats naive
-  * sequential filling on skewed lengths.
+/** No-straddle next-fit bin packing: capacity respected, every
+  * document placed exactly once, the fold replays locally, oversized
+  * documents are rejected.
   */
 class PackBinsSpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -22,55 +22,12 @@ class PackBinsSpec extends AnyFunSuite {
   }
   private val budget = 1024L
 
-  test("capacity respected; every doc in exactly one bin; report adds up") {
-    val df = docs.toDF("doc_id", "n_tokens")
-    val packed = Packing.packBins(df, "doc_id", "n_tokens", budget, shards = 4)
-    assert(packed.count() == docs.size)
-    assert(packed.select("doc_id").distinct().count() == docs.size)
-    val report = Packing.binReport(packed, "n_tokens", budget)
-    val over = report.filter(col("bin_fill") > budget).count()
-    assert(over == 0, "no bin may exceed the budget")
-    val totTokens = report.agg(sum("bin_fill")).collect().head.getLong(0)
-    assert(totTokens == docs.map(_._2).sum)
-    assert(report.agg(min("padding")).collect().head.getLong(0) >= 0)
-  }
-
-  test("deterministic across input partitionings") {
-    val a = Packing.packBins(docs.toDF("doc_id", "n_tokens").repartition(3),
-        "doc_id", "n_tokens", budget, shards = 4)
-      .select("doc_id", "shard", "bin_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-    val b = Packing.packBins(docs.toDF("doc_id", "n_tokens").repartition(17),
-        "doc_id", "n_tokens", budget, shards = 4)
-      .select("doc_id", "shard", "bin_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-    assert(a == b)
-  }
-
-  test("best-fit-decreasing wastes less than arrival-order sequential filling") {
-    val df = docs.toDF("doc_id", "n_tokens")
-    val packed = Packing.packBins(df, "doc_id", "n_tokens", budget,
-      shards = 1, maxOpenBins = 64)
-    val bfdBins = Packing.binReport(packed, "n_tokens", budget).count()
-    // naive baseline: id order, one open bin, close on first misfit
-    var bins = 1L; var room = budget
-    docs.sortBy(_._1).foreach { case (_, len) =>
-      if (len > room) { bins += 1; room = budget }
-      room -= len
-    }
-    assert(bfdBins < bins,
-      s"BFD used $bfdBins bins vs sequential $bins — expected an improvement")
-    // and the theoretical floor is close: total/budget
-    val floor = math.ceil(docs.map(_._2).sum.toDouble / budget).toLong
-    assert(bfdBins <= (floor * 1.15).toLong + 1,
-      s"BFD $bfdBins bins vs floor $floor")
-  }
-
   test("next-fit: valid packing, deterministic, local replay matches") {
     val df = docs.toDF("doc_id", "n_tokens")
     val packed = Packing.packBinsNextFit(df.repartition(7), "doc_id",
       "n_tokens", budget, shards = 4)
-    val report = Packing.binReport(packed, "n_tokens", budget)
+    val report = packed.groupBy("shard", "bin_id")
+      .agg(sum(col("n_tokens")).as("bin_fill"))
     assert(report.filter(col("bin_fill") > budget).count() == 0)
     assert(packed.select("doc_id").distinct().count() == docs.size)
     // independent sequential replay of the fold (what the DuckDB
@@ -93,31 +50,11 @@ class PackBinsSpec extends AnyFunSuite {
     assert(got.forall { case (id, shard, _) => byShard(id) == shard })
   }
 
-  test("best-fit-decreasing wastes no more bins than next-fit") {
-    val df = docs.toDF("doc_id", "n_tokens")
-    val bfd = Packing.binReport(
-      Packing.packBins(df, "doc_id", "n_tokens", budget, shards = 4),
-      "n_tokens", budget).count()
-    val nf = Packing.binReport(
-      Packing.packBinsNextFit(df, "doc_id", "n_tokens", budget, shards = 4),
-      "n_tokens", budget).count()
-    assert(bfd <= nf, s"BFD $bfd bins vs next-fit $nf")
-  }
-
   test("oversized documents are rejected") {
     val df = Seq((1L, budget + 1)).toDF("doc_id", "n_tokens")
     val ex = intercept[Exception] {
-      Packing.packBins(df, "doc_id", "n_tokens", budget, shards = 1).count()
+      Packing.packBinsNextFit(df, "doc_id", "n_tokens", budget, shards = 1).count()
     }
     assert(ex.getMessage.contains("exceeds budget") || ex.getCause != null)
-  }
-
-  test("tiny open-bin cap still packs validly (bounded-memory contract)") {
-    val df = docs.toDF("doc_id", "n_tokens")
-    val packed = Packing.packBins(df, "doc_id", "n_tokens", budget,
-      shards = 2, maxOpenBins = 2)
-    val report = Packing.binReport(packed, "n_tokens", budget)
-    assert(report.filter(col("bin_fill") > budget).count() == 0)
-    assert(packed.count() == docs.size)
   }
 }

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 
-/** Distributed PCA: moment pass, Jacobi eigensolve, projection /
-  * reconstruction columns, and the oracle-arithmetic covariance twin.
+/** PCA projection columns over a fixed orthonormal model, and the
+  * oracle-arithmetic covariance against driver arithmetic.
   */
 class PcaSpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -27,49 +27,17 @@ class PcaSpec extends AnyFunSuite {
     (i.toLong, v)
   }
   private lazy val df = vecs.toDF("id", "vec").repartition(5)
-  private lazy val model = Embeddings.pcaTrain(df, "vec", dim, k = 4)
-
-  test("components are orthonormal; eigenvalues descend; top-2 carry the signal") {
-    for (i <- model.components.indices; j <- model.components.indices) {
-      val dot = model.components(i).zip(model.components(j)).map { case (a, b) => a * b }.sum
-      if (i == j) assert(math.abs(dot - 1.0) < 1e-9, s"||c$i|| != 1: $dot")
-      else assert(math.abs(dot) < 1e-9, s"c$i . c$j = $dot")
-    }
-    val ev = model.eigenvalues
-    assert(ev.sliding(2).forall(p => p(0) >= p(1)))
-    // the rank-2 signal dominates: 3rd eigenvalue is noise-scale
-    assert(ev(0) > 1.0 && ev(1) > 0.5 && ev(2) < 0.01,
-      s"eigenvalues ${ev.toSeq}")
-  }
-
-  test("eigen equation holds: cov . v = lambda v") {
-    val (n, s, g) = Embeddings.moments(df, "vec", dim)
-    val (_, cov) = Embeddings.covarianceMatrix(n, s, g, dim)
-    model.components.zip(model.eigenvalues).foreach { case (v, lambda) =>
-      val av = cov.map(row => row.zip(v).map { case (a, b) => a * b }.sum)
-      av.zip(v).foreach { case (avi, vi) =>
-        assert(math.abs(avi - lambda * vi) < 1e-8,
-          s"cov.v component $avi vs ${lambda * vi}")
-      }
-    }
-  }
-
-  test("sign convention and partition-order combine make training deterministic") {
-    val again = Embeddings.pcaTrain(df, "vec", dim, k = 4)
-    assert(again.mean.toSeq == model.mean.toSeq)
-    assert(again.eigenvalues.toSeq == model.eigenvalues.toSeq)
-    assert(again.components.map(_.toSeq).toSeq == model.components.map(_.toSeq).toSeq)
-    model.components.foreach { c =>
-      val maxAbs = c.maxBy(math.abs)
-      assert(maxAbs > 0, "largest-|component| must be positive")
-    }
-  }
+  private val mean = Array.tabulate(dim)(j => vecs.map(_._2(j).toDouble).sum / vecs.size)
+  private def unit(j: Int) = Array.tabulate(dim)(i => if (i == j) 1.0 else 0.0)
+  // the signal plane (u, w) plus two axes orthogonal to it
+  private val model = Embeddings.PcaModel(mean,
+    Array(u.map(_.toDouble), w.map(_.toDouble), unit(4), unit(6)),
+    new Array[Double](4), vecs.size.toLong)
 
   test("projection column matches driver arithmetic; reconstruction error is noise-scale") {
     val projected = df.select(col("id"),
         Embeddings.pcaProject(col("vec"), model).as("p"),
         col("vec"))
-      .withColumn("r", Embeddings.pcaReconstruct(col("p"), model))
       .collect()
     val byId = vecs.toMap
     projected.foreach { row =>
@@ -81,7 +49,9 @@ class PcaSpec extends AnyFunSuite {
         c.indices.foldLeft(0.0)((acc, j) => acc + centered(j) * c(j)))
       p.zip(expected).foreach { case (got, exp) =>
         assert(math.abs(got - exp) < 1e-9, s"projection $got vs $exp") }
-      val r = row.getSeq[Double](3)
+      // reconstruction: mean + sum_i p(i) * component_i
+      val r = Array.tabulate(dim)(j => model.mean(j) +
+        model.components.indices.map(i => p(i) * model.components(i)(j)).sum)
       val err = math.sqrt(v.indices.map(j => math.pow(v(j) - r(j), 2)).sum)
       assert(err < 0.05, s"reconstruction error $err") // eps-scale residual
     }
@@ -101,7 +71,11 @@ class PcaSpec extends AnyFunSuite {
   }
 
   test("full-dim projection is an isometry (rotation): pairwise distances preserved") {
-    val full = Embeddings.pcaTrain(df, "vec", dim, k = dim)
+    // the orthonormal Walsh-Hadamard basis of R^8 as a full-rank model
+    val hadamard = Array.tabulate(dim, dim)((i, j) =>
+      (if (Integer.bitCount(i & j) % 2 == 0) 1.0 else -1.0) / math.sqrt(dim))
+    val full = Embeddings.PcaModel(mean, hadamard, new Array[Double](dim),
+      vecs.size.toLong)
     val proj = df.select(col("id"), Embeddings.pcaProject(col("vec"), full).as("p"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val byId = vecs.toMap
@@ -115,9 +89,11 @@ class PcaSpec extends AnyFunSuite {
     }
   }
 
-  test("relational (oracle-arithmetic) covariance agrees with the fast moment path") {
-    val (n, s, g) = Embeddings.moments(df, "vec", dim)
-    val (_, cov) = Embeddings.covarianceMatrix(n, s, g, dim)
+  test("relational (oracle-arithmetic) covariance agrees with driver arithmetic") {
+    // population covariance in driver double arithmetic
+    val cov = Array.tabulate(dim, dim)((i, j) =>
+      vecs.map { case (_, v) => v(i).toDouble * v(j) }.sum / vecs.size -
+        mean(i) * mean(j))
     val rel = Embeddings.covarianceRelational(df, "id", "vec").collect()
     assert(rel.length == dim * (dim + 1) / 2)
     rel.foreach { row =>
@@ -127,9 +103,4 @@ class PcaSpec extends AnyFunSuite {
     }
   }
 
-  test("short vectors are rejected, not zero-padded") {
-    val bad = Seq((1L, Array(1f, 2f))).toDF("id", "vec")
-    val ex = intercept[Exception] { Embeddings.moments(bad, "vec", dim) }
-    assert(ex.getMessage.contains("shorter") || ex.getCause != null)
-  }
 }

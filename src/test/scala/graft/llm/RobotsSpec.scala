@@ -121,16 +121,6 @@ class RobotsSpec extends AnyFunSuite {
     assert(got == Map("e1.example" -> 2.0, "e2.example" -> 7.0))
   }
 
-  test("sitemapRefs: group-independent discovery, comments stripped, URL case kept") {
-    val refs = Robots.sitemapRefs(Seq(
-      ("h1", "Sitemap: http://h1.example/Map.xml\nUser-agent: *\nDisallow: /"),
-      ("h2", "User-agent: *\nsitemap: http://h2.example/a.xml # weekly\nSitemap:"),
-      ("h3", "Disallow: /x")).toDF("host", "txt"), "host", "txt")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    // before any group; lowercase key; trailing comment; empty value dropped
-    assert(refs == Set(("h1", "http://h1.example/Map.xml"), ("h2", "http://h2.example/a.xml")))
-  }
-
   test("sitemapEntries: loc required, optional fields null, whitespace trimmed") {
     val xml = """<?xml version="1.0"?><urlset>
       |<url><loc> http://h/a </loc><lastmod>2026-01-15</lastmod></url>

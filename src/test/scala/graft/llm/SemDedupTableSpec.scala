@@ -208,20 +208,4 @@ class SemDedupTableSpec extends AnyFunSuite {
       "exact twins share a cell (same vector → same coarse, same refine) " +
         "and must collapse")
   }
-
-  test("ivfTopKTwoLevel with m = 1 == flat ivfTopK (same cells → same " +
-      "candidates, ranks, cosines)") {
-    val coarse1 = array(array(centArrays.head.toIndexedSeq.map(lit(_)): _*))
-    val fine1 = centTable.withColumn("coarse", lit(1))
-    val queries = corpus.filter(col("id") <= 4L)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-      .toSet
-    val twoLevel = rows(Similarity.ivfTopKTwoLevel(
-      queries, corpus, "id", "v", coarse1, fine1, k = 3))
-    val flat = rows(Similarity.ivfTopK(
-      queries, corpus, "id", "v", centLit, k = 3))
-    assert(twoLevel == flat)
-    assert(flat.nonEmpty)
-  }
 }

@@ -1,13 +1,25 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The one-merge-per-round tokenizer trainers: the reference lists that
   * BatchedBpeSpec pins [[BpeTrain.learnMergesBatched]] against, and the
-  * merges BpeSpec and WordPieceSpec replay through the tokenizers.
+  * merges BpeSpec and WordPieceSpec replay through the tokenizers; plus
+  * the learned-order replay BpeSpec pins the rank-greedy tokenizer to.
   */
 object SequentialMerges {
+
+  /** Tokenize with a learned merge list: per word, start from
+    * [[BpeTrain.initSymbols]] and replay the merges IN LEARNED ORDER
+    * (the definition of BPE application). Pure expression — the merge
+    * list unrolls into `merges.size` nested folds inside one transform,
+    * so it suits bounded merge lists only.
+    */
+  def bpeSplit(text: Column, merges: Seq[(String, String)]): Column =
+    flatten(transform(TextFunctions.tokens(text), w =>
+      merges.foldLeft(BpeTrain.initSymbols(w)) { case (s, (a, b)) =>
+        BpeTrain.mergePair(s, a, b) }))
 
   /** Learn up to `numMerges` BPE merges from a [[BpeTrain.wordCounts]]
     * frame: each round takes the most frequent adjacent pair (count

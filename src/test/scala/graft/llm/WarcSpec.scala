@@ -10,13 +10,17 @@ import graft.SharedSpark
   * parses field-for-field, the HTTP payload splits into status /
   * content-type / entity body, multi-member gzip decompresses across
   * member boundaries, truncation fails loudly, and the
-  * responses → htmlToText composition recovers the page prose.
+  * response bodies → htmlToText composition recovers the page prose.
   */
 class WarcSpec extends AnyFunSuite {
   import SharedSpark.spark
   import spark.implicits._
 
   private val crlf = "\r\n"
+
+  // one WARC file image through the record walk, as a frame
+  private def parse(name: String, bytes: Array[Byte]) =
+    Warc.parseWarcBytes(name, bytes, gunzip = name.endsWith(".gz")).toSeq.toDF()
 
   private def record(tpe: String, uri: String, payload: Array[Byte],
                      extra: Seq[String] = Nil): Array[Byte] = {
@@ -52,9 +56,7 @@ class WarcSpec extends AnyFunSuite {
       httpResponse("text/html", page2))).flatten
 
   test("plain archive parses field-for-field; HTTP payloads split") {
-    val dir = java.nio.file.Files.createTempDirectory("warc")
-    java.nio.file.Files.write(dir.resolve("seg-0.warc"), archiveBytes)
-    val rows = Warc.readWarc(spark, dir.toString + "/*.warc")
+    val rows = parse("seg-0.warc", archiveBytes)
       .orderBy("record_idx").collect()
     assert(rows.length == 4)
     assert(rows.map(_.getAs[String]("warc_type")).toSeq ==
@@ -71,7 +73,6 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("multi-member gzip decompresses across member boundaries") {
-    val dir = java.nio.file.Files.createTempDirectory("warcgz")
     def gz(b: Array[Byte]): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       val g = new java.util.zip.GZIPOutputStream(bos)
@@ -90,20 +91,15 @@ class WarcSpec extends AnyFunSuite {
         httpResponse("text/html", page2)))
     val member1 = recs.take(2).flatten
     val member2 = recs.drop(2).flatten
-    java.nio.file.Files.write(dir.resolve("seg-0.warc.gz"),
-      gz(member1) ++ gz(member2))
-    val rows = Warc.readWarc(spark, dir.toString + "/*.warc.gz")
+    val rows = parse("seg-0.warc.gz", gz(member1) ++ gz(member2))
       .orderBy("record_idx").collect()
     assert(rows.length == 4)
     assert(new String(rows(3).getAs[Array[Byte]]("body"), "UTF-8") == page2)
   }
 
   test("truncated payload fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("warctrunc")
-    java.nio.file.Files.write(dir.resolve("seg-0.warc"),
-      archiveBytes.dropRight(30))
     val e = intercept[Throwable] {
-      Warc.readWarc(spark, dir.toString + "/*.warc").count()
+      parse("seg-0.warc", archiveBytes.dropRight(30)).count()
     }
     def chain(t: Throwable): Seq[String] =
       if (t == null) Nil
@@ -112,9 +108,9 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("responses -> htmlToText recovers page prose") {
-    val dir = java.nio.file.Files.createTempDirectory("warchtml")
-    java.nio.file.Files.write(dir.resolve("seg-0.warc"), archiveBytes)
-    val texts = Warc.responses(Warc.readWarc(spark, dir.toString + "/*.warc"))
+    val texts = parse("seg-0.warc", archiveBytes)
+      .filter(col("warc_type") === "response")
+      .withColumn("html", decode(col("body"), "UTF-8"))
       .select(col("target_uri"),
         TextFunctions.htmlToText(col("html")).as("t"))
       .as[(String, String)].collect().toMap

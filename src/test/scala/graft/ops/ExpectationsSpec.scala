@@ -7,12 +7,12 @@ import graft.SharedSpark
 
 /** One-pass expectations: exact counts on a hand fixture, null
   * predicates counted as violations, the single-aggregation plan
-  * shape, uniqueness arithmetic, and the enforce gate.
+  * shape, and the metric bounds report.
   */
 class ExpectationsSpec extends AnyFunSuite {
   import SharedSpark.spark
   import spark.implicits._
-  import Expectations.{Rule, report, keyUniqueness, enforce}
+  import Expectations.{Rule, report}
 
   private val df = Seq(
     (Some(1L), Some("aa"), 10),
@@ -62,18 +62,5 @@ class ExpectationsSpec extends AnyFunSuite {
         MetricCheck("n_ids", countDistinct(col("id")).cast("double"), 2.0, 2.0)))
       .collect().head
     assert(v.getDouble(1) == 2.0 && v.getBoolean(4))
-  }
-
-  test("keyUniqueness arithmetic") {
-    val r = keyUniqueness(df, Seq("id")).collect().head
-    // keys: 1, 2 (x2), null -> 3 keys, 1 duplicated, 1 excess row
-    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == (3L, 1L, 1L))
-  }
-
-  test("enforce: throws past the budget, passes within it") {
-    val rules = Seq(Rule("v_positive", col("v") > 0))
-    val e = intercept[IllegalStateException](enforce(df, rules))
-    assert(e.getMessage.contains("v_positive"))
-    enforce(df, rules, maxRate = Map("v_positive" -> 0.3)) // 0.25 <= 0.3
   }
 }

@@ -63,29 +63,4 @@ class AutoCompactSpec extends AnyFunSuite {
       batches(1)._2.toDF("doc_id", "text"), 1L)
     assert(folded() == expected)
   }
-
-  test("BucketedIndex.autoCompact folds at the threshold and not below") {
-    val tmp = java.nio.file.Files.createTempDirectory("crawlauto")
-    val index = StreamingCrawl.BucketedIndex("crawl_auto_idx",
-      tmp.resolve("idx").toString, buckets = 4)
-    try {
-      (0L until 3L).foreach { b =>
-        index.write(Seq(s"hash$b", s"hash${b}x").toDF("content_hash"), b)
-        index.autoCompact(spark, everyBatches = 4)
-      }
-      assert(BatchState.unfoldedBatches(spark, index.path) == 3,
-        "below the threshold nothing folds")
-      index.write(Seq("hash3").toDF("content_hash"), 3L)
-      index.autoCompact(spark, everyBatches = 4)
-      assert(BatchState.unfoldedBatches(spark, index.path) == 0)
-      assert(index.foldedBatches(spark) == (0L until 4L).toSet)
-      assert((0L until 4L).forall(index.folded(spark, _)))
-      // the folded index still screens: all 7 digests present
-      assert(index.committed(spark, 99L).count() == 7)
-      // everyBatches = 0 (the default) never folds
-      index.write(Seq("hash4").toDF("content_hash"), 4L)
-      index.autoCompact(spark, everyBatches = 0)
-      assert(BatchState.unfoldedBatches(spark, index.path) == 1)
-    } finally spark.sql("DROP TABLE IF EXISTS crawl_auto_idx")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,18 +34,15 @@ class StreamingAuthoritySpec extends AnyFunSuite {
   }
 
   test("3 micro-batches sum to the one-shot edges; compaction + replay; warm refresh") {
-    implicit val sqlCtx = spark.sqlContext
     val graphDir = java.nio.file.Files.createTempDirectory("authgraph").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("authckpt").toString
     val batches = Seq(0L until 20L, 20L until 40L, 40L until 60L)
       .map(_.map(page))
 
-    val input = MemoryStream[(String, String)]
-    val pages = input.toDF().toDF("url", "html")
-    val query = StreamingAuthority.maintainGraph(pages, "url", "html",
-      graphDir, ckpt).start()
-    batches.foreach { b => input.addData(b: _*); query.processAllAvailable() }
-    query.stop()
+    // the foreachBatch hook, driven as a stream's batches 0, 1, 2 would
+    batches.zipWithIndex.foreach { case (b, id) =>
+      StreamingAuthority.appendBatch(graphDir, "url", "html")(
+        b.toDF("url", "html"), id.toLong)
+    }
 
     val expected = oneShotEdges(batches.flatten)
     def edges() = StreamingAuthority.loadEdges(spark, graphDir)
@@ -59,7 +55,10 @@ class StreamingAuthoritySpec extends AnyFunSuite {
     assert(edges() == expected)
 
     // warm refresh from a previous vector: every host ranked, mass 1
-    val prev = StreamingAuthority.rebuildRanksWeighted(spark, graphDir, 2)
+    val prev = graft.ops.PageRank.pageRankWeighted(
+      StreamingAuthority.loadEdges(spark, graphDir)
+        .select(col("src_host").as("src"), col("dst_host").as("dst"),
+          col("n").as("weight")), 2)
     val warm = StreamingAuthority.refreshRanks(spark, graphDir, prev, 2)
       .as[(String, Double)].collect()
     assert(warm.map(_._1).toSet ==

@@ -41,80 +41,4 @@ class StreamingDedupSpec extends AnyFunSuite {
     val ids = spark.table("dedup_test").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L, 4L), "first arrival survives; cross-batch dup dropped")
   }
-
-  test("archive-indexed stream: archived content drops before the state store") {
-    implicit val sqlCtx = spark.sqlContext
-    val archive = Seq(100L -> "alpha", 101L -> "omega").toDF("doc_id", "text")
-    val idx = graft.llm.Dedup.digestIndex(archive, "text")
-
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val docs = input.toDF().toDF("id", "text", "ts")
-    val deduped = StreamingDedup.dedupStreamAgainst(docs, "text", "ts", idx,
-      lateness = "10 minutes")
-    val query = deduped.writeStream
-      .format("memory").queryName("dedup_idx_test").outputMode("append")
-      .start()
-
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
-    // "alpha" is archived -> dropped in its FIRST batch (never enters
-    // state); "beta" is novel -> kept once across batches
-    input.addData((1L, "alpha", ts(0)), (2L, "beta", ts(1)))
-    query.processAllAvailable()
-    input.addData((3L, "beta", ts(2)), (4L, "omega", ts(3)), (5L, "delta", ts(4)))
-    query.processAllAvailable()
-    query.stop()
-
-    val ids = spark.table("dedup_idx_test").select("id")
-      .collect().map(_.getLong(0)).toSet
-    assert(ids == Set(2L, 5L),
-      s"archived content must never surface; novel content dedups in-stream: $ids")
-  }
-  test("exact-Jaccard archive screen per micro-batch equals the batch operator") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.DataFrame
-
-    val archive = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog today"),
-      (101L, "completely unrelated archived content about meters")
-    ).toDF("doc_id", "text")
-    val idx = graft.llm.Dedup.jaccardIndex(archive, "doc_id", "text",
-      threshold = 0.5)
-
-    val input = MemoryStream[(Long, String)]
-    val docs = input.toDF().toDF("doc_id", "text")
-    val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]() // (batch, id)
-    val dir = java.nio.file.Files.createTempDirectory("jacscreen").toString
-    val query = StreamingDedup.jaccardScreenStream(docs, "doc_id", "text",
-        idx, archive, "doc_id", "text", threshold = 0.5,
-        checkpointDir = s"$dir/ckpt")(
-        (survivors: DataFrame, id: Long) => out.synchronized {
-          out ++= survivors.select("doc_id").collect().map(r => (id, r.getLong(0)))
-        })
-      .start()
-
-    // batch 0: a near-copy of an archived doc (one word changed, jac
-    // over 0.5) must drop; a disjoint doc survives
-    input.addData((1L, "the quick brown fox jumps over the lazy cat today"),
-                  (2L, "novel text with no shingles shared at all"))
-    query.processAllAvailable()
-    // batch 1: an exact archive copy drops; another novel doc survives
-    input.addData((3L, "completely unrelated archived content about meters"),
-                  (4L, "another stream document that is plainly new"))
-    query.processAllAvailable()
-    query.stop()
-
-    assert(out.map(_._2).toSet == Set(2L, 4L),
-      s"archived near-dups must drop, novel docs survive: $out")
-    // per-batch parity with the batch operator on the same input
-    val batchSurvivors = graft.llm.Dedup.jaccardDedupAgainst(
-        Seq((1L, "the quick brown fox jumps over the lazy cat today"),
-            (2L, "novel text with no shingles shared at all"),
-            (3L, "completely unrelated archived content about meters"),
-            (4L, "another stream document that is plainly new"))
-          .toDF("doc_id", "text"),
-        "doc_id", "text", idx, archive, "doc_id", "text", 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(batchSurvivors == out.map(_._2).toSet)
-  }
-
 }

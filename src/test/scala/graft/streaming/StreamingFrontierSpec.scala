@@ -2,18 +2,16 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 import graft.llm.Robots
 
-/** The streaming scheduler: discoveries arrive in micro-batches; the
-  * pins are (a) cross-batch URL dedup actually crosses batches, (b)
-  * per-host slots CONTINUE across batches (base = seen count), so the
-  * stream equals the one-shot schedule, and (c) the robots gate holds
-  * inside the stream.
+/** The scheduler's micro-batch unit, driven as a `foreachBatch` body
+  * would drive it: a replayed batch screens against the seen index
+  * EXCLUDING its own partition and rewrites, never appends beside, a
+  * failed attempt.
   */
 class StreamingFrontierSpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -26,62 +24,11 @@ class StreamingFrontierSpec extends AnyFunSuite {
   private def auth = Seq(("s.example", 0.7), ("t.example", 0.3))
     .toDF("host", "host_rank")
 
-  test("two-batch stream: cross-batch dedup, continuing slots, robots gate; " +
-      "== one-shot schedule") {
-    implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("frontier_spec").toString
-    val (sink, seen, ckpt) = (s"$tmp/sink", s"$tmp/seen", s"$tmp/ckpt")
-
-    val input = MemoryStream[(Long, String)]
-    val query = StreamingFrontier.ingest(
-      input.toDF().toDF("id", "url"), "id", "url",
-      rules, "graftbot", auth, sink, seen, ckpt)
-
-    input.addData(
-      1L -> "http://s.example/a",
-      2L -> "http://s.example/private/x", // robots-disallowed
-      3L -> "http://s.example/a",         // within-batch dup of 1
-      4L -> "http://t.example/z")
-    query.processAllAvailable()
-    input.addData(
-      5L -> "http://s.example/a",  // re-discovery: drops on the index
-      6L -> "http://s.example/b",  // new: slot continues at 2
-      7L -> "http://t.example/y")  // new: t slot 2
-    query.processAllAvailable()
-    query.stop()
-
-    val got = spark.read.parquet(sink)
-      .select("id", "url", "host", "slot")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getLong(3))).toSet
-    assert(got == Set(
-      (1L, "http://s.example/a", "s.example", 1L),
-      (4L, "http://t.example/z", "t.example", 1L),
-      (6L, "http://s.example/b", "s.example", 2L),
-      (7L, "http://t.example/y", "t.example", 2L)), got)
-
-    // == the one-shot schedule over the union of discoveries
-    val union = Seq(1L -> "http://s.example/a",
-      2L -> "http://s.example/private/x", 3L -> "http://s.example/a",
-      4L -> "http://t.example/z", 5L -> "http://s.example/a",
-      6L -> "http://s.example/b", 7L -> "http://t.example/y")
-      .toDF("id", "url")
-    val (oneShot, _) = StreamingFrontier.frontierBatch(union, "id", "url",
-      rules, "graftbot", auth,
-      Seq.empty[(String, String)].toDF("url_hash", "host"))
-    val expect = oneShot.select("id", "url", "host", "slot")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getLong(3))).toSet
-    assert(got == expect, "stream must equal the one-shot schedule")
-
-    // replay safety: the seen index is batch_id-partitioned (a replayed
-    // batch rewrites its own partition) and matches the emitted set
-    val seenRows = spark.read.parquet(seen)
-      .select("url_hash").as[String].collect().sorted.toSeq
-    val emitted = spark.read.parquet(sink)
-      .select(md5(col("url"))).as[String].collect().sorted.toSeq
-    assert(seenRows == emitted)
-  }
+  // the seen index as stored — (url_hash, host, batch_id); empty before
+  // the first batch
+  private def loadSeen(seenDir: String) =
+    if (BatchState.hasData(spark, seenDir)) spark.read.parquet(seenDir)
+    else Seq.empty[(String, String, Long)].toDF("url_hash", "host", "batch_id")
 
   test("a replayed batch rewrites its partitions — sink and seen index " +
       "stay exact (checkpoint-loss replay)") {
@@ -91,7 +38,7 @@ class StreamingFrontierSpec extends AnyFunSuite {
       .toDF("id", "url")
     // simulate the foreachBatch body directly, then replay batch 1
     def run(batchId: Long, batch: org.apache.spark.sql.DataFrame): Unit = {
-      val committed = StreamingFrontier.loadSeen(spark, seenDir)
+      val committed = loadSeen(seenDir)
         .filter(col("batch_id") =!= lit(batchId))
         .select("url_hash", "host")
       val (frontier, _) = StreamingFrontier.frontierBatch(batch, "id", "url",

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
@@ -20,21 +19,18 @@ class StreamingLmSpec extends AnyFunSuite {
       .sortBy(r => (r._1, r._2, r._3)).toSeq
 
   test("3 micro-batches; fold == batch retrain; compaction preserves it") {
-    implicit val sqlCtx = spark.sqlContext
     val countsDir = java.nio.file.Files.createTempDirectory("lmcounts").toString + "/log"
-    val ckpt = java.nio.file.Files.createTempDirectory("lmckpt").toString
 
     val batches = Seq(
       Seq((0L, "the cat sat"), (1L, "the cat ate")),
       Seq((2L, "a dog sat"), (3L, "the dog ate the cat")),
       Seq((4L, ""), (5L, "the cat sat")))
 
-    val input = MemoryStream[(Long, String)]
-    val docs = input.toDF().toDF("doc_id", "text")
-    val query = StreamingLm.maintainCounts(docs, "doc_id", "text",
-      countsDir, ckpt).start()
-    batches.foreach { b => input.addData(b: _*); query.processAllAvailable() }
-    query.stop()
+    // the foreachBatch hook, driven as a stream's batches 0, 1, 2 would
+    batches.zipWithIndex.foreach { case (b, id) =>
+      StreamingLm.appendBatch(countsDir, "doc_id", "text")(
+        b.toDF("doc_id", "text"), id.toLong)
+    }
 
     val all = batches.flatten.toDF("doc_id", "text")
     val expected = modelRows(NgramLm.trigramCounts(all, "doc_id", "text"))

@@ -5,11 +5,9 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
-import graft.llm.{Embeddings, Similarity}
+import graft.llm.Similarity
 
-/** Streaming ANN index maintenance (append-only coded IVF-PQ) and the
-  * incremental-moments PCA update that shares the serving loop.
-  */
+/** Streaming ANN index maintenance (append-only coded IVF-PQ). */
 class StreamingSimilaritySpec extends AnyFunSuite {
   import SharedSpark.spark
   import spark.implicits._
@@ -28,12 +26,11 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     val indexDir = java.nio.file.Files.createTempDirectory("annstream").toString
     val ckpt = java.nio.file.Files.createTempDirectory("annckpt").toString
 
-    // codebooks frozen from the FIRST batch (the seed corpus)
-    val seed = batches.head.toDF("vec_id", "embedding")
-    val coarse = Similarity.trainCodebook(seed, "vec_id", "embedding", k = 4,
-      iterations = 2)
-    val pq = Similarity.pqTrain(seed, "vec_id", "embedding", m = 4, k = 8,
-      iterations = 2)
+    // codebooks frozen from the FIRST batch (the seed corpus): 4 coarse
+    // cells, and 4 PQ subspaces of 8 centroids each, cut from its vectors
+    val seed = batches.head.map(_._2)
+    val coarse = seed.take(4).toArray
+    val pq = Array.tabulate(4, 8)((m, c) => seed(c).slice(m * 4, m * 4 + 4))
 
     val input = MemoryStream[(Long, Array[Float])]
     val vectors = input.toDF().toDF("vec_id", "embedding")
@@ -86,24 +83,5 @@ class StreamingSimilaritySpec extends AnyFunSuite {
       coarse, pq)(nb, 3L) // at-least-once retry
     assert(spark.read.parquet(s"$indexDir/coded").count() == before + 1)
     assert(batchIds() == Set(-1L, 3L))
-  }
-
-  test("incremental PCA: merged snapshot moments == union-trained model (fp tolerance)") {
-    val a = batches(0).toDF("vec_id", "embedding")
-    val b = (batches(1) ++ batches(2)).toDF("vec_id", "embedding")
-    val merged = Embeddings.mergeMoments(
-      Embeddings.moments(a, "embedding", dim),
-      Embeddings.moments(b, "embedding", dim))
-    val mInc = Embeddings.pcaFromMoments(merged, dim, k = 4)
-    val mAll = Embeddings.pcaTrain(all.toDF("vec_id", "embedding"),
-      "embedding", dim, k = 4)
-    assert(mInc.n == mAll.n)
-    mInc.mean.zip(mAll.mean).foreach { case (x, y) =>
-      assert(math.abs(x - y) < 1e-12) }
-    mInc.eigenvalues.zip(mAll.eigenvalues).foreach { case (x, y) =>
-      assert(math.abs(x - y) < 1e-9) }
-    mInc.components.zip(mAll.components).foreach { case (ci, ca) =>
-      ci.zip(ca).foreach { case (x, y) => assert(math.abs(x - y) < 1e-6) }
-    }
   }
 }
