@@ -264,17 +264,28 @@ class LlmSpec extends AnyFunSuite {
     assert((c.getInt(0), c.getInt(1), c.getInt(2)) == ((1, 1, 1)))
   }
 
-  test("PQ: encode/ADC round-trip; separated clusters encode apart") {
+  test("PQ: encode/ADC round-trip, rerank recovers brute force, training separates") {
     // 4-dim vectors, m=2 subspaces of 2; clusters on orthogonal half-axes
     val vecs = Seq(
       (1L, Array(1.0f, 0.1f, 0.3f, 0.0f)), (2L, Array(0.8f, 0.2f, 0.25f, 0.1f)),
       (3L, Array(0.1f, 0.9f, 0.2f, 0.8f)), (4L, Array(0.9f, 0.15f, 0.28f, 0.05f)),
       (5L, Array(0.2f, 0.85f, 0.1f, 0.9f)), (6L, Array(0.95f, 0.12f, 0.31f, 0.02f)))
       .toDF("id", "v")
-    // per subspace, one centroid at each cluster's mean
-    val cb = Array(
-      Array(Array(0.9125f, 0.1425f), Array(0.15f, 0.875f)),
-      Array(Array(0.285f, 0.0425f), Array(0.15f, 0.85f)))
+    // k-means per subspace: init from the first k vectors by id, assign
+    // with pqEncode, move each centroid to the mean of its members
+    val rows = vecs.orderBy("id").collect().map(_.getSeq[Float](1).toArray)
+    var cb = Array.tabulate(2, 2)((j, i) => rows(i).slice(j * 2, j * 2 + 2))
+    (1 to 3).foreach { _ =>
+      val assigned = vecs.orderBy("id")
+        .select(Similarity.pqEncode(col("v"), cb)).collect().map(_.getSeq[Int](0))
+      cb = Array.tabulate(2, 2) { (j, c) =>
+        val members = rows.indices.filter(assigned(_)(j) == c)
+          .map(r => rows(r).slice(j * 2, j * 2 + 2))
+        if (members.isEmpty) cb(j)(c)
+        else Array.tabulate(2)(d => members.map(_(d)).sum / members.size)
+      }
+    }
+    assert(cb.length == 2 && cb(0).length == 2 && cb(0)(0).length == 2)
     // codes are 0-based and within range; x-cluster and y-cluster get
     // different codes in subspace 0
     val codes = vecs.select(col("id"),
@@ -286,6 +297,20 @@ class LlmSpec extends AnyFunSuite {
     // ADC score == sum of per-subspace centroid inner products
     val lut = Similarity.pqLut(Array(1.0f, 0.1f, 0.3f, 0.0f), cb)
     assert(lut.length == 4)
+    // full-overfetch rerank: the ADC top-(k * 2) pool re-ranked by exact
+    // cosine equals brute force
+    val queries = vecs.filter(col("id") === 1)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("rank").collect().map(_.getAs[Long]("neighbor_id")).toSeq
+    val brute = ids(Similarity.bruteForceTopK(queries, vecs, "id", "v", 3))
+    val coded = vecs.select(col("id"), Similarity.pqEncode(col("v"), cb).as("codes"))
+    val pool = Similarity.pqTopK(coded, "id", "codes",
+        Seq(1L -> Array(1.0f, 0.1f, 0.3f, 0.0f)), cb, k = 3 * 2)
+      .select(col("neighbor_id").as("id"))
+    val reranked = ids(Similarity.bruteForceTopK(queries, vecs.join(pool, "id"),
+      "id", "v", 3))
+    assert(reranked == brute,
+      "exact re-rank over a wide-enough ADC pool must equal brute force")
   }
 
   test("IVF-PQ: nprobe = nlist equals plain PQ; nprobe=1 returns a subset") {

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 
 /** PCA projection columns over a fixed orthonormal model, and the
-  * oracle-arithmetic covariance against driver arithmetic.
+  * oracle-arithmetic covariance against a one-pass moment computation.
   */
 class PcaSpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -89,11 +89,18 @@ class PcaSpec extends AnyFunSuite {
     }
   }
 
-  test("relational (oracle-arithmetic) covariance agrees with driver arithmetic") {
-    // population covariance in driver double arithmetic
-    val cov = Array.tabulate(dim, dim)((i, j) =>
-      vecs.map { case (_, v) => v(i).toDouble * v(j) }.sum / vecs.size -
-        mean(i) * mean(j))
+  test("relational (oracle-arithmetic) covariance agrees with the fast moment path") {
+    // one corpus pass of moments (n, sum x, sum x xT), then the
+    // population covariance E[x xT] - mean meanT
+    val d = dim // a local, so the task closure does not capture the spec
+    val (n, s, g) = df.select(col("vec")).rdd.map { r =>
+        val v = r.getSeq[Float](0).map(_.toDouble).toArray
+        (1L, v, Array.tabulate(d, d)((i, j) => v(i) * v(j)))
+      }.reduce { case ((na, sa, ga), (nb, sb, gb)) =>
+        (na + nb, sa.zip(sb).map(p => p._1 + p._2),
+          ga.zip(gb).map { case (ra, rb) => ra.zip(rb).map(p => p._1 + p._2) })
+      }
+    val cov = Array.tabulate(dim, dim)((i, j) => g(i)(j) / n - s(i) / n * (s(j) / n))
     val rel = Embeddings.covarianceRelational(df, "id", "vec").collect()
     assert(rel.length == dim * (dim + 1) / 2)
     rel.foreach { row =>
