@@ -35,9 +35,9 @@ object Checkpoints {
     * checkpoint truncates lineage), so only call once its consumers have
     * run their actions.
     */
-  def free(df: Dataset[_], blocking: Boolean = false): Unit =
+  def free(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: LogicalRDD => l.rdd.unpersist(blocking)
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
       case _             => ()
     }
 

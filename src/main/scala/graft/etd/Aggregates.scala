@@ -72,8 +72,8 @@ object Aggregates {
   /** min_count-gated variant of [[exactMean]] (A7 with the stable-mean
     * arithmetic).
     */
-  def avgMinCountStable(c: Column, minCount: Column, scale: Int = 6): Column =
-    when(count(c) >= minCount, exactMean(c, scale))
+  def avgMinCountStable(c: Column, minCount: Column): Column =
+    when(count(c) >= minCount, exactMean(c))
 
   /** Order-independent gated sum: accumulate in DECIMAL (exact — the result
     * cannot change with partitioning, parallelism, or engine), then cast

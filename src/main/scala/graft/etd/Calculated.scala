@@ -65,16 +65,15 @@ object Calculated {
   def toPower(c: Column, interval: String): Column =
     c * lit(Model.switchMultiplier(interval))
 
-  /** I15 — normalized datetime: project every timestamp onto a reference
-    * week so analyses depend on (weekday, time-of-day) only
+  /** I15 — normalized datetime: project every timestamp onto the
+    * reference week of Monday 2023-01-02 so analyses depend on (weekday, time-of-day) only
     * (calculated_columns.py:561-615). weekday() is Monday=0 — matching
     * pandas dt.dayofweek and the ibis .index() the reference uses.
     */
-  def normalizedDatetime(ts: Column,
-                         referenceDate: String = "2023-01-02"): Column = {
+  def normalizedDatetime(ts: Column): Column = {
     val dayOffset = weekday(ts).cast("int")
     val timeOfDay = ts.cast("long") - unix_timestamp(to_date(ts))
-    to_timestamp(lit(referenceDate)) +
+    to_timestamp(lit("2023-01-02")) +
       make_dt_interval(dayOffset, lit(0), lit(0), timeOfDay)
   }
 }

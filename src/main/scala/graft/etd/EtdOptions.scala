@@ -64,17 +64,13 @@ final case class EtdOptions(
     Sources.normalizeLegacyColumns(spark.read.parquet(indexPath))
 
   /** `get_household_tables` (`load_data.py:23-67`): one lazy frame per
-    * interval, the index broadcast-joined on. `metadataColumns`
-    * selects which index columns ride along (None = all).
+    * interval, every index column broadcast-joined on.
     */
   def householdTables(spark: SparkSession,
-                      wanted: Seq[String] = Tables.intervals,
-                      includeIndex: Boolean = true,
-                      metadataColumns: Option[Seq[String]] = None)
+                      wanted: Seq[String] = Tables.intervals)
       : Map[String, DataFrame] =
     Tables.household(spark, aggregateFolderPath,
-      index = if (includeIndex) Some(indexTable(spark)) else None,
-      wanted = wanted, metadataColumns = metadataColumns)
+      index = Some(indexTable(spark)), wanted = wanted)
 
   /** `get_project_tables` (`load_data.py:320-351`). */
   def projectTables(spark: SparkSession,

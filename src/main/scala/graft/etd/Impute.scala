@@ -270,8 +270,12 @@ object Impute {
     GroupKeys.keep(out, df, keys)
   }
 
-  /** Spark's `round(x, 10)` on a double: NaN and ±Inf pass through. */
-  private def round10(x: Double): Double =
+  /** Spark's `round(x, 10)` on a double: HALF_UP over the shortest
+    * decimal representation; NaN and ±Inf pass through. The streaming
+    * impute rounds with it too, so its fills stay bit-identical to the
+    * batch cascade's.
+    */
+  private[graft] def round10(x: Double): Double =
     if (x.isNaN || x.isInfinite) x
     else java.math.BigDecimal.valueOf(x)
       .setScale(10, java.math.RoundingMode.HALF_UP).doubleValue()

@@ -41,13 +41,12 @@ object ProjectAggregate {
   /** Aggregate every standard variable present in the frame
     * (aggregate_by_columns, aggregate.py:511-539).
     */
-  def aggregateStandard(df: DataFrame,
-                        groupCols: Seq[String] = Seq(ProjectId)): DataFrame = {
+  def aggregateStandard(df: DataFrame): DataFrame = {
     val present = df.columns.toSet
     val vars = aggregationVariables.collect {
       case (v, _, aggMethod) if present(v) => (v, aggMethod)
     }
-    aggregate(df, vars, groupCols)
+    aggregate(df, vars, Seq(ProjectId))
   }
 
   /** I12 — mean of all diff columns per (project, ReadingDate)

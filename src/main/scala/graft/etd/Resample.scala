@@ -101,12 +101,11 @@ object Resample {
   /** Resample every standard aggregation variable present in the frame
     * (resample_by_columns, aggregate.py:800-866).
     */
-  def resampleStandard(df: DataFrame, interval: String,
-                       groupCols: Seq[String] = Seq(ProjectId, HouseId)): DataFrame = {
+  def resampleStandard(df: DataFrame, interval: String): DataFrame = {
     val present = df.columns.toSet
     val vars = aggregationVariables.collect {
       case (v, resampleMethod, _) if present(v) => (v, resampleMethod)
     }
-    resample(df, vars, interval, groupCols)
+    resample(df, vars, interval, Seq(ProjectId, HouseId))
   }
 }

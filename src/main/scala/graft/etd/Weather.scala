@@ -67,8 +67,8 @@ object Weather {
     * row number = the 2 coldest ISO weeks).
     */
   def coldestWeekFlags(weeklySummary: DataFrame, tempCol: String,
-                       flagName: String,
-                       tieBreak: String = "week_of_year"): DataFrame = {
+                       flagName: String): DataFrame = {
+    val tieBreak = "week_of_year"
     // nulls LAST (Spark's asc default is nulls-first; DuckDB's is
     // nulls-last — an all-null week must not become the "coldest") and a
     // deterministic tie-break: row_number over equal means would

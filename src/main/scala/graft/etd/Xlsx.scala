@@ -20,9 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Xlsx {
 
-  /** Read one sheet (1-based index) into a DataFrame of strings. */
-  def readSheet(spark: SparkSession, path: String,
-                sheet: Int = 1): DataFrame = {
+  /** Read the first sheet into a DataFrame of strings. */
+  def readSheet(spark: SparkSession, path: String): DataFrame = {
+    val sheet = 1
     val zip = new ZipFile(path)
     try {
       def part(name: String): Option[scala.xml.Elem] =

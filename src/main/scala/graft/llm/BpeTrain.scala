@@ -30,17 +30,15 @@ object BpeTrain {
   val EndOfWord = "</w>"
 
   /** The ONE corpus-scale pass: single-space tokens (the repo-wide
-    * convention, [[TextFunctions.tokens]]) -> (word, cnt). `wordFilter`
-    * defaults to lowercase-ASCII words, which keeps the char alphabet
-    * (and therefore the oracle) engine-portable — Spark's split("")
-    * works on UTF-16 code units while most engines split code points,
-    * so non-BMP text would diverge; production callers widen the filter
-    * deliberately.
+    * convention, [[TextFunctions.tokens]]) -> (word, cnt), lowercase-
+    * ASCII words only, which keeps the char alphabet (and therefore
+    * the oracle) engine-portable — Spark's split("") works on UTF-16
+    * code units while most engines split code points, so non-BMP text
+    * would diverge.
     */
-  def wordCounts(df: DataFrame, textCol: String,
-                 wordFilter: String = "^[a-z]+$"): DataFrame =
+  def wordCounts(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(TextFunctions.tokens(col(textCol))).as("word"))
-      .filter(col("word").rlike(wordFilter))
+      .filter(col("word").rlike("^[a-z]+$"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
   /** word -> initial symbol sequence: characters plus the [[EndOfWord]]
@@ -221,12 +219,11 @@ object BpeTrain {
     * justified here exactly as for [[Multimodal]]: a per-row iterative
     * loop with data-dependent trip count that no Catalyst expression
     * expresses; the merge table ships once per executor as a broadcast.
-    * Returns (id, `outCol` array&lt;string&gt;) — join back by id for other
+    * Returns (id, `tokens` array&lt;string&gt;) — join back by id for other
     * columns, keeping the shuffled payload to the tokens themselves.
     */
   def bpeTokensPartitions(df: DataFrame, idCol: String, textCol: String,
-                          merges: Seq[(String, String)],
-                          outCol: String = "tokens"): DataFrame = {
+                          merges: Seq[(String, String)]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val ranks = spark.sparkContext.broadcast(
@@ -272,6 +269,6 @@ object BpeTrain {
           (id, out.toSeq)
         }
       }
-      .toDF(idCol, outCol)
+      .toDF(idCol, "tokens")
   }
 }

@@ -23,18 +23,17 @@ import org.apache.spark.sql.functions._
   * (PERFNOTES): the gate and redaction are map-only; exact dedup
   * shuffles digests; near-dedup is banded and verifies candidates only.
   *
-  * Lineage cut (`cutLineage`, default on): near-dedup consumes its
-  * input three times (candidate generation, shingle-set build, the
-  * final anti-join), and because each consumer prunes different
-  * columns, Catalyst plans three DIFFERENT exchanges — exchange reuse
+  * Lineage cut: near-dedup consumes its input three times (candidate
+  * generation, shingle-set build, the final anti-join), and because
+  * each consumer prunes different columns, Catalyst plans three
+  * DIFFERENT exchanges — exchange reuse
   * never fires, so without a cut the full corpus scan + quality gate +
   * 3-regex redaction + exact-dedup shuffle all execute once PER
   * CONSUMER (measured: 6 scans, 18 regex sites, 0 reused exchanges in
   * the final AQE plan). The cut materializes the gated/redacted/
   * exact-deduped survivors ONCE (same trade [[graft.etd.Pipeline.run]]
   * makes for the 13-column impute, see PERFNOTES) — that repeated map
-  * work is what grows with corpus size at 100 TB. `cutLineage = false`
-  * restores the fully lazy chain.
+  * work is what grows with corpus size at 100 TB.
   */
 object Curation {
 
@@ -56,20 +55,18 @@ object Curation {
   def curate(docs: DataFrame, idCol: String, textCol: String,
              minQuality: Double = 0.25,
              jaccardThreshold: Double = 0.8,
-             fast: Boolean = false,
-             keepBestQuality: Boolean = false,
-             cutLineage: Boolean = true): DataFrame = {
+             keepBestQuality: Boolean = false): DataFrame = {
     val gated = docs
       .withColumn("__q", TextFunctions.qualityScore(col(textCol)))
       .filter(col("__q") >= minQuality)
       .withColumn(textCol, TextFunctions.redactPii(col(textCol)))
-    val exact0 = Dedup.exactDedup(gated, idCol, textCol)
     // lazy cut: materializes on the first action, not at plan build.
     // Its blocks outlive this call by design (the result references
     // them); the CALLER frees them with Checkpoints.free(result) once
     // the result's actions have run (harnesses: Checkpoints.sweep).
-    val exact = if (cutLineage) exact0.localCheckpoint(eager = false) else exact0
-    Dedup.nearDedup(exact, idCol, textCol, jaccardThreshold, fast = fast,
+    val exact = Dedup.exactDedup(gated, idCol, textCol)
+      .localCheckpoint(eager = false)
+    Dedup.nearDedup(exact, idCol, textCol, jaccardThreshold,
         priority = if (keepBestQuality) Some(col("__q")) else None)
       .withColumnRenamed("__q", "quality")
   }
@@ -94,17 +91,14 @@ object Curation {
     */
   def curateAudit(docs: DataFrame, idCol: String, textCol: String,
                   minQuality: Double = 0.25,
-                  jaccardThreshold: Double = 0.8,
-                  fast: Boolean = false,
-                  cutLineage: Boolean = true): DataFrame = {
+                  jaccardThreshold: Double = 0.8): DataFrame = {
     val scored = docs
       .withColumn("__q", TextFunctions.qualityScore(col(textCol)))
     val gated = scored.filter(col("__q") >= minQuality)
       .withColumn(textCol, TextFunctions.redactPii(col(textCol)))
-    val exact0 = Dedup.exactDedup(gated, idCol, textCol)
-    val exact = if (cutLineage) exact0.localCheckpoint(eager = false) else exact0
-    val kept = Dedup.nearDedup(exact, idCol, textCol, jaccardThreshold,
-      fast = fast)
+    val exact = Dedup.exactDedup(gated, idCol, textCol)
+      .localCheckpoint(eager = false)
+    val kept = Dedup.nearDedup(exact, idCol, textCol, jaccardThreshold)
     scored.select(col(idCol), col("__q").as("quality"))
       .join(exact.select(col(idCol), lit(1).as("__ex")), Seq(idCol), "left")
       .join(kept.select(col(idCol), lit(1).as("__kp")), Seq(idCol), "left")
@@ -138,19 +132,17 @@ object Curation {
     */
   def curateAuditKeyed(docs: DataFrame, idCol: String, textCol: String,
                        minQuality: Double = 0.25,
-                       jaccardThreshold: Double = 0.8,
-                       fast: Boolean = false,
-                       cutLineage: Boolean = true): DataFrame = {
+                       jaccardThreshold: Double = 0.8): DataFrame = {
     val scored = docs
       .withColumn("__q", TextFunctions.qualityScore(col(textCol)))
     val gated = scored.filter(col("__q") >= minQuality)
       .withColumn(textCol, TextFunctions.redactPii(col(textCol)))
-    val exact0 = Dedup.exactDedup(gated, idCol, textCol)
-    val exact = if (cutLineage) exact0.localCheckpoint(eager = false) else exact0
-    val cands0 = Dedup.lshCandidatePairs(exact, idCol, textCol, fast = fast)
-    val cands = if (cutLineage) cands0.localCheckpoint(eager = false) else cands0
+    val exact = Dedup.exactDedup(gated, idCol, textCol)
+      .localCheckpoint(eager = false)
+    val cands = Dedup.lshCandidatePairs(exact, idCol, textCol)
+      .localCheckpoint(eager = false)
     val verified = Dedup.verifyCandidates(exact, idCol, textCol, cands,
-      jaccardThreshold, fast = fast)
+      jaccardThreshold)
     // near-dup drop set: the same CC + min-id rule nearDedupKeep applies
     val drops = Dedup.clusterPairs(verified)
       .filter(col("id") =!= col("cluster_id"))

@@ -16,10 +16,17 @@ import TextFunctions._
   *     map-only work; LSH banding buckets candidates so the only shuffle is
   *     a groupBy on (band, bandHash), and pair generation happens within
   *     buckets. Expected bucket sizes are tiny under uniform hashing;
-  *     pathological buckets (boilerplate) are capped by maxBucket.
+  *     pathological buckets (boilerplate) are capped at 1000 members.
   *   - Verification (exact Jaccard / cosine) runs only on candidate pairs.
   */
 object Dedup {
+
+  // Defaults the near-dup operators share: word 3-grams, 16 MinHash
+  // seeds in 4 bands, LSH buckets capped at 1000 members.
+  private val ShingleSize = 3
+  private val NumHashes = 16
+  private val Bands = 4
+  private val MaxBucket = 1000
 
   // ------------------------------------------------------------------
   // Exact dedup
@@ -43,7 +50,7 @@ object Dedup {
 
   /** Corpus-wide paragraph-level exact dedup (the boilerplate-removal
     * pass of CCNet/RefinedWeb-style pipelines): split every document on
-    * `sep`, keep only the globally-FIRST occurrence of each distinct
+    * blank lines, keep only the globally-FIRST occurrence of each distinct
     * paragraph (ordered by (id, position) — deterministic under any
     * partitioning), and reassemble each document from its surviving
     * paragraphs in original order. Documents whose every paragraph
@@ -61,8 +68,9 @@ object Dedup {
     * paragraph) structs per document — in-memory per doc, no extra
     * exchange.
     */
-  def paragraphDedup(df: DataFrame, idCol: String, textCol: String,
-                     sep: String = "\n\n"): DataFrame = {
+  def paragraphDedup(df: DataFrame, idCol: String,
+                     textCol: String): DataFrame = {
+    val sep = "\n\n"
     val parts = df.select(col(idCol),
       posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
         .as(Seq("__i", "__p")))
@@ -101,10 +109,9 @@ object Dedup {
     * text never shuffles.
     */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-                     n: Int = 10, fast: Boolean = false): DataFrame = {
+                     n: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = if (fast) shingleHashesFast(col(textCol), n)
-             else shingleHashes(col(textCol), n)
+    val sh = shingleHashes(col(textCol), n)
     val wh = Window.partitionBy("__h")
     val whd = Window.partitionBy(col("__h"), col(idCol))
     val wDoc = Window.partitionBy(idCol).orderBy("pos")
@@ -201,25 +208,15 @@ object Dedup {
 
   /** Candidate pairs from LSH banding: documents sharing any band key.
     * The only shuffle is the groupBy on (band index, band key); pairs are
-    * generated within buckets and deduplicated. `maxBucket` caps
-    * pathological buckets (identical boilerplate) — a capped bucket's
-    * members are already exact-dup candidates by band collision.
+    * generated within buckets and deduplicated. Buckets over 1000
+    * members (identical boilerplate) are dropped — their members are
+    * already exact-dup candidates by band collision.
     */
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 16, bands: Int = 4,
-                        shingleSize: Int = 3,
-                        maxBucket: Int = 1000,
-                        fast: Boolean = false): DataFrame = {
-    // bands must tile numHashes exactly: with integer division a ragged
-    // split (e.g. 18 hashes / 4 bands) would produce 16-row bands over
-    // an 18-hash signature and trip the per-row length guard downstream
-    // at runtime — fail here, driver-side, with the actual numbers
-    require(numHashes % bands == 0,
-      s"lshCandidatePairs: numHashes ($numHashes) must be divisible by bands ($bands)")
+                        fast: Boolean = false): DataFrame =
     lshCandidatePairsFromSigs(
-      minhashSignatures(df, idCol, textCol, numHashes, shingleSize, fast),
-      idCol, bands, numHashes / bands, maxBucket)
-  }
+      minhashSignatures(df, idCol, textCol, NumHashes, ShingleSize, fast),
+      idCol, Bands, NumHashes / Bands)
 
   /** [[lshCandidatePairs]] over PRECOMPUTED signatures (column `sig`) —
     * the sharing entry for pipelines that consume both the signatures
@@ -227,8 +224,8 @@ object Dedup {
     * of a recompute per consumer.
     */
   def lshCandidatePairsFromSigs(sigs: DataFrame, idCol: String,
-                                bands: Int = 4, rowsPerBand: Int = 4,
-                                maxBucket: Int = 1000): DataFrame = {
+                                bands: Int = 4,
+                                rowsPerBand: Int = 4): DataFrame = {
     // bands × rowsPerBand must tile the signature exactly: a short slice
     // past the end would silently yield md5("") — ONE band key shared by
     // every document (an all-pairs explosion or a capped-and-dropped
@@ -249,7 +246,7 @@ object Dedup {
     val buckets = banded
       .groupBy("band", "band_key")
       .agg(sort_array(collect_list("doc_a")).as("ids"))
-      .filter(size(col("ids")) between (2, maxBucket))
+      .filter(size(col("ids")) between (2, MaxBucket))
     buckets
       .select(explode(candidatePairsFromBucket(col("ids"))).as("pair"))
       .select(col("pair.a").as("id_a"), col("pair.b").as("id_b"))
@@ -287,10 +284,11 @@ object Dedup {
     * and a long boilerplate chain can exceed any fixed cap; the fused
     * doubling step at least doubles each node's label reach per round, so
     * fixpoint is reached in O(log diameter) rounds (a path of 2^40 nodes
-    * converges in ~40; ClusterSpec pins a 150-node path). `maxIter` is a
-    * safety valve only — if it is ever hit without convergence the method
-    * THROWS rather than returning silently wrong cluster ids (the
-    * documented contract is exact agreement with transitive closure).
+    * converges in ~40; ClusterSpec pins a 150-node path). The 40-round
+    * cap is a safety valve only — if it is ever hit without
+    * convergence the method THROWS rather than returning silently wrong
+    * cluster ids (the documented contract is exact agreement with
+    * transitive closure).
     *
     * Scale: per round one join + one aggregation, all hash-partitioned on
     * id; lineage is cut with localCheckpoint per round so plans stay
@@ -311,7 +309,8 @@ object Dedup {
     * move: min-label propagation is partitioning-independent by
     * construction.
     */
-  def clusterPairs(pairs: DataFrame, maxIter: Int = 40): DataFrame = {
+  def clusterPairs(pairs: DataFrame): DataFrame = {
+    val maxIter = 40
     // the edge build is map-only (no collapse aggregation), so unlike
     // PageRank/HITS there is nothing to protect BEFORE materialization:
     // checkpoint first, then size the rounds from the materialized
@@ -433,12 +432,12 @@ object Dedup {
     */
   def verifyCandidates(df: DataFrame, idCol: String, textCol: String,
                        candidates: DataFrame, jaccardThreshold: Double,
-                       shingleSize: Int = 3, fast: Boolean = false): DataFrame = {
+                       fast: Boolean = false): DataFrame = {
     val inPairs = candidates.select(col("id_a").as(idCol))
       .unionByName(candidates.select(col("id_b").as(idCol)))
       .distinct()
-    val sh = if (fast) shingleHashesFast(col(textCol), shingleSize)
-             else shingleHashes(col(textCol), shingleSize)
+    val sh = if (fast) shingleHashesFast(col(textCol), ShingleSize)
+             else shingleHashes(col(textCol), ShingleSize)
     val sets = df.join(inPairs, Seq(idCol), "left_semi")
       .select(col(idCol), array_distinct(sh).as("__set"))
     candidates
@@ -449,14 +448,11 @@ object Dedup {
   }
 
   def nearDedup(df: DataFrame, idCol: String, textCol: String,
-                jaccardThreshold: Double = 0.8,
-                numHashes: Int = 16, bands: Int = 4, shingleSize: Int = 3,
-                maxBucket: Int = 1000, fast: Boolean = false,
+                jaccardThreshold: Double = 0.8, fast: Boolean = false,
                 priority: Option[Column] = None): DataFrame = {
-    val candidates = lshCandidatePairs(df, idCol, textCol, numHashes, bands,
-      shingleSize, maxBucket, fast)
+    val candidates = lshCandidatePairs(df, idCol, textCol, fast)
     val verified = verifyCandidates(df, idCol, textCol, candidates,
-      jaccardThreshold, shingleSize, fast)
+      jaccardThreshold, fast)
     // keep rule: lowest id by default; highest caller-supplied priority
     // (e.g. a quality score) when given — the production keep rule
     priority.fold(nearDedupKeep(df, idCol, verified))(
@@ -502,7 +498,7 @@ object Dedup {
     * [[jaccard]]'s empty-set-scores-0 contract.
     */
   def jaccardJoin(df: DataFrame, idCol: String, textCol: String,
-                  threshold: Double, shingleSize: Int = 3): DataFrame = {
+                  threshold: Double): DataFrame = {
     // sets feeds four divergent subtrees (df table, prefix build, both
     // verify sides) that shuffle on different keys — exchange reuse
     // cannot collapse them, so without this lineage cut the fused
@@ -511,7 +507,7 @@ object Dedup {
     // rest; the result frame depends on it, so the CALLER frees it
     // ([[graft.Checkpoints.free]]) after its consumers have run — the
     // clusterPairs ownership contract.
-    val sets = jaccardSets(df, idCol, textCol, shingleSize)
+    val sets = jaccardSets(df, idCol, textCol)
       .localCheckpoint(false)
     val prefixes = jaccardPrefixes(sets, threshold)
     val pa = prefixes.select(col("__id").as("id_a"), col("__n").as("__na"),
@@ -564,9 +560,9 @@ object Dedup {
     * consumers collapse them with the usual min-per-id rule.
     */
   def containmentJoin(df: DataFrame, idCol: String, textCol: String,
-                      threshold: Double, shingleSize: Int = 3): DataFrame =
+                      threshold: Double): DataFrame =
     containmentPairsSized(
-        jaccardSets(df, idCol, textCol, shingleSize).localCheckpoint(false),
+        jaccardSets(df, idCol, textCol).localCheckpoint(false),
         threshold)
       .select(col("id_a"), col("id_b"),
         round(col("__cx"), 6).as("containment"))
@@ -616,9 +612,9 @@ object Dedup {
     * (id-only anti join, the [[exactDedup]] discipline).
     */
   def containmentDedup(df: DataFrame, idCol: String, textCol: String,
-                       threshold: Double, shingleSize: Int = 3): DataFrame = {
+                       threshold: Double): DataFrame = {
     val pairs = containmentPairsSized(
-      jaccardSets(df, idCol, textCol, shingleSize).localCheckpoint(false),
+      jaccardSets(df, idCol, textCol).localCheckpoint(false),
       threshold)
     val drops = pairs
       .filter(col("__nb") > col("__na") ||
@@ -706,19 +702,18 @@ object Dedup {
     * join at 100k docs") instead of the banded one.
     */
   def nearDedupComplete(df: DataFrame, idCol: String, textCol: String,
-                        threshold: Double, shingleSize: Int = 3): DataFrame =
+                        threshold: Double): DataFrame =
     nearDedupKeep(df, idCol,
-      jaccardJoin(df, idCol, textCol, threshold, shingleSize)
+      jaccardJoin(df, idCol, textCol, threshold)
         .select("id_a", "id_b"))
 
   /** [[jaccardJoin]]'s set build: (__id, __set) distinct shingle-hash
     * sets, empty sets excluded. Split out so scale harnesses measure
     * the SAME code path the operator runs.
     */
-  def jaccardSets(df: DataFrame, idCol: String, textCol: String,
-                  shingleSize: Int = 3): DataFrame =
+  def jaccardSets(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("__id"),
-        array_distinct(shingleHashes(col(textCol), shingleSize)).as("__set"))
+        array_distinct(shingleHashes(col(textCol), ShingleSize)).as("__set"))
       .filter(size(col("__set")) > 0)
 
   /** [[jaccardJoin]]'s prefix build over a [[jaccardSets]] frame:
@@ -808,8 +803,8 @@ object Dedup {
     * operator exists to rule out.
     */
   def jaccardIndex(df: DataFrame, idCol: String, textCol: String,
-                   threshold: Double, shingleSize: Int = 3): DataFrame =
-    jaccardPrefixesFixedOrder(jaccardSets(df, idCol, textCol, shingleSize),
+                   threshold: Double): DataFrame =
+    jaccardPrefixesFixedOrder(jaccardSets(df, idCol, textCol),
         threshold)
       .select(col("__id").as("archive_id"), col("__n").as("n"),
         col("__prefix").as("prefix"), lit(threshold).as("t_build"))
@@ -829,8 +824,7 @@ object Dedup {
   def jaccardDedupAgainst(df: DataFrame, idCol: String, textCol: String,
                           index: DataFrame, archiveText: DataFrame,
                           archiveIdCol: String, archiveTextCol: String,
-                          threshold: Double,
-                          shingleSize: Int = 3): DataFrame = {
+                          threshold: Double): DataFrame = {
     // a screen BELOW the index's build threshold needs prefixes the
     // index does not carry — candidates would silently go missing, so
     // refuse. One tiny max() job over the index's stamp column; indexes
@@ -848,7 +842,7 @@ object Dedup {
     }
     // the snapshot re-shingles twice (prefix build + verify side)
     // without a cut; lazy checkpoint, caller frees via Checkpoints.free
-    val snapSets = jaccardSets(df, idCol, textCol, shingleSize)
+    val snapSets = jaccardSets(df, idCol, textCol)
       .localCheckpoint(false)
     val snapPref = jaccardPrefixesFixedOrder(snapSets, threshold)
       .select(col("__id"), col("__n").as("__na"),
@@ -864,7 +858,7 @@ object Dedup {
         archiveText.join(
           candidates.select(col("archive_id").as(archiveIdCol)).distinct(),
           Seq(archiveIdCol), "left_semi"),
-        archiveIdCol, archiveTextCol, shingleSize)
+        archiveIdCol, archiveTextCol)
       .select(col("__id").as("archive_id"), col("__set").as("__sb"))
     val dropped = candidates
       .join(snapCand, Seq("__id"))
@@ -891,9 +885,8 @@ object Dedup {
     * order; no corpus statistic to go stale), so re-crawl acceptance
     * unions new rows in, never rebuilds.
     */
-  def containmentIndex(df: DataFrame, idCol: String, textCol: String,
-                       shingleSize: Int = 3): DataFrame =
-    jaccardSets(df, idCol, textCol, shingleSize)
+  def containmentIndex(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    jaccardSets(df, idCol, textCol)
       .select(col("__id").as("archive_id"),
         size(col("__set")).cast("long").as("n"),
         sort_array(col("__set")).as("full"))
@@ -919,13 +912,12 @@ object Dedup {
   def containmentDedupAgainst(df: DataFrame, idCol: String, textCol: String,
                               index: DataFrame, archiveText: DataFrame,
                               archiveIdCol: String, archiveTextCol: String,
-                              threshold: Double,
-                              shingleSize: Int = 3): DataFrame = {
+                              threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containment screen: threshold must be in (0, 1], got $threshold")
     // the snapshot re-shingles twice (prefix build + verify side)
     // without a cut; lazy checkpoint, caller frees via Checkpoints.free
-    val snapSets = jaccardSets(df, idCol, textCol, shingleSize)
+    val snapSets = jaccardSets(df, idCol, textCol)
       .localCheckpoint(false)
     val snapPref = jaccardPrefixesFixedOrder(snapSets, threshold)
       .select(col("__id"), col("__n").as("__na"),
@@ -943,7 +935,7 @@ object Dedup {
         archiveText.join(
           candidates.select(col("archive_id").as(archiveIdCol)).distinct(),
           Seq(archiveIdCol), "left_semi"),
-        archiveIdCol, archiveTextCol, shingleSize)
+        archiveIdCol, archiveTextCol)
       .select(col("__id").as("archive_id"), col("__set").as("__sb"))
     val dropped = candidates
       .join(snapCand, Seq("__id"))
@@ -974,17 +966,17 @@ object Dedup {
     */
   def contaminationScores(corpus: DataFrame, corpusId: String, corpusText: String,
                           bench: DataFrame, benchId: String, benchText: String,
-                          shingleSize: Int = 3, threshold: Double = 0.0,
+                          threshold: Double = 0.0,
                           maxDf: Option[Long] = None): DataFrame = {
     val c0 = corpus.select(col(corpusId).as("corpus_id"),
-      explode(array_distinct(shingleHashes(col(corpusText), shingleSize))).as("__h"))
+      explode(array_distinct(shingleHashes(col(corpusText), ShingleSize))).as("__h"))
     val c = maxDf.fold(c0) { cap =>
       val wh = org.apache.spark.sql.expressions.Window.partitionBy("__h")
       c0.withColumn("__df", count(lit(1)).over(wh))
         .filter(col("__df") <= cap).drop("__df")
     }
     val b = bench.select(col(benchId).as("bench_id"),
-      explode(array_distinct(shingleHashes(col(benchText), shingleSize))).as("__h"))
+      explode(array_distinct(shingleHashes(col(benchText), ShingleSize))).as("__h"))
     contaminationFromGrams(c, b, threshold)
   }
 
@@ -1006,17 +998,17 @@ object Dedup {
     */
   def contaminationScoresBloom(corpus: DataFrame, corpusId: String, corpusText: String,
                                bench: DataFrame, benchId: String, benchText: String,
-                               shingleSize: Int = 3, threshold: Double = 0.0,
+                               threshold: Double = 0.0,
                                maxDf: Option[Long] = None,
                                fpp: Double = 0.01): DataFrame = {
     val b = bench.select(col(benchId).as("bench_id"),
-      explode(array_distinct(shingleHashes(col(benchText), shingleSize))).as("__h"))
+      explode(array_distinct(shingleHashes(col(benchText), ShingleSize))).as("__h"))
     val bGrams = b.select("__h").distinct()
     val nGrams = math.max(bGrams.count(), 1L) // benchmark side is small by contract
     val bloom = org.apache.spark.sql.graft.BloomExpressions.serialize(
       bGrams.stat.bloomFilter("__h", nGrams, fpp))
     val c0 = corpus.select(col(corpusId).as("corpus_id"),
-        explode(array_distinct(shingleHashes(col(corpusText), shingleSize))).as("__h"))
+        explode(array_distinct(shingleHashes(col(corpusText), ShingleSize))).as("__h"))
       .filter(org.apache.spark.sql.graft.BloomExpressions
         .mightContainLong(col("__h"), bloom))
     val c = maxDf.fold(c0) { cap =>
@@ -1050,9 +1042,9 @@ object Dedup {
   // ------------------------------------------------------------------
 
   /** Exact Jaccard similarity of the two docs' word-shingle sets. */
-  def jaccard(textA: Column, textB: Column, shingleSize: Int = 3): Column = {
-    val sa = array_distinct(wordShingles(textA, shingleSize))
-    val sb = array_distinct(wordShingles(textB, shingleSize))
+  def jaccard(textA: Column, textB: Column): Column = {
+    val sa = array_distinct(wordShingles(textA, ShingleSize))
+    val sb = array_distinct(wordShingles(textB, ShingleSize))
     val inter = size(array_intersect(sa, sb)).cast("double")
     val union = size(array_union(sa, sb)).cast("double")
     when(union > 0, inter / union).otherwise(lit(0.0))
@@ -1063,8 +1055,8 @@ object Dedup {
     * Hash collisions are deterministic, so set comparisons agree across
     * engines computing the same hashes.
     */
-  def shingleSet(text: Column, shingleSize: Int = 3): Column =
-    array_distinct(shingleHashes(text, shingleSize))
+  def shingleSet(text: Column): Column =
+    array_distinct(shingleHashes(text, ShingleSize))
 
   /** Jaccard over two pre-computed [[shingleSet]] columns. The pair-verify
     * hot path: one native set kernel per pair (not a re-shingling of both
@@ -1089,20 +1081,21 @@ object Dedup {
     }.reduce(_ + _)
 
   /** Single-expression simhash (tests / small inputs). */
-  def simhash(textCol: Column, bits: Int = 32): Column =
-    simhashFromHashes(transform(tokens(textCol), t => hash64(t)), bits)
+  def simhash(textCol: Column): Column =
+    simhashFromHashes(transform(tokens(textCol), t => hash64(t)))
 
   /** (id, simhash) via the relational shape (same pattern as
     * [[minhashSignatures]]): explode the native token-hash array, compute
-    * the `bits` sign-sums as codegen'd hash aggregates with map-side
+    * the 32 sign-sums as codegen'd hash aggregates with map-side
     * combine, fold the sign bits into the signature in one projection.
-    * The array-column formulation runs `bits` interpreted folds per
+    * The array-column formulation runs 32 interpreted folds per
     * document (one aggregate() lambda per bit); here every bit is a
     * column of ONE aggregation pass and the shuffle carries one row per
     * document. Docs with no tokens get simhash 0 (empty sign-sum).
     */
-  def simhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        bits: Int = 32): DataFrame = {
+  def simhashSignatures(df: DataFrame, idCol: String,
+                        textCol: String): DataFrame = {
+    val bits = 32
     val hs = df.select(col(idCol),
       explode_outer(shingleHashes(col(textCol), 1)).as("__h"))
     val aggs = (0 until bits).map(j =>
@@ -1257,7 +1250,7 @@ object Dedup {
   }
 
   /** [[semDedupDistinct]] with the nlist ∝ N sizing rule applied for the
-    * caller: nlist = max(minNlist, ceil(sqrt(corpus rows))), centroids =
+    * caller: nlist = max(8, ceil(sqrt(corpus rows))), centroids =
     * the first nlist nonzero vectors by id (the same deterministic
     * "collected like a trained codebook would be" convention the
     * registry queries use). This exists because a FIXED nlist is the one
@@ -1290,10 +1283,9 @@ object Dedup {
     * deterministic bucketing with its own oracle).
     */
   def semDedupAuto(df: DataFrame, idCol: String, vecCol: String,
-                   threshold: Double, nprobe: Int = 1,
-                   minNlist: Int = 8, maxNlist: Int = 4096): DataFrame = {
+                   threshold: Double, maxNlist: Int = 4096): DataFrame = {
     val n = df.count()
-    val nlist = math.max(minNlist.toLong,
+    val nlist = math.max(8L,
       math.ceil(math.sqrt(n.toDouble)).toLong).toInt
     val nonzero = df.filter(l2norm(col(vecCol)) > 0)
     if (nlist <= maxNlist) {
@@ -1303,7 +1295,7 @@ object Dedup {
         .map(_.getSeq[Float](0).toArray)
       val centsLit = array(cents.toIndexedSeq.map(v =>
         array(v.toIndexedSeq.map(lit(_)): _*)): _*)
-      semDedupDistinct(df, idCol, vecCol, threshold, centsLit, nprobe)
+      semDedupDistinct(df, idCol, vecCol, threshold, centsLit)
     } else {
       // the nlist-row seed frame is tiny relative to the corpus that
       // sized it past the literal threshold; the single-partition
@@ -1312,7 +1304,7 @@ object Dedup {
         .select(row_number().over(
             org.apache.spark.sql.expressions.Window.orderBy(col(idCol)))
           .cast("int").as("cell"), col(vecCol).as("cvec"))
-      semDedupDistinctTable(df, idCol, vecCol, threshold, cents, nprobe)
+      semDedupDistinctTable(df, idCol, vecCol, threshold, cents)
     }
   }
 
@@ -1487,17 +1479,13 @@ object Dedup {
     * documents to verify against, not just that one exists. Still
     * signature-scale (ids ride along, never payload).
     */
-  def bandIndexWithIds(df: DataFrame, idCol: String, textCol: String,
-                       numHashes: Int = 16, bands: Int = 4,
-                       shingleSize: Int = 3,
-                       fast: Boolean = false): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    minhashSignatures(df, idCol, textCol, numHashes, shingleSize, fast)
+  def bandIndexWithIds(df: DataFrame, idCol: String,
+                       textCol: String): DataFrame =
+    minhashSignatures(df, idCol, textCol, NumHashes, ShingleSize)
       .select(col(idCol).as("archive_id"),
-        posexplode(lshBandKeys(col("sig"), bands, rowsPerBand))
+        posexplode(lshBandKeys(col("sig"), Bands, NumHashes / Bands))
           .as(Seq("band", "band_key")))
       .distinct()
-  }
 
   /** The EXACT-verify batch job over band collisions (membership
     * alone would treat any collision as a duplicate; this is the
@@ -1519,21 +1507,15 @@ object Dedup {
   def nearDupVerifyAgainst(df: DataFrame, idCol: String, textCol: String,
                            index: DataFrame, archiveText: DataFrame,
                            archiveIdCol: String, archiveTextCol: String,
-                           jaccardThreshold: Double = 0.8,
-                           numHashes: Int = 16, bands: Int = 4,
-                           shingleSize: Int = 3,
-                           fast: Boolean = false): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val candidates = minhashSignatures(df, idCol, textCol, numHashes,
-        shingleSize, fast)
+                           jaccardThreshold: Double = 0.8): DataFrame = {
+    val candidates = minhashSignatures(df, idCol, textCol, NumHashes,
+        ShingleSize)
       .select(col(idCol),
-        posexplode(lshBandKeys(col("sig"), bands, rowsPerBand))
+        posexplode(lshBandKeys(col("sig"), Bands, NumHashes / Bands))
           .as(Seq("band", "band_key")))
       .join(index, Seq("band", "band_key"))
       .select(col(idCol), col("archive_id")).distinct()
-    def sh(c: Column) =
-      if (fast) shingleHashesFast(c, shingleSize)
-      else shingleHashes(c, shingleSize)
+    def sh(c: Column) = shingleHashes(c, ShingleSize)
     val snapSets = df
       .join(candidates.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
       .select(col(idCol), array_distinct(sh(col(textCol))).as("__sa"))

@@ -177,8 +177,7 @@ object Mixing {
     * handful of sources, never data-scale).
     */
   def mixtureExpand(df: DataFrame, idCol: String, sourceCol: String,
-                    epochsBySource: Map[String, Double],
-                    salt: String = "mix"): DataFrame = {
+                    epochsBySource: Map[String, Double]): DataFrame = {
     epochsBySource.values.foreach(e =>
       require(e >= 0, s"epochs must be >= 0: $e"))
     val epochExpr = coalesce(
@@ -190,10 +189,10 @@ object Mixing {
       lit(0L))
     val fullCopies = (epochExpr / lit(1000000L)).cast("long")
     val fracMicro = epochExpr % lit(1000000L)
-    // fractional-tail membership is PER-DOCUMENT (hash of id + salt) —
+    // fractional-tail membership is PER-DOCUMENT (hash of id + "mix") —
     // hashing the source would flip whole sources at once
     val keep = pmod(
-      TextFunctions.hash64(concat(col(idCol).cast("string"), lit(salt))),
+      TextFunctions.hash64(concat(col(idCol).cast("string"), lit("mix"))),
       lit(1000000L)) < fracMicro
     df.withColumn("__copies",
         fullCopies + when(keep, lit(1L)).otherwise(lit(0L)))

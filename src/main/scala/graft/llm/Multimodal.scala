@@ -145,7 +145,7 @@ object Multimodal {
     * caching is off — decode is memory-only in the executor.
     */
   def imageFeaturesPartitions(df: DataFrame, idCol: String, binCol: String,
-                              side: Int = 8, batchSize: Int = 32): DataFrame = {
+                              side: Int = 8): DataFrame = {
     require(side > 0, s"side must be positive, got $side")
     val spark = df.sparkSession
     val outSchema = StructType(Seq(
@@ -159,7 +159,7 @@ object Multimodal {
     val src = df.select(col(idCol).cast("long").as(idCol), col(binCol))
     val rdd = src.rdd.mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
-      it.grouped(batchSize).flatMap { batch =>
+      it.grouped(32).flatMap { batch =>
         batch.map { r =>
           val id = if (r.isNullAt(0)) null else Long.box(r.getLong(0))
           val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)

@@ -61,12 +61,10 @@ object QualityClassifier {
     * Returns (weights, bias). Deterministic: zero init, fixed iteration
     * count, decimal-exact gradient sums — no randomness, no
     * summation-order dependence. One aggregation job per iteration over
-    * the checkpointed feature frame; `l2` shrinks weights toward zero
-    * each step (standard ridge penalty, applied driver-side).
+    * the checkpointed feature frame.
     */
   def train(df: DataFrame, textCol: String, labelCol: String, dim: Int = 1024,
-            iterations: Int = 30, lr: Double = 0.5,
-            l2: Double = 0.0): (Array[Double], Double) = {
+            iterations: Int = 30, lr: Double = 0.5): (Array[Double], Double) = {
     val feats = df
       .select(featureBuckets(col(textCol), dim).as("__b"),
         col(labelCol).cast("double").as("__y"))
@@ -99,7 +97,7 @@ object QualityClassifier {
         .toMap
       grad.foreach {
         case (-1, g) => bias -= lr * g / n
-        case (k, g)  => weights(k) -= lr * (g / n + l2 * weights(k))
+        case (k, g)  => weights(k) -= lr * (g / n)
       }
       it += 1
     }

@@ -25,6 +25,10 @@ import TextFunctions.tokens
   */
 object Retrieval {
 
+  /** BM25's term-frequency saturation and length normalization. */
+  private val K1 = 1.2
+  private val B = 0.75
+
   /** (doc, term, tf, dl) postings of `corpus` under the single-space
     * token convention — the inverted index both scoring paths share.
     */
@@ -142,8 +146,7 @@ object Retrieval {
     */
   def searchPostingsNorm(post: DataFrame, termDf: DataFrame, stats: DataFrame,
                          queries: DataFrame, queryIdCol: String,
-                         queryTextCol: String, k: Int,
-                         k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                         queryTextCol: String, k: Int): DataFrame = {
     val qTerms = queries
       .select(col(queryIdCol).as("query_id"),
         explode(tokens(col(queryTextCol))).as("term"))
@@ -155,8 +158,8 @@ object Retrieval {
         TextFunctions.round9(log((col("n_docs") - col("df") + lit(0.5)) /
                (col("df") + lit(0.5)) + lit(1.0))))
       .withColumn("contrib",
-        TextFunctions.round6(col("idf") * (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))))
+        TextFunctions.round6(col("idf") * (col("tf") * lit(K1 + 1.0)) /
+          (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / col("avgdl")))))
       .groupBy("query_id", "doc_id")
       .agg(sum(col("contrib").cast("decimal(28,12)")).cast("double").as("score"))
     val wQ = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
@@ -178,8 +181,7 @@ object Retrieval {
     */
   def searchPostings(postIdx: DataFrame, stats: DataFrame,
                      queries: DataFrame, queryIdCol: String,
-                     queryTextCol: String, k: Int,
-                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                     queryTextCol: String, k: Int): DataFrame = {
     val qTerms = queries
       .select(col(queryIdCol).as("query_id"),
         explode(tokens(col(queryTextCol))).as("term"))
@@ -190,8 +192,8 @@ object Retrieval {
         TextFunctions.round9(log((col("n_docs") - col("df") + lit(0.5)) /
                (col("df") + lit(0.5)) + lit(1.0))))
       .withColumn("contrib",
-        TextFunctions.round6(col("idf") * (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))))
+        TextFunctions.round6(col("idf") * (col("tf") * lit(K1 + 1.0)) /
+          (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / col("avgdl")))))
       .groupBy("query_id", "doc_id")
       .agg(sum(col("contrib").cast("decimal(28,12)")).cast("double").as("score"))
     // row_number + rank<=k: InferWindowGroupLimit bounds the exchange to
@@ -229,13 +231,12 @@ object Retrieval {
     */
   def searchPostingsPruned(postIdx: DataFrame, stats: DataFrame,
                            queries: DataFrame, queryIdCol: String,
-                           queryTextCol: String, k: Int,
-                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                           queryTextCol: String, k: Int): DataFrame = {
     val terms = queries
       .select(explode(tokens(col(queryTextCol))).as("term"))
       .distinct().collect().map(_.getString(0))
     searchPostings(postIdx.filter(col("term").isin(terms.toIndexedSeq: _*)),
-      stats, queries, queryIdCol, queryTextCol, k, k1, b)
+      stats, queries, queryIdCol, queryTextCol, k)
   }
 
   /** BM25 top-`k` documents per query, building the index inline —
@@ -244,15 +245,16 @@ object Retrieval {
     * (standard bag-of-words query semantics: repeated query terms score
     * once).
     *
-    * k1 saturates term frequency, b normalizes by document length; the
+    * k1 = 1.2 saturates term frequency, b = 0.75 normalizes by document
+    * length; the
     * idf is the "+1" form (Lucene's), strictly positive even for terms in
     * more than half the corpus.
     */
   def bm25TopK(corpus: DataFrame, idCol: String, textCol: String,
                queries: DataFrame, queryIdCol: String, queryTextCol: String,
-               k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+               k: Int): DataFrame = {
     val (post, stats) = buildPostings(corpus, idCol, textCol)
-    searchPostings(post, stats, queries, queryIdCol, queryTextCol, k, k1, b)
+    searchPostings(post, stats, queries, queryIdCol, queryTextCol, k)
   }
 
   // ------------------------------------------------------------------
@@ -507,7 +509,7 @@ object Retrieval {
 
   /** Reciprocal-rank fusion (Cormack et al. 2009): merge ranked runs —
     * typically BM25 and a dense ANN run — into one ranking per query by
-    *   rrf(d) = Σ_runs 1 / (k0 + rank_run(d)).
+    *   rrf(d) = Σ_runs 1 / (k0 + rank_run(d)), k0 = 60.
     * Each input needs (query_id, doc_id, rank); documents absent from a
     * run simply contribute nothing (the standard semantics). Rank
     * arithmetic only — no score calibration between runs is needed,
@@ -518,7 +520,8 @@ object Retrieval {
     * Portability: each reciprocal floor-rounds at 1e-9 and the fusion
     * sum is decimal-exact.
     */
-  def rrfFuse(runs: Seq[DataFrame], k: Int, k0: Int = 60): DataFrame = {
+  def rrfFuse(runs: Seq[DataFrame], k: Int): DataFrame = {
+    val k0 = 60
     require(runs.nonEmpty, "rrfFuse: no runs given")
     val fused = runs.map(_.select(col("query_id"), col("doc_id"),
         TextFunctions.round9(lit(1.0) / (lit(k0.toLong) + col("rank"))).as("part")))

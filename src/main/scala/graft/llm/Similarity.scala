@@ -450,14 +450,16 @@ object Similarity {
     * path). Left-to-right double accumulation is unchanged, so buckets
     * are bit-identical to the lambda formulation and to the SQL oracle.
     *
-    * `dim` must be >= the vector length (extra signs are ignored — the
-    * dot loops min(len)); default covers the 64-dim corpus embeddings.
-    * The precondition is ENFORCED: a longer vector would silently bucket
-    * on its first `dim` components only, so it raises instead. A NULL
+    * Each plane has 64 signs, the corpus embedding width: a vector may
+    * have at most 64 components (extra signs are ignored — the dot
+    * loops min(len)). The bound is ENFORCED: a longer vector would
+    * silently bucket on its first 64 components only, so it raises
+    * instead. A NULL
     * vector buckets to NULL (excluded from any grouping) rather than
     * tripping the guard — not-yet-embedded rows must not kill the job.
     */
-  def hyperplaneBucket(vec: Column, planes: Int = 8, dim: Int = 64): Column = {
+  def hyperplaneBucket(vec: Column, planes: Int = 8): Column = {
+    val dim = 64
     val bucket = (0 until planes).map { p =>
       val signs = array((0 until dim).map { j =>
         val h = org.apache.spark.sql.graft.Md5Util.prefix64(
@@ -470,6 +472,6 @@ object Similarity {
       .when(size(vec) <= dim, bucket)
       .otherwise(raise_error(concat(
         lit("hyperplaneBucket: vector length "), size(vec).cast("string"),
-        lit(s" exceeds dim=$dim — pass dim >= the embedding width"))))
+        lit(s" exceeds the $dim signs per plane"))))
   }
 }

@@ -87,12 +87,13 @@ object TextFunctions {
     * boilerpipe/trafilatura idea reduced to its load-bearing features,
     * Kohlschütter et al. WSDM'10: block text length + link density):
     * split the page at block-level tags, keep blocks with at least
-    * `minChars` of prose whose ANCHOR text is at most a third of it
+    * 20 chars of prose whose ANCHOR text is at most a third of it
     * (navigation/footer link farms fail exactly that test), join the
     * survivors. Exact integer arithmetic (`linkLen·3 ≤ textLen`), pure
     * regex + array ops — the DuckDB oracle replays it (`q_html_main`).
     */
-  def htmlMainText(c: Column, minChars: Int = 20): Column = {
+  def htmlMainText(c: Column): Column = {
+    val minChars = 20
     val blocks = split(dropNonContent(c),
       "(?i)</?(?:p|div|h[1-6]|li|br|td|th|tr|table|ul|ol|section|article|header|footer|nav|aside|blockquote)[^>]*>")
     val scored = transform(blocks, b => struct(
@@ -391,17 +392,15 @@ object TextFunctions {
   }
 
   /** Deterministic hash-sampling predicate: keep a row iff
-    * hash64(key || salt) mod 1e6 < fraction * 1e6. Unlike `df.sample`
+    * hash64(key || "sample") mod 1e6 < fraction * 1e6. Unlike `df.sample`
     * (RNG per partition — resample on retry/repartition), this is a pure
     * function of the row content: stable across runs, engines, cluster
     * sizes, and partitionings, so a 10% curation sample is reproducible
-    * and auditable anywhere. Different salts give independent samples
-    * (held-out splits).
+    * and auditable anywhere.
     */
-  def hashSamplePredicate(key: Column, fraction: Double,
-                          salt: String = "sample"): Column = {
+  def hashSamplePredicate(key: Column, fraction: Double): Column = {
     require(fraction >= 0 && fraction <= 1, s"fraction must be in [0,1]: $fraction")
-    pmod(hash64(concat(key, lit(salt))), lit(1000000L)) <
+    pmod(hash64(concat(key, lit("sample"))), lit(1000000L)) <
       math.round(fraction * 1000000).toLong
   }
 
@@ -438,8 +437,7 @@ object TextFunctions {
 
   def stratifiedSamplePredicate(key: Column, stratum: Column,
                                 rates: Map[String, Double],
-                                defaultFraction: Double,
-                                salt: String = "sample"): Column = {
+                                defaultFraction: Double): Column = {
     (rates.values.toSeq :+ defaultFraction).foreach(f =>
       require(f >= 0 && f <= 1, s"fraction must be in [0,1]: $f"))
     val rateExpr =
@@ -450,7 +448,7 @@ object TextFunctions {
             Seq(lit(k), lit(math.round(f * 1000000))) }: _*),
           stratum),
         lit(math.round(defaultFraction * 1000000)))
-    pmod(hash64(concat(key, lit(salt))), lit(1000000L)) < rateExpr
+    pmod(hash64(concat(key, lit("sample"))), lit(1000000L)) < rateExpr
   }
 
   /** Deterministic SPLIT assignment (train/validation/test — every
@@ -503,9 +501,8 @@ object TextFunctions {
     * keep bit-for-bit (a null prob keeps nothing: the comparison is
     * null -> filter drops it).
     */
-  def weightedSamplePredicate(key: Column, prob: Column,
-                              salt: String = "wsample"): Column =
-    pmod(hash64(concat(key, lit(salt))), lit(1000000L)) <
+  def weightedSamplePredicate(key: Column, prob: Column): Column =
+    pmod(hash64(concat(key, lit("wsample"))), lit(1000000L)) <
       floor(least(greatest(prob, lit(0.0)), lit(1.0)) * 1000000 + 0.5)
         .cast("long")
 
@@ -577,8 +574,8 @@ object TextFunctions {
     * libm-dependent across engines (fine in practice, not oracle-exact).
     */
   def languageRebalance(df: org.apache.spark.sql.DataFrame, textCol: String,
-                        langCol: String, alpha: Double = 0.5,
-                        salt: String = "rebalance"): org.apache.spark.sql.DataFrame = {
+                        langCol: String,
+                        alpha: Double = 0.5): org.apache.spark.sql.DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1]: $alpha")
     // rows with a NULL language (language-ID gave up) stay in the OUTPUT
     // with keep_prob NULL and keep=false — they are neither silently
@@ -597,7 +594,7 @@ object TextFunctions {
       // coalesce(false): NULL lang AND NULL text both land in the
       // rejected partition, so kept + rejected == input always holds
       .withColumn("keep", coalesce(
-        pmod(hash64(concat(col(textCol), lit(salt))), lit(1000000L)) <
+        pmod(hash64(concat(col(textCol), lit("rebalance"))), lit(1000000L)) <
           floor(col("keep_prob") * 1000000).cast("long"),
         lit(false)))
       .drop("__n", "__nmin")

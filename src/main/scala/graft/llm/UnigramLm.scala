@@ -203,14 +203,14 @@ object UnigramLm {
     } finally bc.destroy()
   }
 
-  /** Train: seed → [EM ×`emIters` → prune to `shrink`·|V|] until the
-    * vocabulary reaches `vocabSize`, then a final EM fit. Every round's
-    * state is the vocab-sized model on the driver; the word table is
-    * read once per EM iteration.
+  /** Train: seed (pieces up to 4 chars) → [EM ×2 → prune to 0.75·|V|]
+    * until the vocabulary reaches `vocabSize`, then a final EM fit.
+    * Every round's state is the vocab-sized model on the driver; the
+    * word table is read once per EM iteration.
     */
-  def train(wordCounts: DataFrame, vocabSize: Int, seedSize: Int = 4096,
-            maxPieceLen: Int = 4, emIters: Int = 2,
-            shrink: Double = 0.75): Model = {
+  def train(wordCounts: DataFrame, vocabSize: Int,
+            seedSize: Int = 4096): Model = {
+    val (maxPieceLen, emIters, shrink) = (4, 2, 0.75)
     val seed = seedVocab(wordCounts, seedSize, maxPieceLen)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
     require(seed.nonEmpty, "train: empty seed vocabulary")
@@ -267,8 +267,8 @@ object UnigramLm {
     * mapPartitions — the same data-dependent-loop justification as
     * [[BpeTrain.bpeTokensPartitions]]).
     */
-  def tokenize(df: DataFrame, idCol: String, textCol: String, model: Model,
-               outCol: String = "pieces"): DataFrame = {
+  def tokenize(df: DataFrame, idCol: String, textCol: String,
+               model: Model): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
@@ -282,6 +282,6 @@ object UnigramLm {
           (id, words.toSeq.flatMap(w => viterbi(w, m.logp, m.maxPieceLen)))
         }
       }
-      .toDF(idCol, outCol)
+      .toDF(idCol, "pieces")
   }
 }

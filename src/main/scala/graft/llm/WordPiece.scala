@@ -79,11 +79,11 @@ object WordPiece {
 
   /** Greedy longest-match-first tokenization against `vocab` (plain +
     * `##` continuation pieces). A word with any unmatchable position
-    * becomes a single `unk` token. Map-only; broadcast piece set.
+    * becomes a single `[UNK]` token. Map-only; broadcast piece set.
+    * Output: (idCol, `pieces`).
     */
   def wordPieceTokens(df: DataFrame, idCol: String, textCol: String,
-                      vocab: Set[String], unk: String = "[UNK]",
-                      outCol: String = "pieces"): DataFrame = {
+                      vocab: Set[String]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val maxLen = if (vocab.isEmpty) 0 else vocab.iterator.map(_.length).max
@@ -103,7 +103,7 @@ object WordPiece {
               val cand = prefix + w.substring(pos, pos + len)
               if (v(cand)) found = cand else len -= 1
             }
-            if (found == null) return Seq(unk)
+            if (found == null) return Seq("[UNK]")
             out += found
             pos += len
           }
@@ -116,6 +116,6 @@ object WordPiece {
           (id, ws.toSeq.flatMap(tokenizeWord))
         }
       }
-      .toDF(idCol, outCol)
+      .toDF(idCol, "pieces")
   }
 }

@@ -68,6 +68,9 @@ import graft.llm.TextFunctions
   */
 object FuzzyJoin {
 
+  /** Gram length: padded bigrams. */
+  private val q = 2
+
   /** Padded q-gram hashes of `s` with their positions:
     * array&lt;struct&lt;g: long, pos: int&gt;&gt;, `pos` 1-based in the
     * padded string — one linear transform per row (the r11
@@ -75,7 +78,7 @@ object FuzzyJoin {
     * its multiset numbering; positions come free with the transform
     * index).
     */
-  private def posGrams(s: org.apache.spark.sql.Column, q: Int) = {
+  private def posGrams(s: org.apache.spark.sql.Column) = {
     val pad = "".toString * (q - 1)
     val arr = TextFunctions.charShingleHashes(
       concat(lit(pad), s, lit(pad)), q)
@@ -95,10 +98,10 @@ object FuzzyJoin {
     * one row per surviving banded gram co-occurrence,
     * (s_a, s_b, __la, __lb).
     */
-  private def gramJoinRaw(s: DataFrame, maxDist: Int, q: Int): DataFrame = {
+  private def gramJoinRaw(s: DataFrame, maxDist: Int): DataFrame = {
     val shortLen = q * maxDist // count bound can reach 0 at or below this
     val grams = s.select(col("s"), col("len"),
-        explode(posGrams(col("s"), q)).as("go"))
+        explode(posGrams(col("s"))).as("go"))
       .select(col("s"), col("len"),
         col("go.g").as("g"), col("go.pos").as("pos"))
     grams.as("a").join(grams.as("b"),
@@ -123,13 +126,12 @@ object FuzzyJoin {
     * short-string all-pairs bucket), both as (s_a, s_b) with the union
     * disjoint by construction.
     */
-  private def candidates(df: DataFrame, strCol: String, maxDist: Int,
-                         q: Int): (DataFrame, DataFrame) = {
+  private def candidates(df: DataFrame, strCol: String,
+                         maxDist: Int): (DataFrame, DataFrame) = {
     require(maxDist >= 1, "editDistancePairs: maxDist must be >= 1")
-    require(q >= 2, "editDistancePairs: q must be >= 2")
     val s = distinctStrings(df, strCol)
     val shortLen = q * maxDist // count bound can reach 0 at or below this
-    val gramPairs = gramJoinRaw(s, maxDist, q)
+    val gramPairs = gramJoinRaw(s, maxDist)
       .groupBy(col("s_a"), col("s_b"), col("__la"), col("__lb"))
       .agg(count(lit(1)).as("__shared"))
       // Gravano count filter: ed ≤ k ⇒ multiset-shared ≥ max(len)+q−1−k·q
@@ -147,9 +149,9 @@ object FuzzyJoin {
   /** (s_a, s_b, dist) for every distinct pair of `strCol` values with
     * levenshtein ≤ maxDist, s_a &lt; s_b.
     */
-  def editDistancePairs(df: DataFrame, strCol: String, maxDist: Int,
-                        q: Int = 2): DataFrame = {
-    val (gramPairs, shortPairs) = candidates(df, strCol, maxDist, q)
+  def editDistancePairs(df: DataFrame, strCol: String,
+                        maxDist: Int): DataFrame = {
+    val (gramPairs, shortPairs) = candidates(df, strCol, maxDist)
     gramPairs.unionByName(shortPairs)
       .withColumn("dist",
         levenshtein(col("s_a"), col("s_b"), maxDist).cast("long"))
@@ -163,9 +165,9 @@ object FuzzyJoin {
     * set is complete and strictly prunes" holds the pruning. Built on
     * the same [[candidates]] pipeline the operator runs.
     */
-  def countFilterCandidates(df: DataFrame, strCol: String, maxDist: Int,
-                            q: Int = 2): Long = {
-    val (gramPairs, shortPairs) = candidates(df, strCol, maxDist, q)
+  def countFilterCandidates(df: DataFrame, strCol: String,
+                            maxDist: Int): Long = {
+    val (gramPairs, shortPairs) = candidates(df, strCol, maxDist)
     gramPairs.count() + shortPairs.count()
   }
 }

@@ -67,9 +67,10 @@ object Hits {
     * to a scaled fixpoint). Warm-from-uniform == cold bit-for-bit
     * (HitsSpec pins it).
     */
-  def hitsFrom(edges: DataFrame, initScores: DataFrame, iterations: Int,
-               checkpointEvery: Int = 1, saltJoin: Int = 1): DataFrame =
-    runHits(edges, Some(initScores), iterations, checkpointEvery, saltJoin)
+  def hitsFrom(edges: DataFrame, initScores: DataFrame,
+               iterations: Int): DataFrame =
+    runHits(edges, Some(initScores), iterations, checkpointEvery = 1,
+      saltJoin = 1)
 
   /** CONVERGENCE-STOPPED HITS (VERDICT r17 #5, the [[PageRank
     * .pageRankUntil]] contract on both score vectors): iterate until
@@ -100,9 +101,10 @@ object Hits {
   private def massSum(c: org.apache.spark.sql.Column) =
     sum(c.cast("decimal(38,18)")).cast("double")
 
-  /** The shared loop. `epsilon = None` is the fixed-iteration path,
-    * byte-identical to the pre-r18 `runHits`; `Some(eps)` checkpoints
-    * every round (forced cadence 1) and stops on the L1 delta.
+  /** The shared loop, [[PageRank.iterate]] over [[oneRoundCut]].
+    * `epsilon = None` is the fixed-iteration path; `Some(eps)`
+    * checkpoints every round (forced cadence 1) and stops on the L1
+    * delta of both vectors.
     */
   private def runHitsCounted(edges: DataFrame, init: Option[DataFrame],
                              iterations: Int, checkpointEvery: Int,
@@ -123,7 +125,7 @@ object Hits {
       require(n > 0, "hits: empty graph")
       // normalized uniform start: both scores begin at 1/N, so round 1
       // is already on the same grid as every later round
-      var scores = init match {
+      val scores = init match {
         case None => nodes
           .withColumn("hub", lit(1.0) / lit(n.toDouble))
           .withColumn("auth", lit(1.0) / lit(n.toDouble))
@@ -162,65 +164,12 @@ object Hits {
               .localCheckpoint()
           } finally graft.Checkpoints.free(carried)
       }
-      var cut = scores
-      // node-grain per-round aggregates (hubRaw/authRaw) materialized
-      // inside oneRound; they are freed only once a DOWNSTREAM scores
-      // checkpoint exists (intermediate rounds' lazy frames reference
-      // them), so they accumulate between cuts — at most
-      // 2·checkpointEvery node-grain tables
-      var pending = List.empty[DataFrame]
-      var i = 0
-      try {
-        epsilon match {
-          case None =>
-            while (i < iterations) {
-              val (next, tmps) = oneRoundCut(nodes, e, scores, saltJoin)
-              scores = next
-              pending = tmps ::: pending
-              if ((i + 1) % checkpointEvery == 0 || i + 1 == iterations) {
-                scores = scores.localCheckpoint()
-                graft.Checkpoints.free(cut)
-                cut = scores
-                pending.foreach(graft.Checkpoints.free(_))
-                pending = Nil
-              }
-              i += 1
-            }
-            (scores, i)
-          case Some(eps) =>
-            var converged = false
-            while (i < iterations && !converged) {
-              val (nextRaw, tmps) = oneRoundCut(nodes, e, scores, saltJoin)
-              // LAZY cut: the delta aggregate touches every partition
-              // of `next`, so it materializes the checkpoint in the
-              // same job — one job per round instead of two (r21)
-              val next = nextRaw.localCheckpoint(eager = false)
-              // decimal-exact L1 delta over BOTH vectors: per-node
-              // terms are fixed IEEE ops, the cross-node sum order-
-              // free — the stop decision cannot depend on partitioning
-              val delta = scores.select(col("id"),
-                  col("hub").as("__oh"), col("auth").as("__oa"))
-                .join(next.select(col("id"),
-                  col("hub").as("__nh"), col("auth").as("__na")), Seq("id"))
-                .agg(coalesce(
-                  sum((abs(col("__nh") - col("__oh")) +
-                    abs(col("__na") - col("__oa")))
-                    .cast("decimal(38,18)")).cast("double"),
-                  lit(0.0)))
-                .collect().head.getDouble(0)
-              graft.Checkpoints.free(cut)
-              tmps.foreach(graft.Checkpoints.free(_))
-              scores = next
-              cut = next
-              converged = delta <= eps
-              i += 1
-            }
-            (scores, i)
-        }
-      } finally {
-        pending.foreach(graft.Checkpoints.free(_))
-        if (cut ne scores) graft.Checkpoints.free(cut)
-      }
+      // node-grain per-round aggregates (hubRaw/authRaw) are
+      // materialized inside oneRoundCut and handed to the loop, which
+      // frees them once a downstream scores checkpoint exists — at most
+      // 2·checkpointEvery node-grain tables live between cuts
+      PageRank.iterate(scores, iterations, checkpointEvery, epsilon,
+        PageRank.l1Delta("hub", "auth"))(oneRoundCut(nodes, e, _, saltJoin))
     } finally {
       restoreConf()
       graft.Checkpoints.free(e)

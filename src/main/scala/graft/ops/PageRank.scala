@@ -26,14 +26,17 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
+  /** The damping factor every form and oracle uses. */
+  private val Damping = 0.85
+
   /** (id, rank) after `iterations` damped power-iteration rounds over
     * `edges` (columns `src`, `dst`). Lineage is cut every
     * `checkpointEvery` rounds (superseded generations freed — the
     * clusterPairs contract).
     */
-  def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85,
+  def pageRank(edges: DataFrame, iterations: Int,
                checkpointEvery: Int = 4, saltJoin: Int = 0): DataFrame =
-    run(edges, None, iterations, damping, checkpointEvery, saltJoin = saltJoin)
+    run(edges, None, iterations, checkpointEvery, saltJoin = saltJoin)
 
   /** The measured hub-skew regime rule (PERFNOTES "Round 12 — hub-skew
     * PageRank" + r15; PageRankSpec "auto salt" pins it) as a pure
@@ -82,9 +85,9 @@ object PageRank {
     * the graph's mixing speed) — PageRankSpec pins the ordering after
     * a perturbation, and warm-from-uniform == cold bit-for-bit.
     */
-  def pageRankFrom(edges: DataFrame, initRanks: DataFrame, iterations: Int,
-                   damping: Double = 0.85, checkpointEvery: Int = 4): DataFrame =
-    run(edges, Some(initRanks), iterations, damping, checkpointEvery)
+  def pageRankFrom(edges: DataFrame, initRanks: DataFrame,
+                   iterations: Int): DataFrame =
+    run(edges, Some(initRanks), iterations, checkpointEvery = 4)
 
   /** CONVERGENCE-STOPPED power iteration (VERDICT r17 #5): iterate
     * until the DECIMAL-EXACT L1 delta of successive rank vectors —
@@ -101,10 +104,9 @@ object PageRank {
     * iterate to tolerance instead of guessing a fixed count.
     */
   def pageRankUntil(edges: DataFrame, epsilon: Double,
-                    maxIterations: Int = 100, damping: Double = 0.85,
-                    saltJoin: Int = 0): (DataFrame, Int) = {
+                    maxIterations: Int = 100): (DataFrame, Int) = {
     require(epsilon >= 0.0, "pageRankUntil: epsilon must be >= 0")
-    runCounted(edges, None, maxIterations, damping, 1, saltJoin = saltJoin,
+    runCounted(edges, None, maxIterations, 1, saltJoin = 0,
       epsilon = Some(epsilon))
   }
 
@@ -126,9 +128,8 @@ object PageRank {
     * amortized across every round.
     */
   private def run(edges: DataFrame, init: Option[DataFrame], iterations: Int,
-                  damping: Double, checkpointEvery: Int,
-                  saltJoin: Int = 0): DataFrame =
-    runCounted(edges, init, iterations, damping, checkpointEvery, saltJoin,
+                  checkpointEvery: Int, saltJoin: Int = 0): DataFrame =
+    runCounted(edges, init, iterations, checkpointEvery, saltJoin,
       epsilon = None)._1
 
   /** The shared loop. `epsilon = None` is the fixed-iteration path,
@@ -139,8 +140,7 @@ object PageRank {
     * is one extra join + one-row decimal aggregate per round.
     */
   private def runCounted(edges: DataFrame, init: Option[DataFrame],
-                         iterations: Int, damping: Double,
-                         checkpointEvery: Int, saltJoin: Int,
+                         iterations: Int, checkpointEvery: Int, saltJoin: Int,
                          epsilon: Option[Double]): (DataFrame, Int) = {
     require(iterations >= 0, "pageRank: iterations must be >= 0")
     require(checkpointEvery >= 1, "pageRank: checkpointEvery must be >= 1")
@@ -179,7 +179,7 @@ object PageRank {
             edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
         }
       val nD = lit(n.toDouble)
-      val d = lit(damping)
+      val d = lit(Damping)
       val ranks = init match {
         case None =>
           nodes.withColumn("rank", lit(1.0) / nD).localCheckpoint()
@@ -215,7 +215,7 @@ object PageRank {
       }
       // one power-iteration round — the SINGLE definition both the
       // fixed-iteration and the epsilon-stopped loops execute
-      def oneRound(prev: DataFrame): DataFrame = {
+      def oneRound(prev: DataFrame): (DataFrame, List[DataFrame]) = {
         // fresh attribute ids for the edge side: ranks/nodes descend
         // from e, so joining e directly is an ambiguous self-join
         val eOut = e.select(col("src").as("__es"), col("dst").as("__ed"))
@@ -238,75 +238,96 @@ object PageRank {
           .agg(massSum(col("c")).as("s"))
         val dangling = withDeg.filter(col("deg").isNull)
           .agg(coalesce(massSum(col("rank")), lit(0.0)).as("m"))
-        nodes
+        (nodes
           .join(sums, Seq("id"), "left")
           .crossJoin(broadcast(dangling))
           .select(col("id"),
             ((lit(1.0) - d) / nD +
               d * (coalesce(col("s"), lit(0.0)) + col("m") / nD))
-              .as("rank"))
+              .as("rank")), Nil)
       }
-      iterate(ranks, iterations, checkpointEvery, epsilon)(oneRound)
+      iterate(ranks, iterations, checkpointEvery, epsilon,
+        l1Delta("rank"))(oneRound)
     } finally {
       restoreConf()
       graft.Checkpoints.free(e)
     }
   }
 
-  /** The power-iteration driver both forms share: run `oneRound` from
-    * `init` for `iterations` rounds, cutting lineage every
+  /** The power-iteration driver PageRank and HITS share: run `oneRound`
+    * from `init` for `iterations` rounds, cutting lineage every
     * `checkpointEvery` rounds and after the last; or, with `epsilon`,
-    * until the decimal-exact L1 delta of successive rank vectors is
-    * ≤ eps (at most `iterations` rounds). Returns (ranks, roundsRun);
-    * every superseded cut is freed.
+    * until `delta(previous, next)` is ≤ eps (at most `iterations`
+    * rounds). `oneRound` returns the next vector and the temporary
+    * tables it materialized; lazy rounds reference those until the
+    * next cut, so they are freed only once a later cut exists. Returns
+    * (scores, roundsRun); every superseded cut is freed.
     */
-  private def iterate(init: DataFrame, iterations: Int, checkpointEvery: Int,
-                      epsilon: Option[Double])
-                     (oneRound: DataFrame => DataFrame): (DataFrame, Int) = {
-    var ranks = init
-    var cut = ranks
+  private[ops] def iterate(init: DataFrame, iterations: Int,
+                           checkpointEvery: Int, epsilon: Option[Double],
+                           delta: (DataFrame, DataFrame) => Double)
+                          (oneRound: DataFrame => (DataFrame, List[DataFrame]))
+      : (DataFrame, Int) = {
+    var scores = init
+    var cut = scores
+    var pending = List.empty[DataFrame]
     var i = 0
     try {
       epsilon match {
         case None =>
           while (i < iterations) {
-            ranks = oneRound(ranks)
+            val (next, tmps) = oneRound(scores)
+            scores = next
+            pending = tmps ::: pending
             if ((i + 1) % checkpointEvery == 0 || i + 1 == iterations) {
-              ranks = ranks.localCheckpoint()
+              scores = scores.localCheckpoint()
               graft.Checkpoints.free(cut)
-              cut = ranks
+              cut = scores
+              pending.foreach(graft.Checkpoints.free(_))
+              pending = Nil
             }
             i += 1
           }
-          (ranks, i)
+          (scores, i)
         case Some(eps) =>
           var converged = false
           while (i < iterations && !converged) {
+            val (nextRaw, tmps) = oneRound(scores)
             // LAZY cut: the delta aggregate touches every partition
             // of `next`, so it materializes the checkpoint in the
             // same job — one job per round instead of two (r21)
-            val next = oneRound(ranks).localCheckpoint(eager = false)
-            // decimal-exact L1 delta: |Δ| per node is one IEEE
-            // subtraction, the cross-node sum order-free — so the
-            // stop decision cannot depend on partitioning
-            val delta = ranks.select(col("id"), col("rank").as("__old"))
-              .join(next.select(col("id"), col("rank").as("__new")),
-                Seq("id"))
-              .agg(coalesce(
-                sum(abs(col("__new") - col("__old"))
-                  .cast("decimal(38,18)")).cast("double"),
-                lit(0.0)))
-              .collect().head.getDouble(0)
+            val next = nextRaw.localCheckpoint(eager = false)
+            val d = delta(scores, next)
             graft.Checkpoints.free(cut)
-            ranks = next
+            tmps.foreach(graft.Checkpoints.free(_))
+            scores = next
             cut = next
-            converged = delta <= eps
+            converged = d <= eps
             i += 1
           }
-          (ranks, i)
+          (scores, i)
       }
-    } finally if (cut ne ranks) graft.Checkpoints.free(cut)
+    } finally {
+      pending.foreach(graft.Checkpoints.free(_))
+      if (cut ne scores) graft.Checkpoints.free(cut)
+    }
   }
+
+  /** Decimal-exact L1 delta of two successive (id, `cols`) score
+    * vectors: per node Σ|new − old| over `cols` in IEEE double, the
+    * cross-node sum order-free through DECIMAL(38,18) — so the stop
+    * decision cannot depend on partitioning.
+    */
+  private[ops] def l1Delta(cols: String*)(prev: DataFrame,
+                                          next: DataFrame): Double =
+    prev.select(col("id") +: cols.map(c => col(c).as(s"__o_$c")): _*)
+      .join(next.select(col("id") +: cols.map(c => col(c).as(s"__n_$c")): _*),
+        Seq("id"))
+      .agg(coalesce(
+        sum(cols.map(c => abs(col(s"__n_$c") - col(s"__o_$c"))).reduce(_ + _)
+          .cast("decimal(38,18)")).cast("double"),
+        lit(0.0)))
+      .collect().head.getDouble(0)
 
   /** WEIGHTED damped PageRank: edge (u, v, w) contributes
     * rank(u) · (w / W(u)) per round, W(u) = u's total out-weight — the
@@ -333,10 +354,9 @@ object PageRank {
     * emerges.
     */
   def pageRankWeighted(edges: DataFrame, iterations: Int,
-                       damping: Double = 0.85,
                        checkpointEvery: Int = 4,
                        saltJoin: Int = 1): DataFrame =
-    runWeighted(edges, iterations, damping, checkpointEvery, saltJoin,
+    runWeighted(edges, iterations, checkpointEvery, saltJoin,
       epsilon = None)._1
 
   /** CONVERGENCE-STOPPED weighted power iteration — the
@@ -349,16 +369,14 @@ object PageRank {
     */
   def pageRankWeightedUntil(edges: DataFrame, epsilon: Double,
                             maxIterations: Int = 100,
-                            damping: Double = 0.85,
                             saltJoin: Int = 1): (DataFrame, Int) = {
     require(epsilon >= 0.0, "pageRankWeightedUntil: epsilon must be >= 0")
-    runWeighted(edges, maxIterations, damping, 1, saltJoin,
+    runWeighted(edges, maxIterations, 1, saltJoin,
       epsilon = Some(epsilon))
   }
 
   private def runWeighted(edges: DataFrame, iterations: Int,
-                          damping: Double, checkpointEvery: Int,
-                          saltJoin: Int,
+                          checkpointEvery: Int, saltJoin: Int,
                           epsilon: Option[Double]): (DataFrame, Int) = {
     require(iterations >= 0, "pageRankWeighted: iterations must be >= 0")
     require(checkpointEvery >= 1,
@@ -378,10 +396,10 @@ object PageRank {
       val n = nodes.count()
       require(n > 0, "pageRankWeighted: empty graph")
       val nD = lit(n.toDouble)
-      val d = lit(damping)
+      val d = lit(Damping)
       val ranks = nodes.withColumn("rank", lit(1.0) / nD).localCheckpoint()
       // one weighted round — the single definition both loops execute
-      def oneRound(prev: DataFrame): DataFrame = {
+      def oneRound(prev: DataFrame): (DataFrame, List[DataFrame]) = {
         val eOut = e.select(col("src").as("__es"), col("dst").as("__ed"),
           col("w").as("__w"))
         val withW = prev.join(outW, prev("id") === outW("src"), "left")
@@ -398,15 +416,16 @@ object PageRank {
         val sums = contribs.groupBy(col("id")).agg(massSum(col("c")).as("s"))
         val dangling = withW.filter(col("sw").isNull)
           .agg(coalesce(massSum(col("rank")), lit(0.0)).as("m"))
-        nodes
+        (nodes
           .join(sums, Seq("id"), "left")
           .crossJoin(broadcast(dangling))
           .select(col("id"),
             ((lit(1.0) - d) / nD +
               d * (coalesce(col("s"), lit(0.0)) + col("m") / nD))
-              .as("rank"))
+              .as("rank")), Nil)
       }
-      iterate(ranks, iterations, checkpointEvery, epsilon)(oneRound)
+      iterate(ranks, iterations, checkpointEvery, epsilon,
+        l1Delta("rank"))(oneRound)
     } finally {
       restoreConf()
       graft.Checkpoints.free(e)
@@ -419,9 +438,8 @@ object PageRank {
     * [[Hits.oracleSql]] lesson: inlined CTEs re-evaluate the whole
     * chain multiplicatively.
     */
-  def oracleSqlWeighted(edgesCte: String, iterations: Int,
-                        damping: Double = 0.85): String = {
-    val d = damping.toString
+  def oracleSqlWeighted(edgesCte: String, iterations: Int): String = {
+    val d = Damping.toString
     val head =
       s"""WITH edges0 AS ($edgesCte),
          |e AS MATERIALIZED (
@@ -464,15 +482,14 @@ object PageRank {
     * just a fixed-round result, is hash-checked cross-engine.
     */
   def oracleSqlConverged(edgesCte: String, epsilon: Double,
-                         maxIterations: Int,
-                         damping: Double = 0.85): String = {
+                         maxIterations: Int): String = {
     require(maxIterations >= 1,
       "oracleSqlConverged: maxIterations must be >= 1 — the generated " +
         "round/delta unions cannot express the zero-round degenerate " +
         "the Scala until() API allows")
     val head = oracleRoundsHead(edgesCte, materialized = true)
     val iters = (1 to maxIterations).map { k =>
-      s"""${oracleRoundSql(k, damping, materialized = true)}, d$k AS MATERIALIZED (
+      s"""${oracleRoundSql(k, materialized = true)}, d$k AS MATERIALIZED (
          |  SELECT $k::BIGINT AS k,
          |    sum(abs(a.rank - b.rank)::DECIMAL(38,18))::DOUBLE AS delta
          |  FROM r$k a JOIN r${k - 1} b ON a.id = b.id
@@ -525,10 +542,9 @@ object PageRank {
          |${ns}r0 AS$m (SELECT id, 1.0::DOUBLE / (SELECT n FROM ${ns}nn) AS rank FROM ${ns}nodes)""".stripMargin
   }
 
-  private def oracleRoundSql(k: Int, damping: Double,
-                             materialized: Boolean,
+  private def oracleRoundSql(k: Int, materialized: Boolean,
                              ns: String = ""): String = {
-    val d = damping.toString
+    val d = Damping.toString
     val m = if (materialized) " MATERIALIZED" else ""
     val p = s"${ns}r${k - 1}"
     s"""${ns}c$k AS (
@@ -557,13 +573,12 @@ object PageRank {
     * warm-start MACHINERY cross-engine, not just a fixed-round result.
     */
   def oracleSqlWarmStart(edgesCte1: String, iters1: Int,
-                         edgesCte2: String, iters2: Int,
-                         damping: Double = 0.85): String = {
+                         edgesCte2: String, iters2: Int): String = {
     require(iters1 >= 1 && iters2 >= 1,
       "oracleSqlWarmStart: both phases need >= 1 round")
     val p1 = oracleRoundsHead(edgesCte1, materialized = true, ns = "a_")
     val r1 = (1 to iters1).map(k =>
-      oracleRoundSql(k, damping, materialized = true, ns = "a_"))
+      oracleRoundSql(k, materialized = true, ns = "a_"))
     val p2 = oracleRoundsHead(edgesCte2, materialized = true, ns = "b_",
       lead = false, withR0 = false)
     val carried =
@@ -577,7 +592,7 @@ object PageRank {
          |  SELECT id, rank / (SELECT m FROM b_mass) AS rank FROM b_carried
          |)""".stripMargin
     val r2 = (1 to iters2).map(k =>
-      oracleRoundSql(k, damping, materialized = true, ns = "b_"))
+      oracleRoundSql(k, materialized = true, ns = "b_"))
     (((p1 +: r1) :+ p2 :+ carried) ++ r2).mkString(",\n") +
       s"\nSELECT id, floor(rank * 1000000 + 0.5) / 1000000 AS rank FROM b_r$iters2"
   }
@@ -586,11 +601,10 @@ object PageRank {
     * rounds over an `edges` CTE the caller supplies (must define
     * columns src, dst). Replays the exact expression trees.
     */
-  def oracleSql(edgesCte: String, iterations: Int,
-                damping: Double = 0.85): String = {
+  def oracleSql(edgesCte: String, iterations: Int): String = {
     val head = oracleRoundsHead(edgesCte, materialized = false)
     val iters = (1 to iterations).map(k =>
-      oracleRoundSql(k, damping, materialized = false))
+      oracleRoundSql(k, materialized = false))
     (head +: iters).mkString(",\n") +
       s"\nSELECT id, floor(rank * 1000000 + 0.5) / 1000000 AS rank FROM r$iterations"
   }

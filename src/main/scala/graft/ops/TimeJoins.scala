@@ -28,7 +28,7 @@ object TimeJoins {
     * LATEST right row with equal `keys` and `right.timeCol ≤
     * left.timeCol` (and, with `toleranceUs`, within that many time
     * units — older matches null out, pandas `merge_asof` semantics).
-    * Right columns arrive as a struct column `rightOut` (null = no
+    * Right columns arrive as a struct column `matched` (null = no
     * match), keeping the left schema untouched.
     *
     * Mechanics: tag and union the sides (left rows packed into one
@@ -41,8 +41,7 @@ object TimeJoins {
     */
   def asofJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                timeCol: String, rightCols: Seq[String],
-               toleranceUs: Option[Long] = None,
-               rightOut: String = "matched"): DataFrame = {
+               toleranceUs: Option[Long] = None): DataFrame = {
     require(keys.nonEmpty, "asofJoin: at least one join key")
     val keyCols = keys.map(col)
     val rStruct = struct(
@@ -73,7 +72,7 @@ object TimeJoins {
       .withColumn("__m", withinTol)
       .select(col("__l.*"),
         when(col("__m").isNotNull,
-          struct(rightCols.map(c => col(s"__m.$c")): _*)).as(rightOut))
+          struct(rightCols.map(c => col(s"__m.$c")): _*)).as("matched"))
   }
 
   /** Interval-containment join: every (left point, right interval) pair

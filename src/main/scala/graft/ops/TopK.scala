@@ -27,20 +27,19 @@ object TopK {
 
   /** `scored` must carry `queryCol`, `idCol` (integral — emitted as
     * long), `scoreCol` (numeric — emitted as double). Returns one row
-    * per kept entry: (queryCol, idCol, rankCol int 1..k, scoreCol),
+    * per kept entry: (queryCol, idCol, `rank` int 1..k, scoreCol),
     * ordered within a group by (score DESC NULLS LAST, id ASC) exactly
     * as the window form. Groups absent from `scored` are absent here
     * too; a group with fewer than k rows keeps them all.
     */
   def topKPerQuery(scored: DataFrame, queryCol: String, idCol: String,
-                   scoreCol: String, k: Int,
-                   rankCol: String = "rank"): DataFrame =
+                   scoreCol: String, k: Int): DataFrame =
     scored
       .groupBy(queryCol)
       .agg(org.apache.spark.sql.graft.TopKExpressions.topkPairs(
         col(scoreCol).cast("double"), col(idCol).cast("long"), k).as("__tk"))
       .select(col(queryCol), posexplode(col("__tk")).as(Seq("__pos", "__e")))
       .select(col(queryCol), col("__e.id").as(idCol),
-        (col("__pos") + 1).cast("int").as(rankCol),
+        (col("__pos") + 1).cast("int").as("rank"),
         col("__e.score").as(scoreCol))
 }

@@ -28,17 +28,17 @@ object QueriesLLM {
         .select((col("doc_id") + 10000).as("doc_id"), col("text")))
   }
 
-  /** First-k-vectors codebook as an array-of-arrays literal — collected
-    * to the driver like a trained codebook would be; shared by every
-    * IVF/PQ query so the `vec_id < k` convention lives in ONE place
-    * (matching the oracles' `cents` CTEs).
+  /** First-8-vectors codebook — collected to the driver like a trained
+    * codebook would be; shared by every IVF/PQ query so the `vec_id < 8`
+    * convention lives in ONE place (matching the oracles' `cents` CTEs).
     */
-  def firstKCodebook(emb: DataFrame, k: Int = 8): Array[Array[Float]] =
-    emb.filter(col("vec_id") < k).orderBy("vec_id")
+  def firstKCodebook(emb: DataFrame): Array[Array[Float]] =
+    emb.filter(col("vec_id") < 8).orderBy("vec_id")
       .select("embedding").collect().map(_.getSeq[Float](0).toArray)
 
-  def firstKCodebookLit(emb: DataFrame, k: Int = 8): Column =
-    array(firstKCodebook(emb, k).map(v =>
+  /** [[firstKCodebook]] as an array-of-arrays literal. */
+  def firstKCodebookLit(emb: DataFrame): Column =
+    array(firstKCodebook(emb).map(v =>
       array(v.toIndexedSeq.map(lit(_)): _*)).toIndexedSeq: _*)
 
   private val dupCorpusSql =

@@ -35,8 +35,7 @@ object StreamingAuthority {
     * (pageUrl, html) rows, reduce to the (src_host, dst_host, n) edge
     * grain, and append it replay-exactly to `graphDir/edges`.
     */
-  def appendBatch(graphDir: String, urlCol: String, htmlCol: String,
-                  autoCompactEvery: Int = 0)
+  def appendBatch(graphDir: String, urlCol: String, htmlCol: String)
                  (batch: DataFrame, batchId: Long): Unit = {
     BatchState.recoverSwap(batch.sparkSession, s"$graphDir/edges")
     if (BatchState.readFolded(batch.sparkSession, graphDir)
@@ -54,10 +53,6 @@ object StreamingAuthority {
       .write.partitionBy("batch_id")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").parquet(s"$graphDir/edges")
-    if (autoCompactEvery > 0 &&
-        BatchState.unfoldedBatches(batch.sparkSession,
-          s"$graphDir/edges") >= autoCompactEvery)
-      compactEdges(batch.sparkSession, graphDir)
   }
 
   /** The accumulated host graph: (src_host, dst_host, n) with deltas

@@ -17,7 +17,7 @@ import graft.llm.{Dedup, TextFunctions}
 object StreamingCrawl {
 
   /** One micro-batch through the intake chain: extract main content
-    * from `htmlCol`, gate on `minTokens` whitespace tokens, drop
+    * from `htmlCol`, gate on at least 5 whitespace tokens, drop
     * everything whose digest is in `index` (plus within-batch min-id
     * dedup). Returns (accepted rows incl. `main`/`n_tokens`, their
     * digest rows to append to the index). Pure batch operators — also
@@ -25,14 +25,13 @@ object StreamingCrawl {
     * oracle's unit.
     */
   def acceptBatch(batch: DataFrame, idCol: String, htmlCol: String,
-                  index: DataFrame, minTokens: Int = 5)
-      : (DataFrame, DataFrame) = {
+                  index: DataFrame): (DataFrame, DataFrame) = {
     val extracted = batch
       .withColumn("main", TextFunctions.htmlMainText(col(htmlCol)))
       .drop(htmlCol)
       .withColumn("n_tokens",
         size(TextFunctions.tokens(col("main"))).cast("long"))
-      .filter(col("n_tokens") >= minTokens)
+      .filter(col("n_tokens") >= 5)
     val accepted = Dedup.exactDedupAgainst(extracted, idCol, "main", index)
     (accepted, Dedup.digestIndex(accepted, "main"))
   }

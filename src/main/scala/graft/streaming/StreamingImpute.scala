@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.etd.Impute.round10
 import graft.etd.Model.ImputeType
 
 /** Streaming imputation of cumulative-meter gaps — the arbitrary-stateful
@@ -60,14 +61,6 @@ object StreamingImpute {
     */
   case class ImputedDiff(huis: Long, tsSec: Long, diff: Option[Double],
                          imputeType: Option[Int], isImputed: Boolean)
-
-  /** Spark round(x, 10) semantics: HALF_UP over the shortest decimal
-    * representation — keeps streaming fills bit-identical to the batch
-    * cascade's round(jump/gapLength, 10).
-    */
-  private def round10(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(10, java.math.RoundingMode.HALF_UP).doubleValue()
 
   def imputeStream(readings: Dataset[CumReading],
                    maxGapLength: Int = 8640): Dataset[ImputedDiff] = {
@@ -224,9 +217,9 @@ object StreamingImpute {
     * on `eventTime`.
     */
   def imputeStreamScaledExpiring(readings: Dataset[CumReadingAvgTs],
-                                 maxGapLength: Int = 8640,
                                  ttlMs: Long = 24L * 3600 * 1000)
       : Dataset[ImputedDiff] = {
+    val maxGapLength = 8640 // the other streams' default cap
     implicit val outEnc = Encoders.product[ImputedDiff]
     implicit val stateEnc = Encoders.product[HouseStateScaled]
     implicit val keyEnc = Encoders.scalaLong

@@ -18,7 +18,7 @@ import graft.llm.Dedup
   * [[bandedStream]]); the only shuffle is the groupByKey on (band, band
   * key), the same key the batch bucket groupBy uses.
   *
-  * State per bucket is the member id list, capped at `maxBucket` (a
+  * State per bucket is the member id list, capped at 1000 members (a
   * capped bucket's members are already exact-dup candidates by band
   * collision — same policy as the batch path). Each arriving document
   * emits pairs against the bucket's existing members only, so output is
@@ -26,12 +26,15 @@ import graft.llm.Dedup
   * the run scope (like a batch job's); long-running deployments use
   * [[candidatePairsExpiring]], whose event-time TTL evicts buckets the
   * watermark has passed — total state is then buckets-in-horizon x
-  * maxBucket ids, independent of stream lifetime.
+  * 1000 ids, independent of stream lifetime.
   */
 object StreamingNearDup {
 
   case class BandedDoc(bucket: String, docId: Long)
   case class BucketState(ids: List[Long])
+
+  /** Members a bucket keeps before it stops pairing new documents. */
+  private val MaxBucket = 1000
   case class CandidatePair(idA: Long, idB: Long)
 
   /** (bucket, doc) stream: signature -> band keys, exploded.
@@ -47,9 +50,10 @@ object StreamingNearDup {
     * hashes, md5 band keys), so stream pairs == batch pairs
     * (StreamingNearDupSpec pins it).
     */
-  def bandedStream(docs: DataFrame, idCol: String, textCol: String,
-                   numHashes: Int = 16, bands: Int = 4,
-                   shingleSize: Int = 3): DataFrame = {
+  def bandedStream(docs: DataFrame, idCol: String,
+                   textCol: String): DataFrame = {
+    // the batch path's fixed plan: word 3-grams, 16 hashes in 4 bands
+    val (numHashes, bands, shingleSize) = (16, 4, 3)
     val rowsPerBand = numHashes / bands
     val spark = docs.sparkSession
     import spark.implicits._
@@ -91,8 +95,7 @@ object StreamingNearDup {
     * belongs to the downstream sink/compaction, as in the batch path's
     * final distinct).
     */
-  def candidatePairs(banded: Dataset[BandedDoc],
-                     maxBucket: Int = 1000): Dataset[CandidatePair] = {
+  def candidatePairs(banded: Dataset[BandedDoc]): Dataset[CandidatePair] = {
     implicit val pairEnc = Encoders.product[CandidatePair]
     implicit val stateEnc = Encoders.product[BucketState]
     implicit val keyEnc = Encoders.STRING
@@ -103,7 +106,7 @@ object StreamingNearDup {
           var ids = state.getOption.map(_.ids).getOrElse(Nil)
           val out = Seq.newBuilder[CandidatePair]
           rows.toSeq.sortBy(_.docId).foreach { r =>
-            if (!ids.contains(r.docId) && ids.size < maxBucket) {
+            if (!ids.contains(r.docId) && ids.size < MaxBucket) {
               ids.foreach { seen =>
                 out += (if (seen < r.docId) CandidatePair(seen, r.docId)
                         else CandidatePair(r.docId, seen))
@@ -132,7 +135,6 @@ object StreamingNearDup {
     * on `eventTime`.
     */
   def candidatePairsExpiring(banded: Dataset[BandedDocTs],
-                             maxBucket: Int = 1000,
                              ttlMs: Long = 24L * 3600 * 1000)
       : Dataset[CandidatePair] = {
     implicit val pairEnc = Encoders.product[CandidatePair]
@@ -153,7 +155,7 @@ object StreamingNearDup {
             var maxTs = Long.MinValue
             rows.toSeq.sortBy(r => (r.eventTime.getTime, r.docId)).foreach { r =>
               maxTs = math.max(maxTs, r.eventTime.getTime)
-              if (!ids.contains(r.docId) && ids.size < maxBucket) {
+              if (!ids.contains(r.docId) && ids.size < MaxBucket) {
                 ids.foreach { seen =>
                   out += (if (seen < r.docId) CandidatePair(seen, r.docId)
                           else CandidatePair(r.docId, seen))

@@ -31,15 +31,15 @@ object StreamingResample {
 
   /** Gated streaming resample of `variables` (column -> any
     * [[graft.etd.Aggregates.gated]] method, the batch vocabulary) to
-    * `interval` buckets, with `lateness` watermark on ReadingDate.
-    * Input must be a streaming DataFrame with the ETD grain columns.
+    * `interval` buckets per (project, house), with `lateness` watermark
+    * on ReadingDate. Input must be a streaming DataFrame with the ETD
+    * grain columns.
     */
   def resampleStream(readings: DataFrame,
                      variables: Seq[(String, String)],
                      interval: String,
-                     lateness: String = "1 hour",
-                     groupCols: Seq[String] = Seq(Model.ProjectId, Model.HouseId))
-      : DataFrame = {
+                     lateness: String = "1 hour"): DataFrame = {
+    val groupCols = Seq(Model.ProjectId, Model.HouseId)
     val minCount = lit(Model.intervalMinCount(interval))
     val aggs = variables.map { case (v, method) =>
       Aggregates.gated(method, col(v), minCount).as(v)

@@ -35,8 +35,7 @@ object StreamingSimilarity {
     */
   def appendBatch(indexDir: String, idCol: String, vecCol: String,
                   coarse: Array[Array[Float]],
-                  codebooks: Array[Array[Array[Float]]],
-                  autoCompactEvery: Int = 0)
+                  codebooks: Array[Array[Array[Float]]])
                  (batch: DataFrame, batchId: Long): Unit = {
     // crashed-compaction window: promote before any write re-creates a
     // missing live dir and orphans the folded history (r17)
@@ -48,31 +47,7 @@ object StreamingSimilarity {
       .write.partitionBy("batch_id")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").parquet(s"$indexDir/coded")
-    // in-band fold trigger (VERDICT r15 #6) — safe for the same reason
-    // as StreamingRetrieval.appendBatch's: the fold runs only after
-    // this batch's append completed, and a post-fold replay is a
-    // ledgered no-op with the rows already in the -1 generation
-    if (autoCompactEvery > 0 &&
-        BatchState.unfoldedBatches(batch.sparkSession,
-          s"$indexDir/coded") >= autoCompactEvery)
-      compactIndex(batch.sparkSession, indexDir)
   }
-
-  /** The streaming sink: wires `vectors.writeStream` through
-    * [[appendBatch]]. Caller starts/awaits the returned query.
-    */
-  def maintainIndex(vectors: DataFrame, idCol: String, vecCol: String,
-                    coarse: Array[Array[Float]],
-                    codebooks: Array[Array[Array[Float]]],
-                    indexDir: String, checkpointDir: String,
-                    autoCompactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendBatch(indexDir, idCol, vecCol, coarse, codebooks,
-          autoCompactEvery)(batch, id)
-      }
 
   /** The searchable index — the log IS the table. */
   def loadIndex(spark: SparkSession, indexDir: String): DataFrame = {

@@ -451,8 +451,7 @@ object TermFreqUtil {
       while (i < n && !isWs(bytes(i))) i += 1
       if (i > start) {
         val tok = UTF8String.fromBytes(bytes, start, i - start)
-        val cur = counts.get(tok)
-        counts.put(tok, if (cur == null) 1L else cur + 1L)
+        counts.put(tok, counts.getOrDefault(tok, 0L) + 1L)
         dl += 1L
       }
     }

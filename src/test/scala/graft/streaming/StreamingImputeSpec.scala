@@ -82,6 +82,18 @@ class StreamingImputeSpec extends AnyFunSuite {
     assert(got.values.forall(v => v._1.isEmpty && v._2.isEmpty && !v._3))
   }
 
+  test("a gap closed by a NaN reading streams through as a NaN linear fill") {
+    val got = runStream(Seq(Seq(
+      300L -> Some(1.0), 600L -> None, 900L -> Some(Double.NaN))))
+    assert(got(300L) == ((None, None, false)))
+    // jump NaN over gap_length 2: batch round(x, 10) passes NaN through
+    Seq(600L, 900L).foreach { ts =>
+      val (diff, imputeType, isImputed) = got(ts)
+      assert(diff.exists(_.isNaN), s"$ts: $diff")
+      assert(imputeType.contains(Model.ImputeType.LinearFill) && isImputed)
+    }
+  }
+
   private def runScaled(batches: Seq[Seq[(Long, Option[Double], Option[Double])]])
       : Map[Long, (Option[Double], Option[Int], Boolean)] = {
     implicit val sqlCtx = spark.sqlContext

@@ -34,8 +34,12 @@ class StreamingSimilaritySpec extends AnyFunSuite {
 
     val input = MemoryStream[(Long, Array[Float])]
     val vectors = input.toDF().toDF("vec_id", "embedding")
-    val query = StreamingSimilarity.maintainIndex(vectors, "vec_id", "embedding",
-      coarse, pq, indexDir, ckpt).start()
+    val query = vectors.writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        StreamingSimilarity.appendBatch(indexDir, "vec_id", "embedding",
+          coarse, pq)(batch, id)
+      }.start()
     batches.foreach { b => input.addData(b: _*); query.processAllAvailable() }
     query.stop()
 
