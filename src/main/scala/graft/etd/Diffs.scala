@@ -79,8 +79,8 @@ object Diffs {
 
   /** I2 — the full preparation: returns (avg_diffs, household_diff_max_bounds)
     * (prepare_diffs_for_impute, impute.py:469-537). Negative diffs raise in
-    * the reference (impute.py:107-109); use [[Impute.violationCounts]] as
-    * the pre-commit gate.
+    * the reference (impute.py:107-109); here they pass through, and a
+    * caller that needs the reference's gate counts them first.
     *
     * Cost shape: two map-side-combining passes over `df` (house maxima;
     * per-(project, ReadingDate) masked means) in addition to the

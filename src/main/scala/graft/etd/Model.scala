@@ -92,28 +92,28 @@ object Model {
     )
   }
 
-  /** Resample intervals: name -> (duration, per-interval min_count of 5-min
-    * source rows required for a non-null aggregate)
-    * (/root/reference/etdtransform/aggregate.py:830-841).
+  /** One resample interval: its name, bucket width, the min_count of
+    * 5-min source rows a non-null aggregate needs (aggregate.py:830-841),
+    * the kWh<->kW unit multiplier (calculated_columns.py:530-556) and the
+    * Spark window duration.
     */
-  val intervalMinCount: Map[String, Int] = Map(
-    "5min" -> 1, "15min" -> 3, "60min" -> 12, "6h" -> 72, "24h" -> 288)
+  final case class Interval(name: String, seconds: Long, minCount: Int,
+                            kwMultiplier: Double, duration: String)
 
-  val intervalDuration: Map[String, String] = Map(
-    "5min" -> "5 minutes", "15min" -> "15 minutes", "60min" -> "1 hour",
-    "6h" -> "6 hours", "24h" -> "1 day")
+  /** The five production intervals, in pipeline order. */
+  val Intervals: Seq[Interval] = Seq(
+    Interval("5min", 300L, 1, 12.0, "5 minutes"),
+    Interval("15min", 900L, 3, 4.0, "15 minutes"),
+    Interval("60min", 3600L, 12, 1.0, "1 hour"),
+    Interval("6h", 21600L, 72, 1.0 / 6.0, "6 hours"),
+    Interval("24h", 86400L, 288, 1.0 / 24.0, "1 day"))
 
-  /** kWh<->kW unit multiplier per interval
-    * (/root/reference/etdtransform/calculated_columns.py:530-556).
-    */
-  def switchMultiplier(interval: String): Double = interval match {
-    case "5min" => 12.0
-    case "15min" => 4.0
-    case "60min" => 1.0
-    case "6h" => 1.0 / 6.0
-    case "24h" => 1.0 / 24.0
-    case other => throw new IllegalArgumentException(s"Unknown interval $other")
-  }
+  def interval(name: String): Interval =
+    Intervals.find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(s"Unknown interval $name"))
+
+  /** kWh<->kW unit multiplier per interval (`switch_multiplier`). */
+  def switchMultiplier(name: String): Double = interval(name).kwMultiplier
 
   /** Resample/aggregate method per variable
     * (/root/reference/etdtransform/aggregate.py:1046-1128): every active

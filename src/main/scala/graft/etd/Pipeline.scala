@@ -97,7 +97,7 @@ object Pipeline {
     */
   def run(household: DataFrame,
           cumulativeCols: Seq[String] = cumulativeColumns,
-          intervals: Seq[String] = Seq("5min", "15min", "60min", "6h", "24h"),
+          intervals: Seq[String] = Tables.intervals,
           localCheckpointEvery: Option[Int] = None,
           assumeColocated: Boolean = false)
       : Stages = {
@@ -281,7 +281,7 @@ object Pipeline {
   */
 object Tables {
 
-  val intervals = Seq("5min", "15min", "60min", "6h", "24h")
+  val intervals: Seq[String] = Model.Intervals.map(_.name)
 
   /** `metadataColumns` selects WHICH index columns ride along
     * (read_hh_data's metadata_columns, aggregate.py:57-96) — None joins

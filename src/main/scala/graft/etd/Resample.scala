@@ -38,17 +38,8 @@ object Resample {
     * of a boundary).
     */
   def bucket(ts: Column, interval: String): Column = {
-    val us = lit(intervalSeconds(interval) * 1000000L)
+    val us = lit(Model.interval(interval).seconds * 1000000L)
     timestamp_micros(unix_micros(ts) - pmod(unix_micros(ts), us))
-  }
-
-  def intervalSeconds(interval: String): Long = interval match {
-    case "5min" => 300L
-    case "15min" => 900L
-    case "60min" => 3600L
-    case "6h" => 21600L
-    case "24h" => 86400L
-    case other => throw new IllegalArgumentException(s"Unknown interval $other")
   }
 
   /** Resample one or more variables to `interval` with the reference's
@@ -63,7 +54,8 @@ object Resample {
     require(variables.nonEmpty,
       "resample: no variables to aggregate — the frame has none of the " +
         "configured aggregation columns")
-    val minCount = lit(minCountOverride.getOrElse(intervalMinCount(interval)))
+    val minCount =
+      lit(minCountOverride.getOrElse(Model.interval(interval).minCount))
     val aggs = variables.map { case (v, method) =>
       Aggregates.gated(method, col(v), minCount).as(v)
     }
@@ -84,7 +76,7 @@ object Resample {
     */
   private def densify(bucketed: DataFrame, valueCols: Seq[String],
                       groupCols: Seq[String], interval: String): DataFrame = {
-    val secs = intervalSeconds(interval)
+    val secs = Model.interval(interval).seconds
     val w = Window.partitionBy(groupCols.map(col): _*).orderBy(col(ReadingDate))
     val curB = unix_seconds(col(ReadingDate))
     bucketed

@@ -402,27 +402,6 @@ object Dedup {
     df.join(drop, Seq(idCol), "left_anti")
   }
 
-  /** The full near-dedup pipeline in one call — what a corpus run
-    * actually executes: MinHash+LSH candidates (banded, never all-pairs)
-    * -> exact shingle-set Jaccard verification of ONLY the candidates ->
-    * connected-components clustering -> keep each cluster's minimum-id
-    * member plus every untouched document.
-    *
-    * Scale shape: candidate generation is the §minhash path (one fused
-    * hash pass, banded buckets); verification computes each candidate
-    * document's distinct shingle-hash set ONCE (semi-join restricts the
-    * set build to documents that appear in pairs — at corpus scale the
-    * overwhelming majority never does) and scores pairs with one
-    * native set kernel; clustering is O(log diameter) rounds. `fast`
-    * swaps md5 for XXH64 in both phases. Candidates band over
-    * pmod-reduced signature hashes while verification compares raw
-    * 64-bit shingle sets — verification is exact in the raw domain
-    * regardless of how candidates were bucketed. The candidate documents'
-    * shingle hashes are deliberately recomputed here rather than carried
-    * through the signature pass: re-hashing the (small) candidate subset
-    * is cheaper at scale than shuffling every document's full shingle
-    * array through the banding join.
-    */
   /** Exact shingle-set Jaccard verification of a CANDIDATE pair set —
     * [[nearDedup]]'s verify stage written once, exposed (r17) so
     * compositions that need both the candidates and the verified pairs
@@ -447,6 +426,27 @@ object Dedup {
       .select("id_a", "id_b")
   }
 
+  /** The full near-dedup pipeline in one call — what a corpus run
+    * actually executes: MinHash+LSH candidates (banded, never all-pairs)
+    * -> exact shingle-set Jaccard verification of ONLY the candidates ->
+    * connected-components clustering -> keep each cluster's minimum-id
+    * member plus every untouched document.
+    *
+    * Scale shape: candidate generation is the §minhash path (one fused
+    * hash pass, banded buckets); verification computes each candidate
+    * document's distinct shingle-hash set ONCE (semi-join restricts the
+    * set build to documents that appear in pairs — at corpus scale the
+    * overwhelming majority never does) and scores pairs with one
+    * native set kernel; clustering is O(log diameter) rounds. `fast`
+    * swaps md5 for XXH64 in both phases. Candidates band over
+    * pmod-reduced signature hashes while verification compares raw
+    * 64-bit shingle sets — verification is exact in the raw domain
+    * regardless of how candidates were bucketed. The candidate documents'
+    * shingle hashes are deliberately recomputed here rather than carried
+    * through the signature pass: re-hashing the (small) candidate subset
+    * is cheaper at scale than shuffling every document's full shingle
+    * array through the banding join.
+    */
   def nearDedup(df: DataFrame, idCol: String, textCol: String,
                 jaccardThreshold: Double = 0.8, fast: Boolean = false,
                 priority: Option[Column] = None): DataFrame = {

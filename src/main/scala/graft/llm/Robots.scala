@@ -57,13 +57,6 @@ object Robots {
     concat(lit("^"), wild, when(hasEnd, lit("$")).otherwise(lit("")))
   }
 
-  /** Parse robots.txt bodies into a per-(host, agent) rule table:
-    * `(host, agent, group_id, rule_no, directive, pattern)`. Groups
-    * with no rules (allow-everything groups — legal and load-bearing:
-    * `User-agent: bot` at EOF exempts `bot` from a `*` disallow) keep
-    * one row with null rule columns, so [[robotsAllowed]]'s group
-    * selection still sees them.
-    */
   /** Shared line parse + UA-run grouping over the given key set: comment
     * strip → `key: value` split → keep `keys` → group id = cumsum of
     * UA-run starts. Keys OUTSIDE the set are invisible to grouping —
@@ -93,6 +86,13 @@ object Robots {
       .withColumn("group_id", sum(col("new_group")).over(w))
   }
 
+  /** Parse robots.txt bodies into a per-(host, agent) rule table:
+    * `(host, agent, group_id, rule_no, directive, pattern)`. Groups
+    * with no rules (allow-everything groups — legal and load-bearing:
+    * `User-agent: bot` at EOF exempts `bot` from a `*` disallow) keep
+    * one row with null rule columns, so [[robotsAllowed]]'s group
+    * selection still sees them.
+    */
   def parseRobots(robots: DataFrame, hostCol: String, txtCol: String): DataFrame = {
     val grouped = groupedDirectives(robots, hostCol, txtCol,
       Seq("user-agent", "allow", "disallow"))

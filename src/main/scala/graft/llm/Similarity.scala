@@ -299,20 +299,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** IVF + PQ composed — the standard billion-scale ANN index shape:
-    * vectors are bucketed into IVF cells (coarse quantizer) and scored
-    * inside probed cells by PQ asymmetric distance (fine quantizer).
-    * Each query touches ~nprobe/nlist of the corpus AND reads only the
-    * m-int code column while doing it — the two scan-cost levers
-    * multiply. Query cell assignment and LUTs are computed driver-side
-    * (queries are few); the corpus pass is cell-assign (map-only,
-    * codegen'd argmax) -> cell-filtered explode of the query LUT
-    * literals -> ADC window. With nprobe = nlist this degenerates to
-    * [[pqTopK]] over every corpus row with a cell assignment
-    * (property-tested); zero-norm corpus vectors have no cell (ivfAssign
-    * returns null, matching [[ivfTopK]]) and zero-norm queries probe
-    * nothing (matching [[ivfProbeCells]]'s null contract).
-    */
   /** Query-side coarse probe: every cell id (1-based, matching
     * [[ivfAssign]]) ranked by centroid cosine against the query vector.
     * Driver-side arithmetic over the k x dim centroid array only — the
@@ -355,6 +341,20 @@ object Similarity {
       ivfAssign(col(vecCol), cents).as("cell"))
   }
 
+  /** IVF + PQ composed — the standard billion-scale ANN index shape:
+    * vectors are bucketed into IVF cells (coarse quantizer) and scored
+    * inside probed cells by PQ asymmetric distance (fine quantizer).
+    * Each query touches ~nprobe/nlist of the corpus AND reads only the
+    * m-int code column while doing it — the two scan-cost levers
+    * multiply. Query cell assignment and LUTs are computed driver-side
+    * (queries are few); the corpus pass is cell-assign (map-only,
+    * codegen'd argmax) -> cell-filtered explode of the query LUT
+    * literals -> ADC window. With nprobe = nlist this degenerates to
+    * [[pqTopK]] over every corpus row with a cell assignment
+    * (property-tested); zero-norm corpus vectors have no cell (ivfAssign
+    * returns null, matching [[ivfTopK]]) and zero-norm queries probe
+    * nothing (matching [[ivfProbeCells]]'s null contract).
+    */
   def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
                 coarse: Array[Array[Float]],
                 codebooks: Array[Array[Array[Float]]],

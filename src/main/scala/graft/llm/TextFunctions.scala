@@ -404,13 +404,6 @@ object TextFunctions {
       math.round(fraction * 1000000).toLong
   }
 
-  /** Per-stratum deterministic sampling — the data-mixing primitive: a
-    * row keeps iff its content hash lands under ITS STRATUM's rate
-    * (e.g. source-level mixture weights from an ablation plan). Same
-    * hash domain and stability guarantees as [[hashSamplePredicate]];
-    * strata absent from `rates` use `defaultFraction`. The rate lookup
-    * is a literal map expression — no join, stays map-side.
-    */
   /** EXACT-count per-group sampling: keep exactly min(n, |group|)
     * rows per group, chosen by content-hash order (ties impossible
     * within a group when keys are distinct; the id tiebreak covers
@@ -435,6 +428,13 @@ object TextFunctions {
       .drop("__rn")
   }
 
+  /** Per-stratum deterministic sampling — the data-mixing primitive: a
+    * row keeps iff its content hash lands under ITS STRATUM's rate
+    * (e.g. source-level mixture weights from an ablation plan). Same
+    * hash domain and stability guarantees as [[hashSamplePredicate]];
+    * strata absent from `rates` use `defaultFraction`. The rate lookup
+    * is a literal map expression — no join, stays map-side.
+    */
   def stratifiedSamplePredicate(key: Column, stratum: Column,
                                 rates: Map[String, Double],
                                 defaultFraction: Double): Column = {

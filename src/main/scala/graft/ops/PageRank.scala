@@ -517,8 +517,8 @@ object PageRank {
     * the other — the written-once rule now holds for the generator
     * itself). `materialized` marks the hot CTEs MATERIALIZED for the
     * converged form, whose every round is referenced by a delta too.
-    */
-  /** `ns` prefixes every CTE name (ns = "" is byte-identical to the
+    *
+    * `ns` prefixes every CTE name (ns = "" is byte-identical to the
     * pre-r19 output) — the lever [[oracleSqlWarmStart]] uses to put TWO
     * independent edge sets in one WITH chain. `lead = false` drops the
     * leading `WITH ` so the block can continue an open chain;

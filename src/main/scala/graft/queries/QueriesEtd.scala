@@ -755,8 +755,7 @@ object QueriesEtd {
   def q_pipeline_full13(spark: SparkSession, dir: String): DataFrame = {
     val cums = Model.cumulativeColumns
     val withCums = full13Input(spark, dir)
-    val stages = graft.etd.Pipeline.run(withCums, cums,
-      intervals = Seq("5min", "15min", "60min", "6h", "24h"))
+    val stages = graft.etd.Pipeline.run(withCums, cums)
     // cut lineage at the NARROW calculated frame (temp gap cols already
     // dropped): the four legs below share one impute execution instead of
     // re-running the 13-column cascade each. Measured sf0.1/local[32]:
@@ -785,7 +784,7 @@ object QueriesEtd {
     // materialize EVERY interval's project aggregate — the full stage DAG
     // (13-column impute -> 5 resamples -> 5 project aggs), the writeStages
     // work volume without the parquet-encode cost
-    (Seq("5min", "15min", "60min", "6h", "24h").map { iv =>
+    (graft.etd.Tables.intervals.map { iv =>
       graft.etd.ProjectAggregate.aggregateStandard(
           graft.etd.Resample.resampleStandard(cal, iv))
         .select(lit(iv).as("interval"),

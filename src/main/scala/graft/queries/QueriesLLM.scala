@@ -261,11 +261,6 @@ object QueriesLLM {
       |  FROM documents WHERE doc_id < 50
       |)""".stripMargin
 
-  /** Shared shingle/minhash/band CTEs over `corpus` (mirrors
-    * Dedup.minhashSignatures/lshBandKeys semantics exactly: word 3-gram
-    * shingles, 16 universal hashes h_i(x) = (a_i x + b_i) mod p over the
-    * md5-derived 60-bit shingle hash, 4 bands of 4 rows keyed by md5).
-    */
   /** Banded candidate pairs + connected-components closure over `bands`
     * — the candidate graph both clustering oracles (`q_dedup_cluster`,
     * `q_dedup_keep_best`) must model IDENTICALLY; one definition so a
@@ -289,6 +284,11 @@ object QueriesLLM {
       |  SELECT id, min(label) AS cluster_id FROM reach GROUP BY id
       |)""".stripMargin
 
+  /** Shared shingle/minhash/band CTEs over `corpus` (mirrors
+    * Dedup.minhashSignatures/lshBandKeys semantics exactly: word 3-gram
+    * shingles, 16 universal hashes h_i(x) = (a_i x + b_i) mod p over the
+    * md5-derived 60-bit shingle hash, 4 bands of 4 rows keyed by md5).
+    */
   private val minhashSql =
     """, toks AS (
       |  SELECT doc_id, list_filter(string_split(text, ' '), t -> length(t) > 0) AS w FROM corpus
@@ -486,12 +486,6 @@ object QueriesLLM {
     graft.llm.Snapshots.corpusDiff(oldC, newC, "doc_id", "text")
   }
 
-  /** Retrieval RANK EVALUATION ([[Retrieval.rankEval]]): NDCG@5,
-    * recall@5, MRR@5 of the BM25 run (`q_bm25_topk`'s exact trees)
-    * against a deterministic graded qrels fixture — the eval harness
-    * that closes the retrieval loop, hash-exact end to end (round9
-    * ln-form DCG gains, decimal sums, 1e-6 ratios).
-    */
   /** The shared graded-qrels fixture both eval queries score against
     * (written once — the rankEvalMetricSql twin).
     */
@@ -503,6 +497,12 @@ object QueriesLLM {
         when((col("doc_id") + col("query_id") * 7) % 5 === 0,
           (col("doc_id") % 3 + 1).cast("double")).otherwise(lit(0.0)))
 
+  /** Retrieval RANK EVALUATION ([[Retrieval.rankEval]]): NDCG@5,
+    * recall@5, MRR@5 of the BM25 run (`q_bm25_topk`'s exact trees)
+    * against a deterministic graded qrels fixture — the eval harness
+    * that closes the retrieval loop, hash-exact end to end (round9
+    * ln-form DCG gains, decimal sums, 1e-6 ratios).
+    */
   def q_rank_eval(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     val run = Retrieval.bm25TopK(docs, "doc_id", "text",
@@ -1319,12 +1319,6 @@ object QueriesLLM {
       |      '/p/1page?ref=x'])[(doc_id % 10 + 1)::INT] AS path
       |  FROM documents""".stripMargin
 
-  /** The shared link-resolution oracle chain (pages + `resolved` CTE) —
-    * `q_link_graph` projects it, `q_host_graph` aggregates it. Written
-    * once like [[robotsChainSql]]. The href regex requires `\shref`,
-    * not `\bhref` — the engine-side [[UrlFunctions.extractHrefs]] fix
-    * for `data-href` false matches, mirrored here.
-    */
   /** [[UrlFunctions.resolveUrl]]'s CASE as SQL over (`ref`, `base`)
     * expressions — shared by the `resolved` links CTE and the
     * anchor-pairs oracle (written once, the robotsChainSql rule).
@@ -1355,6 +1349,12 @@ object QueriesLLM {
       |    '<a href="mailto:u@example.com">m</a>' ||
       |    '<a href="#top">f</a></body></html>'""".stripMargin
 
+  /** The shared link-resolution oracle chain (pages + `resolved` CTE) —
+    * `q_link_graph` projects it, `q_host_graph` aggregates it. Written
+    * once like [[robotsChainSql]]. The href regex requires `\shref`,
+    * not `\bhref` — the engine-side [[UrlFunctions.extractHrefs]] fix
+    * for `data-href` false matches, mirrored here.
+    */
   private lazy val linkResolveSql: String =
     s"""WITH urls0 AS (
        |$robotsUrlsSelectSql
@@ -1489,16 +1489,6 @@ object QueriesLLM {
        |  FROM cand
        |)""".stripMargin
 
-  /** RFC 9309 crawl-politeness gate ([[Robots.parseRobots]] +
-    * [[Robots.robotsAllowed]]): parse the fixture robots.txt bodies
-    * into the host-grain rule table, then decide every synthesized URL
-    * for agent `GraftBot` — group selection (exact over `*` over
-    * nothing), longest-pattern-wins with allow on ties, wildcard and
-    * end-anchor patterns. The oracle replays parse AND decision from
-    * the same body strings: line explode → comment strip → key filter
-    * → UA-run grouping (window cumsum) → group selection → regex
-    * translation → longest-match ranking.
-    */
   /** The fixture URL corpus both robots queries gate: host varies per
     * 10-document block, path per document, so all 40 host×path arms
     * occur (decoupled indices — `doc_id div 10` vs `doc_id mod 10`).
@@ -1527,6 +1517,16 @@ object QueriesLLM {
       "host", "robots_txt")
   }
 
+  /** RFC 9309 crawl-politeness gate ([[Robots.parseRobots]] +
+    * [[Robots.robotsAllowed]]): parse the fixture robots.txt bodies
+    * into the host-grain rule table, then decide every synthesized URL
+    * for agent `GraftBot` — group selection (exact over `*` over
+    * nothing), longest-pattern-wins with allow on ties, wildcard and
+    * end-anchor patterns. The oracle replays parse AND decision from
+    * the same body strings: line explode → comment strip → key filter
+    * → UA-run grouping (window cumsum) → group selection → regex
+    * translation → longest-match ranking.
+    */
   def q_robots_filter(spark: SparkSession, dir: String): DataFrame =
     Robots.robotsAllowed(robotsFixtureUrls(spark, dir), robotsRules(spark),
         "GraftBot", "doc_id")
@@ -1583,16 +1583,6 @@ object QueriesLLM {
       .select("doc_id", "url", "host", "host_rank", "slot")
   }
 
-  /** Link extraction + RFC 3986 resolution
-    * ([[UrlFunctions.extractLinks]]): every document rendered as a page
-    * whose anchors cover the resolution arms — absolute (kept
-    * verbatim), root-relative (base origin), bare relative (base
-    * directory; exercised against bases WITH and WITHOUT a path
-    * directory), protocol-relative (base scheme), `mailto:` (dropped),
-    * fragment-only (never extracted). Output keeps document order
-    * flattened, so the oracle replays extract → per-ref CASE resolution
-    * with the same `list_transform`/`list_filter` shape.
-    */
   /** The link fixture page (shared by both link queries — written
     * once): anchors covering every resolution arm.
     */
@@ -1606,6 +1596,16 @@ object QueriesLLM {
     lit("<a href=\"mailto:u@example.com\">m</a>"),
     lit("<a href=\"#top\">f</a></body></html>"))
 
+  /** Link extraction + RFC 3986 resolution
+    * ([[UrlFunctions.extractLinks]]): every document rendered as a page
+    * whose anchors cover the resolution arms — absolute (kept
+    * verbatim), root-relative (base origin), bare relative (base
+    * directory; exercised against bases WITH and WITHOUT a path
+    * directory), protocol-relative (base scheme), `mailto:` (dropped),
+    * fragment-only (never extracted). Output keeps document order
+    * flattened, so the oracle replays extract → per-ref CASE resolution
+    * with the same `list_transform`/`list_filter` shape.
+    */
   def q_link_graph(spark: SparkSession, dir: String): DataFrame =
     robotsFixtureUrls(spark, dir)
       .select(col("doc_id"), col("url"),
@@ -1901,6 +1901,17 @@ object QueriesLLM {
         coalesce(col("lastmod"), lit("")).as("lastmod"))
   }
 
+  /** Host authority for the frontier queries: 3-iteration exact-tier
+    * PageRank over [[frontierEdges]], rounded on the shared grid.
+    */
+  private def frontierAuthority(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    graft.ops.PageRank.pageRank(
+        frontierEdges.toDF("src", "dst"), iterations = 3)
+      .select(col("id").as("host"),
+        (floor(col("rank") * 1e6 + 0.5) / 1e6).as("host_rank"))
+  }
+
   /** CRAWL SCHEDULING composed end-to-end — the frontier a polite,
     * authority-aware crawler fetches next: candidate URLs pass the
     * RFC 9309 gate ([[Robots.robotsAllowed]]), join host authority
@@ -1915,17 +1926,6 @@ object QueriesLLM {
     * anyway. Oracle: the shared robots chain + the generated PageRank
     * SQL as an isolated subquery + the same window.
     */
-  /** Host authority for the frontier queries: 3-iteration exact-tier
-    * PageRank over [[frontierEdges]], rounded on the shared grid.
-    */
-  private def frontierAuthority(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    graft.ops.PageRank.pageRank(
-        frontierEdges.toDF("src", "dst"), iterations = 3)
-      .select(col("id").as("host"),
-        (floor(col("rank") * 1e6 + 0.5) / 1e6).as("host_rank"))
-  }
-
   def q_crawl_frontier(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val allowed = Robots.robotsAllowed(robotsFixtureUrls(spark, dir),
@@ -1969,19 +1969,6 @@ object QueriesLLM {
       .select("doc_id", "main", "n_tokens", "n_dups")
   }
 
-  /** Incremental crawl intake ([[graft.streaming.StreamingCrawl]]'s
-    * `foreachBatch` unit, replayed as two batch calls — the driver row
-    * for the streaming intake chain): the duplicated corpus rendered
-    * as hostile pages splits into two "arrivals" (doc_id < 250, rest),
-    * batch 1 accepts against an empty index, batch 2 against batch 1's
-    * digest index. The union of both accepted sets must equal the
-    * ONE-SHOT chain over everything (the oracle): batch-1 ids all
-    * precede batch-2 ids, so the cross-batch digest screen + per-batch
-    * min-id dedup compose to exactly the global min-id-per-content
-    * rule. Exercises extraction, the token gate, the within-batch
-    * dedup, and — the part only this query checks driver-side — the
-    * digest-index screen BETWEEN batches.
-    */
   /** Incremental AUTHORITY maintenance
     * ([[graft.streaming.StreamingAuthority]], VERDICT r18 #5 — the
     * last spec-only streaming maintainer gets its DuckDB oracle):
@@ -2138,6 +2125,19 @@ object QueriesLLM {
        |  FROM documents WHERE $where
        |) WHERE src <> dst""".stripMargin
 
+  /** Incremental crawl intake ([[graft.streaming.StreamingCrawl]]'s
+    * `foreachBatch` unit, replayed as two batch calls — the driver row
+    * for the streaming intake chain): the duplicated corpus rendered
+    * as hostile pages splits into two "arrivals" (doc_id < 250, rest),
+    * batch 1 accepts against an empty index, batch 2 against batch 1's
+    * digest index. The union of both accepted sets must equal the
+    * ONE-SHOT chain over everything (the oracle): batch-1 ids all
+    * precede batch-2 ids, so the cross-batch digest screen + per-batch
+    * min-id dedup compose to exactly the global min-id-per-content
+    * rule. Exercises extraction, the token gate, the within-batch
+    * dedup, and — the part only this query checks driver-side — the
+    * digest-index screen BETWEEN batches.
+    */
   def q_crawl_incremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.streaming.StreamingCrawl
@@ -4029,13 +4029,6 @@ object QueriesLLM {
         |SELECT ds.source, ds.n_docs, ds.distinct_texts, qs.p50, qs.p90, qs.p99
         |FROM ds JOIN qs USING (source)""".stripMargin
 
-  /** The shared DuckDB CTE chain for the curation oracles: augmented
-    * corpus -> quality (`qual`) -> gate+redact (`red`) -> exact keep ids
-    * (`keepx`) -> exact survivors (`corpus`) -> minhash/LSH bands ->
-    * verified pairs -> CC reach -> near-dup `drops`. Final projections
-    * differ per query (kept rows for q_curation_e2e, the disposition
-    * ledger for q_curation_audit).
-    */
   /** The gate + redact PREFIX of the curation chain (corpus0 → qual →
     * red) — shared by the full batch chain below and by
     * [[q_curation_stream]]'s oracle, so the suffix/gate/redaction
@@ -4070,6 +4063,13 @@ object QueriesLLM {
          |)""".stripMargin
   }
 
+  /** The shared DuckDB CTE chain for the curation oracles: augmented
+    * corpus -> quality (`qual`) -> gate+redact (`red`) -> exact keep ids
+    * (`keepx`) -> exact survivors (`corpus`) -> minhash/LSH bands ->
+    * verified pairs -> CC reach -> near-dup `drops`. Final projections
+    * differ per query (kept rows for q_curation_e2e, the disposition
+    * ledger for q_curation_audit).
+    */
   private lazy val curationChainSql: String = {
       curationGateSql +
       """, keepx AS (

@@ -136,11 +136,6 @@ object QueriesWeather {
         date_format(timestamp_seconds(col("hr") * 3600), "yyyyMMdd").cast("int"))
       .withColumn("HH", (pmod(col("hr"), lit(24L)) + 1).cast("int"))
 
-  /** W1/W2/W3/W4/W12/J9 composed — the one-call weather table
-    * (get_weather_data_table parity, load_data.py:103-246): derived
-    * measures, 14d rolling averages, coldest-2-week marks, ISO-week
-    * means, coldest-2-ISO-week flags joined back.
-    */
   /** Boundary-shifted 6dp floor round: the compared rolling/weekly means
     * are averages of 6dp-granular values over n <= 336 rows, so their
     * exact values sit on a 1e-6/n lattice that CONTAINS round()'s .5
@@ -153,6 +148,11 @@ object QueriesWeather {
   private def stable6(c: org.apache.spark.sql.Column) =
     floor(c * 1e6 + 0.499) / 1e6
 
+  /** W1/W2/W3/W4/W12/J9 composed — the one-call weather table
+    * (get_weather_data_table parity, load_data.py:103-246): derived
+    * measures, 14d rolling averages, coldest-2-week marks, ISO-week
+    * means, coldest-2-ISO-week flags joined back.
+    */
   def q_weather_table(spark: SparkSession, dir: String): DataFrame =
     Weather.weatherTable(knmiRaw(spark, dir))
       .select(col("stn"), col("hr"),

@@ -104,18 +104,6 @@ object StreamingImpute {
   case class HouseStateScaled(lastTs: Long, lastCum: Option[Double],
                               pending: List[PendingSlot], pendingLen: Int = 0)
 
-  /** Scaled streaming imputation — the full known-jump cascade including
-    * SCALED_FILL (I7's avg-proportional branch): with the average-diff
-    * table joined onto the stream upstream, a closed gap distributes its
-    * jump proportionally to each slot's average
-    * (`iv * jump / impute_jump`, vectorized_impute.py:630-686) and falls
-    * back to LINEAR_FILL when the gap's averages sum to ~zero. Fill
-    * arithmetic mirrors the batch cascade expression-for-expression
-    * (impute_jump accumulates in slot order; the jump/impute_jump
-    * quotient is computed once per gap), so closed-gap output is
-    * bit-identical to the batch path — StreamingImputeSpec pins it.
-    * State is capped exactly like [[imputeStream]].
-    */
   /** The per-house state transition both entry points share: fold the
     * micro-batch's (time-sorted) rows of one house through the cascade,
     * appending emissions to `out`, returning the new state.
@@ -178,6 +166,18 @@ object StreamingImpute {
     st
   }
 
+  /** Scaled streaming imputation — the full known-jump cascade including
+    * SCALED_FILL (I7's avg-proportional branch): with the average-diff
+    * table joined onto the stream upstream, a closed gap distributes its
+    * jump proportionally to each slot's average
+    * (`iv * jump / impute_jump`, vectorized_impute.py:630-686) and falls
+    * back to LINEAR_FILL when the gap's averages sum to ~zero. Fill
+    * arithmetic mirrors the batch cascade expression-for-expression
+    * (impute_jump accumulates in slot order; the jump/impute_jump
+    * quotient is computed once per gap), so closed-gap output is
+    * bit-identical to the batch path — StreamingImputeSpec pins it.
+    * State is capped exactly like [[imputeStream]].
+    */
   def imputeStreamScaled(readings: Dataset[CumReadingAvg],
                          maxGapLength: Int = 8640): Dataset[ImputedDiff] = {
     implicit val outEnc = Encoders.product[ImputedDiff]

@@ -40,7 +40,7 @@ object StreamingResample {
                      interval: String,
                      lateness: String = "1 hour"): DataFrame = {
     val groupCols = Seq(Model.ProjectId, Model.HouseId)
-    val minCount = lit(Model.intervalMinCount(interval))
+    val minCount = lit(Model.interval(interval).minCount)
     val aggs = variables.map { case (v, method) =>
       Aggregates.gated(method, col(v), minCount).as(v)
     }
@@ -48,7 +48,7 @@ object StreamingResample {
       .withWatermark(Model.ReadingDate, lateness)
       .groupBy(
         (groupCols.map(col) :+
-          window(col(Model.ReadingDate), Model.intervalDuration(interval))
+          window(col(Model.ReadingDate), Model.interval(interval).duration)
             .as("bucket")): _*)
       .agg(aggs.head, aggs.tail: _*)
       .withColumn(Model.ReadingDate, col("bucket.start"))

@@ -19,12 +19,8 @@ import graft.llm.Retrieval
   * aggregations), and [[compactIndex]] collapses the logs when a
   * maintenance window allows. This is the same append-only contract
   * [[graft.llm.Retrieval.updatePostingsNorm]] gives batch updates,
-  * made replay-exact for `foreachBatch` by construction: each batch
-  * writes its own `batch_id=<N>` partition via dynamic overwrite (an
-  * at-least-once retry REWRITES its failed attempt instead of
-  * appending next to it), and a batch whose deltas a compaction
-  * already folded — detectable via the [[BatchState.readFolded]]
-  * ledger — is skipped outright.
+  * made replay-exact for `foreachBatch` by [[BatchState]]: three logs,
+  * `<indexDir>/{postings,termdf,stats}`, with the ledger beside them.
   *
   * Search parity: `loadIndex` composed with
   * [[graft.llm.Retrieval.searchPostingsNorm]] returns EXACTLY
@@ -34,14 +30,8 @@ import graft.llm.Retrieval
 object StreamingRetrieval {
 
   /** `foreachBatch` hook: append one micro-batch of NEW documents to
-    * the index logs at `indexDir`, replay-exactly — each log write
-    * targets the batch's own `batch_id=<N>` partition under dynamic
-    * overwrite, so however many at-least-once attempts run, exactly
-    * one copy of the batch's rows survives. A batch the ledger marks
-    * FOLDED (a compaction moved its deltas into `batch_id = -1`; its
-    * own partitions, the replay unit, no longer hold them) is durably
-    * committed by [[compactIndex]]'s precondition, so its replay is
-    * the no-op — re-appending would double its df/stats contribution.
+    * the index logs at `indexDir`, replay-exactly
+    * ([[BatchState.append]]).
     *
     * `autoCompactEvery` > 0 folds the logs in-band once that many
     * unfolded batch partitions have accumulated (VERDICT r15 #6: a
@@ -62,22 +52,10 @@ object StreamingRetrieval {
   def appendBatch(indexDir: String, idCol: String, textCol: String,
                   autoCompactEvery: Int = 0)
                  (batch: DataFrame, batchId: Long): Unit = {
-    // finish a compaction that crashed between a log's retire and
-    // promote — before any write re-creates a missing live dir and
-    // orphans the candidate holding the folded history (r17)
-    Seq("postings", "termdf", "stats").foreach(sub =>
-      BatchState.recoverSwap(batch.sparkSession, s"$indexDir/$sub"))
-    if (BatchState.readFolded(batch.sparkSession, indexDir)
-        .contains(batchId)) return
     val (post, termDf, stats) = Retrieval.buildPostingsNorm(batch, idCol, textCol)
-    def append(df: DataFrame, sub: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(s"$indexDir/$sub")
-    append(post, "postings")
-    append(termDf, "termdf")
-    append(stats.select(col("n_docs"), col("total_len")), "stats")
+    BatchState.append(indexDir, batchId, "postings" -> post,
+      "termdf" -> termDf,
+      "stats" -> stats.select(col("n_docs"), col("total_len")))
     if (autoCompactEvery > 0 &&
         BatchState.unfoldedBatches(batch.sparkSession,
           s"$indexDir/stats") >= autoCompactEvery)
@@ -104,74 +82,34 @@ object StreamingRetrieval {
     */
   def loadIndex(spark: SparkSession, indexDir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    Seq("postings", "termdf", "stats").foreach(sub =>
-      BatchState.recoverSwap(spark, s"$indexDir/$sub")) // crash window
-    val post = spark.read.parquet(s"$indexDir/postings").drop("batch_id")
-    val termDf = spark.read.parquet(s"$indexDir/termdf")
-      .groupBy("term").agg(sum(col("df")).as("df"))
-    val stats = spark.read.parquet(s"$indexDir/stats")
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_len")).as("total_len"))
-      .withColumn("avgdl", col("total_len") / col("n_docs"))
-    (post, termDf, stats)
+    def log(name: String) = BatchState.read(spark, s"$indexDir/$name")
+    (log("postings"), sumDf(log("termdf")),
+      sumStats(log("stats"))
+        .withColumn("avgdl", col("total_len") / col("n_docs")))
   }
 
-  /** Collapse the logs to one `batch_id = -1` generation (maintenance
-    * window operation — the hot path never rewrites): df deltas sum per
-    * term, stats deltas sum to one row, and the postings log — already
-    * the final rows — is refolded term-clustered (repartition + sort by
-    * term), which bounds the file count at O(shuffle partitions)
-    * however many batches ran AND gives the term-pruned serving read
+  private def sumDf(termDf: DataFrame): DataFrame =
+    termDf.groupBy("term").agg(sum(col("df")).as("df"))
+
+  private def sumStats(stats: DataFrame): DataFrame =
+    stats.agg(sum(col("n_docs")).as("n_docs"),
+      sum(col("total_len")).as("total_len"))
+
+  /** Collapse the logs to one `batch_id = -1` generation
+    * ([[BatchState.fold]]; maintenance window operation — the hot path
+    * never rewrites): df deltas sum per term, stats deltas sum to one
+    * row, and the postings log — already the final rows — is refolded
+    * term-clustered (repartition + sort by term), which bounds the file
+    * count at O(shuffle partitions) however many batches ran AND gives
+    * the term-pruned serving read
     * ([[graft.llm.Retrieval.searchPostingsPruned]]) row-group min/max
-    * locality to prune on.
-    *
-    * Precondition: run OUT-OF-BAND with the folded batches durably
-    * committed. That contract is enforced, not just documented — and
-    * because [[appendBatch]] performs THREE sequential non-atomic
-    * writes (postings, then termdf, then stats), "durably committed"
-    * is judged per batch id as presence in ALL THREE logs (ADVICE
-    * r15). A crash mid-append leaves the id in a strict prefix of the
-    * logs; folding such a partial batch would be wrong both ways:
-    * ledgering it skips the repairing replay (its missing stats delta
-    * is lost forever, skewing avgdl and every BM25 score), while
-    * folding its prefix un-ledgered lets the replay re-append next to
-    * the fold, doubling its tf/df contributions. So the fold (a) only
-    * ledgers and folds COMPLETE ids, ledger written before any swap
-    * (complete ⇒ its `foreachBatch` writes all finished, so early
-    * ledgering is safe whichever swap a crash interrupts), and (b)
-    * carries each log's incomplete partitions across the swap
-    * UNTOUCHED under their own `batch_id=<N>`, so the at-least-once
-    * replay's dynamic overwrite repairs them in place and the NEXT
-    * compaction folds them.
+    * locality to prune on. [[appendBatch]] writes the three logs one
+    * after another, so a crash mid-append leaves its batch in a prefix
+    * of them; the fold leaves such a batch's rows where they are, for
+    * the replay to repair (ADVICE r15).
     */
-  def compactIndex(spark: SparkSession, indexDir: String): Unit = {
-    import spark.implicits._
-    def idsIn(sub: String): Set[Long] =
-      spark.read.parquet(s"$indexDir/$sub")
-        .select(col("batch_id").cast("long")).distinct()
-        .as[Long].collect().toSet.filter(_ != -1L)
-    val complete = idsIn("postings") & idsIn("termdf") & idsIn("stats")
-    if (complete.isEmpty) return // nothing newly committed to fold
-    BatchState.writeFolded(spark, indexDir,
-      complete ++ BatchState.readFolded(spark, indexDir))
-    // Hadoop-FS renames via BatchState.swapIn, not java.io.File: the
-    // index lives wherever the stream writes it (hdfs://, s3a://)
-    def swapIn(sub: String)(fold: DataFrame => DataFrame): Unit = {
-      val incomplete = (idsIn(sub) -- complete).toSeq
-      BatchState.swapIn(spark, s"$indexDir/$sub") { tmp =>
-        val log = spark.read.parquet(s"$indexDir/$sub")
-        fold(log.filter(!col("batch_id").isin(incomplete: _*))
-            .drop("batch_id"))
-          .withColumn("batch_id", lit(-1L))
-          .write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
-        if (incomplete.nonEmpty)
-          log.filter(col("batch_id").isin(incomplete: _*))
-            .write.partitionBy("batch_id").mode("append").parquet(tmp)
-      }
-    }
-    swapIn("postings")(
-      _.repartition(col("term")).sortWithinPartitions("term"))
-    swapIn("termdf")(_.groupBy("term").agg(sum(col("df")).as("df")))
-    swapIn("stats")(_.agg(sum(col("n_docs")).as("n_docs"),
-      sum(col("total_len")).as("total_len")))
-  }
+  def compactIndex(spark: SparkSession, indexDir: String): Unit =
+    BatchState.fold(spark, indexDir,
+      ("postings", _.repartition(col("term")).sortWithinPartitions("term")),
+      ("termdf", sumDf), ("stats", sumStats))
 }

@@ -16,7 +16,7 @@ class BenchWarmUpSpec extends AnyFunSuite {
   }
 
   test("warm-up on an empty directory reports every name as failed") {
-    val empty = java.nio.file.Files.createTempDirectory("bench_warmup_empty")
+    val empty = graft.TempDirs.dir("bench_warmup_empty")
     try {
       val names = Seq("q_agg_pricing", "q_bm25_indexed")
       assert(Bench.warmUp(spark, empty.toString, names) == names)

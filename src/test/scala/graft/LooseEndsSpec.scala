@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.etd.{Impute, ImputeSummaries}
+import graft.etd.{ImputeSummaries, ReferenceForms}
 import graft.llm.{ComposedForms, Multimodal, Similarity}
 
 /** Coverage for the smaller library surfaces not exercised elsewhere. */
@@ -47,7 +47,7 @@ class LooseEndsSpec extends AnyFunSuite {
   test("violation counts gate negative diffs and averages") {
     val df = Seq((1.0, 0.5), (-2.0, 0.5), (3.0, -0.1), (-4.0, -0.2))
       .toDF("d", "a")
-    val r = Impute.violationCounts(df, "d", "a").collect().head
+    val r = ReferenceForms.violationCounts(df, "d", "a").collect().head
     assert(r.getLong(0) == 2 && r.getLong(1) == 2)
   }
 

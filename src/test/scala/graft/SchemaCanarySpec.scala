@@ -41,7 +41,7 @@ class SchemaCanarySpec extends AnyFunSuite {
   }
 
   test("embeddings array<double> vintage: supported via float narrowing, and diagnosed") {
-    val tmp = java.nio.file.Files.createTempDirectory("embdouble").toString
+    val tmp = graft.TempDirs.dir("embdouble").toString
     SparkEntry.table(spark, sfDir, "embeddings")
       .withColumn("embedding", col("embedding").cast("array<double>"))
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
@@ -72,7 +72,7 @@ class SchemaCanarySpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1))
 
     // rewrite the same events as the two other vintages and re-derive
-    val tmp = java.nio.file.Files.createTempDirectory("vintage").toString
+    val tmp = graft.TempDirs.dir("vintage").toString
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
 
     // TIMESTAMP (isAdjustedToUTC=true): NTZ wall time stamped as UTC instant

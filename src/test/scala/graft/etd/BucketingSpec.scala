@@ -1,7 +1,5 @@
 package graft.etd
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,7 +26,7 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("join of two bucketed tables is exchange-free; unbucketed shuffles") {
-    val dir = Files.createTempDirectory("buckets").toFile.getAbsolutePath
+    val dir = graft.TempDirs.dir("buckets").toFile.getAbsolutePath
     val readings = (1L to 400L).map(i => (i % 40, i, 0.5 * i))
       .toDF(Model.HouseId, "seq", "v")
     val meta = (0L until 40L).map(h => (h, s"house_$h"))
@@ -72,7 +70,7 @@ class BucketingSpec extends AnyFunSuite {
     }.length
 
   test("bucketed pipeline input: the full-table impute shuffle disappears") {
-    val dir = Files.createTempDirectory("bpipe").toFile.getAbsolutePath
+    val dir = graft.TempDirs.dir("bpipe").toFile.getAbsolutePath
     // tiny household frame: 4 houses x 50 slots, one cumulative column
     val rows = for (h <- 1L to 4L; s <- 1L to 50L) yield
       (h % 2, h, new java.sql.Timestamp(s * 300000), s * 0.5,

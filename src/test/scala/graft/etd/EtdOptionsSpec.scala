@@ -30,7 +30,7 @@ class EtdOptionsSpec extends AnyFunSuite {
   }
 
   test("loaders read a writeStages-shaped layout under the option roots") {
-    val root = java.nio.file.Files.createTempDirectory("etdopts")
+    val root = graft.TempDirs.dir("etdopts")
     val o = EtdOptions(s"$root/mapped", s"$root/aggregate")
 
     Seq((1L, 0L, "p1"), (2L, 1L, "p2"))
@@ -65,7 +65,7 @@ class EtdOptionsSpec extends AnyFunSuite {
     // xlsx fixture: ProjectWeatherStation sheet with ProjectIdBSV /
     // Weerstation / Nummer, names lowercase on purpose (the facade must
     // upper-case them like the reference)
-    val xf = java.nio.file.Files.createTempFile("stations", ".xlsx").toFile
+    val xf = graft.TempDirs.file("stations", ".xlsx").toFile
     val zip = new java.util.zip.ZipOutputStream(
       new java.io.FileOutputStream(xf))
     def entry(name: String, content: String): Unit = {
@@ -85,7 +85,7 @@ class EtdOptionsSpec extends AnyFunSuite {
         |</sheetData></worksheet>""".stripMargin)
     zip.close()
 
-    val wdir = java.nio.file.Files.createTempDirectory("etdopts_knmi2").toFile
+    val wdir = graft.TempDirs.dir("etdopts_knmi2").toFile
     val w = new java.io.PrintWriter(new java.io.File(wdir, "uurgeg_260.txt"))
     w.println("# STN,YYYYMMDD,HH,T,FH,U")
     (1 to 24).foreach(h => w.println(s"260,20230101,$h,${-50 + h},30,90"))
@@ -114,7 +114,7 @@ class EtdOptionsSpec extends AnyFunSuite {
   }
 
   test("weatherDataTable runs the full weather chain off the option folder") {
-    val dir = java.nio.file.Files.createTempDirectory("etdopts_knmi").toFile
+    val dir = graft.TempDirs.dir("etdopts_knmi").toFile
     val w = new java.io.PrintWriter(new java.io.File(dir, "uurgeg_260.txt"))
     w.println("# KNMI hourly data")
     w.println("# STN,YYYYMMDD,HH,T,FH,U")

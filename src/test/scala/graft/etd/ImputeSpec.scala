@@ -345,26 +345,26 @@ class ImputeSpec extends AnyFunSuite {
       (123456789.0, 3, 123000000.0),
       (-0.5, 1, -0.5))
     vectors.foreach { case (x, s, want) =>
-      assert(Impute.roundToSigFigs(x, s) == want, s"round($x, $s)")
+      assert(ReferenceForms.roundToSigFigs(x, s) == want, s"round($x, $s)")
     }
     // equal_sig_fig truth table from the Python original
-    assert(Impute.equalSigFig(1.23456, 1.23461, 4))
-    assert(Impute.equalSigFig(1.23456, 1.23461, 5)) // rounds meet at 1.2346
-    assert(Impute.equalSigFig(0.0, 0.0, 3))
-    assert(!Impute.equalSigFig(1e-12, 0.0, 3)) // rel-tol, not abs-tol
-    assert(Impute.equalSigFig(-5.5, -5.5004, 3))
-    assert(!Impute.equalSigFig(1.0, 1.1, 3))
+    assert(ReferenceForms.equalSigFig(1.23456, 1.23461, 4))
+    assert(ReferenceForms.equalSigFig(1.23456, 1.23461, 5)) // rounds meet at 1.2346
+    assert(ReferenceForms.equalSigFig(0.0, 0.0, 3))
+    assert(!ReferenceForms.equalSigFig(1e-12, 0.0, 3)) // rel-tol, not abs-tol
+    assert(ReferenceForms.equalSigFig(-5.5, -5.5004, 3))
+    assert(!ReferenceForms.equalSigFig(1.0, 1.1, 3))
     // Python raises OverflowError when the rounded value leaves double
     // range (MaxValue at 1 sig fig rounds up to 2e308) — fail loud too
     assertThrows[ArithmeticException](
-      Impute.roundToSigFigs(Double.MaxValue, 1))
+      ReferenceForms.roundToSigFigs(Double.MaxValue, 1))
     // non-finite input raises in the reference too (int(floor(log10(x)))
     // is OverflowError for ±inf, ValueError for NaN) — ADVICE r18
     assertThrows[ArithmeticException](
-      Impute.roundToSigFigs(Double.PositiveInfinity, 3))
+      ReferenceForms.roundToSigFigs(Double.PositiveInfinity, 3))
     assertThrows[ArithmeticException](
-      Impute.roundToSigFigs(Double.NegativeInfinity, 3))
+      ReferenceForms.roundToSigFigs(Double.NegativeInfinity, 3))
     assertThrows[ArithmeticException](
-      Impute.roundToSigFigs(Double.NaN, 3))
+      ReferenceForms.roundToSigFigs(Double.NaN, 3))
   }
 }

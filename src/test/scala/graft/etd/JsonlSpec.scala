@@ -19,7 +19,7 @@ class JsonlSpec extends AnyFunSuite {
     StructField("lang", StringType)))
 
   private def writeFixture(): String = {
-    val dir = Files.createTempDirectory("jsonl").toString
+    val dir = graft.TempDirs.dir("jsonl").toString
     Files.write(java.nio.file.Paths.get(dir, "shard0.jsonl"),
       ("""{"doc_id": 1, "text": "hello world", "lang": "en"}""" + "\n" +
        """{"doc_id": 2, "text": "tweede document", "lang": "nl", "extra": 9}""" + "\n" +
@@ -55,7 +55,7 @@ class JsonlSpec extends AnyFunSuite {
   }
 
   test("missing fields are null, not errors") {
-    val dir = Files.createTempDirectory("jsonl2").toString
+    val dir = graft.TempDirs.dir("jsonl2").toString
     Files.write(java.nio.file.Paths.get(dir, "s.jsonl"),
       """{"doc_id": 7, "text": "no lang field"}""".getBytes("UTF-8"))
     val parsed = Sources.readJsonl(spark, s"$dir/s.jsonl", schema, lineage = false)

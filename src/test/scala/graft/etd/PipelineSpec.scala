@@ -1,6 +1,5 @@
 package graft.etd
 
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
@@ -187,7 +186,7 @@ class PipelineSpec extends AnyFunSuite {
     def fields(df: org.apache.spark.sql.DataFrame) =
       df.schema.map(f => f.name -> f.dataType.catalogString)
     try Seq(false, true).foreach { byProject =>
-      val dir = Files.createTempDirectory("sinks").toFile.getAbsolutePath
+      val dir = graft.TempDirs.dir("sinks").toFile.getAbsolutePath
       Pipeline.writeStages(all, dir, byProject)
       lazyStages.foreach { case (name, expected) =>
         val at = s"$name (partitionByProject = $byProject)"

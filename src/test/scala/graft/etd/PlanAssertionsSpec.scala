@@ -173,7 +173,7 @@ class PlanAssertionsSpec extends AnyFunSuite {
   }
 
   test("BM25 indexed search: no corpus re-tokenization, query filter pushed") {
-    val tmp = java.nio.file.Files.createTempDirectory("bm25plan").toString
+    val tmp = graft.TempDirs.dir("bm25plan").toString
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val (post, stats) = graft.llm.Retrieval.buildPostings(docs, "doc_id", "text")
     post.write.mode("overwrite").parquet(s"$tmp/post")

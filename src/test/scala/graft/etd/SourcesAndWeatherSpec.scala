@@ -1,7 +1,5 @@
 package graft.etd
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +11,7 @@ class SourcesAndWeatherSpec extends AnyFunSuite {
   import Model.{HouseId, ProjectId, ReadingDate}
 
   test("S4: KNMI CSV header discovery (last '#' line) + rename + derived measures") {
-    val dir = Files.createTempDirectory("knmi").toFile
+    val dir = graft.TempDirs.dir("knmi").toFile
     val f = new java.io.File(dir, "uurgeg_260.txt")
     val w = new java.io.PrintWriter(f)
     w.println("# KNMI hourly data")
@@ -33,7 +31,7 @@ class SourcesAndWeatherSpec extends AnyFunSuite {
   }
 
   test("S4: header comes from the LEADING comment block; mid-file '#' lines are data-skipped, not headers") {
-    val dir = Files.createTempDirectory("knmi_mid").toFile
+    val dir = graft.TempDirs.dir("knmi_mid").toFile
     val f = new java.io.File(dir, "uurgeg_261.txt")
     val w = new java.io.PrintWriter(f)
     w.println("# KNMI hourly data")
@@ -60,7 +58,7 @@ class SourcesAndWeatherSpec extends AnyFunSuite {
 
     // a Latin-1 byte in a COMMENT line must not break header discovery
     // (strict UTF-8 decoding threw; lenient decode maps it to U+FFFD)
-    val dirL = Files.createTempDirectory("knmi_latin1").toFile
+    val dirL = graft.TempDirs.dir("knmi_latin1").toFile
     val lat = new java.io.File(dirL, "uurgeg_262.txt")
     val fos = new java.io.FileOutputStream(lat)
     fos.write("# temperatuur in 0.1 °C\n# STN,YYYYMMDD,HH,T\n262,20230101,1,-15\n"
@@ -88,7 +86,7 @@ class SourcesAndWeatherSpec extends AnyFunSuite {
   }
 
   test("S3/S8: glob combine stamps HuisIdBSV from the path and filters Meenemen") {
-    val dir = Files.createTempDirectory("mapped").toFile.getAbsolutePath
+    val dir = graft.TempDirs.dir("mapped").toFile.getAbsolutePath
     Seq((100L, 1.0)).toDF("ReadingSeq", "X")
       .write.parquet(s"$dir/household_1_table.parquet")
     Seq((200L, 2.0)).toDF("ReadingSeq", "X")
@@ -104,7 +102,7 @@ class SourcesAndWeatherSpec extends AnyFunSuite {
   }
 
   test("update_meenemen hook: metadata flip excludes the household from S3") {
-    val dir = Files.createTempDirectory("meenemen").toFile.getAbsolutePath
+    val dir = graft.TempDirs.dir("meenemen").toFile.getAbsolutePath
     Seq((100L, 1.0)).toDF("ReadingSeq", "X")
       .write.parquet(s"$dir/household_1_table.parquet")
     Seq((200L, 2.0)).toDF("ReadingSeq", "X")
@@ -126,13 +124,13 @@ class SourcesAndWeatherSpec extends AnyFunSuite {
     // é and Σ are WORD chars — byte-for-byte vs
     // re.sub(r"\W+", "_", "Zon Éopwek-Σtotaal!".lower())
     assert(Sources.safeName("Zon Éopwek-Σtotaal!") == "zon_éopwek_σtotaal_")
-    val dir = Files.createTempDirectory("safename").toFile.getAbsolutePath
+    val dir = graft.TempDirs.dir("safename").toFile.getAbsolutePath
     Sources.writeStage(Seq((1L, 1.0)).toDF("k", "v"), dir, "Zon-opwekTotaal")
     assert(new java.io.File(s"$dir/zon_opwektotaal.parquet").exists())
   }
 
   test("S7: staged sink writes, project-partitioned variant prunes") {
-    val dir = Files.createTempDirectory("stages").toFile.getAbsolutePath
+    val dir = graft.TempDirs.dir("stages").toFile.getAbsolutePath
     val df = Seq((1L, 10L, 1.0), (2L, 20L, 2.0))
       .toDF(ProjectId, HouseId, "v")
     Sources.writeStage(df, dir, "household_test")
@@ -190,7 +188,7 @@ class SourcesAndWeatherSpec extends AnyFunSuite {
   test("weatherTable: KNMI CSV -> composed table end-to-end (one call)") {
     // Two stations, 3 weeks of hourly data with a cold dip in week 2 so
     // both the rolling-average marks and the ISO-week flags have signal.
-    val dir = Files.createTempDirectory("knmi2").toFile
+    val dir = graft.TempDirs.dir("knmi2").toFile
     val f = new java.io.File(dir, "uurgeg_all.txt")
     val w = new java.io.PrintWriter(f)
     w.println("# preamble")

@@ -1,7 +1,5 @@
 package graft.etd
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +15,7 @@ class TablesSpec extends AnyFunSuite {
   import Model.{HouseId, ProjectId, ReadingDate}
 
   test("writeStages + Tables round trip with index enrichment") {
-    val dir = Files.createTempDirectory("facade").toFile.getAbsolutePath
+    val dir = graft.TempDirs.dir("facade").toFile.getAbsolutePath
     val cums = Seq("ElektriciteitNetgebruikLaag")
     val household = {
       val rows = for {

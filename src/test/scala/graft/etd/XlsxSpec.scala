@@ -1,7 +1,6 @@
 package graft.etd
 
 import java.io.FileOutputStream
-import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +11,7 @@ class XlsxSpec extends AnyFunSuite {
   import SharedSpark.spark
 
   private def writeMinimalXlsx(): String = {
-    val f = Files.createTempFile("stations", ".xlsx").toFile
+    val f = graft.TempDirs.file("stations", ".xlsx").toFile
     val zip = new ZipOutputStream(new FileOutputStream(f))
     def entry(name: String, content: String): Unit = {
       zip.putNextEntry(new ZipEntry(name))
@@ -44,7 +43,7 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("S5: cells without the optional r attribute follow sequentially (ECMA-376)") {
-    val f = Files.createTempFile("noref", ".xlsx").toFile
+    val f = graft.TempDirs.file("noref", ".xlsx").toFile
     val zip = new ZipOutputStream(new FileOutputStream(f))
     def entry(name: String, content: String): Unit = {
       zip.putNextEntry(new ZipEntry(name))

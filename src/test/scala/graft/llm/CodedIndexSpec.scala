@@ -35,7 +35,7 @@ class CodedIndexSpec extends AnyFunSuite {
       .toSet
     assert(inline.nonEmpty)
 
-    val tmp = java.nio.file.Files.createTempDirectory("ivfpq").toString
+    val tmp = graft.TempDirs.dir("ivfpq").toString
     graft.etd.Sources.writeBucketed(
       Similarity.buildIvfPqIndex(corpus, "id", "v", coarse, cb),
       "ivfpq_idx_spec", s"$tmp/idx", buckets = 4,
@@ -62,7 +62,7 @@ class CodedIndexSpec extends AnyFunSuite {
   test("scan-level cell prune reaches the parquet reader (r19): the " +
       "union-of-probes IN filter is pushed; respread preserves results") {
     val corpus = (1L to 400L).map(i => (i, v(i.toInt).toSeq)).toDF("id", "v")
-    val tmp = java.nio.file.Files.createTempDirectory("ivfpq_push").toString
+    val tmp = graft.TempDirs.dir("ivfpq_push").toString
     try {
     graft.etd.Sources.writeBucketed(
       Similarity.buildIvfPqIndex(corpus, "id", "v", coarse, cb),

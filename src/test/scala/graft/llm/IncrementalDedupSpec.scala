@@ -28,7 +28,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
 
     // round-trip the index through parquet like a real archive would
-    val tmp = java.nio.file.Files.createTempDirectory("digidx").toString
+    val tmp = graft.TempDirs.dir("digidx").toString
     Dedup.digestIndex(archive, "text")
       .write.mode("overwrite").parquet(s"$tmp/idx")
     val idx = spark.read.parquet(s"$tmp/idx")

@@ -59,7 +59,7 @@ class RetrievalSpec extends AnyFunSuite {
     // search uses) and the one-row stats next to them, then search the
     // read-back tables — the production call shape
     val (post, stats) = Retrieval.buildPostings(corpus, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val dir = graft.TempDirs.dir("bm25idx").toString
     graft.etd.Sources.writeBucketed(post, "bm25_postings_spec",
       s"$dir/postings", buckets = 4, bucketCols = Seq("term"),
       sortCols = Seq("term"))

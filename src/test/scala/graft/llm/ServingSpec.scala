@@ -140,7 +140,7 @@ class ServingSpec extends AnyFunSuite {
       q, "doc_id", "text", k = 5).collect().toSeq.sortBy(_.getLong(2)) ==
       oneCall.sortBy(_.getLong(2)))
     // persisted index: the term In-filter must reach the parquet scan
-    val dir = java.nio.file.Files.createTempDirectory("tfidfw").toString
+    val dir = graft.TempDirs.dir("tfidfw").toString
     w.write.mode("overwrite").parquet(dir)
     val wDisk = SharedSpark.spark.read.parquet(dir)
     val plan = Retrieval.searchTfidfPruned(wDisk, nrm, termDf, stats,

@@ -112,7 +112,7 @@ class GraphMemorySpec extends AnyFunSuite {
 
   test("rowBound reads exact parquet footer counts; the q_pagerank " +
       "join shape screens below trigger and skips phase 1 (conf untouched)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_gm_").toString
+    val tmp = graft.TempDirs.dir("graft_gm_").toString
     try {
       spark.range(5000L)
         .select(col("id").as("k"), (col("id") % 7).as("v"))

@@ -76,7 +76,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("writeZOrdered round-trips schema and rows; returns stats") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = graft.TempDirs.dir("zorder").toString
     val df = (1 to 1000).map(i => (i.toLong, (i * 37 % 1000).toLong, s"p$i"))
       .toDF("a", "b", "payload")
     val stats = ZOrder.writeZOrdered(df, s"$dir/t", Seq("a", "b"),

@@ -18,7 +18,7 @@ class AutoCompactSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("StreamingRetrieval auto-folds every N batches; search unchanged") {
-    val indexDir = java.nio.file.Files.createTempDirectory("bm25auto").toString
+    val indexDir = graft.TempDirs.dir("bm25auto").toString
     val every = 3
     val batches = (0L until 8L).map { b =>
       (b, (0 until 4).map(i => (b * 10 + i, s"word${(b + i) % 5} word${i % 3} tail$i")))
@@ -42,14 +42,14 @@ class AutoCompactSpec extends AnyFunSuite {
 
   test("StreamingLm auto-folds; model unchanged; replay-after-autofold no-op") {
     val countsDir =
-      java.nio.file.Files.createTempDirectory("lmauto").toString + "/log"
+      graft.TempDirs.dir("lmauto").toString + "/log"
     val batches = (0L until 6L).map { b =>
       (b, Seq((b, s"the cat ${b % 3} sat on mat $b")))
     }
     batches.foreach { case (id, rows) =>
       StreamingLm.appendBatch(countsDir, "doc_id", "text",
         autoCompactEvery = 2)(rows.toDF("doc_id", "text"), id)
-      assert(BatchState.unfoldedBatches(spark, countsDir) < 2)
+      assert(BatchState.unfoldedBatches(spark, s"$countsDir/counts") < 2)
     }
     val expected = graft.llm.NgramLm
       .trigramCounts(batches.flatMap(_._2).toDF("doc_id", "text"),

@@ -34,7 +34,7 @@ class StreamingAuthoritySpec extends AnyFunSuite {
   }
 
   test("3 micro-batches sum to the one-shot edges; compaction + replay; warm refresh") {
-    val graphDir = java.nio.file.Files.createTempDirectory("authgraph").toString
+    val graphDir = graft.TempDirs.dir("authgraph").toString
     val batches = Seq(0L until 20L, 20L until 40L, 40L until 60L)
       .map(_.map(page))
 
@@ -83,5 +83,33 @@ class StreamingAuthoritySpec extends AnyFunSuite {
     StreamingAuthority.appendBatch(graphDir, "url", "html")(
       late.toDF("url", "html"), 3L)
     assert(edges() == oneShotEdges(batches.flatten ++ late))
+  }
+
+  test("a fold that crashed between retire and promote: the next " +
+      "compaction promotes the candidate, folds, and keeps the ledger") {
+    val graphDir = graft.TempDirs.dir("authcrash").toString
+    val batches = Seq(0L until 20L, 20L until 40L, 40L until 60L)
+      .map(_.map(page))
+    def append(id: Int): Unit =
+      StreamingAuthority.appendBatch(graphDir, "url", "html")(
+        batches(id).toDF("url", "html"), id.toLong)
+    def edges() = StreamingAuthority.loadEdges(spark, graphDir)
+      .as[(String, String, Long)].collect().toSet
+    append(0)
+    append(1)
+    StateDirs.crashBetweenRetireAndPromote(spark, graphDir, "edges",
+      StreamingAuthority.loadEdges(spark, graphDir), Set(0L, 1L))
+
+    StreamingAuthority.compactEdges(spark, graphDir)
+    assert(StateDirs.promoted(spark, s"$graphDir/edges"))
+    assert(StateDirs.logIds(spark, s"$graphDir/edges") == Set(-1L))
+    assert(edges() == oneShotEdges(batches(0) ++ batches(1)))
+    assert(BatchState.readFolded(spark, graphDir) == Set(0L, 1L))
+
+    append(2)
+    StreamingAuthority.compactEdges(spark, graphDir)
+    assert(StateDirs.logIds(spark, s"$graphDir/edges") == Set(-1L))
+    assert(edges() == oneShotEdges(batches.flatten))
+    assert(BatchState.readFolded(spark, graphDir) == Set(0L, 1L, 2L))
   }
 }

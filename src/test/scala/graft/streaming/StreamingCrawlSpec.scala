@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,11 +27,11 @@ class StreamingCrawlSpec extends AnyFunSuite {
   // a digest index as stored — (content_hash, batch_id); empty before
   // the first batch
   private def loadIndex(indexDir: String) =
-    if (BatchState.hasData(spark, indexDir)) spark.read.parquet(indexDir)
+    if (StateDirs.hasData(spark, indexDir)) spark.read.parquet(indexDir)
     else Seq.empty[(String, Long)].toDF("content_hash", "batch_id")
 
   test("restart replay is content-idempotent: replayed docs drop on the index") {
-    val tmp = Files.createTempDirectory("crawl_replay").toString
+    val tmp = graft.TempDirs.dir("crawl_replay").toString
     val idxDir = s"$tmp/index"
     val b1 = Seq(1L -> page(s"$prose one")).toDF("id", "html")
     val empty = Seq.empty[String].toDF("content_hash")
@@ -52,7 +50,7 @@ class StreamingCrawlSpec extends AnyFunSuite {
     // mimic the ingest body's failure window: batch 1 wrote its sink
     // partition, died before the index write, and is replayed — the
     // dynamic partition overwrite must leave exactly one copy
-    val tmp = Files.createTempDirectory("crawl_partial").toString
+    val tmp = graft.TempDirs.dir("crawl_partial").toString
     val (sinkDir, idxDir) = (s"$tmp/sink", s"$tmp/index")
     val b1 = Seq(10L -> page(s"$prose one"), 11L -> page(s"$prose two"))
       .toDF("id", "html")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,12 +25,12 @@ class StreamingFrontierSpec extends AnyFunSuite {
   // the seen index as stored — (url_hash, host, batch_id); empty before
   // the first batch
   private def loadSeen(seenDir: String) =
-    if (BatchState.hasData(spark, seenDir)) spark.read.parquet(seenDir)
+    if (StateDirs.hasData(spark, seenDir)) spark.read.parquet(seenDir)
     else Seq.empty[(String, String, Long)].toDF("url_hash", "host", "batch_id")
 
   test("a replayed batch rewrites its partitions — sink and seen index " +
       "stay exact (checkpoint-loss replay)") {
-    val tmp = Files.createTempDirectory("frontier_replay").toString
+    val tmp = graft.TempDirs.dir("frontier_replay").toString
     val (sink, seenDir) = (s"$tmp/sink", s"$tmp/seen")
     val b1 = Seq(1L -> "http://s.example/a", 2L -> "http://t.example/z")
       .toDF("id", "url")

@@ -19,7 +19,7 @@ class StreamingLmSpec extends AnyFunSuite {
       .sortBy(r => (r._1, r._2, r._3)).toSeq
 
   test("3 micro-batches; fold == batch retrain; compaction preserves it") {
-    val countsDir = java.nio.file.Files.createTempDirectory("lmcounts").toString + "/log"
+    val countsDir = graft.TempDirs.dir("lmcounts").toString + "/log"
 
     val batches = Seq(
       Seq((0L, "the cat sat"), (1L, "the cat ate")),
@@ -38,16 +38,16 @@ class StreamingLmSpec extends AnyFunSuite {
 
     // one delta generation per batch before compaction, one after —
     // and the folded model is unchanged
-    assert(spark.read.parquet(countsDir)
+    assert(spark.read.parquet(s"$countsDir/counts")
       .select("batch_id").distinct().count() == 3)
     StreamingLm.compactCounts(spark, countsDir)
-    assert(spark.read.parquet(countsDir)
+    assert(spark.read.parquet(s"$countsDir/counts")
       .select("batch_id").distinct().count() == 1)
     assert(modelRows(StreamingLm.loadCounts(spark, countsDir)) == expected)
 
-    // the ledger rode the swap: every folded id is readable from the
-    // LIVE dir after compaction (ADVICE r15: a ledger written into the
-    // pre-swap dir is destroyed by swapIn's retire)
+    // the ledger sits in countsDir, beside the swapped log, so every
+    // folded id is readable after compaction (ADVICE r15: a ledger
+    // inside the swapped dir would be destroyed by the retire)
     assert(BatchState.readFolded(spark, countsDir) == Set(0L, 1L, 2L))
 
     // replay-after-fold is a no-op: a checkpoint-loss replay of batch 1
@@ -56,7 +56,7 @@ class StreamingLmSpec extends AnyFunSuite {
     // probability downstream would silently corrupt)
     StreamingLm.appendBatch(countsDir, "doc_id", "text")(
       batches(1).toDF("doc_id", "text"), 1L)
-    assert(spark.read.parquet(countsDir)
+    assert(spark.read.parquet(s"$countsDir/counts")
       .select("batch_id").distinct().count() == 1)
     assert(modelRows(StreamingLm.loadCounts(spark, countsDir)) == expected)
 
@@ -68,7 +68,7 @@ class StreamingLmSpec extends AnyFunSuite {
 
   test("compaction crash between retire and promote recovers on the next " +
       "append/load; the candidate's history is never orphaned (r17)") {
-    val countsDir = java.nio.file.Files.createTempDirectory("lmcrash").toString + "/log"
+    val countsDir = graft.TempDirs.dir("lmcrash").toString + "/log"
     val b0 = Seq((0L, "the cat sat"), (1L, "the cat ate")).toDF("doc_id", "text")
     val b1 = Seq((2L, "a dog sat the cat")).toDF("doc_id", "text")
     StreamingLm.appendBatch(countsDir, "doc_id", "text")(b0, 0L)
@@ -76,25 +76,25 @@ class StreamingLmSpec extends AnyFunSuite {
     val expected = modelRows(StreamingLm.loadCounts(spark, countsDir))
 
     // simulate compactCounts crashing in swapIn's one non-atomic window:
-    // candidate fully written (fold + ledger), live dir RETIRED, promote
-    // never ran — the state recoverSwap exists for
-    val (f, live) = BatchState.fs(spark, countsDir)
-    val tmp = new org.apache.hadoop.fs.Path(s"${countsDir}_compacting")
+    // ledger written, candidate fully written, live log RETIRED,
+    // promote never ran — the state the swap recovery exists for
+    val (f, live) = BatchState.fs(spark, s"$countsDir/counts")
+    val tmp = new org.apache.hadoop.fs.Path(s"$countsDir/counts_compacting")
     StreamingLm.loadCounts(spark, countsDir)
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(-1L))
       .write.partitionBy("batch_id").mode("overwrite").parquet(tmp.toString)
-    BatchState.writeFolded(spark, tmp.toString, Set(0L, 1L))
-    assert(f.rename(live, new org.apache.hadoop.fs.Path(s"${countsDir}_old")))
+    BatchState.writeFolded(spark, countsDir, Set(0L, 1L))
+    assert(f.rename(live, new org.apache.hadoop.fs.Path(s"$countsDir/counts_old")))
     assert(!f.exists(live) && f.exists(tmp), "crash window established")
 
     // the at-least-once replay of batch 1 hits the window first: it must
-    // promote the candidate, read the ledger FROM it, and no-op — an
+    // promote the candidate and no-op (the ledger names batch 1) — an
     // unrecovered append would re-create the live dir with batch 1 alone
     // and the next compaction would delete the candidate (total loss)
     StreamingLm.appendBatch(countsDir, "doc_id", "text")(b1, 1L)
     assert(f.exists(live) && !f.exists(tmp), "candidate promoted")
     assert(BatchState.readFolded(spark, countsDir) == Set(0L, 1L))
-    assert(spark.read.parquet(countsDir)
+    assert(spark.read.parquet(s"$countsDir/counts")
       .select("batch_id").distinct().count() == 1) // only the -1 fold
     assert(modelRows(StreamingLm.loadCounts(spark, countsDir)) == expected)
 
@@ -102,5 +102,35 @@ class StreamingLmSpec extends AnyFunSuite {
     StreamingLm.compactCounts(spark, countsDir)
     assert(modelRows(StreamingLm.loadCounts(spark, countsDir)) == expected)
     assert(BatchState.readFolded(spark, countsDir) == Set(0L, 1L))
+  }
+
+  test("a fold that crashed between retire and promote: the next " +
+      "compaction promotes the candidate, folds, and keeps the ledger") {
+    val countsDir = graft.TempDirs.dir("lmcrashfold").toString
+    val batches = Seq(
+      Seq((0L, "the cat sat"), (1L, "the cat ate")),
+      Seq((2L, "a dog sat the cat")),
+      Seq((3L, "the dog ate")))
+    def append(id: Int): Unit =
+      StreamingLm.appendBatch(countsDir, "doc_id", "text")(
+        batches(id).toDF("doc_id", "text"), id.toLong)
+    def retrained(n: Int) = modelRows(NgramLm.trigramCounts(
+      batches.take(n).flatten.toDF("doc_id", "text"), "doc_id", "text"))
+    append(0)
+    append(1)
+    StateDirs.crashBetweenRetireAndPromote(spark, countsDir, "counts",
+      StreamingLm.loadCounts(spark, countsDir), Set(0L, 1L))
+
+    StreamingLm.compactCounts(spark, countsDir)
+    assert(StateDirs.promoted(spark, s"$countsDir/counts"))
+    assert(StateDirs.logIds(spark, s"$countsDir/counts") == Set(-1L))
+    assert(modelRows(StreamingLm.loadCounts(spark, countsDir)) == retrained(2))
+    assert(BatchState.readFolded(spark, countsDir) == Set(0L, 1L))
+
+    append(2)
+    StreamingLm.compactCounts(spark, countsDir)
+    assert(StateDirs.logIds(spark, s"$countsDir/counts") == Set(-1L))
+    assert(modelRows(StreamingLm.loadCounts(spark, countsDir)) == retrained(3))
+    assert(BatchState.readFolded(spark, countsDir) == Set(0L, 1L, 2L))
   }
 }

@@ -17,8 +17,8 @@ class StreamingRetrievalSpec extends AnyFunSuite {
 
   test("3 micro-batches of appends; load+search == batch build; compaction preserves it") {
     implicit val sqlCtx = spark.sqlContext
-    val indexDir = java.nio.file.Files.createTempDirectory("bm25stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("bm25ckpt").toString
+    val indexDir = graft.TempDirs.dir("bm25stream").toString
+    val ckpt = graft.TempDirs.dir("bm25ckpt").toString
 
     val rnd = new scala.util.Random(5)
     val words = Vector("apple", "banana", "cherry", "date", "fig", "grape")
@@ -72,7 +72,7 @@ class StreamingRetrievalSpec extends AnyFunSuite {
   }
 
   test("appendBatch is replay-exact; a folded batch's replay is a no-op") {
-    val indexDir = java.nio.file.Files.createTempDirectory("bm25append").toString
+    val indexDir = graft.TempDirs.dir("bm25append").toString
     def postIds() = spark.read.parquet(s"$indexDir/postings")
       .select(col("batch_id").cast("long")).distinct()
       .as[Long].collect().toSet
@@ -96,7 +96,7 @@ class StreamingRetrievalSpec extends AnyFunSuite {
 
   test("compaction never folds a partially-appended batch (ADVICE r15)") {
     import org.apache.spark.sql.functions.lit
-    val indexDir = java.nio.file.Files.createTempDirectory("bm25partial").toString
+    val indexDir = graft.TempDirs.dir("bm25partial").toString
     def ids(sub: String) = spark.read.parquet(s"$indexDir/$sub")
       .select(col("batch_id").cast("long")).distinct()
       .as[Long].collect().toSet
@@ -138,5 +138,46 @@ class StreamingRetrievalSpec extends AnyFunSuite {
     val (p, t, s) = StreamingRetrieval.loadIndex(spark, indexDir)
     assert(Retrieval.searchPostingsNorm(p, t, s, queries, "doc_id", "text",
       k = 3).orderBy("query_id", "rank").collect().toSeq == expected)
+  }
+
+  test("a fold that crashed between retire and promote: the next " +
+      "compaction promotes the candidate, folds, and keeps the ledger") {
+    val indexDir = graft.TempDirs.dir("bm25crash").toString
+    val batches = Seq(
+      Seq((1L, "apple banana"), (2L, "banana fig")),
+      Seq((3L, "cherry fig date")),
+      Seq((4L, "apple date date")))
+    def append(id: Int): Unit =
+      StreamingRetrieval.appendBatch(indexDir, "doc_id", "text")(
+        batches(id).toDF("doc_id", "text"), id.toLong)
+    def search(n: Int) = {
+      val all = batches.take(n).flatten.toDF("doc_id", "text")
+      val queries = all.filter($"doc_id" === 1L)
+      val expected = Retrieval.bm25TopK(all, "doc_id", "text",
+        queries, "doc_id", "text", k = 3).orderBy("query_id", "rank")
+        .collect().toSeq
+      val (p, t, s) = StreamingRetrieval.loadIndex(spark, indexDir)
+      Retrieval.searchPostingsNorm(p, t, s, queries, "doc_id", "text",
+        k = 3).orderBy("query_id", "rank").collect().toSeq == expected
+    }
+    def logIds(log: String) = StateDirs.logIds(spark, s"$indexDir/$log")
+    append(0)
+    append(1)
+    // the crash hits the first of the three swaps: postings is in the
+    // window, termdf and stats still hold batches 0 and 1 unfolded
+    StateDirs.crashBetweenRetireAndPromote(spark, indexDir, "postings",
+      StreamingRetrieval.loadIndex(spark, indexDir)._1, Set(0L, 1L))
+
+    StreamingRetrieval.compactIndex(spark, indexDir)
+    assert(StateDirs.promoted(spark, s"$indexDir/postings"))
+    assert(Seq("postings", "termdf", "stats").forall(logIds(_) == Set(-1L)))
+    assert(search(2))
+    assert(BatchState.readFolded(spark, indexDir) == Set(0L, 1L))
+
+    append(2)
+    StreamingRetrieval.compactIndex(spark, indexDir)
+    assert(Seq("postings", "termdf", "stats").forall(logIds(_) == Set(-1L)))
+    assert(search(3))
+    assert(BatchState.readFolded(spark, indexDir) == Set(0L, 1L, 2L))
   }
 }

@@ -23,8 +23,8 @@ class StreamingSimilaritySpec extends AnyFunSuite {
 
   test("micro-batch appends; load + coded search == batch-built index search") {
     implicit val sqlCtx = spark.sqlContext
-    val indexDir = java.nio.file.Files.createTempDirectory("annstream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("annckpt").toString
+    val indexDir = graft.TempDirs.dir("annstream").toString
+    val ckpt = graft.TempDirs.dir("annckpt").toString
 
     // codebooks frozen from the FIRST batch (the seed corpus): 4 coarse
     // cells, and 4 PQ subspaces of 8 centroids each, cut from its vectors
@@ -87,5 +87,40 @@ class StreamingSimilaritySpec extends AnyFunSuite {
       coarse, pq)(nb, 3L) // at-least-once retry
     assert(spark.read.parquet(s"$indexDir/coded").count() == before + 1)
     assert(batchIds() == Set(-1L, 3L))
+  }
+
+  test("a fold that crashed between retire and promote: the next " +
+      "compaction promotes the candidate, folds, and keeps the ledger") {
+    val indexDir = graft.TempDirs.dir("anncrash").toString
+    val seed = batches.head.map(_._2)
+    val coarse = seed.take(4).toArray
+    val pq = Array.tabulate(4, 8)((m, c) => seed(c).slice(m * 4, m * 4 + 4))
+    def append(id: Int): Unit =
+      StreamingSimilarity.appendBatch(indexDir, "vec_id", "embedding",
+        coarse, pq)(batches(id).toDF("vec_id", "embedding"), id.toLong)
+    def rows() = StreamingSimilarity.loadIndex(spark, indexDir)
+      .select($"id", $"cell".cast("long"))
+      .as[(Long, Option[Long])].collect().toSet
+    def built(n: Int) = Similarity.buildIvfPqIndex(
+        batches.take(n).flatten.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", coarse, pq)
+      .select($"id", $"cell".cast("long"))
+      .as[(Long, Option[Long])].collect().toSet
+    append(0)
+    append(1)
+    StateDirs.crashBetweenRetireAndPromote(spark, indexDir, "coded",
+      StreamingSimilarity.loadIndex(spark, indexDir), Set(0L, 1L))
+
+    StreamingSimilarity.compactIndex(spark, indexDir)
+    assert(StateDirs.promoted(spark, s"$indexDir/coded"))
+    assert(StateDirs.logIds(spark, s"$indexDir/coded") == Set(-1L))
+    assert(rows() == built(2))
+    assert(BatchState.readFolded(spark, indexDir) == Set(0L, 1L))
+
+    append(2)
+    StreamingSimilarity.compactIndex(spark, indexDir)
+    assert(StateDirs.logIds(spark, s"$indexDir/coded") == Set(-1L))
+    assert(rows() == built(3))
+    assert(BatchState.readFolded(spark, indexDir) == Set(0L, 1L, 2L))
   }
 }
